@@ -24,7 +24,14 @@ Modules:
                 available, atomic parquet snapshot-log otherwise)
     streaming/  Structured Streaming wrappers for the events table
     corpus.py   deterministic synthetic pages generator (FIXTURES.md)
+    zipcache.py keeps zip-import listings across Python-worker tasks
 """
+
+from . import zipcache
+
+# Every Python worker imports this package when it unpickles a package UDF,
+# so installing here covers each worker from its second task on.
+zipcache.install()
 
 __version__ = "0.1.0"
 

@@ -57,6 +57,14 @@ def open_warehouse(spark: SparkSession, root: str):
     return Warehouse(root)
 
 
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """A zero-partition frame with ``schema``.  Reading it starts no task —
+    ``createDataFrame([], schema)`` would parallelize the empty list into
+    ``defaultParallelism`` Python-RDD tasks on every read of a table that
+    has no commit yet (the ``runs`` ledger of each fresh warehouse)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema=schema)
+
+
 _TABLE_NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
@@ -191,10 +199,13 @@ class IcebergWarehouse:
         self._write_table(df, handle, "create")
         return handle
 
-    def read_staged(self, spark: SparkSession, handle: str) -> DataFrame:
-        # `spark` is accepted for Warehouse-interface parity; catalog
-        # resolution always goes through the construction-time session
-        # (the seam primitives), as a staged handle only exists there
+    def read_staged(
+        self, spark: SparkSession, handle: str, schema=None
+    ) -> DataFrame:
+        # `spark` and `schema` are accepted for Warehouse-interface parity;
+        # catalog resolution always goes through the construction-time
+        # session (the seam primitives), as a staged handle only exists
+        # there, and the catalog already knows the table's schema
         return self._read_table(handle)
 
     def discard_staged(self, handle: str) -> None:
@@ -468,7 +479,7 @@ class IcebergWarehouse:
             # behavior)
         if schema is None:
             raise ValueError(f"table {table!r} is empty and no schema given")
-        return self.spark.createDataFrame([], schema=schema)
+        return empty_frame(self.spark, schema)
 
 
 class Warehouse:
@@ -513,9 +524,15 @@ class Warehouse:
         df.write.mode("errorifexists").parquet(commit_dir)
         return commit_dir
 
-    def read_staged(self, spark: SparkSession, handle: str) -> DataFrame:
-        """Read back a staged-but-uncommitted handle (columnar, cheap)."""
-        return spark.read.parquet(handle)
+    def read_staged(
+        self, spark: SparkSession, handle: str, schema=None
+    ) -> DataFrame:
+        """Read back a staged-but-uncommitted handle (columnar, cheap).
+
+        Passing the staged frame's ``schema`` skips inferring it, which
+        costs a Spark job that reads a parquet footer."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(handle)
 
     def discard_staged(self, handle: str) -> None:
         """Delete a staged-but-never-committed data directory (no manifest
@@ -630,6 +647,6 @@ class Warehouse:
         if not dirs:
             if schema is None:
                 raise ValueError(f"table {table!r} is empty and no schema given")
-            return spark.createDataFrame([], schema=schema)
+            return empty_frame(spark, schema)
         paths = [os.path.join(self.root, d) for d in dirs]
         return spark.read.parquet(*paths)

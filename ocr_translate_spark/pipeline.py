@@ -32,7 +32,7 @@ from .operators.extract import (
     finalize_extracted,
     partition_metrics,
 )
-from .schemas import METRICS, RUNS
+from .schemas import RUNS
 
 _LINEAGE_COLS = ("partition_id", "input_split", "wall_ms")
 
@@ -86,8 +86,8 @@ def run_extraction(
 ) -> dict:
     """Run the incremental extraction job; returns commit stats.
 
-    Stats: {run_id, snapshot_id, n_pending, n_written}.  n_pending == 0
-    means the ledger already covered every input page and nothing ran —
+    Stats: {run_id, snapshot_id, n_written}.  n_written == 0 means the
+    ledger already covered every input page and nothing was committed —
     the memoization fast path (second invocation computes zero rows).
 
     ``assume_unique_urls=True`` with ``repartition=None`` is the
@@ -132,14 +132,17 @@ def run_extraction(
     # Scale note: MEMORY_AND_DISK on the slim projection is at worst
     # cost-neutral at 10^12 rows (a spill write ≈ the second columnar
     # scan it replaces) and a clear win whenever the run fits memory.
-    written = wh.read_staged(spark, data_dir)
+    written = wh.read_staged(spark, data_dir, schema=staged_df.schema)
     slim = written.select(
         "url", "extractor_version", "options_hash", "text_hash",
         *_LINEAGE_COLS, "bytes_in",
     ).persist()
+    # the metrics table is written straight from this JVM aggregate; it is
+    # persisted so the row-count collect and the write share one computation
+    # (a createDataFrame over the collected rows would run a Python stage)
+    metrics_new = partition_metrics(slim, run_id).persist()
     try:
-        metrics_rows = partition_metrics(slim, run_id).collect()
-        n_written = sum(r["row_count"] for r in metrics_rows)
+        n_written = sum(r["row_count"] for r in metrics_new.collect())
         if n_written == 0:
             # fully-memoized run: nothing to commit — reclaim the staged
             # handle or every replayed streaming micro-batch leaks one
@@ -177,7 +180,6 @@ def run_extraction(
                 ["url", "extractor_version", "options_hash"],
                 "left_anti",
             )
-        metrics_new = spark.createDataFrame(metrics_rows, schema=METRICS)
 
         staged = {
             "extracted": [data_dir],
@@ -186,6 +188,7 @@ def run_extraction(
         }
         committed = wh.commit(staged)
     finally:
+        metrics_new.unpersist()
         slim.unpersist()
     return {"run_id": run_id, "snapshot_id": committed, "n_written": n_written}
 

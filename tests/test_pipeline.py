@@ -151,17 +151,26 @@ def test_dup_urls_deduped_in_stage(spark, tmp_path):
 
 def test_metrics_lineage_rows(spark, pages, tmp_path):
     root = str(tmp_path / "wh")
-    run_extraction(spark, pages, root, repartition=4)
+    stats = run_extraction(spark, pages, root, repartition=4)
     wh = Warehouse(root)
     metrics = wh.read(spark, "metrics", schema=METRICS)
     rows = metrics.collect()
     assert rows
-    assert sum(r["row_count"] for r in rows) == N_PAGES
+    assert sum(r["row_count"] for r in rows) == N_PAGES == stats["n_written"]
     assert all(r["bytes_in"] > 0 for r in rows)
-    assert set(metrics.columns) == {
-        "partition_id", "input_split", "row_count", "bytes_in",
-        "extraction_hash", "wall_clock_ms", "run_id",
-    }
+    assert {r["run_id"] for r in rows} == {stats["run_id"]}
+    assert [(f.name, f.dataType) for f in metrics.schema] == [
+        (f.name, f.dataType) for f in METRICS
+    ]
+
+
+def test_empty_table_read_is_zero_partition(spark, tmp_path):
+    """A table with no commit reads as a zero-partition frame, so the
+    first run's ledger anti-join starts no task to scan it."""
+    runs = Warehouse(str(tmp_path / "wh")).read(spark, "runs", schema=RUNS)
+    assert runs.rdd.getNumPartitions() == 0
+    assert runs.count() == 0
+    assert runs.schema == RUNS
 
 
 def test_open_warehouse_dispatch(spark, tmp_path):
