@@ -21,10 +21,17 @@ jars, so the same contract is implemented directly over parquet:
   top of the winner); a crash at any earlier point leaves only orphan
   data directories that no reader sees.
 
-All tables in one ``commit()`` become visible atomically together — the
-extraction pipeline relies on this to keep ``extracted`` and the ``runs``
-memoization ledger consistent (a crash can never publish results without
-their ledger rows, which is what makes re-runs idempotent).
+All tables in one ``commit()`` become visible atomically together.
+
+The extraction pipeline commits ONE table, ``extracted``, whose rows carry
+the memoization-ledger keys and the per-partition lineage columns
+(``run_id``, ``snapshot_id``, ``partition_id``, ``input_split``,
+``wall_ms``, ``bytes_in``).  The ``runs`` ledger and the ``metrics``
+lineage table are views over those rows, derived on read
+(:func:`ledger_view`), so results can never publish without their ledger
+rows — which is what makes re-runs idempotent.  A read of either view also
+returns the table's own committed directories, which is what warehouses
+written before the one-table commit hold.
 """
 
 from __future__ import annotations
@@ -34,7 +41,22 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..operators.extract import partition_metrics
+from ..schemas import RUNS
+
+# tables a read derives from the ledger and lineage columns of `extracted`
+LEDGER_VIEWS = ("runs", "metrics")
+# the `extracted` columns the views use; an explicit read schema keeps the
+# scan column-pruned and needs no footer job to infer it.  Files written
+# before the one-table commit lack run_id and snapshot_id and read NULL.
+_LEDGER_SOURCE = (
+    "url string, extractor_version string, options_hash string, "
+    "text_hash long, snapshot_id long, run_id string, partition_id int, "
+    "input_split string, bytes_in long, wall_ms double"
+)
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg catalog is on the classpath + configured."""
@@ -63,6 +85,43 @@ def empty_frame(spark: SparkSession, schema) -> DataFrame:
     ``defaultParallelism`` Python-RDD tasks on every read of a table that
     has no commit yet (the ``runs`` ledger of each fresh warehouse)."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema=schema)
+
+
+def ledger_view(table: str, extracted: DataFrame) -> DataFrame:
+    """``runs`` or ``metrics`` over the rows run_extraction committed to
+    ``extracted``.
+
+    ``runs`` is a column-pruned projection to RUNS of the rows with a
+    ``snapshot_id``.  A forced re-run writes already-ledgered keys with a
+    NULL ``snapshot_id`` and rows written before the one-table commit have
+    none, so both are skipped: ledger keys stay unique with no aggregate on
+    the path the memo anti-join scans.  ``metrics`` is the per-(run,
+    partition) lineage aggregate (operators.extract.partition_metrics)."""
+    if table == "runs":
+        return extracted.filter(F.col("snapshot_id").isNotNull()).select(
+            *RUNS.fieldNames()
+        )
+    return partition_metrics(extracted.filter(F.col("run_id").isNotNull()))
+
+
+def _union(spark: SparkSession, table: str, frames: list, schema) -> DataFrame:
+    """A table's read: its frames unioned by column name, or an empty frame
+    with ``schema`` when there are none."""
+    if not frames:
+        if schema is None:
+            raise ValueError(f"table {table!r} is empty and no schema given")
+        return empty_frame(spark, schema)
+    out = frames[0]
+    for frame in frames[1:]:
+        out = out.unionByName(frame)
+    return out
+
+
+def _read_parquet(spark: SparkSession, paths: list, schema=None) -> DataFrame:
+    """Parquet at ``paths``.  A given ``schema`` skips inferring it, which
+    costs a Spark job that reads a parquet footer."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 _TABLE_NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -298,6 +357,18 @@ class IcebergWarehouse:
             )
         return new_id
 
+    def _add_missing_columns(self, full: str, df: DataFrame) -> None:
+        """Evolve ``full`` before appending ``df``: columns the table lacks
+        are added (NULL in its existing rows).  An ``extracted`` table
+        created before the ledger columns (``run_id``, ``snapshot_id``)
+        existed would otherwise fail the append's schema match and strand
+        the commit after its earlier appends."""
+        have = set(self._table_columns(full))
+        for name in df.columns:
+            if name not in have:
+                kind = df.schema[name].dataType.simpleString()
+                self._sql(f"ALTER TABLE {full} ADD COLUMN {name} {kind}")
+
     def commit(self, staged: "dict[str, list[str]]") -> int:
         commit_uuid = uuid.uuid4().hex
         for table, handles in sorted(staged.items()):
@@ -306,6 +377,7 @@ class IcebergWarehouse:
             for handle in handles:
                 df = self._read_table(handle)
                 if self._table_exists(full):
+                    self._add_missing_columns(full, df)
                     self._write_table(df, full, "append")
                 else:
                     self._write_table(df, full, "create")
@@ -454,32 +526,49 @@ class IcebergWarehouse:
         schema=None,
         snapshot_id: "int | None" = None,
     ) -> DataFrame:
-        full = self._full(table)
-        log_full = self._full(self.LOG_TABLE)
-        exists = self._table_exists(full)
-        if not self._table_exists(log_full):
-            # legacy warehouse written before the snapshot log existed:
-            # read the current table state (no time travel available)
-            if exists:
-                return self._read_table(full)
-        else:
+        """Committed state of ``table`` at a logical snapshot (the latest
+        when ``snapshot_id`` is None).  ``runs`` and ``metrics`` also union
+        :func:`ledger_view` over ``extracted`` at the same snapshot, when
+        ``extracted`` has a ``run_id`` column."""
+        snap = None
+        if self._table_exists(self._full(self.LOG_TABLE)):
             snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-            row = self._sql(
-                f"SELECT iceberg_snapshot_id FROM {log_full} "
-                f"WHERE table_name = '{table}' AND snapshot_id <= {snap} "
-                # deterministic even over a corrupted log with duplicate
-                # logical ids (ConcurrentCommitError was raised but the
-                # rows exist): the smallest iceberg snapshot wins
-                "ORDER BY snapshot_id DESC, iceberg_snapshot_id ASC LIMIT 1"
-            ).first()
-            if row is not None and exists:
-                return self._read_table(full, int(row["iceberg_snapshot_id"]))
-            # a table with data but no log row = a crashed, never-published
-            # commit: stays invisible (the parquet emulation's orphan-dir
-            # behavior)
-        if schema is None:
-            raise ValueError(f"table {table!r} is empty and no schema given")
-        return empty_frame(self.spark, schema)
+        own = self._resolve(table, snap)
+        frames = [own] if own is not None else []
+        ext_full = self._full("extracted")
+        if (
+            table in LEDGER_VIEWS
+            and self._table_exists(ext_full)
+            and "run_id" in self._table_columns(ext_full)
+        ):
+            extracted = self._resolve("extracted", snap)
+            if extracted is not None:
+                frames.append(ledger_view(table, extracted))
+        return _union(self.spark, table, frames, schema)
+
+    def _resolve(self, table: str, snap: "int | None") -> "DataFrame | None":
+        """``table`` as logged at logical snapshot ``snap``, or None when it
+        has no published data there.  ``snap`` None means a legacy
+        warehouse written before the snapshot log existed: the current
+        table state (no time travel available)."""
+        full = self._full(table)
+        exists = self._table_exists(full)
+        if snap is None:
+            return self._read_table(full) if exists else None
+        row = self._sql(
+            f"SELECT iceberg_snapshot_id FROM {self._full(self.LOG_TABLE)} "
+            f"WHERE table_name = '{table}' AND snapshot_id <= {snap} "
+            # deterministic even over a corrupted log with duplicate
+            # logical ids (ConcurrentCommitError was raised but the
+            # rows exist): the smallest iceberg snapshot wins
+            "ORDER BY snapshot_id DESC, iceberg_snapshot_id ASC LIMIT 1"
+        ).first()
+        if row is not None and exists:
+            return self._read_table(full, int(row["iceberg_snapshot_id"]))
+        # a table with data but no log row = a crashed, never-published
+        # commit: stays invisible (the parquet emulation's orphan-dir
+        # behavior)
+        return None
 
 
 class Warehouse:
@@ -527,12 +616,8 @@ class Warehouse:
     def read_staged(
         self, spark: SparkSession, handle: str, schema=None
     ) -> DataFrame:
-        """Read back a staged-but-uncommitted handle (columnar, cheap).
-
-        Passing the staged frame's ``schema`` skips inferring it, which
-        costs a Spark job that reads a parquet footer."""
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(handle)
+        """Read back a staged-but-uncommitted handle (columnar, cheap)."""
+        return _read_parquet(spark, [handle], schema)
 
     def discard_staged(self, handle: str) -> None:
         """Delete a staged-but-never-committed data directory (no manifest
@@ -637,16 +722,22 @@ class Warehouse:
         schema=None,
         snapshot_id: int | None = None,
     ) -> DataFrame:
-        """Read the committed state of ``table`` (optionally time-traveled).
+        """Read the committed state of ``table`` (optionally time-traveled),
+        with ``schema`` applied when given.
 
+        ``runs`` and ``metrics`` are the table's own directories unioned
+        with :func:`ledger_view` over ``extracted`` at the same snapshot.
         Returns an empty DataFrame with ``schema`` when the table has no
         committed data yet.
         """
         snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        dirs = self._manifest(snap)["tables"].get(table, [])
-        if not dirs:
-            if schema is None:
-                raise ValueError(f"table {table!r} is empty and no schema given")
-            return empty_frame(spark, schema)
-        paths = [os.path.join(self.root, d) for d in dirs]
-        return spark.read.parquet(*paths)
+        tables = self._manifest(snap)["tables"]
+
+        def scan(name: str, scan_schema) -> DataFrame:
+            paths = [os.path.join(self.root, d) for d in tables[name]]
+            return _read_parquet(spark, paths, scan_schema)
+
+        frames = [scan(table, schema)] if tables.get(table) else []
+        if table in LEDGER_VIEWS and tables.get("extracted"):
+            frames.append(ledger_view(table, scan("extracted", _LEDGER_SOURCE)))
+        return _union(spark, table, frames, schema)

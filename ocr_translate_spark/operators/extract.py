@@ -212,8 +212,9 @@ def extract_pages(
     """pages DataFrame -> extracted DataFrame (EXTRACTED schema + lineage cols).
 
     The returned frame carries ``partition_id``/``input_split``/``wall_ms``
-    lineage columns; ``finalize_extracted``/``partition_metrics`` split them
-    off for the two sinks.
+    lineage columns, which the pipeline commits with the rows:
+    ``finalize_extracted`` drops them on read and ``partition_metrics``
+    aggregates them into the ``metrics`` view.
     """
     options = options or ExtractOptions()
     # lineage: callers that join the scan with other file sources first
@@ -255,15 +256,17 @@ def finalize_extracted(staged: DataFrame) -> DataFrame:
     )
 
 
-def partition_metrics(staged: DataFrame, run_id: str) -> DataFrame:
+def partition_metrics(staged: DataFrame) -> DataFrame:
     """Per-partition lineage rows (north_rule; METRICS schema).
 
-    Aggregated JVM-side from the lineage columns the stage emitted — one
-    row per task partition: row count, input bytes, an order-insensitive
-    extraction hash, and the batch wall-clock.
+    Aggregated JVM-side from the lineage columns the stage emitted and the
+    ``run_id`` the pipeline stamps — one row per (run, task partition):
+    row count, input bytes, an order-insensitive extraction hash, and the
+    batch wall-clock.  The warehouse derives the ``metrics`` table with it
+    on read (io/tables.py ledger_view).
     """
     return (
-        staged.groupBy("partition_id")
+        staged.groupBy("run_id", "partition_id")
         .agg(
             F.max("input_split").alias("input_split"),
             F.count("*").alias("row_count"),
@@ -272,5 +275,8 @@ def partition_metrics(staged: DataFrame, run_id: str) -> DataFrame:
             F.expr("bit_xor(text_hash)").alias("extraction_hash"),
             F.sum("wall_ms").cast("long").alias("wall_clock_ms"),
         )
-        .withColumn("run_id", F.lit(run_id))
+        .select(
+            "partition_id", "input_split", "row_count", "bytes_in",
+            "extraction_hash", "wall_clock_ms", "run_id",
+        )
     )

@@ -10,31 +10,27 @@ The batch analog of the reference's request lifecycle
       -> salted repartition on url-hash           (skew, north_rule)
       -> ONE mapInPandas Arrow stage              (X1+X2+A5 fused)
       -> xxhash64 + version/options columns       (JVM-side)
-      -> stage parquet, derive `runs` + `metrics` from the staged files
-      -> single atomic snapshot commit of extracted+runs+metrics
+      -> run_id + snapshot_id ledger columns, observed row count
+      -> stage parquet, single atomic snapshot commit of `extracted`
 
-Because `runs` and `extracted` publish in the same snapshot, a killed run
-re-executes only the pages absent from the ledger — idempotent resume, the
-reference's lazy-path semantics (ref full.py:28-74) at batch scale.
+`extracted` is the only table a call commits.  Its rows carry the ledger
+keys and the lineage columns, so the `runs` ledger and the `metrics`
+lineage are views over it (io/tables.py: a projection and a per-partition
+aggregate, derived on read).  Because the ledger IS the committed rows, a
+killed run re-executes only the pages absent from it — idempotent resume,
+the reference's lazy-path semantics (ref full.py:28-74) at batch scale.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import EXTRACTOR_VERSION
 from .io.tables import open_warehouse
-from .operators.extract import (
-    ExtractOptions,
-    extract_pages,
-    finalize_extracted,
-    partition_metrics,
-)
+from .operators.extract import ExtractOptions, extract_pages, finalize_extracted
 from .schemas import RUNS
-
-_LINEAGE_COLS = ("partition_id", "input_split", "wall_ms")
 
 
 def pending_pages(
@@ -69,9 +65,10 @@ def pending_pages(
     ).select("url")
     # Broadcast the done-keys so the anti-join never shuffles page payloads
     # (a sort-merge anti-join would move the whole html column twice).  The
-    # ledger is keys-only and dwarfed by the corpus; when it outgrows
-    # broadcast at 10^12 scale, bucket `pages` and `runs` by url-hash in
-    # Iceberg so the anti-join co-locates without any payload shuffle.
+    # ledger read is a key-column projection of `extracted`, dwarfed by the
+    # corpus; when it outgrows broadcast at 10^12 scale, bucket `pages` and
+    # `extracted` by url-hash in Iceberg so the anti-join co-locates
+    # without any payload shuffle.
     return deduped.join(F.broadcast(done), "url", "left_anti")
 
 
@@ -121,75 +118,57 @@ def run_extraction(
     )
 
     staged_df = extract_pages(todo, options=options, repartition=repartition)
-    data_dir = wh.stage(staged_df, "extracted")
 
-    # derive ledger + lineage from the files actually written (exact and
-    # retry-safe: only committed task output counts, unlike accumulators,
-    # which are at-least-once under task retry).
-    # The ledger keys + lineage columns are projected once and cached so
-    # the metrics aggregate and the runs staging share a SINGLE columnar
-    # scan of the staged files — the payload column is never re-read.
-    # Scale note: MEMORY_AND_DISK on the slim projection is at worst
-    # cost-neutral at 10^12 rows (a spill write ≈ the second columnar
-    # scan it replaces) and a clear win whenever the run fits memory.
-    written = wh.read_staged(spark, data_dir, schema=staged_df.schema)
-    slim = written.select(
-        "url", "extractor_version", "options_hash", "text_hash",
-        *_LINEAGE_COLS, "bytes_in",
-    ).persist()
-    # the metrics table is written straight from this JVM aggregate; it is
-    # persisted so the row-count collect and the write share one computation
-    # (a createDataFrame over the collected rows would run a Python stage)
-    metrics_new = partition_metrics(slim, run_id).persist()
-    try:
-        n_written = sum(r["row_count"] for r in metrics_new.collect())
-        if n_written == 0:
-            # fully-memoized run: nothing to commit — reclaim the staged
-            # handle or every replayed streaming micro-batch leaks one
-            wh.discard_staged(data_dir)
-            return {
-                "run_id": run_id,
-                "snapshot_id": wh.current_snapshot_id(),
-                "n_written": 0,
-            }
+    # Pre-stamped: the id this commit will get under the documented
+    # single-writer contract.  Under a concurrency race the parquet
+    # emulation rebase-retries onto a HIGHER id (the Iceberg branch
+    # instead raises ConcurrentCommitError and nothing publishes), so
+    # the ledger column is ADVISORY under concurrency — run_id is the
+    # authoritative run linkage (nothing read-side resolves through
+    # ledger snapshot_id; read_extracted tie-breaks on
+    # extractor_version/options_hash).  The stats dict always reports
+    # the real committed id.
+    snapshot_id = F.lit(wh.current_snapshot_id() + 1)
+    if force:
+        # upsert semantics for the ledger (J4, ref models/base.py:33-47
+        # get_or_create): a forced re-extraction of already-ledgered keys
+        # must not duplicate them — extraction is deterministic, so the
+        # existing row (same url/version/options -> same text_hash) stays
+        # authoritative.  The re-extracted rows get a NULL snapshot_id,
+        # which the `runs` view skips.  Non-force runs are disjoint from
+        # the ledger by construction (pending_pages anti-join), so this
+        # broadcast join runs only under force.
+        ledgered = runs.filter(
+            (F.col("extractor_version") == EXTRACTOR_VERSION)
+            & (F.col("options_hash") == opts_hash)
+        ).select("url").distinct().withColumn("_ledgered", F.lit(True))
+        staged_df = staged_df.join(F.broadcast(ledgered), "url", "left")
+        snapshot_id = F.when(F.col("_ledgered").isNull(), snapshot_id)
+    staged_df = staged_df.withColumns({
+        "run_id": F.lit(run_id),
+        "snapshot_id": snapshot_id.cast("long"),
+    }).drop("_ledgered")
 
-        # Pre-stamped: the id this commit will get under the documented
-        # single-writer contract.  Under a concurrency race the parquet
-        # emulation rebase-retries onto a HIGHER id (the Iceberg branch
-        # instead raises ConcurrentCommitError and nothing publishes), so
-        # the ledger column is ADVISORY under concurrency — run_id is the
-        # authoritative run linkage (nothing read-side resolves through
-        # ledger snapshot_id; read_extracted tie-breaks on
-        # extractor_version/options_hash).  The stats dict always reports
-        # the real committed id.
-        snapshot_id = wh.current_snapshot_id() + 1
-        runs_new = slim.select(
-            "url", "extractor_version", "options_hash", "text_hash"
-        ).withColumn("snapshot_id", F.lit(snapshot_id))
-        if force:
-            # upsert semantics for the ledger (J4, ref models/base.py:33-47
-            # get_or_create): a forced re-extraction of already-ledgered
-            # keys must not duplicate them — extraction is deterministic,
-            # so the existing row (same url/version/options -> same
-            # text_hash) stays authoritative.  Non-force runs are disjoint
-            # from the ledger by construction (pending_pages anti-join).
-            runs_new = runs_new.join(
-                F.broadcast(
-                    runs.select("url", "extractor_version", "options_hash")
-                ),
-                ["url", "extractor_version", "options_hash"],
-                "left_anti",
-            )
-
-        staged = {
-            "extracted": [data_dir],
-            "runs": [wh.stage(runs_new, "runs")],
-            "metrics": [wh.stage(metrics_new, "metrics")],
+    # n_written is counted by the write itself.  The observation sits in
+    # the write's result stage, where Spark merges a task's accumulator
+    # update once, from the attempt that succeeded: a retried or
+    # speculative task cannot count twice and a failed one does not count,
+    # so the figure is exactly the rows in the written files.
+    written = Observation("run_extraction_written")
+    data_dir = wh.stage(
+        staged_df.observe(written, F.count(F.lit(1)).alias("n")), "extracted"
+    )
+    n_written = written.get["n"]
+    if n_written == 0:
+        # fully-memoized run: nothing to commit — reclaim the staged
+        # handle or every replayed streaming micro-batch leaks one
+        wh.discard_staged(data_dir)
+        return {
+            "run_id": run_id,
+            "snapshot_id": wh.current_snapshot_id(),
+            "n_written": 0,
         }
-        committed = wh.commit(staged)
-    finally:
-        metrics_new.unpersist()
-        slim.unpersist()
+    committed = wh.commit({"extracted": [data_dir]})
     return {"run_id": run_id, "snapshot_id": committed, "n_written": n_written}
 
 

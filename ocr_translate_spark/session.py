@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the machine's RAM (``MemTotal``), at least 1 GiB.
+
+    Local mode runs the executors inside the driver JVM, so this heap is
+    the whole engine's; the rest of RAM stays for the Python workers, the
+    page cache and shuffle files on tmpfs.  A heap sized past what the
+    machine can spare gets the JVM OOM-killed."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "ocr_translate_spark",
     cpus: int | None = None,
@@ -73,7 +84,8 @@ def get_spark(
         # (load(parallel=True) is the remedy where a kernel needs the
         # fan-out).  On a many-file cluster the default is also the
         # guide-recommended starting point.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # shuffle/spill on tmpfs: this box's /tmp is a single disk, which
         # serializes shuffle writes across 32 threads; a real cluster gets

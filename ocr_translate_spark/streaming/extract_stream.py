@@ -1,24 +1,25 @@
 """Streaming extraction: the flagship batch pipeline as a continuous job.
 
 ``readStream`` over the pages source -> per-micro-batch extraction via
-``foreachBatch`` -> the SAME warehouse snapshot commit and ``runs`` ledger
-as the batch path (pipeline.run_extraction is reused verbatim).  The
-ledger anti-join makes the stream incremental AND replay-safe: a page
-that already committed (in any earlier micro-batch, an earlier stream, or
-a batch run) is never recomputed, so restarting the stream from scratch
-is idempotent even without relying on the sink's checkpoint — this is the
-reference's lazy/memoized request path (ref ocr_tsl/full.py:28-74,
-views.py:236-247) as a continuous service.
+``foreachBatch`` -> the SAME one-table warehouse commit of ``extracted``
+as the batch path (pipeline.run_extraction is reused verbatim), whose
+ledger columns back the ``runs`` view.  The ledger anti-join makes the
+stream incremental AND replay-safe: a page that already committed (in any
+earlier micro-batch, an earlier stream, or a batch run) is never
+recomputed, so restarting the stream from scratch is idempotent even
+without relying on the sink's checkpoint — this is the reference's
+lazy/memoized request path (ref ocr_tsl/full.py:28-74, views.py:236-247)
+as a continuous service.
 
 Scale notes: each micro-batch runs the identical one-Arrow-stage plan as
 batch mode (salted repartition optional); state lives in the committed
-``runs`` table, not in streaming state stores, so the stream survives
-checkpoint loss and interleaves with batch backfills — SERIALIZED, one
-writer at a time, per the warehouse's single-writer contract
-(io/tables.py ConcurrentCommitError): stop the stream (or point it at a
-different warehouse root) before running a concurrent batch backfill.
-A fully-memoized replayed micro-batch discards its staged handle
-(pipeline.run_extraction), so replays leak nothing.
+``extracted`` rows (read as the ``runs`` view), not in streaming state
+stores, so the stream survives checkpoint loss and interleaves with batch
+backfills — SERIALIZED, one writer at a time, per the warehouse's
+single-writer contract (io/tables.py ConcurrentCommitError): stop the
+stream (or point it at a different warehouse root) before running a
+concurrent batch backfill.  A fully-memoized replayed micro-batch discards
+its staged handle (pipeline.run_extraction), so replays leak nothing.
 """
 
 from __future__ import annotations

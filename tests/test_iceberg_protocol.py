@@ -19,6 +19,7 @@ test_pipeline.py.
 from __future__ import annotations
 
 import re
+from types import SimpleNamespace
 
 import pytest
 
@@ -222,6 +223,14 @@ class FakeIcebergWarehouse(IcebergWarehouse):
                 for snap, rows in versions
             ]
             self.tables[full] = evolved
+            return FakeResult([])
+
+        if m := re.fullmatch(r"ALTER TABLE ([\w.]+) ADD COLUMN (\w+) (\w+)", s):
+            full, column = m.group(1), m.group(2)
+            self.tables[full] = [
+                (snap, [{**r, column: r.get(column)} for r in rows])
+                for snap, rows in self.tables[full]
+            ]
             return FakeResult([])
 
         if m := re.fullmatch(
@@ -509,3 +518,53 @@ def test_table_names_validated_as_identifiers():
     for bad in ("bad'name", "a.b", "a b", "", "a-b", "x;drop", "../x"):
         with _pytest.raises(ValueError):
             _check_table_name(bad)
+
+
+
+class _TypedFakeDF(FakeDF):
+    """FakeDF with the ``schema[name].dataType.simpleString()`` lookup
+    that column evolution reads (every column a string)."""
+
+    @property
+    def schema(self):
+        string = SimpleNamespace(dataType=SimpleNamespace(simpleString=lambda: "string"))
+        return {c: string for c in self.columns}
+
+
+def test_commit_adds_columns_the_table_lacks(wh, monkeypatch):
+    """An ``extracted`` table created before the ledger columns existed is
+    evolved (ALTER TABLE ... ADD COLUMN) before the append that carries
+    them, and its old rows read the new column as NULL."""
+    wh.commit({"extracted": [wh.stage(_df(("u1", "a")), "extracted")]})
+    read = wh._read_table
+    monkeypatch.setattr(
+        wh, "_read_table", lambda full, snapshot_id=None: _TypedFakeDF(
+            read(full, snapshot_id).rows, read(full, snapshot_id).columns
+        ),
+    )
+    new = FakeDF([{"url": "u2", "text": "b", "run_id": "r2"}])
+    wh.commit({"extracted": [wh.stage(new, "extracted")]})
+    assert "ALTER TABLE proto_wh.extracted ADD COLUMN run_id string" in wh.statements
+    rows = {r["url"]: r for r in wh.read(None, "extracted").rows}
+    assert rows["u1"]["run_id"] is None and rows["u2"]["run_id"] == "r2"
+
+
+def test_ledger_views_read_extracted_at_the_logged_snapshot(wh, monkeypatch):
+    """``runs``/``metrics`` reads derive from ``extracted`` as logged at
+    the requested snapshot once it carries a ``run_id`` column; without
+    one (the tests above) they read only their own table."""
+    from ocr_translate_spark.io import tables
+
+    seen = []
+
+    def view(table, extracted):
+        seen.append((table, sorted(r["url"] for r in extracted.rows)))
+        return extracted
+
+    monkeypatch.setattr(tables, "ledger_view", view)
+    row = lambda u: {"url": u, "text": "t", "run_id": "r"}  # noqa: E731
+    wh.commit({"extracted": [wh.stage(FakeDF([row("u1")]), "extracted")]})
+    wh.commit({"extracted": [wh.stage(FakeDF([row("u2")]), "extracted")]})
+    assert [r["url"] for r in wh.read(None, "runs", snapshot_id=1).rows] == ["u1"]
+    assert len(wh.read(None, "metrics").rows) == 2
+    assert seen == [("runs", ["u1"]), ("metrics", ["u1", "u2"])]

@@ -23,6 +23,8 @@ from ocr_translate_spark.pipeline import (
 from ocr_translate_spark.schemas import METRICS, RUNS
 
 N_PAGES = 160  # covers all 16 variant slots 10x
+# Spark jobs per run_extraction call (test_run_extraction_spark_jobs_per_call)
+COLD_JOBS, RECRAWL_JOBS, MEMO_JOBS = 3, 3, 3
 
 
 @pytest.fixture()
@@ -566,3 +568,121 @@ def test_zero_shuffle_mode_byte_identical(spark, tmp_path):
     plan = extract_pages(todo)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_committed_read_applies_schema(spark, tmp_path):
+    """A read with ``schema`` of a committed table returns exactly the
+    schema's columns, and starts no footer-inference job."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    rows = spark.createDataFrame(
+        [("u1", "v", "o", 7, 1, "extra")],
+        "url string, extractor_version string, options_hash string, "
+        "text_hash long, snapshot_id long, note string",
+    )
+    wh.write(rows, "runs")
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-read", "Warehouse.read with a schema")
+    try:
+        runs = wh.read(spark, "runs", schema=RUNS)
+        assert sc.statusTracker().getJobIdsForGroup("schema-read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert runs.columns == RUNS.fieldNames()
+    assert [tuple(r) for r in runs.collect()] == [("u1", "v", "o", 7, 1)]
+
+
+def _jobs_of(spark, group: str, fn):
+    """Run ``fn`` in job group ``group``; return (result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_extraction_spark_jobs_per_call(spark, tmp_path):
+    """Jobs per run_extraction call, pinned: a cold call, a half-memoized
+    recrawl and a fully memoized call each stage and commit one table, with
+    the written-row count observed on the write itself.  A job added to
+    the call shows up here."""
+    import os
+
+    root = str(tmp_path / "wh")
+    half = pages_df(spark, 32, partitions=2)
+    full = pages_df(spark, 64, partitions=2)
+    cold, cold_jobs = _jobs_of(
+        spark, "jobs-cold", lambda: run_extraction(spark, half, root, repartition=4)
+    )
+    recrawl, recrawl_jobs = _jobs_of(
+        spark, "jobs-recrawl", lambda: run_extraction(spark, full, root, repartition=4)
+    )
+    memo, memo_jobs = _jobs_of(
+        spark, "jobs-memo", lambda: run_extraction(spark, full, root, repartition=4)
+    )
+    assert (cold["n_written"], recrawl["n_written"], memo["n_written"]) == (32, 32, 0)
+    assert (cold_jobs, recrawl_jobs, memo_jobs) == (COLD_JOBS, RECRAWL_JOBS, MEMO_JOBS)
+    # one table per commit, and the memoized call's staged dir is gone
+    wh = Warehouse(root)
+    assert set(wh._manifest(wh.current_snapshot_id())["tables"]) == {"extracted"}
+    assert len(os.listdir(os.path.join(root, "extracted"))) == 2
+
+
+def test_legacy_three_table_warehouse(spark, tmp_path):
+    """A warehouse written the old way — `extracted` without run_id next to
+    committed `runs` and `metrics` tables — still memoizes, and after one
+    more run_extraction its `runs`/`metrics` reads hold the legacy rows
+    plus the new ones, with no duplicates."""
+    from ocr_translate_spark.operators.extract import extract_pages
+
+    root = str(tmp_path / "wh")
+    wh = Warehouse(root)
+    legacy_pages = pages_df(spark, 32, partitions=2)
+    staged = extract_pages(
+        legacy_pages.withColumn("input_split", F.lit("legacy")), repartition=2
+    )
+    ext_dir = wh.stage(staged, "extracted")
+    written = wh.read_staged(spark, ext_dir)
+    assert "run_id" not in written.columns
+    runs_dir = wh.stage(
+        written.select(
+            "url", "extractor_version", "options_hash", "text_hash",
+            F.lit(1).cast("long").alias("snapshot_id"),
+        ),
+        "runs",
+    )
+    metrics_dir = wh.stage(
+        written.groupBy("partition_id").agg(
+            F.max("input_split").alias("input_split"),
+            F.count("*").alias("row_count"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.expr("bit_xor(text_hash)").alias("extraction_hash"),
+            F.sum("wall_ms").cast("long").alias("wall_clock_ms"),
+            F.lit("legacy").alias("run_id"),
+        ),
+        "metrics",
+    )
+    wh.commit({"extracted": [ext_dir], "runs": [runs_dir], "metrics": [metrics_dir]})
+    legacy_metrics = wh.read(spark, "metrics", schema=METRICS).count()
+
+    assert run_extraction(spark, legacy_pages, root)["n_written"] == 0
+    stats = run_extraction(spark, pages_df(spark, 48, partitions=2), root)
+    assert stats["n_written"] == 16
+
+    runs = wh.read(spark, "runs", schema=RUNS)
+    keys = ["url", "extractor_version", "options_hash"]
+    assert runs.count() == 48 == runs.dropDuplicates(keys).count()
+    assert runs.filter(F.col("snapshot_id") == 1).count() == 32
+    metrics = wh.read(spark, "metrics", schema=METRICS).collect()
+    by_run: dict = {}
+    for r in metrics:
+        by_run[r["run_id"]] = by_run.get(r["run_id"], 0) + r["row_count"]
+    assert by_run == {"legacy": 32, stats["run_id"]: 16}
+    assert len(metrics) == len({(r["run_id"], r["partition_id"]) for r in metrics})
+    assert sum(r["run_id"] == "legacy" for r in metrics) == legacy_metrics
+    # the committed text is still byte-identical to the goldens
+    got = read_extracted(spark, root)
+    golden = pages_df(spark, 48, partitions=2).select("url", F.col("text").alias("e"))
+    assert got.count() == 48
+    assert got.join(golden, "url").filter(F.col("extracted_text") != F.col("e")).count() == 0
