@@ -12,9 +12,11 @@ no shuffle inside the stage.
 Scale notes (100 TB / 1000 executors):
 * ``salted_repartition`` breaks host-level byte skew (WARC files are
   host-clustered; a handful of giant-page hosts would otherwise pin a few
-  tasks).  It is the only shuffle in the pipeline and is optional — when the
-  source layout is already size-balanced, rely on
-  ``spark.sql.files.maxPartitionBytes`` splits instead and skip it.
+  tasks).  It is the only payload shuffle in the pipeline, and the stage
+  after it drops duplicate urls (C3), which it co-locates.  Only
+  ``run_extraction(assume_unique_urls=True)`` skips it: unique urls on a
+  size-balanced source layout need neither the dedup nor the shuffle
+  (``spark.sql.files.maxPartitionBytes`` splits balance the tasks).
 * text_hash is computed JVM-side (``xxhash64``) after the UDF so ledger
   hashing stays consistent with Spark SQL and costs no Python time.
 * Arrow batches are bounded by rows (session.py maxRecordsPerBatch) so a
@@ -88,21 +90,25 @@ _STAGE_SCHEMA = (
 )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 64) -> DataFrame:
+# Buckets per target partition of ``salted_repartition``.
+SALT = 64
+
+
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition on a salted url-hash to break host/byte skew (north_rule).
 
-    ``salt`` buckets per target partition; r8 raised the default 8 -> 64
+    ``SALT`` buckets per target partition; r8 raised it 8 -> 64
     per the skew guidance (many more distinct key values than partitions
     so the hash spreads evenly): ~salt pages-per-bucket variance is what
     sets the extract stage's straggler tail, and the interleaved 600k A/B
     read ~5% in 64's favor at zero cost.  A single giant page remains
     irreducible at any salt — that term is the corpus, not the plan.
 
-    ``xxhash64(url) % (P * salt)`` gives ``salt`` buckets per target
+    ``xxhash64(url) % (P * SALT)`` gives ``SALT`` buckets per target
     partition, so even a pathological upstream layout (all giant pages in
     one input split) spreads evenly.
     """
-    buckets = num_partitions * salt
+    buckets = num_partitions * SALT
     return df.repartition(
         num_partitions, F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
     )
@@ -128,7 +134,7 @@ def _single_spans(
 
 def _extract_batches(
     batches: Iterator[pd.DataFrame],
-    dedupe: bool = False,
+    drop_dup_urls: bool = False,
     options: "ExtractOptions | None" = None,
 ) -> Iterator[pd.DataFrame]:
     opts = options or ExtractOptions()
@@ -138,7 +144,7 @@ def _extract_batches(
     # partition-local dedup (C3): valid because the salted url-hash
     # repartition co-locates equal urls; costs one hash-set instead of a
     # second full-payload shuffle (dropDuplicates would reshuffle the html)
-    seen: set | None = set() if dedupe else None
+    seen: set | None = set() if drop_dup_urls else None
     for pdf in batches:
         t0 = time.monotonic()
         if seen is not None:
@@ -207,7 +213,6 @@ def extract_pages(
     df: DataFrame,
     options: ExtractOptions | None = None,
     repartition: int | None = None,
-    salt: int = 64,
 ) -> DataFrame:
     """pages DataFrame -> extracted DataFrame (EXTRACTED schema + lineage cols).
 
@@ -226,13 +231,14 @@ def extract_pages(
         "input_split", F.input_file_name()
     )
     src = src.select("url", "html", "lang", "input_split")
-    dedupe_in_stage = False
     if repartition:
-        src = salted_repartition(src, repartition, salt)
-        dedupe_in_stage = True  # equal urls are now co-located
+        src = salted_repartition(src, repartition)
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_batches(batches, dedupe=dedupe_in_stage, options=options)
+        # with the salted repartition, equal urls are co-located
+        return _extract_batches(
+            batches, drop_dup_urls=bool(repartition), options=options
+        )
 
     staged = src.mapInPandas(stage, schema=_STAGE_SCHEMA)
     spans = F.arrays_zip(

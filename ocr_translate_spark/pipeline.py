@@ -4,11 +4,11 @@ The batch analog of the reference's request lifecycle
 (ref: ocr_translate/views.py:215-297 + ocr_tsl/full.py:79-173), SURVEY.md §3.4:
 
     pages scan
-      -> dropDuplicates(url)                      (C3 in-flight dedup)
       -> anti-join vs committed `runs` ledger     (C1 memoization; `force`
          skips it, ref models/box.py:131-173)
       -> salted repartition on url-hash           (skew, north_rule)
-      -> ONE mapInPandas Arrow stage              (X1+X2+A5 fused)
+      -> ONE mapInPandas Arrow stage              (X1+X2+A5 fused; C3
+         in-flight url dedup over the co-located urls)
       -> xxhash64 + version/options columns       (JVM-side)
       -> run_id + snapshot_id ledger columns, observed row count
       -> stage parquet, single atomic snapshot commit of `extracted`
@@ -38,7 +38,6 @@ def pending_pages(
     runs: DataFrame,
     options_hash: "str | tuple[str, ...]",
     force: bool = False,
-    dedupe: bool = True,
 ) -> DataFrame:
     """Pages with no committed run for (extractor_version, options_hash).
 
@@ -51,13 +50,11 @@ def pending_pages(
     (ExtractOptions.accepted_hashes): ledgers written under the legacy
     full-dict hash scheme keep memoizing across the scheme migration.
 
-    ``dedupe=False`` skips the dropDuplicates shuffle — used when the
-    extraction stage dedupes partition-locally after the salted
-    repartition (one payload shuffle instead of two).
+    Duplicate urls pass through: the extraction stage drops them after
+    its salted repartition co-locates equal urls (operators/extract.py).
     """
-    deduped = pages.dropDuplicates(["url"]) if dedupe else pages
     if force:
-        return deduped
+        return pages
     hashes = (options_hash,) if isinstance(options_hash, str) else tuple(options_hash)
     done = runs.filter(
         (F.col("extractor_version") == EXTRACTOR_VERSION)
@@ -69,7 +66,7 @@ def pending_pages(
     # corpus; when it outgrows broadcast at 10^12 scale, bucket `pages` and
     # `extracted` by url-hash in Iceberg so the anti-join co-locates
     # without any payload shuffle.
-    return deduped.join(F.broadcast(done), "url", "left_anti")
+    return pages.join(F.broadcast(done), "url", "left_anti")
 
 
 def run_extraction(
@@ -86,6 +83,10 @@ def run_extraction(
     Stats: {run_id, snapshot_id, n_written}.  n_written == 0 means the
     ledger already covered every input page and nothing was committed —
     the memoization fast path (second invocation computes zero rows).
+
+    Duplicate urls are dropped in the extraction stage, after the salted
+    repartition co-locates them: at width ``repartition``, or at
+    ``spark.sql.shuffle.partitions`` when it is None.
 
     ``assume_unique_urls=True`` with ``repartition=None`` is the
     ZERO-SHUFFLE mode: when the source contract guarantees unique urls
@@ -112,10 +113,9 @@ def run_extraction(
         pages = pages.withColumn("input_split", F.input_file_name())
 
     runs = wh.read(spark, "runs", schema=RUNS)
-    todo = pending_pages(
-        pages, runs, options.accepted_hashes(), force=force,
-        dedupe=not repartition and not assume_unique_urls,
-    )
+    todo = pending_pages(pages, runs, options.accepted_hashes(), force=force)
+    if not repartition and not assume_unique_urls:
+        repartition = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     staged_df = extract_pages(todo, options=options, repartition=repartition)
 

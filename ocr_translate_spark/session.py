@@ -26,20 +26,22 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "ocr_translate_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     Args:
         cpus: local[N] threads; defaults to $SPARK_GRAFT_CPUS or '*'.
-        shuffle_partitions: defaults to cpus (local mode wants ~cores, not 200).
+            ``spark.sql.shuffle.partitions`` follows it (local mode wants
+            ~cores, not 200).
+        extra_conf: Spark settings applied last, over the defaults below
+            (e.g. ``{"spark.sql.parquet.compression.codec": "zstd"}``).
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
         cpus = int(env) if env else 0
     master = f"local[{cpus}]" if cpus else "local[*]"
-    n_shuffle = shuffle_partitions or (cpus if cpus else os.cpu_count() or 8)
+    n_shuffle = cpus or os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.master(master)
@@ -68,12 +70,9 @@ def get_spark(
         # fused extract+write stage regressed the 100k-page bench 2-5x
         # (systematic across reps in a clean window), while at 1M pages
         # on tmpfs it measured wall-parity.  Default stays snappy so the
-        # per-round bench stays comparable; flip with one env var — on a
-        # real cluster with dedicated cores, prefer zstd.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),
-        )
+        # per-round bench stays comparable; on a real cluster with
+        # dedicated cores, prefer zstd via extra_conf.
+        .config("spark.sql.parquet.compression.codec", "snappy")
         # scan split sizing (guide §6): deliberately left at the Spark
         # default.  An r8 A/B (16m vs 128m, interleaved per-query via the
         # runtime conf in one session) measured NO difference on any
@@ -89,8 +88,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # shuffle/spill on tmpfs: this box's /tmp is a single disk, which
         # serializes shuffle writes across 32 threads; a real cluster gets
-        # per-executor local SSDs instead (set SPARK_GRAFT_LOCAL_DIR)
-        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
+        # per-executor local SSDs instead.  Spark's own SPARK_LOCAL_DIRS
+        # environment variable takes precedence over this setting
+        # (tests/test_session.py).
+        .config("spark.local.dir", "/dev/shm/spark-local")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -9,6 +9,6 @@ from ocr_translate_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("ocr_translate_spark-tests", cpus=4, shuffle_partitions=4)
+    spark = get_spark("ocr_translate_spark-tests", cpus=4)
     yield spark
     spark.stop()

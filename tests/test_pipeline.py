@@ -131,18 +131,38 @@ def test_options_change_recomputes(spark, tmp_path):
     assert stats["n_written"] == 16
 
 
-def test_dup_urls_deduped(spark, tmp_path):
-    """C3: identical urls collapse before compute."""
+def test_dup_urls_deduped(spark, tmp_path, monkeypatch):
+    """C3: identical urls collapse before compute.  With no
+    ``repartition``, copies spread over several input partitions still
+    commit once each, and the salted shuffle is the only payload exchange:
+    no aggregate on url, no second shuffle."""
+    import re
+
+    plans = []
+    stage = Warehouse.stage
+
+    def recording_stage(self, df, table):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return stage(self, df, table)
+
+    monkeypatch.setattr(Warehouse, "stage", recording_stage)
     root = str(tmp_path / "wh")
     pages = pages_df(spark, 16, partitions=2)
     doubled = pages.union(pages)
     stats = run_extraction(spark, doubled, root)
     assert stats["n_written"] == 16
+    got = read_extracted(spark, root, latest_only=False)
+    assert got.count() == got.select("url").distinct().count() == 16
+    [plan] = plans
+    # dropDuplicates plans as a Hash- or SortAggregate keyed on url
+    assert not re.search(r"Aggregate\(keys?=\[url#", plan), plan
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
 
 
 def test_dup_urls_deduped_in_stage(spark, tmp_path):
-    """C3 fast path: with salted repartition, dedup happens partition-
-    locally inside the Arrow stage (equal urls are co-located)."""
+    """C3 at an explicit width: after the salted repartition, dedup
+    happens partition-locally inside the Arrow stage (equal urls are
+    co-located)."""
     root = str(tmp_path / "wh")
     pages = pages_df(spark, 16, partitions=2)
     tripled = pages.union(pages).union(pages)
@@ -564,7 +584,7 @@ def test_zero_shuffle_mode_byte_identical(spark, tmp_path):
     from ocr_translate_spark.schemas import RUNS
 
     runs = Warehouse(root).read(spark, "runs", schema=RUNS)
-    todo = pending_pages(pages, runs, "x", dedupe=False)
+    todo = pending_pages(pages, runs, "x")
     plan = extract_pages(todo)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastHashJoin" in plan
@@ -605,28 +625,28 @@ def _jobs_of(spark, group: str, fn):
 def test_run_extraction_spark_jobs_per_call(spark, tmp_path):
     """Jobs per run_extraction call, pinned: a cold call, a half-memoized
     recrawl and a fully memoized call each stage and commit one table, with
-    the written-row count observed on the write itself.  A job added to
+    the written-row count observed on the write itself — at an explicit
+    width and at the default one (no ``repartition``).  A job added to
     the call shows up here."""
     import os
 
-    root = str(tmp_path / "wh")
     half = pages_df(spark, 32, partitions=2)
     full = pages_df(spark, 64, partitions=2)
-    cold, cold_jobs = _jobs_of(
-        spark, "jobs-cold", lambda: run_extraction(spark, half, root, repartition=4)
-    )
-    recrawl, recrawl_jobs = _jobs_of(
-        spark, "jobs-recrawl", lambda: run_extraction(spark, full, root, repartition=4)
-    )
-    memo, memo_jobs = _jobs_of(
-        spark, "jobs-memo", lambda: run_extraction(spark, full, root, repartition=4)
-    )
-    assert (cold["n_written"], recrawl["n_written"], memo["n_written"]) == (32, 32, 0)
-    assert (cold_jobs, recrawl_jobs, memo_jobs) == (COLD_JOBS, RECRAWL_JOBS, MEMO_JOBS)
-    # one table per commit, and the memoized call's staged dir is gone
-    wh = Warehouse(root)
-    assert set(wh._manifest(wh.current_snapshot_id())["tables"]) == {"extracted"}
-    assert len(os.listdir(os.path.join(root, "extracted"))) == 2
+    for width in (4, None):
+        root = str(tmp_path / f"wh-{width}")
+
+        def call(pages):
+            return lambda: run_extraction(spark, pages, root, repartition=width)
+
+        cold, cold_jobs = _jobs_of(spark, f"jobs-cold-{width}", call(half))
+        recrawl, recrawl_jobs = _jobs_of(spark, f"jobs-recrawl-{width}", call(full))
+        memo, memo_jobs = _jobs_of(spark, f"jobs-memo-{width}", call(full))
+        assert (cold["n_written"], recrawl["n_written"], memo["n_written"]) == (32, 32, 0)
+        assert (cold_jobs, recrawl_jobs, memo_jobs) == (COLD_JOBS, RECRAWL_JOBS, MEMO_JOBS), width
+        # one table per commit, and the memoized call's staged dir is gone
+        wh = Warehouse(root)
+        assert set(wh._manifest(wh.current_snapshot_id())["tables"]) == {"extracted"}
+        assert len(os.listdir(os.path.join(root, "extracted"))) == 2
 
 
 def test_legacy_three_table_warehouse(spark, tmp_path):
