@@ -17,7 +17,9 @@ the later, more expensive stages would otherwise pay for):
 Every stage is one of the §2 / LLM-pipeline operators with its own
 driver oracle; this module only composes them, adds the keeper policy,
 and returns per-stage counts so a run is auditable (the analog of the
-extraction pipeline's metrics lineage).
+extraction pipeline's metrics lineage).  Stages LABEL rows instead of
+filtering them: a decision frame keeps every input row with the first
+stage that rejected it, and one observation at its root counts them all.
 
 Near-dedup keeper policy: a candidate pair (a, b) with
 ``est_jaccard >= near_threshold`` (a < b by construction) drops ``b`` —
@@ -37,9 +39,8 @@ mass.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import ExitStack
 from dataclasses import dataclass, field
-from functools import wraps
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -69,88 +70,135 @@ class CurationReport:
         )} | {"stages": list(self.stages)}
 
 
-@contextmanager
-def _aqe_empty_rule_excluded(spark):
-    """Exclude AQEPropagateEmptyRelation while an observe()-audited plan
-    is BUILT and run: if some stage empties the corpus at runtime (an
-    aggressive quality gate, a fully-memoized replay batch), that rule
-    replaces the upstream subtrees — CollectMetrics included — with empty
-    relations, completing their observations with a schema-less row
-    (toPyRow assertion) and losing the true upstream counts.  Empty
-    pipelines are cheap; honest audit counts are not optional.
+def _drop(dec: DataFrame, cond, label: str, text_col: str) -> DataFrame:
+    """Label the live rows of a decision frame (every input row, with
+    ``dropped_at`` NULL while it survives) that match ``cond`` as
+    dropped at ``label``, and clear their text: later stages see only
+    survivors, and the first stage to reject a row names it."""
+    dropped = F.coalesce(F.col("dropped_at"), F.when(cond, F.lit(label)))
+    return dec.withColumns({
+        "dropped_at": dropped,
+        text_col: F.when(dropped.isNull(), F.col(text_col)),
+    })
 
-    The exclusion must cover ``persist()`` calls, not just the terminal
-    action: caching compiles the cached physical plan EAGERLY with the
-    session conf at persist() time, so an exclusion set only around the
-    final count leaves the cached subtree free to propagate emptiness
-    through its CollectMetrics nodes at materialization (observed:
-    curate_incremental's replay batches died exactly this way when every
-    observation sat under the persisted exact-dedup node).
 
-    CONCURRENCY CONTRACT: the exclusion is set on the SHARED session conf,
-    so any query the same SparkSession runs concurrently (another thread,
-    a streaming sink) executes with the rule excluded too, and a
-    concurrent caller can clobber the restore.  Curation is documented
-    single-query-at-a-time per session (the warehouse is single-writer
-    anyway); a caller that needs true isolation should run curation on
-    ``spark.newSession()``, whose conf is cloned and independent."""
-    exclude_key = "spark.sql.adaptive.optimizer.excludedRules"
-    aqe_empty_rule = (
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+def _drop_ids(
+    dec: DataFrame, ids: DataFrame, id_col: str, label: str, text_col: str,
+    *, listed: bool,
+) -> DataFrame:
+    """:func:`_drop` keyed by id: drop the live rows whose id is
+    (``listed=True``) or is not (``listed=False``) in ``ids`` — a
+    stage's rejects, or its survivors.  ``ids`` holds each id once."""
+    flagged = dec.join(ids.select(id_col, F.lit(True).alias("_in")), id_col, "left")
+    cond = F.col("_in").isNotNull() if listed else F.col("_in").isNull()
+    return _drop(flagged, cond, label, text_col).drop("_in")
+
+
+def _live(dec: DataFrame) -> DataFrame:
+    return dec.filter(F.col("dropped_at").isNull())
+
+
+def _clean_and_dedup(
+    dec: DataFrame, id_col: str, text_col: str, stages: "list[str]", *,
+    min_words: int, max_line_frac: float, scrub: bool,
+    gopher_kwargs: "dict | None",
+) -> DataFrame:
+    """The payload stages both curation entry points share, as labels on
+    a decision frame: Gopher gate ("quality"), per-corpus line dedup
+    plus the post-clean length gate ("line_dedup", the C4 order),
+    optional PII scrub, and exact dedup — min id per identical text
+    ("exact_dedup", dedup.dedup_exact's keeper policy)."""
+    from pyspark.sql import Window
+
+    gk = dict(gopher_kwargs or {})
+    gk.setdefault("min_words", min_words)
+    cols = dec.columns
+    # keep= carries the frame's columns through: a linear narrow map
+    gated = textstats.gopher_rules(dec, id_col, text_col, keep=tuple(cols), **gk)
+    dec = _drop(
+        gated, ~F.coalesce(F.col("passes"), F.lit(False)), "quality", text_col
+    ).select(*cols)
+    stages.append("gopher_rules")
+
+    # line frequencies over the live docs; the corpus-size anchor is
+    # computed in-plan (drop_boilerplate_lines).  materialize=False: its
+    # lines table is read twice, and a cache here would outlive the call
+    rebuilt = curation.drop_boilerplate_lines(
+        _live(dec), id_col, text_col, max_line_frac=max_line_frac,
+        materialize=False,
+    ).select(F.col("doc_id").alias(id_col), F.col("clean_text").alias("_clean"))
+    dec = (
+        dec.join(rebuilt, id_col, "left")
+        .withColumn(text_col, F.col("_clean"))
+        .drop("_clean")
     )
-    prev = spark.conf.get(exclude_key, None)
-    rules = f"{prev},{aqe_empty_rule}" if prev else aqe_empty_rule
-    spark.conf.set(exclude_key, rules)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(exclude_key)
-        else:
-            spark.conf.set(exclude_key, prev)
+    words = F.filter(F.split(F.col(text_col), r"\s+", -1), lambda x: x != F.lit(""))
+    dec = _drop(
+        dec, F.coalesce(F.size(words) < min_words, F.lit(True)), "line_dedup",
+        text_col,
+    )
+    stages.append("line_dedup")
+
+    if scrub:
+        dec = dec.withColumn(text_col, curation.scrub_pii(F.col(text_col)))
+        stages.append("pii_scrub")
+
+    # a dropped row (NULL text) ranks alone in its own window partition
+    text = F.col(text_col)
+    w = Window.partitionBy(
+        F.md5(text), F.when(text.isNull(), F.col(id_col))
+    ).orderBy(id_col)
+    dec = _drop(
+        dec.withColumn("_rn", F.row_number().over(w)), F.col("_rn") > 1,
+        "exact_dedup", text_col,
+    ).drop("_rn")
+    stages.append("dedup_exact")
+    return dec
 
 
-def _excluding_aqe_empty_rule(fn):
-    """Run the whole decorated curation function under
-    :func:`_aqe_empty_rule_excluded` for EVERY session reachable from
-    its positional arguments (a SparkSession argument or a DataFrame's
-    ``.sparkSession``).
-
-    Covering all of them matters under Structured Streaming:
-    ``foreachBatch`` hands the sink a DataFrame bound to a CLONED
-    session (MicroBatchExecution clones the session per run, conf
-    independent), so excluding the rule only on the caller's session
-    left the cloned session's AQE free to propagate runtime-empty
-    subtrees through the audited plan — the observations completed with
-    schema-less rows exactly as in the persist case."""
-    from contextlib import ExitStack
-
-    @wraps(fn)
-    def wrapper(*args, **kwargs):
-        from pyspark.sql import SparkSession
-
-        sessions: list = []
-        for a in args:
-            s = a if isinstance(a, SparkSession) else getattr(a, "sparkSession", None)
-            if s is not None and all(s is not o for o in sessions):
-                sessions.append(s)
-        with ExitStack() as stack:
-            for s in sessions:
-                stack.enter_context(_aqe_empty_rule_excluded(s))
-            return fn(*args, **kwargs)
-
-    return wrapper
+def _checkpoint(
+    frame: DataFrame, labels: "list[str]", **extra
+) -> "tuple[DataFrame, dict[str, int]]":
+    """Materialise a decision frame once with ``localCheckpoint(eager=True)``
+    and count it with ONE observation at its root.  Returns the
+    checkpointed frame (release it with :func:`_release`) and ``n`` rows,
+    the rows left after each of ``labels`` (in stage order), and the
+    ``extra`` named aggregates.  That one execution is the call's audit.
+    It also cuts the lineage: whatever is derived from the frame plans
+    from a ``LogicalRDD``.  Nothing observed sits below a join or an
+    exchange, so Spark's runtime empty-relation rewrite (a stage that
+    rejects every row) cannot lose the observation."""
+    obs = Observation()
+    dropped = F.col("dropped_at")
+    ck = frame.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        *[F.count_if(dropped == label).alias(label) for label in labels],
+        *[agg.alias(name) for name, agg in extra.items()],
+    ).localCheckpoint(eager=True)
+    m = {k: int(v or 0) for k, v in obs.get.items()}
+    left = m["n"]
+    for label in labels:  # drops per label -> rows left after it
+        left = m[label] = left - m[label]
+    return ck, m
 
 
-def _audited_count(out: DataFrame) -> int:
-    """The ONE terminal action that drives an observe()-audited plan
-    (callers run under :func:`_excluding_aqe_empty_rule`; the nested
-    exclusion here keeps the action safe for any future direct caller)."""
-    with _aqe_empty_rule_excluded(out.sparkSession):
-        return out.count()
+def _run_observed(frame: DataFrame, **metrics) -> "dict[str, int]":
+    """Run ``frame`` once (a ``noop`` write) for ``metrics``, observed at
+    its root."""
+    obs = Observation()
+    frame.observe(obs, *[m.alias(k) for k, m in metrics.items()]).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return {k: int(v) for k, v in obs.get.items()}
 
 
-@_excluding_aqe_empty_rule
+def _release(ck: DataFrame) -> None:
+    """Drop the blocks of a :func:`_checkpoint` frame (the RDD behind its
+    ``LogicalRDD``); frames derived from it are unreadable afterwards."""
+    ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def curate_corpus(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -184,139 +232,97 @@ def curate_corpus(
     C4/RefinedWeb ordering: broadcast host-blocklist anti-join +
     deterministic per-host cap.
 
-    The report's counts come from ``observe()`` metrics attached at each
-    stage boundary, so the audited path is SINGLE-PASS: one terminal
-    action drives the whole plan and every per-stage count falls out of
-    the same job (r4 verdict #8 — the previous per-stage ``count()``
-    design re-ran 7+ actions over intermediates, which at 100 TB is 7+
-    extra passes).  The quality gate is a linear ``passes`` filter (no
-    join back), and the line-dedup corpus-size anchor is computed
-    in-plan (see drop_boilerplate_lines), so the only actions besides
-    the terminal one are Spark's own broadcast-subtree builds.
+    The report's counts come from ONE decision frame: every input row
+    labelled ``dropped_at`` — the first stage that rejects it, NULL for
+    a survivor — with one ``count_if`` per label observed at its root.
+    Materialising that frame with ``localCheckpoint(eager=True)`` is the
+    call's ONLY execution (LMFAO's one pass for a batch of aggregates;
+    the per-stage ``count()`` design re-ran 7+ actions over
+    intermediates, which at 100 TB is 7+ extra passes).  ``curated_df``
+    reads the checkpoint, so writing it re-runs no stage.
 
-    Cache lifecycle: stages 2 and 5 persist their shared-scan
-    intermediates (see dedup.minhash_lsh_candidates); a long-lived
-    session cycling many corpora should ``spark.catalog.clearCache()``
-    between corpora once the curated output is written.
+    Cache lifecycle: the signature UDF runs once per doc into one
+    cached frame that the LSH branches read; it is released right after
+    the checkpoint.  The checkpoint blocks then live as long as
+    ``curated_df`` (Spark's context cleaner drops them once it is
+    garbage-collected).
     """
     report = CurationReport()
-    observations: dict[str, Observation] = {}
-
-    def observed(frame: DataFrame, name: str) -> DataFrame:
-        obs = Observation(f"curate_{name}")
-        observations[name] = obs
-        return frame.observe(obs, F.count(F.lit(1)).alias("n"))
-
-    df = observed(df, "input")
-
-    # 0. url filters — host blocklist + per-host quota, before any
-    # payload-touching stage (both corpus-shuffle-free: broadcast anti
-    # join + a host-keyed window)
     if (blocklist is not None or max_per_host) and url_col is None:
         raise ValueError(
             "curate_corpus: blocklist/max_per_host need an explicit "
             "url_col — a non-url id column would yield empty host keys "
             "for every row (nothing to block, nothing to cap)"
         )
-    ucol = url_col or id_col
-    if blocklist is not None:
-        df = urls.filter_blocklisted_hosts(df, blocklist, url_col=ucol)
-        report.stages.append("host_blocklist")
-    if max_per_host:
-        df = urls.host_caps(df, url_col=ucol, max_per_host=max_per_host)
-        report.stages.append("host_caps")
+    cols = list(dict.fromkeys([id_col, text_col, url_col or id_col]))
+    dec = df.select(*cols).withColumn("dropped_at", F.lit(None).cast("string"))
+
+    # 0. url filters — host blocklist + per-host quota, before any
+    # payload-touching stage (both corpus-shuffle-free: broadcast anti
+    # join + a host-keyed window)
     if blocklist is not None or max_per_host:
-        df = observed(df, "url_filter")
+        ok = _live(dec)
+        if blocklist is not None:
+            ok = urls.filter_blocklisted_hosts(ok, blocklist, url_col=url_col)
+            report.stages.append("host_blocklist")
+        if max_per_host:
+            ok = urls.host_caps(ok, url_col=url_col, max_per_host=max_per_host)
+            report.stages.append("host_caps")
+        dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
 
-    # 1. quality gate — LINEAR narrow filter on the passes verdict (the
-    # keep= mode carries id/text through, so no join back to recover
-    # payload columns)
-    gk = dict(gopher_kwargs or {})
-    gk.setdefault("min_words", min_words)
-    cur = (
-        textstats.gopher_rules(df, id_col, text_col, keep=(id_col, text_col), **gk)
-        .filter("passes")
-        .select(id_col, text_col)
+    # 1-4. quality gate, line dedup + length gate, PII scrub, exact dedup
+    dec = _clean_and_dedup(
+        dec, id_col, text_col, report.stages, min_words=min_words,
+        max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
     )
-    cur = observed(cur, "quality")
-    report.stages.append("gopher_rules")
 
-    # 2. line dedup — rebuild docs minus corpus-frequent lines; the
-    # corpus-size anchor for the frequency cutoff is computed in-plan
-    rebuilt = curation.drop_boilerplate_lines(
-        cur, id_col, text_col, max_line_frac=max_line_frac,
-    ).select(
-        F.col("doc_id").alias(id_col), F.col("clean_text").alias(text_col)
-    )
-    # post-clean length gate: docs that were mostly boilerplate die here
-    # (the C4 ordering — line dedup first, then the length filter)
-    words = F.filter(
-        F.split(F.col(text_col), r"\s+", -1), lambda x: x != F.lit("")
-    )
-    cur = observed(rebuilt.filter(F.size(words) >= min_words), "line_dedup")
-    report.stages.append("line_dedup")
-
-    # 3. PII scrub — narrow map on the surviving text
-    if scrub:
-        cur = cur.withColumn(text_col, curation.scrub_pii(F.col(text_col)))
-        report.stages.append("pii_scrub")
-
-    # 4. exact dedup — min id per identical text
-    cur = observed(dedup.dedup_exact(cur, id_col, text_col), "exact_dedup")
-    report.stages.append("dedup_exact")
-
-    # 5. near dedup — greedy keep-smallest-id over LSH candidates
-    drops = (
-        dedup.minhash_lsh_candidates(cur, id_col, text_col)
-        .filter(F.col("est_jaccard") >= near_threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    cur = observed(cur.join(drops, id_col, "left_anti"), "near_dedup")
-    report.stages.append("minhash_lsh")
-
-    # 6. decontamination — drop docs sharing a 13-gram with the eval suite
-    if benchmark is not None:
-        flags = dedup.decontaminate(cur, benchmark, id_col, text_col)
-        clean_ids = flags.filter(~F.col("contaminated")).select(
-            F.col("doc_id").alias(id_col)
+    # 5. near dedup — greedy keep-smallest-id over LSH candidates; the
+    # signature UDF runs once per doc into this cached frame, which the
+    # LSH branches read (released once the checkpoint has run)
+    with ExitStack() as held:
+        signed = dedup.with_minhash_signature(dec, text_col).persist()
+        held.callback(signed.unpersist)
+        drops = (
+            dedup.minhash_pairs(
+                signed.filter(F.col("sig").isNotNull())
+                .select(F.col(id_col).alias("id"), "sig")
+            )
+            .filter(F.col("est_jaccard") >= near_threshold)
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
         )
-        cur = observed(cur.join(clean_ids, id_col, "left_semi"), "decontaminate")
-        report.stages.append("decontaminate")
+        dec = _drop_ids(
+            signed.drop("sig"), drops, id_col, "near_dedup", text_col, listed=True
+        )
+        report.stages.append("minhash_lsh")
 
-    # 7. reproducible split — salted content-hash buckets
-    out = curation.split_by_hash(cur, id_col, val_fraction=val_fraction)
-    report.stages.append("train_val_split")
-    final_obs = Observation("curate_final")
-    out = out.observe(
-        final_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("split") == "val", 1).otherwise(0)).alias("n_val"),
-    )
+        # 6. decontamination — drop docs sharing a 13-gram with the eval suite
+        if benchmark is not None:
+            flags = dedup.decontaminate(_live(dec), benchmark, id_col, text_col)
+            dirty = flags.filter("contaminated").select(F.col("doc_id").alias(id_col))
+            dec = _drop_ids(dec, dirty, id_col, "decontaminate", text_col, listed=True)
+            report.stages.append("decontaminate")
 
-    # ONE terminal action drives the whole audited plan; every stage
-    # count materializes as an observed metric of this single job.
-    _audited_count(out)
+        # 7. reproducible split — salted content-hash buckets
+        dec = curation.split_by_hash(dec, id_col, val_fraction=val_fraction)
+        report.stages.append("train_val_split")
 
-    def n_of(name: str) -> int:
-        return int(observations[name].get["n"])
-
-    report.n_input = n_of("input")
-    report.n_after_url_filter = (
-        n_of("url_filter") if "url_filter" in observations else report.n_input
-    )
-    report.n_after_quality = n_of("quality")
-    report.n_after_line_dedup = n_of("line_dedup")
-    report.n_after_exact_dedup = n_of("exact_dedup")
-    report.n_after_near_dedup = n_of("near_dedup")
-    report.n_after_decontamination = (
-        n_of("decontaminate")
-        if "decontaminate" in observations
-        else report.n_after_near_dedup
-    )
-    report.n_output = int(final_obs.get["n"])
-    report.n_val = int(final_obs.get["n_val"] or 0)
-    return out, report
+        labels = [
+            "url_filter", "quality", "line_dedup", "exact_dedup", "near_dedup",
+            "decontaminate",
+        ]
+        ck, m = _checkpoint(dec, labels, n_val=F.count_if(
+            F.col("dropped_at").isNull() & (F.col("split") == "val")
+        ))
+    report.n_input = m["n"]
+    report.n_after_url_filter = m["url_filter"]
+    report.n_after_quality = m["quality"]
+    report.n_after_line_dedup = m["line_dedup"]
+    report.n_after_exact_dedup = m["exact_dedup"]
+    report.n_after_near_dedup = m["near_dedup"]
+    report.n_output = report.n_after_decontamination = m["decontaminate"]
+    report.n_val = m["n_val"]
+    return _live(ck).select(id_col, text_col, "split"), report
 
 
 # ---------------------------------------------------------------------
@@ -361,7 +367,6 @@ SEM_CELLS_TABLE = "sem_cells"      # (id, cell, cell_cos) — semantic cell inde
 SEM_VECS_TABLE = "sem_vecs"        # (id, embedding) — survivor vectors
 
 
-@_excluding_aqe_empty_rule
 def curate_incremental(
     spark,
     warehouse_root: str,
@@ -394,7 +399,7 @@ def curate_incremental(
     * ``curated_keys``  — (id, content_md5): exact-dup + idempotence index;
     * ``dedup_sigs`` / ``dedup_bands`` — the :func:`dedup.minhash_index`
       tables; each batch joins its own bands against the stored bands
-      (dedup.incremental_minhash_candidates) — the 100 TB corpus text is
+      (dedup.minhash_pairs) — the 100 TB corpus text is
       NEVER re-scanned, only its ~300 B/doc index;
     * with ``embedding_col``: ``sem_centroids`` / ``sem_cells`` /
       ``sem_vecs`` — the :func:`similarity.semantic_index` tables
@@ -424,9 +429,19 @@ def curate_incremental(
     actually APPENDS rides the same atomic commit, so the quota can
     never drift from the corpus.  Empty-host rows are exempt, matching
     urls.host_caps.
+
+    Audit: the decision frame (see curate_corpus) also carries the
+    survivors' MinHash signature, host and semantic cell, and its one
+    checkpoint fills every report count.  The stage writes plan from
+    that checkpoint, so an appending batch runs 1 execution + one per
+    published table, and a replayed or fully-rejected batch runs the
+    checkpoint alone.  The Python stages (signature UDF, cell
+    assignment) run once per doc into cached frames; those and the
+    checkpoint blocks are released before the call returns.  ``out``
+    (id, text, split) comes back CACHED: the caller owns its
+    ``unpersist()``, after which the call has left no persistent RDD.
     """
-    from .io.tables import open_warehouse
-    from .operators import dedup as dd
+    from .io.tables import empty_frame, open_warehouse
 
     rep = IncrementalReport()
     wh = open_warehouse(spark, warehouse_root)
@@ -435,297 +450,256 @@ def curate_incremental(
     keys = wh.read(spark, KEYS_TABLE, schema=f"id {id_dt}, content_md5 string")
     sigs = wh.read(spark, SIGS_TABLE, schema=f"id {id_dt}, sig array<bigint>")
     bands = wh.read(spark, BANDS_TABLE, schema=f"id {id_dt}, band int, bucket bigint")
-
-    # Single-pass audit (same contract as curate_corpus): every boundary
-    # count is an observe() metric of the ONE terminal action, not its own
-    # count() job — the previous design ran ~8 per-stage count() actions
-    # per micro-batch, re-running the quality/line-dedup lineage several
-    # times, which a high-frequency ingest stream pays on every batch.
-    observations: dict[str, Observation] = {}
-
-    def observed(frame: DataFrame, name: str) -> DataFrame:
-        obs = Observation(f"curate_inc_{name}")
-        observations[name] = obs
-        return frame.observe(obs, F.count(F.lit(1)).alias("n"))
-
-    batch = observed(batch, "batch")
-    # idempotent re-ingestion: ids the ledger already holds are done
-    new = observed(
-        batch.join(keys.select(F.col("id").alias(id_col)), id_col, "left_anti"),
-        "new",
-    )
-    rep.stages.append("ledger_anti_join")
-
-    # stage 0: url filters — blocklist, then the CROSS-BATCH host quota
     if (blocklist is not None or max_per_host) and url_col is None:
         raise ValueError(
             "curate_incremental: blocklist/max_per_host need an explicit "
             "url_col (see curate_corpus)"
         )
-    if blocklist is not None:
-        new = urls.filter_blocklisted_hosts(new, blocklist, url_col=url_col)
-        rep.stages.append("host_blocklist")
+    cols = list(dict.fromkeys([id_col, text_col, url_col or id_col]))
+    dec = batch.select(*cols).withColumn("dropped_at", F.lit(None).cast("string"))
     if max_per_host:
-        host_counts = (
-            wh.read(spark, HOSTS_TABLE, schema="host string, n long")
-            .groupBy("host").agg(F.sum("n").alias("_kept"))
-        )
-        # exact salted two-level per-host rank (urls.host_rank): the
-        # batch's remaining allowance is at most max_per_host, so the
-        # shard prune at max_per_host is lossless here too
-        new = (
-            urls.host_rank(new, url_col, max_per_host)
-            .join(F.broadcast(host_counts),
-                  F.col("_host") == F.col("host"), "left")
-            .filter(
-                (F.col("_host") == "")
-                | (F.col("_hc_rn") <= max_per_host - F.coalesce(F.col("_kept"), F.lit(0)))
-            )
-            .drop("_hc_rn", "_kept", "host", "_host")
-        )
-        rep.stages.append("host_caps_incremental")
+        # survivors' hosts feed the quota delta of the commit
+        dec = dec.withColumn("_host", urls.host_of(F.col(url_col)))
 
-    gk = dict(gopher_kwargs or {})
-    gk.setdefault("min_words", min_words)
-    cur = (
-        textstats.gopher_rules(new, id_col, text_col, keep=(id_col, text_col), **gk)
-        .filter("passes")
-        .select(id_col, text_col)
+    # idempotent re-ingestion: ids the ledger already holds are done
+    dec = _drop_ids(
+        dec, keys.select(F.col("id").alias(id_col)), id_col, "ledger", text_col,
+        listed=True,
     )
-    cur = observed(cur, "quality")
-    rep.stages.append("gopher_rules")
+    rep.stages.append("ledger_anti_join")
 
-    rebuilt = curation.drop_boilerplate_lines(
-        cur, id_col, text_col, max_line_frac=max_line_frac,
-    ).select(F.col("doc_id").alias(id_col), F.col("clean_text").alias(text_col))
-    words = F.filter(F.split(F.col(text_col), r"\s+", -1), lambda x: x != F.lit(""))
-    cur = observed(rebuilt.filter(F.size(words) >= min_words), "line_dedup")
-    rep.stages.append("line_dedup")
-
-    if scrub:
-        cur = cur.withColumn(text_col, curation.scrub_pii(F.col(text_col)))
-        rep.stages.append("pii_scrub")
-
-    # exact dedup: within batch, then against the stored md5 keys
-    cur = observed(dedup.dedup_exact(cur, id_col, text_col), "batch_exact")
-    cur = cur.withColumn("_md5", F.md5(F.col(text_col))).join(
-        keys.select(F.col("content_md5").alias("_md5")).distinct(),
-        "_md5", "left_anti",
-    ).drop("_md5")
-    rep.stages.append("dedup_exact")
-    # the persisted node sits ABOVE its observations: metrics still report
-    # through InMemoryRelation (verified), and the near-dedup stage's four
-    # references to cur share one cache materialization within the single
-    # audited action
-    cur = observed(cur, "exact_dedup").persist()
-    cached = cur  # unpersist handle (cur is reassigned downstream)
-
-    # near dedup: stored index first (corpus wins), then within batch
-    new_ids = cur.select(F.col(id_col).alias("_nid"))
-    cands = dd.incremental_minhash_candidates(
-        cur.select(id_col, text_col), sigs, bands, id_col, text_col
-    ).filter(F.col("est_jaccard") >= near_threshold).persist()
-    # every NEW endpoint of a pair loses unless the pair is new-new, in
-    # which case the smaller id survives: a new id_a drops only when the
-    # other side is a STORED doc; a new id_b always drops (stored docs
-    # never appear as id_b of a new-new pair, and in a new-new pair the
-    # greater id loses by the batch keeper policy)
-    lose_a = (
-        cands.join(new_ids, cands["id_a"] == new_ids["_nid"], "left_semi")
-        .join(
-            cur.select(F.col(id_col).alias("_nb")),
-            cands["id_b"] == F.col("_nb"), "left_anti",
-        )
-        .select(F.col("id_a").alias(id_col))
-    )
-    lose_b = (
-        cands.join(
-            cur.select(F.col(id_col).alias("_nb2")),
-            cands["id_b"] == F.col("_nb2"), "left_semi",
-        )
-        .select(F.col("id_b").alias(id_col))
-    )
-    drops = lose_a.unionByName(lose_b).distinct()
-    cur = observed(cur.join(drops, id_col, "left_anti"), "near_dedup")
-    rep.stages.append("minhash_lsh_incremental")
-
-    # semantic dedup (SemDeDup) against the stored frozen-centroid index:
-    # same keeper policy as the MinHash stage (corpus wins; within-batch
-    # the smaller id wins).  Embeddings are recovered from the RAW batch
-    # by id (the payload stages projected them away); docs without a
-    # (nonzero) embedding carry no semantic signal and never drop here.
-    # Centroids FREEZE at the first embedded batch — the tiered_ingest
-    # frozen-bounds discipline; re-clustering is a periodic maintenance
-    # rebuild, not the hot path.
-    new_cells = None
-    sem_cands = None
-    first_sem = False
-    cts = None
-    if embedding_col is not None:
-        import numpy as np
-
-        from .operators import similarity as sim
-
-        emb_dt = batch.schema[embedding_col].dataType.simpleString()
-        sem_input = (
-            cur.select(id_col)
-            .join(batch.select(F.col(id_col), F.col(embedding_col)), id_col)
-            .filter(sim._nonzero_vec(F.col(embedding_col)))
-            .select(F.col(id_col).alias("id"), F.col(embedding_col))
-        )
-        cts_rows = (
-            wh.read(spark, SEM_CENTROIDS_TABLE,
-                    schema="cell bigint, centroid array<double>")
-            .orderBy("cell").collect()
-        )
-        first_sem = not cts_rows
-        if first_sem:
-            cts = sim.train_ivf_centroids(
-                sem_input, "id", embedding_col,
-                n_cells=semantic_cells, sample_size=4096,
+    # stage 0: url filters — blocklist, then the CROSS-BATCH host quota
+    if blocklist is not None or max_per_host:
+        ok = _live(dec).select(*cols)
+        if blocklist is not None:
+            ok = urls.filter_blocklisted_hosts(ok, blocklist, url_col=url_col)
+            rep.stages.append("host_blocklist")
+        if max_per_host:
+            host_counts = (
+                wh.read(spark, HOSTS_TABLE, schema="host string, n long")
+                .groupBy("host").agg(F.sum("n").alias("_kept"))
             )
-        else:
-            cts = np.array([r["centroid"] for r in cts_rows], dtype=np.float64)
-        if len(cts):
-            new_cells = sim._assign_cell_with_sim(
-                sem_input, cts, embedding_col
-            ).persist()
-            sem_index = wh.read(
-                spark, SEM_CELLS_TABLE,
-                schema=f"id {id_dt}, cell bigint, cell_cos double",
-            )
-            sem_vecs = wh.read(
-                spark, SEM_VECS_TABLE,
-                schema=f"id {id_dt}, embedding {emb_dt}",
-            ).select("id", F.col("embedding").alias(embedding_col))
-            sem_cands = sim.incremental_semantic_candidates(
-                None, None, sem_index, sem_vecs, "id", embedding_col,
-                threshold=semantic_threshold, new_cells=new_cells,
-            ).persist()
-            new_flag = cur.select(F.col(id_col).alias("_sn"))
-            drops_sem = (
-                sem_cands.join(new_flag, sem_cands["id_b"] == F.col("_sn"),
-                               "left")
-                .select(
-                    F.when(
-                        F.col("_sn").isNotNull(),
-                        F.greatest(F.col("id_a"), F.col("id_b")),
-                    ).otherwise(F.col("id_a")).alias(id_col)
+            # exact salted two-level per-host rank (urls.host_rank): the
+            # batch's remaining allowance is at most max_per_host, so the
+            # shard prune at max_per_host is lossless here too
+            ok = (
+                urls.host_rank(ok, url_col, max_per_host)
+                .join(F.broadcast(host_counts),
+                      F.col("_host") == F.col("host"), "left")
+                .filter(
+                    (F.col("_host") == "")
+                    | (F.col("_hc_rn")
+                       <= max_per_host - F.coalesce(F.col("_kept"), F.lit(0)))
                 )
-                .distinct()
             )
-            cur = cur.join(drops_sem, id_col, "left_anti")
-        rep.stages.append("semantic_dedup_incremental")
-    cur = observed(cur, "semantic")
+            rep.stages.append("host_caps_incremental")
+        dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
 
-    if benchmark is not None:
-        flags = dedup.decontaminate(cur, benchmark, id_col, text_col)
-        clean_ids = flags.filter(~F.col("contaminated")).select(
-            F.col("doc_id").alias(id_col)
+    # Gopher gate, per-batch line dedup (line frequencies are per-batch
+    # by design — corpus-global boilerplate drift belongs to a periodic
+    # re-curation, not the hot ingest path), PII scrub, exact dedup
+    # within the batch
+    dec = _clean_and_dedup(
+        dec, id_col, text_col, rep.stages, min_words=min_words,
+        max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
+    )
+    # ...then against the stored md5 keys (corpus wins)
+    stored = keys.select(F.col("content_md5").alias("_md5")).distinct()
+    dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
+        stored.withColumn("_stored", F.lit(True)), "_md5", "left"
+    )
+    dec = _drop(
+        dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
+    ).drop("_md5", "_stored")
+
+    # the cached frames and the checkpoint blocks are released on the
+    # way out, whatever happens
+    with ExitStack() as held:
+        # the signature UDF runs ONCE per doc: the four LSH branches and the
+        # survivors' index rows all read this cached frame
+        signed = dedup.with_minhash_signature(dec, text_col).persist()
+        held.callback(signed.unpersist)
+
+        # near dedup: stored index first (corpus wins), then within batch
+        cands = dedup.minhash_pairs(
+            signed.filter(F.col("sig").isNotNull())
+            .select(F.col(id_col).alias("id"), "sig"),
+            sigs, bands,
+        ).filter(F.col("est_jaccard") >= near_threshold)
+        # every pair touches the batch, and its NEW endpoint loses (corpus
+        # wins); in a new-new pair the greater id loses (batch keeper
+        # policy), which is id_b as pairs come ordered — so id_b drops when
+        # it is new, else id_a
+        new_b = _live(signed).select(F.col(id_col).alias("_nb"))
+        drops = (
+            cands.join(new_b, cands["id_b"] == F.col("_nb"), "left")
+            .select(
+                F.when(F.col("_nb").isNotNull(), F.col("id_b"))
+                .otherwise(F.col("id_a")).alias(id_col)
+            )
+            .distinct()
         )
-        cur = cur.join(clean_ids, id_col, "left_semi")
-        rep.stages.append("decontaminate")
-    cur = observed(cur, "decontamination")
+        dec = _drop_ids(signed, drops, id_col, "near_dedup", text_col, listed=True)
+        rep.stages.append("minhash_lsh_incremental")
 
-    out = curation.split_by_hash(
-        cur.select(id_col, text_col), id_col, val_fraction=val_fraction
-    ).persist()
-    rep.stages.append("train_val_split")
+        # semantic dedup (SemDeDup) against the stored frozen-centroid index:
+        # same keeper policy as the MinHash stage (corpus wins; within-batch
+        # the smaller id wins).  Embeddings are recovered from the RAW batch
+        # by id (the payload stages projected them away); docs without a
+        # (nonzero) embedding carry no semantic signal and never drop here.
+        # Centroids FREEZE at the first embedded batch — the tiered_ingest
+        # frozen-bounds discipline; re-clustering is a periodic maintenance
+        # rebuild, not the hot path.
+        new_cells = None
+        if embedding_col is not None:
+            import numpy as np
 
-    # the ONE action of the batch's audit phase: materializes out's cache
-    # and completes every observation above (AQE empty-relation rule
-    # excluded around it — see _audited_count)
-    rep.n_appended = _audited_count(out)
+            from .operators import similarity as sim
 
-    def n_of(name: str) -> int:
-        return int(observations[name].get["n"])
+            emb_dt = batch.schema[embedding_col].dataType.simpleString()
+            sem_input = (
+                _live(dec).select(id_col)
+                .join(batch.select(F.col(id_col), F.col(embedding_col)), id_col)
+                .filter(sim._nonzero_vec(F.col(embedding_col)))
+                .select(F.col(id_col).alias("id"), F.col(embedding_col))
+            )
+            cts_rows = (
+                wh.read(spark, SEM_CENTROIDS_TABLE,
+                        schema="cell bigint, centroid array<double>")
+                .orderBy("cell").collect()
+            )
+            first_sem = not cts_rows
+            if first_sem:
+                cts = sim.train_ivf_centroids(
+                    sem_input, "id", embedding_col,
+                    n_cells=semantic_cells, sample_size=4096,
+                )
+            else:
+                cts = np.array([r["centroid"] for r in cts_rows], dtype=np.float64)
+            if len(cts):
+                # the Arrow cell assignment runs once: the candidate search
+                # and the survivors' index rows read this cached frame
+                new_cells = sim._assign_cell_with_sim(
+                    sem_input, cts, embedding_col
+                ).persist()
+                held.callback(new_cells.unpersist)
+                sem_index = wh.read(
+                    spark, SEM_CELLS_TABLE,
+                    schema=f"id {id_dt}, cell bigint, cell_cos double",
+                )
+                sem_vecs = wh.read(
+                    spark, SEM_VECS_TABLE,
+                    schema=f"id {id_dt}, embedding {emb_dt}",
+                ).select("id", F.col("embedding").alias(embedding_col))
+                sem_cands = sim.incremental_semantic_candidates(
+                    None, None, sem_index, sem_vecs, "id", embedding_col,
+                    threshold=semantic_threshold, new_cells=new_cells,
+                )
+                new_flag = new_cells.select(F.col("id").alias("_sn"))
+                drops_sem = (
+                    sem_cands.join(new_flag, sem_cands["id_b"] == F.col("_sn"),
+                                   "left")
+                    .select(
+                        F.when(
+                            F.col("_sn").isNotNull(),
+                            F.greatest(F.col("id_a"), F.col("id_b")),
+                        ).otherwise(F.col("id_a")).alias(id_col)
+                    )
+                    .distinct()
+                )
+                dec = _drop_ids(
+                    dec, drops_sem, id_col, "semantic_dedup", text_col, listed=True
+                ).join(
+                    new_cells.select(
+                        F.col("id").alias(id_col), "cell", "cell_cos",
+                        F.col(embedding_col).alias("_emb"),
+                    ),
+                    id_col, "left",
+                )
+            rep.stages.append("semantic_dedup_incremental")
 
-    rep.n_batch = n_of("batch")
-    rep.n_new = n_of("new")
-    rep.n_after_quality = n_of("quality")
-    rep.n_after_line_dedup = n_of("line_dedup")
-    rep.n_after_exact_dedup = n_of("exact_dedup")
-    rep.n_dropped_vs_corpus_exact = n_of("batch_exact") - rep.n_after_exact_dedup
-    rep.n_after_near_dedup = n_of("near_dedup")
-    rep.n_after_semantic_dedup = n_of("semantic")
-    rep.n_after_decontamination = n_of("decontamination")
+        if benchmark is not None:
+            flags = dedup.decontaminate(_live(dec), benchmark, id_col, text_col)
+            dirty = flags.filter("contaminated").select(F.col("doc_id").alias(id_col))
+            dec = _drop_ids(dec, dirty, id_col, "decontaminate", text_col, listed=True)
+            rep.stages.append("decontaminate")
 
-    if rep.n_appended == 0:
-        # fully-rejected (or fully-memoized) batch: nothing to publish —
-        # don't burn a snapshot on four empty appends
-        rep.snapshot_id = wh.current_snapshot_id()
-        rep.stages.append("noop_commit")
-        cached.unpersist()
-        cands.unpersist()
+        labels = [
+            "ledger", "url_filter", "quality", "line_dedup", "exact_dedup",
+            "corpus_exact", "near_dedup", "semantic_dedup", "decontaminate",
+        ]
+        ck, m = _checkpoint(dec, labels)
+        held.callback(_release, ck)
+        rep.stages.append("train_val_split")
+        rep.n_batch = m["n"]
+        rep.n_new = m["ledger"]
+        rep.n_after_quality = m["quality"]
+        rep.n_after_line_dedup = m["line_dedup"]
+        rep.n_after_exact_dedup = m["corpus_exact"]
+        rep.n_dropped_vs_corpus_exact = m["exact_dedup"] - m["corpus_exact"]
+        rep.n_after_near_dedup = m["near_dedup"]
+        rep.n_after_semantic_dedup = m["semantic_dedup"]
+        rep.n_appended = rep.n_after_decontamination = m["decontaminate"]
+
+        surv = _live(ck)
+        out = curation.split_by_hash(
+            surv.select(id_col, text_col), id_col, val_fraction=val_fraction
+        )
+        if rep.n_appended == 0:
+            # fully-rejected (or fully-memoized) batch: nothing to publish —
+            # don't burn a snapshot on four empty appends
+            rep.snapshot_id = wh.current_snapshot_id()
+            rep.stages.append("noop_commit")
+            return empty_frame(spark, out.schema), rep
+
+        # derive the index rows for the survivors and publish EVERYTHING in
+        # one atomic commit (corpus, keys, sigs, bands can never diverge).
+        # The curated write fills out's cache; the rest read the checkpoint.
+        out = out.persist()
+        new_keys = out.select(
+            F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_md5")
+        )
+        surv_sigs = surv.filter(F.col("sig").isNotNull()).select(
+            F.col(id_col).alias("id"), "sig"
+        )
+        staged = {
+            CURATED_TABLE: [wh.stage(out, CURATED_TABLE)],
+            KEYS_TABLE: [wh.stage(new_keys, KEYS_TABLE)],
+            SIGS_TABLE: [wh.stage(surv_sigs, SIGS_TABLE)],
+            BANDS_TABLE: [wh.stage(dedup._band_table(surv_sigs, 32, 8), BANDS_TABLE)],
+        }
         if new_cells is not None:
-            new_cells.unpersist()
-        if sem_cands is not None:
-            sem_cands.unpersist()
-        return out, rep
-
-    # derive the index rows for the survivors and publish EVERYTHING in
-    # one atomic commit (corpus, keys, sigs, bands can never diverge)
-    new_keys = out.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_md5")
-    )
-    surv_sigs, surv_bands = dd.minhash_index(
-        out.select(id_col, text_col), id_col, text_col
-    )
-    surv_sigs = surv_sigs.persist()
-    staged = {
-        CURATED_TABLE: [wh.stage(out, CURATED_TABLE)],
-        KEYS_TABLE: [wh.stage(new_keys, KEYS_TABLE)],
-        SIGS_TABLE: [wh.stage(surv_sigs, SIGS_TABLE)],
-        BANDS_TABLE: [wh.stage(surv_bands, BANDS_TABLE)],
-    }
-    if embedding_col is not None and new_cells is not None:
-        # semantic index rows for the survivors ride the SAME atomic
-        # commit (the cells/vectors tables can never diverge from the
-        # corpus); docs without a nonzero embedding simply have no rows.
-        # Frozen centroids publish once, with the first embedded batch
-        # that actually appends (an all-rejected first batch retrains
-        # next time — nothing stored, nothing to drift from).
-        out_ids = out.select(F.col(id_col).alias("id"))
-        surv_cells = new_cells.join(out_ids, "id", "left_semi").select(
-            "id", "cell", "cell_cos"
-        )
-        surv_vecs = new_cells.join(out_ids, "id", "left_semi").select(
-            "id", F.col(embedding_col).alias("embedding")
-        )
-        staged[SEM_CELLS_TABLE] = [wh.stage(surv_cells, SEM_CELLS_TABLE)]
-        staged[SEM_VECS_TABLE] = [wh.stage(surv_vecs, SEM_VECS_TABLE)]
-        if first_sem:
-            staged[SEM_CENTROIDS_TABLE] = [wh.stage(
-                sim.centroids_to_df(spark, cts), SEM_CENTROIDS_TABLE
+            # semantic index rows for the survivors ride the SAME atomic
+            # commit (the cells/vectors tables can never diverge from the
+            # corpus); docs without a nonzero embedding simply have no rows.
+            # Frozen centroids publish once, with the first embedded batch
+            # that actually appends (an all-rejected first batch retrains
+            # next time — nothing stored, nothing to drift from).
+            embedded = surv.filter(F.col("cell").isNotNull())
+            embedded = embedded.withColumnRenamed(id_col, "id")
+            staged[SEM_CELLS_TABLE] = [wh.stage(
+                embedded.select("id", "cell", "cell_cos"), SEM_CELLS_TABLE
             )]
-    if max_per_host:
-        # quota delta = hosts of the docs this batch ACTUALLY appends —
-        # same atomic commit, so quota state never drifts from the corpus.
-        # The url column was projected away by the payload stages, so
-        # recover it from the RAW batch by id (out ids ⊆ new ⊆ batch and
-        # url-per-id is invariant, so joining the raw scan gives the same
-        # hosts without re-running the ledger/quota lineage).
-        url_map = batch.select(F.col(id_col), urls.host_of(F.col(url_col)).alias("host"))
-        delta = (
-            out.select(id_col).join(url_map, id_col)
-            .filter(F.col("host") != "")
-            .groupBy("host").agg(F.count(F.lit(1)).alias("n"))
-        )
-        staged[HOSTS_TABLE] = [wh.stage(delta, HOSTS_TABLE)]
-    rep.snapshot_id = wh.commit(staged)
-    rep.stages.append("atomic_commit")
-    # drop the batch-scoped caches now the commit landed; a long-running
-    # ingest stream must not accumulate cached relations across
-    # micro-batches.  ``out`` stays cached — the CALLER owns it (tests
-    # and the stream sink read it back; unpersist when done).
-    cached.unpersist()
-    cands.unpersist()
-    surv_sigs.unpersist()
-    if new_cells is not None:
-        new_cells.unpersist()
-    if sem_cands is not None:
-        sem_cands.unpersist()
-    return out, rep
+            staged[SEM_VECS_TABLE] = [wh.stage(
+                embedded.select("id", F.col("_emb").alias("embedding")),
+                SEM_VECS_TABLE,
+            )]
+            if first_sem:
+                staged[SEM_CENTROIDS_TABLE] = [wh.stage(
+                    sim.centroids_to_df(spark, cts), SEM_CENTROIDS_TABLE
+                )]
+        if max_per_host:
+            # quota delta = hosts of the docs this batch ACTUALLY appends —
+            # same atomic commit, so quota state never drifts from the corpus
+            delta = (
+                surv.filter(F.col("_host") != "")
+                .groupBy(F.col("_host").alias("host"))
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            staged[HOSTS_TABLE] = [wh.stage(delta, HOSTS_TABLE)]
+        rep.snapshot_id = wh.commit(staged)
+        rep.stages.append("atomic_commit")
+        return out, rep
 
 
 def compact_warehouse(
@@ -855,7 +829,6 @@ def read_curated(
 # tier extraction: quality-bucketed, temperature-balanced corpus slices
 # ---------------------------------------------------------------------
 
-@_excluding_aqe_empty_rule
 def tiered_select(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -901,12 +874,11 @@ def tiered_select(
     carries ``n_input`` / ``n_after_excise`` / ``tier_bounds`` and the
     per-tier (total, kept) histogram.
 
-    Single-pass audit (same discipline as curate_corpus): every report
-    figure is an ``observe()`` metric of ONE terminal action — the only
-    other execution is the Greenwald-Khanna bounds sketch (none with
-    ``distributed_bounds=False``).  The previous design ran a count per
-    boundary plus a histogram collect, re-running the (expensive) excise
-    lineage once per probe.
+    Single-pass audit: every report figure is observed at the root of
+    ONE decision frame — every input row with its excision verdict and
+    (for survivors) its tier and keep flag — run once with a ``noop``
+    write; the only other execution is the Greenwald-Khanna bounds
+    sketch (none with ``distributed_bounds=False``).
 
     Scale shape: all tiering decisions (sketch, quota windows, lottery)
     run on a persisted NARROW (id, quality, group) projection — the
@@ -915,10 +887,7 @@ def tiered_select(
     standard lifecycle (``spark.catalog.clearCache()`` releases it).
     """
     report: dict = {}
-    obs_input = Observation("tier_input")
-    df = df.observe(obs_input, F.count(F.lit(1)).alias("n"))
-
-    obs_excise = None
+    live = F.lit(True)
     if span_excise_n:
         cleaned = curation.excise_dup_spans(
             df, id_col, text_col, n=span_excise_n
@@ -928,14 +897,9 @@ def tiered_select(
             (F.col("n_words") - F.col("n_removed")).alias("_kept_words"),
         )
         other_cols = [c for c in df.columns if c != text_col]
-        df = (
-            df.select(*other_cols)
-            .join(cleaned, id_col)
-            .filter(F.col("_kept_words") >= min_words)
-            .drop("_kept_words")
-        )
-        obs_excise = Observation("tier_excise")
-        df = df.observe(obs_excise, F.count(F.lit(1)).alias("n"))
+        # every input row, the excised ones flagged by the length gate
+        df = df.select(*other_cols).join(cleaned, id_col)
+        live = F.col("_kept_words") >= min_words
 
     # tiering decisions run on a persisted NARROW (id, quality, group)
     # table — the quantile sketch, the quota windows, and the keep join
@@ -943,30 +907,28 @@ def tiered_select(
     # scan (the final id-join below) no matter how many consumers the
     # decision plan has.  Caching the full corpus instead (or
     # re-scanning text per consumer) measured strictly worse at 5M rows
-    # — see quality_tiers' materialize note.
+    # — see quality_tiers' materialize note.  It holds every input row
+    # with its excision verdict, so the audit below counts from it too.
     qcol = quality_col
     if qcol is None:
         qcol = "_quality"
-        narrow_cols = [F.col(id_col)]
-        if group_col:
-            narrow_cols.append(F.col(group_col))
-        narrow = df.select(
-            *narrow_cols, textstats.quality_score(F.col(text_col)).alias(qcol)
-        )
+        quality = textstats.quality_score(F.col(text_col))
     else:
-        narrow = df.select(
-            *([id_col] + ([group_col] if group_col else []) + [qcol])
-        )
-    narrow = narrow.persist()
+        quality = F.col(qcol)
+    narrow = df.select(
+        F.col(id_col), *([F.col(group_col)] if group_col else []),
+        quality.alias(qcol), live.alias("_live"),
+    ).persist()
+    live_narrow = narrow.filter("_live").drop("_live")
 
     bounds = None
     if distributed_bounds:
         bounds = curation.approx_tier_bounds(
-            narrow, qcol, n_tiers=n_tiers, relative_error=relative_error
+            live_narrow, qcol, n_tiers=n_tiers, relative_error=relative_error
         )
     report["tier_bounds"] = bounds
     decisions = curation.quality_tiers(
-        narrow, id_col=id_col, quality_col=qcol, group_col=group_col,
+        live_narrow, id_col=id_col, quality_col=qcol, group_col=group_col,
         n_tiers=n_tiers, quota_coeff=quota_coeff, tier_bounds=bounds,
     )
     keep_cols = [id_col, qcol, "tier", "group_n", "quota", "keep"]
@@ -974,37 +936,31 @@ def tiered_select(
         keep_cols.remove(qcol)
     if group_col:
         decisions = decisions.drop(group_col)
-    # the per-tier histogram rides the same terminal action as the
-    # boundary counts: n_tiers is known up front, so (total, kept) per
-    # tier are 2*n_tiers observed aggregates, not a separate collect
-    obs_hist = Observation("tier_hist")
-    hist_metrics = []
-    for i in range(1, n_tiers + 1):
-        cond = F.col("tier") == i
-        hist_metrics.append(
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{i}")
-        )
-        hist_metrics.append(
-            F.sum(F.when(cond & F.col("keep"), 1).otherwise(0)).alias(f"k_{i}")
-        )
-    decisions = decisions.observe(obs_hist, *hist_metrics)
-    out = df.join(decisions.select(*keep_cols), id_col)
+
+    # ONE execution counts the input, the excision survivors and the
+    # per-tier (total, kept) histogram: n_tiers is known up front, so
+    # they are 2*n_tiers + 2 aggregates at the root of the decision frame
+    tier, tiers = F.col("tier"), range(1, n_tiers + 1)
+    h = _run_observed(
+        narrow.select(id_col, "_live").join(
+            decisions.select(id_col, "tier", "keep"), id_col, "left"
+        ),
+        n=F.count(F.lit(1)), n_live=F.count_if("_live"),
+        **{f"n_{i}": F.count_if(tier == i) for i in tiers},
+        **{f"k_{i}": F.count_if((tier == i) & F.col("keep")) for i in tiers},
+    )
+    report["n_input"] = h["n"]
+    if span_excise_n:
+        report["n_after_excise"] = h["n_live"]
+    report["tiers"] = {i: (h[f"n_{i}"], h[f"k_{i}"]) for i in tiers if h[f"n_{i}"]}
+
+    # the caller's write of `out` re-reads only the persisted narrow +
+    # one corpus scan
+    out = df.filter(live).drop("_kept_words").join(
+        decisions.select(*keep_cols), id_col
+    )
     if quality_col is None:
         out = out.withColumnRenamed("_quality", "quality")
-
-    # ONE terminal action drives the whole audited plan (input count,
-    # excise count, histogram); the caller's write of `out` re-reads only
-    # the persisted narrow + one corpus scan
-    _audited_count(out)
-    report["n_input"] = int(obs_input.get["n"])
-    if obs_excise is not None:
-        report["n_after_excise"] = int(obs_excise.get["n"])
-    h = obs_hist.get
-    report["tiers"] = {
-        i: (int(h[f"n_{i}"] or 0), int(h[f"k_{i}"] or 0))
-        for i in range(1, n_tiers + 1)
-        if int(h[f"n_{i}"] or 0) > 0
-    }
     return out, report
 
 
@@ -1015,7 +971,6 @@ TIER_SEEN_TABLE = "tier_seen"      # (id) — processed-doc memo ledger
 TIER_QUALS_TABLE = "tier_quals"    # (id, quality, grp) — seen-population scores
 
 
-@_excluding_aqe_empty_rule
 def tiered_ingest(
     spark,
     warehouse_root: str,
@@ -1065,13 +1020,13 @@ def tiered_ingest(
     Kept rows, seen ids, count deltas, and (first batch) bounds publish
     in ONE atomic commit.
 
-    Single-pass audit (the same discipline as curate_incremental): a
-    batch runs exactly ONE probe action (the ledger anti-join count,
-    which also yields ``n_batch`` as an observed metric and fills the
-    batch-scan cache) plus one tiny bounds read (GK sketch on the first
-    batch, a collect of the frozen cutoffs after) — ``n_kept`` and the
-    per-tier histogram are ``observe()`` metrics completed by the stage
-    writes themselves.  A replayed batch short-circuits at the probe:
+    Single-pass audit: a batch runs exactly ONE probe action — a
+    ``noop`` write of every batch row flagged new or already seen, with
+    ``n_batch``/``n_new`` observed at its root, which also fills the
+    batch-scan caches — plus one tiny bounds read (GK sketch on the
+    first batch, a collect of the frozen cutoffs after).  ``n_kept`` and
+    the per-tier histogram are observed at the root of the ``tiered``
+    stage write itself.  A replayed batch short-circuits at the probe:
     EXACTLY one execution, no tier plan built, no staging, no snapshot.
 
     Returns ``(kept_df, report)``.  ``kept_df`` comes back CACHED (the
@@ -1084,9 +1039,6 @@ def tiered_ingest(
     wh = open_warehouse(spark, warehouse_root)
     id_dt = batch.schema[id_col].dataType.simpleString()
     rep: dict = {}
-    obs_batch = Observation("ti_batch")
-    batch = batch.observe(obs_batch, F.count(F.lit(1)).alias("n"))
-
     seen_ids = wh.read(spark, TIER_SEEN_TABLE, schema=f"{id_col} {id_dt}")
     # persisted: the probe action below fills this cache, so the raw
     # batch is scanned ONCE per ingest however many consumers follow
@@ -1103,10 +1055,17 @@ def tiered_ingest(
     else:
         narrow = new.select(*narrow_cols, F.col(qcol))
     narrow = narrow.persist()
-    # the ONE probe action: n_new is its result, n_batch its observed
-    # metric, and it materializes the new/narrow caches
-    rep["n_new"] = narrow.count()
-    rep["n_batch"] = int(obs_batch.get["n"])
+    # the ONE probe action: the batch's new rows (from the narrow cache,
+    # which it fills with new's) and its already-seen rows, counted at
+    # the root
+    probe = _run_observed(
+        narrow.select(F.lit(True).alias("_new")).unionByName(
+            batch.join(seen_ids.select(id_col), id_col, "left_semi")
+            .select(F.lit(False).alias("_new"))
+        ),
+        n_batch=F.count(F.lit(1)), n_new=F.count_if("_new"),
+    )
+    rep.update(probe)
 
     if rep["n_new"] == 0:
         # replay (or empty batch): nothing to tier, nothing to commit —
@@ -1199,19 +1158,7 @@ def tiered_ingest(
         # surface the internally-computed score; a caller-provided
         # quality column is already on the batch rows
         sel.append(F.col(qcol).alias("quality"))
-    # n_kept + the per-tier histogram are observed metrics of the TIERED
-    # stage write itself (which also materializes out's cache and kept's)
-    # — no count(), no collect()
-    obs_out = Observation("ti_out")
-    out_metrics = [F.count(F.lit(1)).alias("n")] + [
-        F.sum(F.when(F.col("tier") == i, 1).otherwise(0)).alias(f"t_{i}")
-        for i in range(1, n_tiers + 1)
-    ]
-    out = (
-        new.join(kept.select(*sel), id_col)
-        .observe(obs_out, *out_metrics)
-        .persist()
-    )
+    out = new.join(kept.select(*sel), id_col).persist()
 
     # delta rows: EVERY seen doc counts toward future allowances, kept
     # or not; kept counts come from the same kept set the corpus append
@@ -1225,8 +1172,18 @@ def tiered_ingest(
             F.coalesce(F.col("_nk"), F.lit(0)).cast("long").alias("n_kept"),
         )
     )
+    # n_kept + the per-tier histogram are observed at the root of the
+    # TIERED stage write itself (which also materializes out's cache and
+    # kept's) — no count(), no collect()
+    obs_out = Observation()
+    tiered = out.observe(
+        obs_out,
+        F.count(F.lit(1)).alias("n"),
+        *[F.count_if(F.col("tier") == i).alias(f"t_{i}")
+          for i in range(1, n_tiers + 1)],
+    )
     staged = {
-        TIERED_TABLE: [wh.stage(out, TIERED_TABLE)],
+        TIERED_TABLE: [wh.stage(tiered, TIERED_TABLE)],
         TIER_SEEN_TABLE: [wh.stage(new.select(id_col), TIER_SEEN_TABLE)],
         TIER_COUNTS_TABLE: [wh.stage(delta, TIER_COUNTS_TABLE)],
         # the seen-population quality ledger (~16 B/doc — same narrow
@@ -1251,9 +1208,7 @@ def tiered_ingest(
     m = obs_out.get
     rep["n_kept"] = int(m["n"])
     rep["kept_per_tier"] = {
-        i: int(m[f"t_{i}"] or 0)
-        for i in range(1, n_tiers + 1)
-        if int(m[f"t_{i}"] or 0) > 0
+        i: int(m[f"t_{i}"]) for i in range(1, n_tiers + 1) if int(m[f"t_{i}"]) > 0
     }
     narrow.unpersist()
     new.unpersist()
@@ -1261,7 +1216,6 @@ def tiered_ingest(
     return out, rep
 
 
-@_excluding_aqe_empty_rule
 def retier_warehouse(
     spark,
     warehouse_root: str,
@@ -1389,10 +1343,7 @@ def retier_warehouse(
         .filter(F.col("_rn") <= F.col("_rt_quota"))
         .withColumn("tier", F.col("_rt_tier"))
     )
-    obs_kept = Observation("rt_kept")
-    new_tiered = kept.select(*out_cols).observe(
-        obs_kept, F.count(F.lit(1)).alias("n")
-    )
+    new_tiered = kept.select(*out_cols)
 
     # replacement ledger: exact seen counts per NEW cell + what survived
     kept_cells = kept.groupBy("_rt_tier", "_rt_grp").agg(
@@ -1418,11 +1369,20 @@ def retier_warehouse(
         TIER_BOUNDS_TABLE: bounds_df,
         TIER_COUNTS_TABLE: new_counts,
     }
-    if "replace" in inspect.signature(wh.commit).parameters:
+    replace = "replace" in inspect.signature(wh.commit).parameters
+    if replace:
         n_parts = target_files or spark.sparkContext.defaultParallelism
+        replacements = {
+            tbl: df.repartition(n_parts) for tbl, df in replacements.items()
+        }
+    # n_kept: observed at the root of the frame the tiered write runs
+    obs_kept = Observation()
+    replacements[TIERED_TABLE] = replacements[TIERED_TABLE].observe(
+        obs_kept, F.count(F.lit(1)).alias("n")
+    )
+    if replace:
         staged = {
-            tbl: [wh.stage(df.repartition(n_parts), tbl)]
-            for tbl, df in replacements.items()
+            tbl: [wh.stage(df, tbl)] for tbl, df in replacements.items()
         }
         snap = wh.commit(staged, replace=set(staged))
     else:

@@ -165,8 +165,8 @@ def drop_boilerplate_lines(
     # caller already knows it.  With n_docs=None the count stays IN the
     # plan (split() yields >= 1 line, so doc count == idx-0 line count —
     # one narrow pass over the shared/persisted lines table broadcast as
-    # a 1-row stats join, the bm25 pattern) — no separate driver-side
-    # count action, which keeps curate_corpus's audited path single-pass.
+    # a 1-row stats join, the bm25 pattern) — no driver-side count action,
+    # so a curation call's decision frame stays one execution.
     # cutoff floor 1.0: a line occurring in a SINGLE document is never
     # boilerplate — without the floor, a small corpus/batch where
     # frac * n < 1 marks every unique line hot and strips all text

@@ -494,7 +494,23 @@ def minhash_signatures(
     num_hashes: int = 32,
     drop_empty: bool = False,
 ) -> DataFrame:
-    """(id, sig array<long>): MinHash signature, zero-shuffle.
+    """(id, sig array<long>): MinHash signature, zero-shuffle — the
+    ``(id, sig)`` projection of :func:`with_minhash_signature`."""
+    return with_minhash_signature(
+        df.select(F.col(id_col).alias("id"), F.col(text_col)),
+        text_col, n, num_hashes, drop_empty,
+    ).select("id", "sig")
+
+
+def with_minhash_signature(
+    df: DataFrame,
+    text_col: str,
+    n: int = 3,
+    num_hashes: int = 32,
+    drop_empty: bool = False,
+) -> DataFrame:
+    """``df`` with a ``sig array<long>`` MinHash signature column of
+    ``text_col`` appended; every other column rides along.
 
     Two-step split that keeps both halves vectorized: (1) JVM-side, ONE
     ``xxhash64`` per distinct shingle via an array ``transform`` (strings
@@ -542,15 +558,13 @@ def minhash_signatures(
     # UDF: a post-hoc ``filter(sig.isNotNull())`` on the UDF output gets
     # pushed below the projection as a SECOND ArrowEvalPython node with
     # the whole expression collapsed inline — measured 25x slower.
-    wh = df.select(
-        F.col(id_col).alias("id"), _word_hash_array(F.col(text_col)).alias("_wh")
-    )
+    wh = df.withColumn("_wh", _word_hash_array(F.col(text_col)))
     if drop_empty:
         wh = wh.filter(F.size(F.col("_wh")) > 0)
     base = F.when(
         F.size(F.col("_wh")) > 0, _gram_hashes_from(F.col("_wh"), n)
     )
-    return wh.select("id", minhash_from_base(base).alias("sig"))
+    return wh.withColumn("sig", minhash_from_base(base)).drop("_wh")
 
 
 def _band_table(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -639,49 +653,16 @@ def incremental_minhash_candidates(
     unique across corpus and batch — the same content-address
     discipline the extraction ledger enforces.
 
-    Scale shape: the new batch's band table (tiny) joins the stored
-    band table on (band, bucket) — with the index bucketed/partitioned
-    by (band, bucket) at write time this is a co-located join that
-    never shuffles the stored corpus; signatures ride only the
-    candidate-sized re-joins.  The same ``n``/``num_hashes``/``bands``
-    as the index build MUST be used (hash inputs are positional)."""
-    assert num_hashes % bands == 0
+    ``materialize=True`` persists the batch's signatures, which
+    :func:`minhash_pairs` reads in four branches.  The same
+    ``n``/``num_hashes``/``bands`` as the index build MUST be used (hash
+    inputs are positional)."""
     new_sigs = minhash_signatures(
         new_df, id_col, text_col, n, num_hashes, drop_empty=True
     )
     if materialize:
         new_sigs = new_sigs.persist()
-    new_bands = _band_table(new_sigs, num_hashes, bands)
-
-    a = new_bands.alias("a")
-    # new-vs-corpus: every stored-bucket collision; normalize to a < b
-    c = index_bands.alias("c")
-    cross = (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("c.band"))
-            & (F.col("a.bucket") == F.col("c.bucket"))
-            & (F.col("a.id") != F.col("c.id")),
-        )
-        .select(
-            F.least(F.col("a.id"), F.col("c.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("c.id")).alias("id_b"),
-        )
-    )
-    # new-vs-new: the ordinary banded self-join within the batch
-    b = new_bands.alias("b")
-    intra = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    pairs = cross.unionByName(intra).dropDuplicates(["id_a", "id_b"])
-    all_sigs = index_sigs.unionByName(new_sigs)
-    return _score_pairs(pairs, all_sigs, num_hashes)
+    return minhash_pairs(new_sigs, index_sigs, index_bands, num_hashes, bands)
 
 
 def minhash_lsh_candidates(
@@ -707,8 +688,6 @@ def minhash_lsh_candidates(
     scheme (Broder resemblance / MMDS ch.3).  est_jaccard = fraction of
     matching minhashes.
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
     # materialize signatures once: the banded self-join + the two
     # signature re-joins otherwise re-run the Arrow signature UDF in every
     # branch (4x per doc, 6x counting the null filter).  persist() swaps
@@ -719,24 +698,55 @@ def minhash_lsh_candidates(
     )
     if materialize:
         sigs = sigs.persist()
+    return minhash_pairs(sigs, num_hashes=num_hashes, bands=bands)
 
-    banded = _band_table(sigs, num_hashes, bands)
 
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+def minhash_pairs(
+    sigs: DataFrame,
+    index_sigs: "DataFrame | None" = None,
+    index_bands: "DataFrame | None" = None,
+    num_hashes: int = 32,
+    bands: int = 8,
+) -> DataFrame:
+    """Candidate near-dup pairs (id_a, id_b, est_jaccard), id_a < id_b,
+    of a signature table ``(id, sig)`` (zero-word docs dropped): within
+    ``sigs`` and, given a stored :func:`minhash_index`, between ``sigs``
+    and the index.  ``sigs`` is read in several branches, so pass a
+    materialized table (a cache, or a frame carrying the UDF's output).
+
+    Scale shape: the new batch's band table (tiny) joins the stored
+    band table on (band, bucket) — with the index bucketed/partitioned
+    by (band, bucket) at write time this is a co-located join that
+    never shuffles the stored corpus; signatures ride only the
+    candidate-sized re-joins."""
+    assert num_hashes % bands == 0
+    a = _band_table(sigs, num_hashes, bands).alias("a")
+    b = a.alias("b")
+    # within the batch: the ordinary banded self-join
+    pairs = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+    if index_bands is not None:
+        # vs the corpus: every stored-bucket collision, normalized to a < b
+        c = index_bands.alias("c")
+        pairs = pairs.unionByName(
+            a.join(
+                c,
+                (F.col("a.band") == F.col("c.band"))
+                & (F.col("a.bucket") == F.col("c.bucket"))
+                & (F.col("a.id") != F.col("c.id")),
+            ).select(
+                F.least(F.col("a.id"), F.col("c.id")).alias("id_a"),
+                F.greatest(F.col("a.id"), F.col("c.id")).alias("id_b"),
+            )
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+        sigs = index_sigs.unionByName(sigs)
     # interpreted HOF in _score_pairs is fine: it runs over candidate
     # pairs only (<< corpus size by construction of the banding)
-    return _score_pairs(pairs, sigs, num_hashes)
+    return _score_pairs(pairs.dropDuplicates(["id_a", "id_b"]), sigs, num_hashes)
 
 
 def simhash_signatures(

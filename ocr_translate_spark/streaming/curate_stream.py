@@ -78,10 +78,10 @@ def run_curation_stream(
             spark, warehouse_root, batch_df.select(*cols),
             id_col=id_col, text_col=text_col, **curate_kwargs,
         )
-        # the survivors are committed — drop the batch-scoped cache so a
-        # long-running stream doesn't accumulate one cached relation per
-        # micro-batch (curate.py's lifecycle note names this sink as the
-        # owner; the tier sink below does the same)
+        # the survivors are committed — drop the returned frame's cache,
+        # which the sink owns (curate_incremental releases everything
+        # else it materialised, checkpoint blocks included), so a
+        # long-running stream holds no persistent RDD between batches
         out.unpersist()
         d = rep.as_dict()
         d["batch_id"] = batch_id
@@ -151,9 +151,10 @@ def run_tiered_stream(
             spark, warehouse_root, batch_df.select(*cols),
             id_col=id_col, text_col=text_col, **tier_kwargs,
         )
-        # the kept frame is committed — drop its batch-scoped cache so a
-        # long-running stream doesn't accumulate one cached relation per
-        # micro-batch (same discipline as the curation sink)
+        # the kept frame is committed — drop its batch-scoped cache, which
+        # the sink owns, so a long-running stream doesn't accumulate one
+        # cached relation per micro-batch (same discipline as the
+        # curation sink)
         kept_df.unpersist()
         rep["batch_id"] = batch_id
         reports.append(rep)

@@ -163,12 +163,19 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     from ocr_translate_spark.io.tables import open_warehouse
 
     wh_root = str(tmp_path / "wh")
+    # cache lifecycle: once the caller drops the returned frame's cache,
+    # a call has left no persistent RDD behind (checkpoint blocks
+    # included) — a long ingest stream must not accumulate them
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    n_persistent = persistent().size()
     b1 = spark.createDataFrame(
         [(i, _sentence(i)) for i in range(10)], "doc_id long, text string"
     )
     out1, rep1 = curate_incremental(spark, wh_root, b1, min_words=10, scrub=False)
     assert rep1.n_batch == rep1.n_appended == 10
     assert rep1.snapshot_id >= 1
+    out1.unpersist()
+    assert persistent().size() == n_persistent
 
     wh = open_warehouse(spark, wh_root)
     assert wh.read(spark, CURATED_TABLE).count() == 10
@@ -183,6 +190,9 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     b2_rows.append((201, near))           # near dup of stored doc 7
     b2 = spark.createDataFrame(b2_rows, "doc_id long, text string")
     out2, rep2 = curate_incremental(spark, wh_root, b2, min_words=10, scrub=False)
+    # the returned frame plans from the checkpoint, not from the curation
+    # lineage with its cached and observed subtrees inlined at every use
+    assert len(out2._jdf.queryExecution().optimizedPlan().toString()) < 1_000_000
     assert rep2.n_batch == rep2.n_new == 5
     assert rep2.n_dropped_vs_corpus_exact == 1          # id 200
     assert rep2.n_after_near_dedup == rep2.n_after_exact_dedup - 1  # id 201
@@ -191,6 +201,8 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert appended == {100, 101, 102}
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert wh.read(spark, SIGS_TABLE).count() == 13
+    out2.unpersist()
+    assert persistent().size() == n_persistent
 
     # idempotent re-run: everything already ledgered or rejected
     out3, rep3 = curate_incremental(spark, wh_root, b2, min_words=10, scrub=False)
@@ -199,6 +211,8 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert rep3.stages[-1] == "noop_commit"
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert rep3.snapshot_id == rep2.snapshot_id
+    out3.unpersist()
+    assert persistent().size() == n_persistent
 
 
 def test_read_curated_time_travel_and_split(spark, tmp_path):
@@ -382,6 +396,12 @@ def test_tiered_select_composition(spark):
     assert rep2["tier_bounds"] is None
     tiers2 = [r["tier"] for r in out2.collect()]
     assert len(tiers2) == 40 and set(tiers2) == {1, 2, 3, 4}
+
+    # excision removes every doc: the counts stay honest, no tier fills
+    spans = df.filter(F.col("doc_id") == 200)
+    out3, rep3 = tiered_select(spans, group_col="grp", span_excise_n=6, min_words=15)
+    assert (rep3["n_input"], rep3["n_after_excise"], rep3["tiers"]) == (1, 0, {})
+    assert out3.count() == 0
 
 
 def test_tiered_select_single_pass(spark):
@@ -787,9 +807,15 @@ def test_curate_incremental_first_embedded_batch_fully_rejected(spark, tmp_path)
     )
     out1, rep1 = curate_incremental(spark, wh_root, b1, **kw)
     assert rep1.n_appended == 0
+    # every count is honest although the quality stage empties the batch
+    assert (rep1.n_batch, rep1.n_new, rep1.n_after_quality) == (2, 2, 0)
+    assert (rep1.n_after_line_dedup, rep1.n_after_exact_dedup,
+            rep1.n_dropped_vs_corpus_exact, rep1.n_after_near_dedup,
+            rep1.n_after_semantic_dedup, rep1.n_after_decontamination) == (0,) * 6
     out1.unpersist()
 
     wh = open_warehouse(spark, wh_root)
+    assert rep1.snapshot_id == wh.current_snapshot_id() == 0
     assert wh.read(spark, SEM_CENTROIDS_TABLE,
                    schema="cell bigint, centroid array<double>").count() == 0
 
