@@ -99,30 +99,32 @@ def _live(dec: DataFrame) -> DataFrame:
 
 
 def _clean_and_dedup(
-    dec: DataFrame, id_col: str, text_col: str, stages: "list[str]", *,
-    min_words: int, max_line_frac: float, scrub: bool,
+    dec: DataFrame, id_col: str, text_col: str, stages: "list[str]",
+    held: ExitStack, *, min_words: int, max_line_frac: float, scrub: bool,
     gopher_kwargs: "dict | None",
 ) -> DataFrame:
     """The payload stages both curation entry points share, as labels on
     a decision frame: Gopher gate ("quality"), per-corpus line dedup
     plus the post-clean length gate ("line_dedup", the C4 order),
     optional PII scrub, and exact dedup — min id per identical text
-    ("exact_dedup", dedup.dedup_exact's keeper policy)."""
-    from pyspark.sql import Window
-
+    ("exact_dedup", dedup.dedup_exact's keeper policy).  The gated frame
+    is cached until ``held`` closes."""
     gk = dict(gopher_kwargs or {})
     gk.setdefault("min_words", min_words)
     cols = dec.columns
-    # keep= carries the frame's columns through: a linear narrow map
+    # keep= carries the frame's columns through: a linear narrow map.
+    # Cached: line dedup reads it four times (three reads of its lines
+    # table and the join back), and each would re-run the Gopher battery
     gated = textstats.gopher_rules(dec, id_col, text_col, keep=tuple(cols), **gk)
     dec = _drop(
         gated, ~F.coalesce(F.col("passes"), F.lit(False)), "quality", text_col
-    ).select(*cols)
+    ).select(*cols).persist()
+    held.callback(dec.unpersist)
     stages.append("gopher_rules")
 
     # line frequencies over the live docs; the corpus-size anchor is
     # computed in-plan (drop_boilerplate_lines).  materialize=False: its
-    # lines table is read twice, and a cache here would outlive the call
+    # lines table comes from the cached gated frame
     rebuilt = curation.drop_boilerplate_lines(
         _live(dec), id_col, text_col, max_line_frac=max_line_frac,
         materialize=False,
@@ -143,60 +145,45 @@ def _clean_and_dedup(
         dec = dec.withColumn(text_col, curation.scrub_pii(F.col(text_col)))
         stages.append("pii_scrub")
 
-    # a dropped row (NULL text) ranks alone in its own window partition
-    text = F.col(text_col)
-    w = Window.partitionBy(
-        F.md5(text), F.when(text.isNull(), F.col(id_col))
-    ).orderBy(id_col)
+    # a dropped row (NULL text) ranks alone, so it is never a copy
     dec = _drop(
-        dec.withColumn("_rn", F.row_number().over(w)), F.col("_rn") > 1,
-        "exact_dedup", text_col,
+        dec.withColumn("_rn", dedup.exact_keeper_rank(id_col, text_col)),
+        F.col("_rn") > 1, "exact_dedup", text_col,
     ).drop("_rn")
     stages.append("dedup_exact")
     return dec
 
 
-def _checkpoint(
-    frame: DataFrame, labels: "list[str]", **extra
+def _count_decisions(
+    frame: DataFrame, labels: "list[str]" = (), *, checkpoint: bool = False,
+    **extra,
 ) -> "tuple[DataFrame, dict[str, int]]":
-    """Materialise a decision frame once with ``localCheckpoint(eager=True)``
-    and count it with ONE observation at its root.  Returns the
-    checkpointed frame (release it with :func:`_release`) and ``n`` rows,
-    the rows left after each of ``labels`` (in stage order), and the
-    ``extra`` named aggregates.  That one execution is the call's audit.
-    It also cuts the lineage: whatever is derived from the frame plans
-    from a ``LogicalRDD``.  Nothing observed sits below a join or an
-    exchange, so Spark's runtime empty-relation rewrite (a stage that
-    rejects every row) cannot lose the observation."""
+    """Run a decision frame ONCE and count it with ONE observation at its
+    root: ``n`` rows, the rows left after each of ``labels`` (in stage
+    order) and the ``extra`` named aggregates.  The run is a ``noop``
+    write, or with ``checkpoint`` a ``localCheckpoint(eager=True)``
+    whose frame is returned (its blocks live until the RDD behind its
+    ``LogicalRDD`` is unpersisted): it cuts the lineage, so whatever is
+    derived from it plans from that ``LogicalRDD``.  Nothing observed sits below a join or an exchange,
+    so Spark's runtime empty-relation rewrite (a stage that rejects
+    every row) cannot lose the observation."""
     obs = Observation()
     dropped = F.col("dropped_at")
-    ck = frame.observe(
+    frame = frame.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         *[F.count_if(dropped == label).alias(label) for label in labels],
         *[agg.alias(name) for name, agg in extra.items()],
-    ).localCheckpoint(eager=True)
+    )
+    if checkpoint:
+        frame = frame.localCheckpoint(eager=True)
+    else:
+        frame.write.format("noop").mode("overwrite").save()
     m = {k: int(v or 0) for k, v in obs.get.items()}
     left = m["n"]
     for label in labels:  # drops per label -> rows left after it
         left = m[label] = left - m[label]
-    return ck, m
-
-
-def _run_observed(frame: DataFrame, **metrics) -> "dict[str, int]":
-    """Run ``frame`` once (a ``noop`` write) for ``metrics``, observed at
-    its root."""
-    obs = Observation()
-    frame.observe(obs, *[m.alias(k) for k, m in metrics.items()]).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    return {k: int(v) for k, v in obs.get.items()}
-
-
-def _release(ck: DataFrame) -> None:
-    """Drop the blocks of a :func:`_checkpoint` frame (the RDD behind its
-    ``LogicalRDD``); frames derived from it are unreadable afterwards."""
-    ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    return frame, m
 
 
 def curate_corpus(
@@ -235,17 +222,20 @@ def curate_corpus(
     The report's counts come from ONE decision frame: every input row
     labelled ``dropped_at`` — the first stage that rejects it, NULL for
     a survivor — with one ``count_if`` per label observed at its root.
-    Materialising that frame with ``localCheckpoint(eager=True)`` is the
-    call's ONLY execution (LMFAO's one pass for a batch of aggregates;
-    the per-stage ``count()`` design re-ran 7+ actions over
-    intermediates, which at 100 TB is 7+ extra passes).  ``curated_df``
-    reads the checkpoint, so writing it re-runs no stage.
+    A ``noop`` write of that frame is the call's ONLY execution (LMFAO's
+    one pass for a batch of aggregates; the per-stage ``count()`` design
+    re-ran 7+ actions over intermediates, which at 100 TB is 7+ extra
+    passes).  ``curated_df`` stays lazy: writing it runs the plan again.
 
-    Cache lifecycle: the signature UDF runs once per doc into one
-    cached frame that the LSH branches read; it is released right after
-    the checkpoint.  The checkpoint blocks then live as long as
-    ``curated_df`` (Spark's context cleaner drops them once it is
-    garbage-collected).
+    Cache lifecycle: the signature UDF runs once per doc into one cached
+    frame (stages 0-4 plus ``sig``) that the LSH branches and
+    ``curated_df`` read, so writing ``curated_df`` re-runs only the
+    near-dedup joins, decontamination and the split (the Gopher-gated
+    frame, cached for line dedup, is released on return).  Like any
+    cache it is recomputed from its lineage if a block is lost; a
+    long-lived session cycling many corpora should
+    ``spark.catalog.clearCache()`` between corpora once the curated
+    output is written.
     """
     report = CurationReport()
     if (blocklist is not None or max_per_host) and url_col is None:
@@ -270,18 +260,18 @@ def curate_corpus(
             report.stages.append("host_caps")
         dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
 
-    # 1-4. quality gate, line dedup + length gate, PII scrub, exact dedup
-    dec = _clean_and_dedup(
-        dec, id_col, text_col, report.stages, min_words=min_words,
-        max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
-    )
-
-    # 5. near dedup — greedy keep-smallest-id over LSH candidates; the
-    # signature UDF runs once per doc into this cached frame, which the
-    # LSH branches read (released once the checkpoint has run)
+    # the gated cache goes once the audit has filled the signature cache
     with ExitStack() as held:
+        # 1-4. quality gate, line dedup + length gate, PII scrub, exact dedup
+        dec = _clean_and_dedup(
+            dec, id_col, text_col, report.stages, held, min_words=min_words,
+            max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
+        )
+
+        # 5. near dedup — greedy keep-smallest-id over LSH candidates; the
+        # signature UDF runs once per doc into this cached frame, which the
+        # LSH branches and the returned frame read
         signed = dedup.with_minhash_signature(dec, text_col).persist()
-        held.callback(signed.unpersist)
         drops = (
             dedup.minhash_pairs(
                 signed.filter(F.col("sig").isNotNull())
@@ -311,9 +301,8 @@ def curate_corpus(
             "url_filter", "quality", "line_dedup", "exact_dedup", "near_dedup",
             "decontaminate",
         ]
-        ck, m = _checkpoint(dec, labels, n_val=F.count_if(
-            F.col("dropped_at").isNull() & (F.col("split") == "val")
-        ))
+        val = F.col("dropped_at").isNull() & (F.col("split") == "val")
+        _, m = _count_decisions(dec, labels, n_val=F.count_if(val))
     report.n_input = m["n"]
     report.n_after_url_filter = m["url_filter"]
     report.n_after_quality = m["quality"]
@@ -322,7 +311,7 @@ def curate_corpus(
     report.n_after_near_dedup = m["near_dedup"]
     report.n_output = report.n_after_decontamination = m["decontaminate"]
     report.n_val = m["n_val"]
-    return _live(ck).select(id_col, text_col, "split"), report
+    return _live(dec).select(id_col, text_col, "split"), report
 
 
 # ---------------------------------------------------------------------
@@ -437,9 +426,13 @@ def curate_incremental(
     published table, and a replayed or fully-rejected batch runs the
     checkpoint alone.  The Python stages (signature UDF, cell
     assignment) run once per doc into cached frames; those and the
-    checkpoint blocks are released before the call returns.  ``out``
-    (id, text, split) comes back CACHED: the caller owns its
-    ``unpersist()``, after which the call has left no persistent RDD.
+    checkpoint blocks are released before the call returns, so a call
+    leaves no persistent RDD behind.  ``out`` (id, text, split) reads
+    the curated files this call staged: no cache, nothing to release,
+    and every read of it reads those files again.  (On the parquet
+    warehouse they are the committed directory itself; on an Iceberg
+    catalog the commit copies the staged table and drops it, so read
+    :func:`read_curated` at ``rep.snapshot_id`` there.)
     """
     from .io.tables import empty_frame, open_warehouse
 
@@ -495,26 +488,24 @@ def curate_incremental(
             rep.stages.append("host_caps_incremental")
         dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
 
-    # Gopher gate, per-batch line dedup (line frequencies are per-batch
-    # by design — corpus-global boilerplate drift belongs to a periodic
-    # re-curation, not the hot ingest path), PII scrub, exact dedup
-    # within the batch
-    dec = _clean_and_dedup(
-        dec, id_col, text_col, rep.stages, min_words=min_words,
-        max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
-    )
-    # ...then against the stored md5 keys (corpus wins)
-    stored = keys.select(F.col("content_md5").alias("_md5")).distinct()
-    dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
-        stored.withColumn("_stored", F.lit(True)), "_md5", "left"
-    )
-    dec = _drop(
-        dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
-    ).drop("_md5", "_stored")
-
     # the cached frames and the checkpoint blocks are released on the
     # way out, whatever happens
     with ExitStack() as held:
+        # Gopher gate, per-batch line dedup, PII scrub, exact dedup within
+        # the batch...
+        dec = _clean_and_dedup(
+            dec, id_col, text_col, rep.stages, held, min_words=min_words,
+            max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
+        )
+        # ...then against the stored md5 keys (corpus wins)
+        stored = keys.select(F.col("content_md5").alias("_md5")).distinct()
+        dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
+            stored.withColumn("_stored", F.lit(True)), "_md5", "left"
+        )
+        dec = _drop(
+            dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
+        ).drop("_md5", "_stored")
+
         # the signature UDF runs ONCE per doc: the four LSH branches and the
         # survivors' index rows all read this cached frame
         signed = dedup.with_minhash_signature(dec, text_col).persist()
@@ -628,8 +619,8 @@ def curate_incremental(
             "ledger", "url_filter", "quality", "line_dedup", "exact_dedup",
             "corpus_exact", "near_dedup", "semantic_dedup", "decontaminate",
         ]
-        ck, m = _checkpoint(dec, labels)
-        held.callback(_release, ck)
+        ck, m = _count_decisions(dec, labels, checkpoint=True)
+        held.callback(ck._jdf.queryExecution().analyzed().rdd().unpersist, False)
         rep.stages.append("train_val_split")
         rep.n_batch = m["n"]
         rep.n_new = m["ledger"]
@@ -653,20 +644,20 @@ def curate_incremental(
             return empty_frame(spark, out.schema), rep
 
         # derive the index rows for the survivors and publish EVERYTHING in
-        # one atomic commit (corpus, keys, sigs, bands can never diverge).
-        # The curated write fills out's cache; the rest read the checkpoint.
-        out = out.persist()
-        new_keys = out.select(
+        # one atomic commit (corpus, keys, sigs, bands can never diverge);
+        # every stage write reads the checkpoint
+        new_keys = surv.select(
             F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_md5")
         )
         surv_sigs = surv.filter(F.col("sig").isNotNull()).select(
             F.col(id_col).alias("id"), "sig"
         )
+        curated = wh.stage(out, CURATED_TABLE)
         staged = {
-            CURATED_TABLE: [wh.stage(out, CURATED_TABLE)],
+            CURATED_TABLE: [curated],
             KEYS_TABLE: [wh.stage(new_keys, KEYS_TABLE)],
             SIGS_TABLE: [wh.stage(surv_sigs, SIGS_TABLE)],
-            BANDS_TABLE: [wh.stage(dedup._band_table(surv_sigs, 32, 8), BANDS_TABLE)],
+            BANDS_TABLE: [wh.stage(dedup.minhash_bands(surv_sigs), BANDS_TABLE)],
         }
         if new_cells is not None:
             # semantic index rows for the survivors ride the SAME atomic
@@ -697,6 +688,10 @@ def curate_incremental(
                 .agg(F.count(F.lit(1)).alias("n"))
             )
             staged[HOSTS_TABLE] = [wh.stage(delta, HOSTS_TABLE)]
+        # the returned frame reads the staged files, not the checkpoint
+        # released on the way out (resolved before the commit consumes
+        # the handle on an Iceberg catalog)
+        out = wh.read_staged(spark, curated, schema=out.schema)
         rep.snapshot_id = wh.commit(staged)
         rep.stages.append("atomic_commit")
         return out, rep
@@ -941,11 +936,11 @@ def tiered_select(
     # per-tier (total, kept) histogram: n_tiers is known up front, so
     # they are 2*n_tiers + 2 aggregates at the root of the decision frame
     tier, tiers = F.col("tier"), range(1, n_tiers + 1)
-    h = _run_observed(
+    _, h = _count_decisions(
         narrow.select(id_col, "_live").join(
             decisions.select(id_col, "tier", "keep"), id_col, "left"
         ),
-        n=F.count(F.lit(1)), n_live=F.count_if("_live"),
+        n_live=F.count_if("_live"),
         **{f"n_{i}": F.count_if(tier == i) for i in tiers},
         **{f"k_{i}": F.count_if((tier == i) & F.col("keep")) for i in tiers},
     )
@@ -1023,7 +1018,7 @@ def tiered_ingest(
     Single-pass audit: a batch runs exactly ONE probe action — a
     ``noop`` write of every batch row flagged new or already seen, with
     ``n_batch``/``n_new`` observed at its root, which also fills the
-    batch-scan caches — plus one tiny bounds read (GK sketch on the
+    batch-scan cache — plus one tiny bounds read (GK sketch on the
     first batch, a collect of the frozen cutoffs after).  ``n_kept`` and
     the per-tier histogram are observed at the root of the ``tiered``
     stage write itself.  A replayed batch short-circuits at the probe:
@@ -1040,32 +1035,20 @@ def tiered_ingest(
     id_dt = batch.schema[id_col].dataType.simpleString()
     rep: dict = {}
     seen_ids = wh.read(spark, TIER_SEEN_TABLE, schema=f"{id_col} {id_dt}")
-    # persisted: the probe action below fills this cache, so the raw
-    # batch is scanned ONCE per ingest however many consumers follow
-    # (tier join, seen-ids stage) — the r6 design re-scanned it per count
-    new = batch.join(seen_ids.select(id_col), id_col, "left_anti").persist()
+    # every batch row flagged once, persisted: the probe action below
+    # fills this cache, so the raw batch is scanned ONCE per ingest
+    # however many consumers follow (tier join, seen-ids stage) — the r6
+    # design re-scanned it per count.  tier_seen holds each id once.
+    flagged = batch.join(
+        seen_ids.select(id_col, F.lit(True).alias("_seen")), id_col, "left"
+    ).persist()
+    new = flagged.filter(F.col("_seen").isNull()).drop("_seen")
 
-    qcol = quality_col or "_quality"
-    grp = F.col(group_col) if group_col else F.lit("")
-    narrow_cols = [F.col(id_col), grp.alias("_grp")]
-    if quality_col is None:
-        narrow = new.select(
-            *narrow_cols, textstats.quality_score(F.col(text_col)).alias(qcol)
-        )
-    else:
-        narrow = new.select(*narrow_cols, F.col(qcol))
-    narrow = narrow.persist()
-    # the ONE probe action: the batch's new rows (from the narrow cache,
-    # which it fills with new's) and its already-seen rows, counted at
-    # the root
-    probe = _run_observed(
-        narrow.select(F.lit(True).alias("_new")).unionByName(
-            batch.join(seen_ids.select(id_col), id_col, "left_semi")
-            .select(F.lit(False).alias("_new"))
-        ),
-        n_batch=F.count(F.lit(1)), n_new=F.count_if("_new"),
+    # the ONE probe action, counted at its root
+    _, probe = _count_decisions(
+        flagged.select("_seen"), n_new=F.count_if(F.col("_seen").isNull())
     )
-    rep.update(probe)
+    rep.update(n_batch=probe["n"], n_new=probe["n_new"])
 
     if rep["n_new"] == 0:
         # replay (or empty batch): nothing to tier, nothing to commit —
@@ -1077,14 +1060,24 @@ def tiered_ingest(
         empty = new.limit(0).withColumn("tier", F.lit(None).cast("long"))
         if quality_col is None:
             empty = empty.withColumn("quality", F.lit(None).cast("double"))
-        narrow.unpersist()
-        new.unpersist()
+        flagged.unpersist()
         return empty, rep
+
+    qcol = quality_col or "_quality"
+    grp = F.col(group_col) if group_col else F.lit("")
+    narrow_cols = [F.col(id_col), grp.alias("_grp")]
+    if quality_col is None:
+        narrow = new.select(
+            *narrow_cols, textstats.quality_score(F.col(text_col)).alias(qcol)
+        )
+    else:
+        narrow = new.select(*narrow_cols, F.col(qcol))
+    narrow = narrow.persist()
 
     # tier cutoffs: tiny — the frozen bounds are ≤ n_tiers rows, and the
     # first batch (no committed bounds table: the read raises the
     # empty-table ValueError without touching Spark) sketches them from
-    # the already-cached narrow
+    # narrow, which fills its cache
     try:
         stored_bounds = wh.read(spark, TIER_BOUNDS_TABLE).collect()
     except ValueError:
@@ -1211,7 +1204,7 @@ def tiered_ingest(
         i: int(m[f"t_{i}"]) for i in range(1, n_tiers + 1) if int(m[f"t_{i}"]) > 0
     }
     narrow.unpersist()
-    new.unpersist()
+    flagged.unpersist()
     kept.unpersist()
     return out, rep
 

@@ -26,6 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+# MinHash index shape: signature slots and LSH bands.  A stored index and
+# every batch matched against it must use the same pair (hash inputs are
+# positional), so the builders and the matchers share these defaults.
+NUM_HASHES = 32
+BANDS = 8
+
 
 def _splitmix64(x: int) -> int:
     """Deterministic 64-bit mix (public-domain splitmix64 constants) used
@@ -64,15 +70,24 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def exact_keeper_rank(id_col: str, text_col: str):
+    """Column expr: a row's rank by id among the rows with its text — 1
+    for the keeper (min id wins), 2.. for its copies.  A NULL text ranks
+    alone (rank 1), so NULL rows neither collapse nor pile into one
+    window partition."""
+    text = F.col(text_col)
+    w = Window.partitionBy(
+        F.md5(text), F.when(text.isNull(), F.col(id_col))
+    ).orderBy(F.col(id_col))
+    return F.row_number().over(w)
+
+
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep one row per distinct text (min id wins) — the batch form of the
-    reference's get_or_create interning (ref models/base.py:33-47)."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    """Keep one row per distinct text (min id wins; NULL texts are all
+    kept) — the batch form of the reference's get_or_create interning
+    (ref models/base.py:33-47)."""
+    rank = exact_keeper_rank(id_col, text_col)
+    return df.withColumn("_rn", rank).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def _shingle_array(text_col, n: int):
@@ -491,7 +506,7 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 32,
+    num_hashes: int = NUM_HASHES,
     drop_empty: bool = False,
 ) -> DataFrame:
     """(id, sig array<long>): MinHash signature, zero-shuffle — the
@@ -506,7 +521,7 @@ def with_minhash_signature(
     df: DataFrame,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 32,
+    num_hashes: int = NUM_HASHES,
     drop_empty: bool = False,
 ) -> DataFrame:
     """``df`` with a ``sig array<long>`` MinHash signature column of
@@ -567,10 +582,13 @@ def with_minhash_signature(
     return wh.withColumn("sig", minhash_from_base(base)).drop("_wh")
 
 
-def _band_table(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) from a signature table.  The band table carries
-    those three columns ONLY — the 32-slot signature arrays must not ride
-    the banded join shuffle (bands x the payload per doc, then 2 sigs per
+def minhash_bands(
+    sigs: DataFrame, num_hashes: int = NUM_HASHES, bands: int = BANDS
+) -> DataFrame:
+    """(id, band, bucket) from a signature table (id, sig) — the band
+    half of :func:`minhash_index`.  The band table carries those three
+    columns ONLY — the 32-slot signature arrays must not ride the banded
+    join shuffle (bands x the payload per doc, then 2 sigs per
     candidate row through the pair dedup); signatures are re-joined
     exactly once, after the pair set is distinct."""
     r = num_hashes // bands
@@ -615,8 +633,8 @@ def minhash_index(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
 ) -> "tuple[DataFrame, DataFrame]":
     """The persistent LSH index of a corpus: ``(sigs, bands)`` —
     ``sigs`` is (id, sig array<long>) and ``bands`` is (id, band,
@@ -627,7 +645,7 @@ def minhash_index(
     bands x ~20 B) per doc — two slim tables that bucket-join, vs
     re-scanning 100 TB of text per batch."""
     sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, drop_empty=True)
-    return sigs, _band_table(sigs, num_hashes, bands)
+    return sigs, minhash_bands(sigs, num_hashes, bands)
 
 
 def incremental_minhash_candidates(
@@ -637,8 +655,8 @@ def incremental_minhash_candidates(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
     materialize: bool = True,
 ) -> DataFrame:
     """Continuous-ingestion near-dedup: candidate pairs (id_a, id_b,
@@ -657,9 +675,7 @@ def incremental_minhash_candidates(
     :func:`minhash_pairs` reads in four branches.  The same
     ``n``/``num_hashes``/``bands`` as the index build MUST be used (hash
     inputs are positional)."""
-    new_sigs = minhash_signatures(
-        new_df, id_col, text_col, n, num_hashes, drop_empty=True
-    )
+    new_sigs = minhash_signatures(new_df, id_col, text_col, n, num_hashes, drop_empty=True)
     if materialize:
         new_sigs = new_sigs.persist()
     return minhash_pairs(new_sigs, index_sigs, index_bands, num_hashes, bands)
@@ -670,8 +686,8 @@ def minhash_lsh_candidates(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
     materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH: (id_a, id_b, est_jaccard).
@@ -688,14 +704,9 @@ def minhash_lsh_candidates(
     scheme (Broder resemblance / MMDS ch.3).  est_jaccard = fraction of
     matching minhashes.
     """
-    # materialize signatures once: the banded self-join + the two
-    # signature re-joins otherwise re-run the Arrow signature UDF in every
-    # branch (4x per doc, 6x counting the null filter).  persist() swaps
-    # an InMemoryRelation into all occurrences; at warehouse scale the
-    # equivalent is writing the (tiny, 32x8B/doc) signature table once.
-    sigs = minhash_signatures(
-        df, id_col, text_col, n, num_hashes, drop_empty=True
-    )
+    # materialize signatures once: minhash_pairs reads them in four
+    # branches, each of which would otherwise re-run the Arrow UDF
+    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, drop_empty=True)
     if materialize:
         sigs = sigs.persist()
     return minhash_pairs(sigs, num_hashes=num_hashes, bands=bands)
@@ -705,8 +716,8 @@ def minhash_pairs(
     sigs: DataFrame,
     index_sigs: "DataFrame | None" = None,
     index_bands: "DataFrame | None" = None,
-    num_hashes: int = 32,
-    bands: int = 8,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a, id_b, est_jaccard), id_a < id_b,
     of a signature table ``(id, sig)`` (zero-word docs dropped): within
@@ -720,7 +731,7 @@ def minhash_pairs(
     never shuffles the stored corpus; signatures ride only the
     candidate-sized re-joins."""
     assert num_hashes % bands == 0
-    a = _band_table(sigs, num_hashes, bands).alias("a")
+    a = minhash_bands(sigs, num_hashes, bands).alias("a")
     b = a.alias("b")
     # within the batch: the ordinary banded self-join
     pairs = a.join(

@@ -74,15 +74,14 @@ def run_curation_stream(
         nonlocal appended_batches
         if not batch_df.take(1):
             return
-        out, rep = curate_incremental(
+        # the survivors are committed and the returned frame holds no
+        # cache (curate_incremental releases everything it materialised,
+        # checkpoint blocks included), so a long-running stream holds no
+        # persistent RDD between batches
+        _, rep = curate_incremental(
             spark, warehouse_root, batch_df.select(*cols),
             id_col=id_col, text_col=text_col, **curate_kwargs,
         )
-        # the survivors are committed — drop the returned frame's cache,
-        # which the sink owns (curate_incremental releases everything
-        # else it materialised, checkpoint blocks included), so a
-        # long-running stream holds no persistent RDD between batches
-        out.unpersist()
         d = rep.as_dict()
         d["batch_id"] = batch_id
         if rep.n_appended:
@@ -153,8 +152,7 @@ def run_tiered_stream(
         )
         # the kept frame is committed — drop its batch-scoped cache, which
         # the sink owns, so a long-running stream doesn't accumulate one
-        # cached relation per micro-batch (same discipline as the
-        # curation sink)
+        # cached relation per micro-batch
         kept_df.unpersist()
         rep["batch_id"] = batch_id
         reports.append(rep)

@@ -118,11 +118,19 @@ def test_curate_corpus_single_pass(spark):
     docs = spark.createDataFrame(
         [(i, _sentence(i)) for i in range(40)], "doc_id long, text string"
     )
+    spark.catalog.clearCache()  # earlier tests' caches
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    n_persistent = persistent().size()
     store = spark._jsparkSession.sharedState().statusStore()
     before = store.executionsCount()
-    curate_corpus(docs, min_words=10, scrub=False)
+    out, rep = curate_corpus(docs, min_words=10, scrub=False)
     after = store.executionsCount()
     assert after - before == 1, (before, after)
+    # cache lifecycle: clearCache releases everything the call persisted,
+    # and the returned frame is still readable (recomputed from lineage)
+    spark.catalog.clearCache()
+    assert persistent().size() == n_persistent
+    assert out.count() == rep.n_output
 
 
 def test_curate_incremental_single_pass(spark, tmp_path):
@@ -163,9 +171,8 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     from ocr_translate_spark.io.tables import open_warehouse
 
     wh_root = str(tmp_path / "wh")
-    # cache lifecycle: once the caller drops the returned frame's cache,
-    # a call has left no persistent RDD behind (checkpoint blocks
-    # included) — a long ingest stream must not accumulate them
+    # cache lifecycle: a call leaves no persistent RDD behind (checkpoint
+    # blocks included) — a long ingest stream must not accumulate them
     persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
     n_persistent = persistent().size()
     b1 = spark.createDataFrame(
@@ -174,7 +181,6 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     out1, rep1 = curate_incremental(spark, wh_root, b1, min_words=10, scrub=False)
     assert rep1.n_batch == rep1.n_appended == 10
     assert rep1.snapshot_id >= 1
-    out1.unpersist()
     assert persistent().size() == n_persistent
 
     wh = open_warehouse(spark, wh_root)
@@ -190,8 +196,8 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     b2_rows.append((201, near))           # near dup of stored doc 7
     b2 = spark.createDataFrame(b2_rows, "doc_id long, text string")
     out2, rep2 = curate_incremental(spark, wh_root, b2, min_words=10, scrub=False)
-    # the returned frame plans from the checkpoint, not from the curation
-    # lineage with its cached and observed subtrees inlined at every use
+    # the returned frame scans the staged files, not the curation lineage
+    # with its cached and observed subtrees inlined at every use
     assert len(out2._jdf.queryExecution().optimizedPlan().toString()) < 1_000_000
     assert rep2.n_batch == rep2.n_new == 5
     assert rep2.n_dropped_vs_corpus_exact == 1          # id 200
@@ -201,7 +207,6 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert appended == {100, 101, 102}
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert wh.read(spark, SIGS_TABLE).count() == 13
-    out2.unpersist()
     assert persistent().size() == n_persistent
 
     # idempotent re-run: everything already ledgered or rejected
@@ -211,7 +216,6 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert rep3.stages[-1] == "noop_commit"
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert rep3.snapshot_id == rep2.snapshot_id
-    out3.unpersist()
     assert persistent().size() == n_persistent
 
 
