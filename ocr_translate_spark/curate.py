@@ -703,45 +703,39 @@ def compact_warehouse(
     tables: "list[str] | None" = None,
     target_files: "int | None" = None,
     retain_last: "int | None" = None,
-) -> "tuple[int, dict[str, int]]":
+) -> int:
     """Compact the curation warehouse: rewrite each table's CURRENT
-    committed state into one fresh staged directory and publish a single
-    atomic replace-commit — the maintenance pass continuous ingestion
-    needs, because :func:`curate_incremental` appends one directory per
-    batch to ``curated``/``curated_keys``/``dedup_sigs``/``dedup_bands``/
+    committed state into one fresh directory and publish a single atomic
+    replace-commit (the warehouse's ``compact``, the same call on both
+    branches) — the maintenance pass continuous ingestion needs, because
+    :func:`curate_incremental` appends one directory per batch to
+    ``curated``/``curated_keys``/``dedup_sigs``/``dedup_bands``/
     ``host_counts`` forever, and at daily batches the band-join's file
     listing and the summed host-quota log grow without bound.
 
-    * ``host_counts`` is additionally FOLDED (``GROUP BY host SUM(n)``)
-      — the log-structured ledger collapses to one row per host with
-      identical read-side semantics (reads always sum).
-    * Every other table is rewritten as-is into ``target_files``
-      partitions (default: the session's parallelism).
+    * ``host_counts`` and ``tier_counts`` are FOLDED (summed per key) —
+      the log-structured ledgers collapse to one row per key with
+      identical read-side semantics (reads always sum) — into
+      ``target_files`` partitions (default: the session's parallelism).
+    * Every other table is rewritten as it is: by the parquet emulation
+      in the partitions its scan packs the table's files into, by an
+      Iceberg catalog with ``CALL system.rewrite_data_files``.
     * All compacted tables ride ONE replace-commit, so readers switch
-      atomically; earlier manifests still reference the old directories,
-      so TIME TRAVEL to pre-compaction snapshots is unaffected (the same
-      discipline as the ingest commit — see io/tables.py commit()).
+      atomically; earlier snapshots still reference the old data, so
+      TIME TRAVEL to pre-compaction snapshots is unaffected.
     * SINGLE-WRITER: compaction occupies the warehouse's serialized
       writer slot; running it concurrently with an ingest batch could
       replace away rows appended between the read and the commit.
 
-    On an Iceberg catalog the same pass runs catalog-natively
-    (IcebergWarehouse.compact): ``CALL system.rewrite_data_files``
-    bin-packs each appended table's small files, the log-structured
-    ledgers fold via stage + ``INSERT OVERWRITE``, and all touched
-    tables publish under one logical snapshot.  ``retain_last`` (opt-in,
-    Iceberg branch only) additionally expires old table snapshots —
-    storage reclaim at the cost of deep time travel; the emulation
-    ignores it (manifests are tiny and old data dirs stay referenced).
+    ``retain_last`` (opt-in, Iceberg catalogs only) additionally expires
+    old table snapshots — storage reclaim at the cost of deep time
+    travel; the emulation keeps every directory an earlier manifest
+    lists.
 
-    Returns ``(snapshot_id, {table: n_rows})``.  Tables with no
-    committed data are skipped.  A no-op compaction (nothing committed
-    yet) returns the current snapshot id and an empty dict.  The Iceberg
-    branch returns an empty rows dict (row counts there would re-scan
-    tables whose contents the rewrite procedures don't change).
+    Returns the snapshot id.  Tables with no committed data are skipped;
+    a no-op compaction (nothing committed yet) returns the current
+    snapshot id.
     """
-    import inspect
-
     from .io.tables import open_warehouse
 
     wh = open_warehouse(spark, warehouse_root)
@@ -752,53 +746,27 @@ def compact_warehouse(
         SEM_VECS_TABLE,
     ]
     n_parts = target_files or spark.sparkContext.defaultParallelism
-
-    def fold(table: str, df: DataFrame) -> "DataFrame | None":
-        """The ledger folds (reads always sum, so the summed form is
-        read-identical); None = compact as-is, rows unchanged."""
-        if table == HOSTS_TABLE:
-            return df.groupBy("host").agg(F.sum("n").alias("n"))
-        if table == TIER_COUNTS_TABLE:
-            return df.groupBy("tier", "grp").agg(
-                F.sum("n_seen").alias("n_seen"), F.sum("n_kept").alias("n_kept")
-            )
-        return None
-
-    # capability dispatch FIRST — before any table is staged/rewritten —
-    # so a branch that can't finish never leaves expensive orphans behind
-    if "replace" not in inspect.signature(wh.commit).parameters:
-        # Iceberg catalog: metadata-procedure compaction through the seam
-        plan: dict = {}
-        for table in tables:
-            try:
-                df = wh.read(spark, table)
-            except ValueError:
-                continue  # never committed — nothing to compact
-            folded = fold(table, df)
-            plan[table] = (
-                folded.repartition(n_parts) if folded is not None else None
-            )
-        return wh.compact(spark, plan, retain_last=retain_last), {}
-
-    staged: dict[str, list[str]] = {}
-    rows: dict[str, int] = {}
+    # the ledger folds (reads always sum, so the summed form is
+    # read-identical); every other table is compacted as it is
+    folds = {
+        HOSTS_TABLE: lambda df: df.groupBy("host").agg(F.sum("n").alias("n")),
+        TIER_COUNTS_TABLE: lambda df: df.groupBy("tier", "grp").agg(
+            F.sum("n_seen").alias("n_seen"), F.sum("n_kept").alias("n_kept")
+        ),
+    }
+    plan: "dict[str, DataFrame | None]" = {}
     for table in tables:
-        # only the empty-table signal skips a table; a real read failure
-        # (corrupt footer, transient IO) must surface, not silently leave
-        # the table uncompacted
-        try:
-            df = wh.read(spark, table)
-        except ValueError:
-            continue  # never committed — nothing to compact
-        folded = fold(table, df)
-        if folded is not None:
-            df = folded
-        staged[table] = [wh.stage(df.repartition(n_parts), table)]
-        rows[table] = wh.read_staged(spark, staged[table][0]).count()
-    if not staged:
-        return wh.current_snapshot_id(), {}
-    snap = wh.commit(staged, replace=set(staged))
-    return snap, rows
+        plan[table] = None
+        if table in folds:
+            # only the empty-table signal skips a fold (compact then skips
+            # the table); a real read failure (corrupt footer, transient
+            # IO) must surface
+            try:
+                current = wh.read(spark, table)
+            except ValueError:
+                continue
+            plan[table] = folds[table](current).repartition(n_parts)
+    return wh.compact(spark, plan, retain_last=retain_last)
 
 
 def read_curated(
@@ -978,7 +946,6 @@ def tiered_ingest(
     n_tiers: int = 4,
     quota_coeff: float = 8.0,
     relative_error: float = 1e-3,
-    salt_shards: int = 16,
 ) -> "tuple[DataFrame, dict]":
     """Tier-extract ONE batch against the warehouse — the
     continuous-ingestion form of :func:`tiered_select`, mirroring
@@ -1092,10 +1059,7 @@ def tiered_ingest(
     rep["tier_bounds"] = bounds
     rep["first_batch"] = first_batch
 
-    t = F.lit(1)
-    for b in bounds:
-        t = t + F.when(F.col(qcol) < b, 1).otherwise(0)
-    assigned = narrow.withColumn("tier", t.cast("long"))
+    assigned = narrow.withColumn("tier", cops.tier_of(F.col(qcol), bounds))
 
     prev = (
         wh.read(spark, TIER_COUNTS_TABLE,
@@ -1117,32 +1081,14 @@ def tiered_ingest(
             "_allow",
             F.greatest(
                 F.lit(0).cast("long"),
-                F.least(
-                    F.col("_m_tot"),
-                    F.floor(F.lit(float(quota_coeff))
-                            * F.sqrt(F.col("_m_tot").cast("double"))),
-                ).cast("long") - F.col("_k_prev"),
+                cops.sqrt_quota(F.col("_m_tot"), quota_coeff)
+                - F.col("_k_prev"),
             ),
         )
     )
     sized = assigned.join(F.broadcast(cells), ["tier", "_grp"])
-
-    from pyspark.sql import Window
-
-    rkey = F.md5(F.col(id_col).cast("string"))
-    order = [rkey, F.col(id_col)]
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit("ti")),
-                  F.lit(salt_shards))
-    w1 = Window.partitionBy("tier", "_grp", salt).orderBy(*order)
-    pruned = (
-        sized.withColumn("_rn1", F.row_number().over(w1))
-        .filter(F.col("_rn1") <= F.col("_allow"))
-        .drop("_rn1")
-    )
-    w2 = Window.partitionBy("tier", "_grp").orderBy(*order)
     kept = (
-        pruned.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= F.col("_allow"))
+        cops.quota_lottery(sized, id_col, ["tier", "_grp"], "_allow")
         .select(id_col, "tier", "_grp", F.col(qcol))
         .persist()
     )
@@ -1217,7 +1163,6 @@ def retier_warehouse(
     n_tiers: "int | None" = None,
     quota_coeff: float = 8.0,
     relative_error: float = 1e-3,
-    salt_shards: int = 16,
     target_files: "int | None" = None,
 ) -> "tuple[int, dict]":
     """The periodic maintenance job :func:`tiered_ingest`'s frozen-bounds
@@ -1239,9 +1184,10 @@ def retier_warehouse(
     md5 lottery the ingest path uses; cells under quota keep everything
     stored (rejected docs' text is gone — their slots refill from
     future batches).  Time travel to pre-re-tier snapshots still reads
-    the old tiers (replace-commits never rewrite history; on an Iceberg
-    catalog the rewrite rides ``INSERT OVERWRITE`` snapshots through
-    IcebergWarehouse.compact).
+    the old tiers (the rewrite is one ``compact`` of the three tables,
+    which never rewrites history on either branch).  ``target_files`` is
+    the partition count of each rewritten table (default: the session's
+    parallelism).
 
     ``n_tiers=None`` keeps the stored tier count.  Raises ``ValueError``
     on a warehouse with no committed bounds (nothing to re-tier) or no
@@ -1253,10 +1199,6 @@ def retier_warehouse(
     counts.  Maintenance-scale job (a handful of actions over narrow
     ledgers + one corpus-table rewrite); single-writer slot applies.
     """
-    import inspect
-
-    from pyspark.sql import Window
-
     from .io.tables import open_warehouse
     from .operators import curation as cops
 
@@ -1288,21 +1230,13 @@ def retier_warehouse(
         quals, "quality", n_tiers=n_tiers, relative_error=relative_error
     )
 
-    t = F.lit(1)
-    for b in bounds:
-        t = t + F.when(F.col("quality") < b, 1).otherwise(0)
-    assigned = quals.withColumn("_rt_tier", t.cast("long"))
+    assigned = quals.withColumn(
+        "_rt_tier", cops.tier_of(F.col("quality"), bounds)
+    )
     cells = (
         assigned.groupBy("_rt_tier", "grp")
         .agg(F.count("*").alias("n_seen"))
-        .withColumn(
-            "_rt_quota",
-            F.least(
-                F.col("n_seen"),
-                F.floor(F.lit(float(quota_coeff))
-                        * F.sqrt(F.col("n_seen").cast("double"))),
-            ).cast("long"),
-        )
+        .withColumn("_rt_quota", cops.sqrt_quota(F.col("n_seen"), quota_coeff))
     )
 
     stored = wh.read(spark, TIERED_TABLE)
@@ -1320,22 +1254,9 @@ def retier_warehouse(
         F.broadcast(cells.withColumnRenamed("grp", "_rt_grp")),
         ["_rt_tier", "_rt_grp"],
     )
-    rkey = F.md5(F.col(id_col).cast("string"))
-    order = [rkey, F.col(id_col)]
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit("rt")),
-                  F.lit(salt_shards))
-    w1 = Window.partitionBy("_rt_tier", "_rt_grp", salt).orderBy(*order)
-    pruned = (
-        sized.withColumn("_rn1", F.row_number().over(w1))
-        .filter(F.col("_rn1") <= F.col("_rt_quota"))
-        .drop("_rn1")
-    )
-    w2 = Window.partitionBy("_rt_tier", "_rt_grp").orderBy(*order)
-    kept = (
-        pruned.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= F.col("_rt_quota"))
-        .withColumn("tier", F.col("_rt_tier"))
-    )
+    kept = cops.quota_lottery(
+        sized, id_col, ["_rt_tier", "_rt_grp"], "_rt_quota"
+    ).withColumn("tier", F.col("_rt_tier"))
     new_tiered = kept.select(*out_cols)
 
     # replacement ledger: exact seen counts per NEW cell + what survived
@@ -1357,29 +1278,16 @@ def retier_warehouse(
         "tier long, cutoff double",
     )
 
-    replacements = {
-        TIERED_TABLE: new_tiered,
-        TIER_BOUNDS_TABLE: bounds_df,
-        TIER_COUNTS_TABLE: new_counts,
-    }
-    replace = "replace" in inspect.signature(wh.commit).parameters
-    if replace:
-        n_parts = target_files or spark.sparkContext.defaultParallelism
-        replacements = {
-            tbl: df.repartition(n_parts) for tbl, df in replacements.items()
-        }
+    n_parts = target_files or spark.sparkContext.defaultParallelism
     # n_kept: observed at the root of the frame the tiered write runs
     obs_kept = Observation()
-    replacements[TIERED_TABLE] = replacements[TIERED_TABLE].observe(
-        obs_kept, F.count(F.lit(1)).alias("n")
-    )
-    if replace:
-        staged = {
-            tbl: [wh.stage(df, tbl)] for tbl, df in replacements.items()
-        }
-        snap = wh.commit(staged, replace=set(staged))
-    else:
-        snap = wh.compact(spark, replacements)
+    snap = wh.compact(spark, {
+        TIERED_TABLE: new_tiered.repartition(n_parts).observe(
+            obs_kept, F.count(F.lit(1)).alias("n")
+        ),
+        TIER_BOUNDS_TABLE: bounds_df.repartition(n_parts),
+        TIER_COUNTS_TABLE: new_counts.repartition(n_parts),
+    })
     rep = {
         "snapshot_id": snap,
         "old_bounds": old_bounds,

@@ -29,9 +29,8 @@ the memoization-ledger keys and the per-partition lineage columns
 ``wall_ms``, ``bytes_in``).  The ``runs`` ledger and the ``metrics``
 lineage table are views over those rows, derived on read
 (:func:`ledger_view`), so results can never publish without their ledger
-rows — which is what makes re-runs idempotent.  A read of either view also
-returns the table's own committed directories, which is what warehouses
-written before the one-table commit hold.
+rows — which is what makes re-runs idempotent.  Neither name can be
+staged: both are only views.
 """
 
 from __future__ import annotations
@@ -49,8 +48,7 @@ from ..schemas import RUNS
 # tables a read derives from the ledger and lineage columns of `extracted`
 LEDGER_VIEWS = ("runs", "metrics")
 # the `extracted` columns the views use; an explicit read schema keeps the
-# scan column-pruned and needs no footer job to infer it.  Files written
-# before the one-table commit lack run_id and snapshot_id and read NULL.
+# scan column-pruned and needs no footer job to infer it
 _LEDGER_SOURCE = (
     "url string, extractor_version string, options_hash string, "
     "text_hash long, snapshot_id long, run_id string, partition_id int, "
@@ -93,28 +91,31 @@ def ledger_view(table: str, extracted: DataFrame) -> DataFrame:
 
     ``runs`` is a column-pruned projection to RUNS of the rows with a
     ``snapshot_id``.  A forced re-run writes already-ledgered keys with a
-    NULL ``snapshot_id`` and rows written before the one-table commit have
-    none, so both are skipped: ledger keys stay unique with no aggregate on
-    the path the memo anti-join scans.  ``metrics`` is the per-(run,
-    partition) lineage aggregate (operators.extract.partition_metrics)."""
+    NULL ``snapshot_id``, so they are skipped: ledger keys stay unique with
+    no aggregate on the path the memo anti-join scans.  ``metrics`` is the
+    per-(run, partition) lineage aggregate
+    (operators.extract.partition_metrics)."""
     if table == "runs":
         return extracted.filter(F.col("snapshot_id").isNotNull()).select(
             *RUNS.fieldNames()
         )
-    return partition_metrics(extracted.filter(F.col("run_id").isNotNull()))
+    return partition_metrics(extracted)
 
 
-def _union(spark: SparkSession, table: str, frames: list, schema) -> DataFrame:
-    """A table's read: its frames unioned by column name, or an empty frame
-    with ``schema`` when there are none."""
-    if not frames:
+def _source(table: str) -> str:
+    """The committed table a read of ``table`` resolves."""
+    return "extracted" if table in LEDGER_VIEWS else table
+
+
+def _finish_read(spark: SparkSession, table: str, frame, schema) -> DataFrame:
+    """The read of ``table`` from ``frame``, its :func:`_source` as
+    published (None when it has no published data): the ledger view over
+    it, the frame itself, or an empty frame with ``schema``."""
+    if frame is None:
         if schema is None:
             raise ValueError(f"table {table!r} is empty and no schema given")
         return empty_frame(spark, schema)
-    out = frames[0]
-    for frame in frames[1:]:
-        out = out.unionByName(frame)
-    return out
+    return ledger_view(table, frame) if table in LEDGER_VIEWS else frame
 
 
 def _read_parquet(spark: SparkSession, paths: list, schema=None) -> DataFrame:
@@ -141,6 +142,14 @@ def _check_table_name(table: str) -> None:
             "match [A-Za-z_][A-Za-z0-9_]* (they are interpolated into "
             "catalog SQL as identifiers)"
         )
+
+
+def _check_stage_name(table: str) -> None:
+    """Reject non-identifiers and the ledger views: a read derives those
+    from ``extracted``, never from rows committed under their name."""
+    _check_table_name(table)
+    if table in LEDGER_VIEWS:
+        raise ValueError(f"{table!r} is a view over 'extracted'; it cannot be staged")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -180,8 +189,8 @@ class IcebergWarehouse:
       the Iceberg snapshot the log recorded for the requested (or latest)
       logical snapshot, so data appended by a crashed (never-logged)
       commit is invisible and logical snapshot ids are sequential ints on
-      both branches.  Warehouses written before the log existed are read
-      at their current table state (legacy fallback, no time travel).
+      both branches.  A table with no log row holds nothing published,
+      and a warehouse with no log reads empty.
 
     **Crash recovery** (parity with the emulation's orphan-dir behavior):
     before touching a table, ``commit``/``merge`` compare its CURRENT
@@ -189,6 +198,8 @@ class IcebergWarehouse:
     commit died between its table append and its log publish, and the
     orphan append is rolled back (``system.rollback_to_snapshot``) so the
     never-published rows can never leak into a later snapshot's lineage.
+    A table with no logged snapshot at all was created by a first commit
+    that died before its log append; it is dropped.
 
     **Write concurrency**: single writer per warehouse root (see
     :class:`ConcurrentCommitError`).  ``commit`` detects a concurrent
@@ -216,7 +227,7 @@ class IcebergWarehouse:
         return f"{self.namespace}.{table}"
 
     # -- engine seam -----------------------------------------------------
-    # Every catalog interaction flows through these six primitives, and
+    # Every catalog interaction flows through these five primitives, and
     # every protocol READ is a plain SQL string, so the full
     # commit/merge/upsert/crash-recovery state machine — including the
     # exact MERGE INTO / rollback_to_snapshot / log-query strings and
@@ -232,9 +243,6 @@ class IcebergWarehouse:
 
     def _table_exists(self, full: str) -> bool:
         return self.spark.catalog.tableExists(full)
-
-    def _table_columns(self, full: str) -> "list[str]":
-        return self.spark.table(full).columns
 
     def _write_table(self, df: DataFrame, full: str, mode: str) -> None:
         """``mode``: 'create' | 'append' — each an atomic Iceberg snapshot."""
@@ -254,6 +262,7 @@ class IcebergWarehouse:
     # -- write ---------------------------------------------------------
 
     def stage(self, df: DataFrame, table: str) -> str:
+        _check_stage_name(table)
         handle = self._full(f"{table}__stage_{uuid.uuid4().hex[:12]}")
         self._write_table(df, handle, "create")
         return handle
@@ -302,16 +311,18 @@ class IcebergWarehouse:
         last logged one.  Readers never see the orphan (read() time-travels
         to logged snapshots), but a subsequent append would fold it into
         the NEXT published snapshot — so roll the table back to the logged
-        state first.  The rolled-back rows are pure recomputable output
-        (their run was never published, so the ledger never references
-        them), exactly like the emulation's unreferenced orphan dirs."""
+        state first, or drop it when no snapshot of it was ever logged (a
+        first commit that died after creating it).  The removed rows are
+        pure recomputable output (their run was never published, so the
+        ledger never references them), exactly like the emulation's
+        unreferenced orphan dirs."""
         full = self._full(table)
         if not self._table_exists(full):
             return
         last = self._last_logged_snapshot(table)
         if last is None:
-            return  # legacy table (pre-log) or first commit: nothing logged
-        if self._iceberg_snapshot(full) != last:
+            self._sql(f"DROP TABLE IF EXISTS {full}")
+        elif self._iceberg_snapshot(full) != last:
             self._sql(
                 f"CALL spark_catalog.system.rollback_to_snapshot"
                 f"('{full}', {last})"
@@ -333,22 +344,12 @@ class IcebergWarehouse:
             "commit_uuid string",
         )
         log_full = self._full(self.LOG_TABLE)
-        if self._table_exists(log_full):
-            if "commit_uuid" not in self._table_columns(log_full):
-                # legacy 3-column log (pre-uuid schema): evolve the table
-                # before appending — a raw append would fail the schema
-                # match and strand the commit after its table appends
-                self._sql(
-                    f"ALTER TABLE {log_full} ADD COLUMN commit_uuid STRING"
-                )
-            self._write_table(log_df, log_full, "append")  # atomic publish
-        else:
-            self._write_table(log_df, log_full, "create")
+        mode = "append" if self._table_exists(log_full) else "create"
+        self._write_table(log_df, log_full, mode)  # atomic publish
         clash = self._sql(
             f"SELECT count(*) AS n FROM {log_full} "
             f"WHERE snapshot_id = {new_id} AND commit_uuid <> '{commit_uuid}'"
         ).first()
-        # legacy NULL-uuid rows never compare <> true, so they can't clash
         if clash and int(clash["n"]):
             raise ConcurrentCommitError(
                 f"logical snapshot {new_id} was published by another "
@@ -357,30 +358,14 @@ class IcebergWarehouse:
             )
         return new_id
 
-    def _add_missing_columns(self, full: str, df: DataFrame) -> None:
-        """Evolve ``full`` before appending ``df``: columns the table lacks
-        are added (NULL in its existing rows).  An ``extracted`` table
-        created before the ledger columns (``run_id``, ``snapshot_id``)
-        existed would otherwise fail the append's schema match and strand
-        the commit after its earlier appends."""
-        have = set(self._table_columns(full))
-        for name in df.columns:
-            if name not in have:
-                kind = df.schema[name].dataType.simpleString()
-                self._sql(f"ALTER TABLE {full} ADD COLUMN {name} {kind}")
-
     def commit(self, staged: "dict[str, list[str]]") -> int:
         commit_uuid = uuid.uuid4().hex
         for table, handles in sorted(staged.items()):
             self._rollback_orphans(table)
             full = self._full(table)
             for handle in handles:
-                df = self._read_table(handle)
-                if self._table_exists(full):
-                    self._add_missing_columns(full, df)
-                    self._write_table(df, full, "append")
-                else:
-                    self._write_table(df, full, "create")
+                mode = "append" if self._table_exists(full) else "create"
+                self._write_table(self._read_table(handle), full, mode)
                 self._sql(f"DROP TABLE IF EXISTS {handle}")
         return self._publish_log(sorted(staged), commit_uuid)
 
@@ -445,17 +430,18 @@ class IcebergWarehouse:
         tables: "dict[str, DataFrame | None]",
         retain_last: "int | None" = None,
     ) -> int:
-        """Catalog-native compaction — the Iceberg analog of the parquet
-        emulation's replace-commit maintenance pass (curate.compact_warehouse
-        routes here).  ``tables`` maps table name to either
+        """Catalog-native compaction, with the contract of
+        :meth:`Warehouse.compact` (curate.compact_warehouse and
+        curate.retier_warehouse call it on both branches).  ``tables`` maps
+        table name to either
 
         * ``None`` — metadata-only bin-pack: ``CALL system.rewrite_data_files``
           rewrites small files into target-sized ones without changing rows
           (what per-batch appends need); or
-        * a folded DataFrame — the table's rows are REPLACED by it via
-          stage + ``INSERT OVERWRITE`` (the log-structured ledgers —
-          host_counts, tier_counts — collapse to their summed form with
-          identical read-side semantics).
+        * a DataFrame — the table's rows are REPLACED by it, staged
+          exactly as given, via ``INSERT OVERWRITE`` (the log-structured
+          ledgers — host_counts, tier_counts — collapse to their summed
+          form with identical read-side semantics).
 
         All touched tables then publish under ONE logical snapshot (one
         log append), so readers switch atomically — and because Iceberg
@@ -475,9 +461,9 @@ class IcebergWarehouse:
         done: "list[str]" = []
         for table in sorted(tables):
             full = self._full(table)
+            self._rollback_orphans(table)
             if not self._table_exists(full):
                 continue  # never committed — nothing to compact
-            self._rollback_orphans(table)
             folded = tables[table]
             if folded is None:
                 self._sql(
@@ -527,34 +513,19 @@ class IcebergWarehouse:
         snapshot_id: "int | None" = None,
     ) -> DataFrame:
         """Committed state of ``table`` at a logical snapshot (the latest
-        when ``snapshot_id`` is None).  ``runs`` and ``metrics`` also union
-        :func:`ledger_view` over ``extracted`` at the same snapshot, when
-        ``extracted`` has a ``run_id`` column."""
-        snap = None
+        when ``snapshot_id`` is None).  ``runs`` and ``metrics`` are
+        :func:`ledger_view` over ``extracted`` at that snapshot."""
+        frame = None
         if self._table_exists(self._full(self.LOG_TABLE)):
             snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        own = self._resolve(table, snap)
-        frames = [own] if own is not None else []
-        ext_full = self._full("extracted")
-        if (
-            table in LEDGER_VIEWS
-            and self._table_exists(ext_full)
-            and "run_id" in self._table_columns(ext_full)
-        ):
-            extracted = self._resolve("extracted", snap)
-            if extracted is not None:
-                frames.append(ledger_view(table, extracted))
-        return _union(self.spark, table, frames, schema)
+            frame = self._resolve(_source(table), snap)
+        return _finish_read(self.spark, table, frame, schema)
 
-    def _resolve(self, table: str, snap: "int | None") -> "DataFrame | None":
+    def _resolve(self, table: str, snap: int) -> "DataFrame | None":
         """``table`` as logged at logical snapshot ``snap``, or None when it
-        has no published data there.  ``snap`` None means a legacy
-        warehouse written before the snapshot log existed: the current
-        table state (no time travel available)."""
+        has no published data there."""
         full = self._full(table)
         exists = self._table_exists(full)
-        if snap is None:
-            return self._read_table(full) if exists else None
         row = self._sql(
             f"SELECT iceberg_snapshot_id FROM {self._full(self.LOG_TABLE)} "
             f"WHERE table_name = '{table}' AND snapshot_id <= {snap} "
@@ -608,7 +579,7 @@ class Warehouse:
 
     def stage(self, df: DataFrame, table: str) -> str:
         """Write ``df`` as parquet into an uncommitted data directory."""
-        _check_table_name(table)  # table names become path components here
+        _check_stage_name(table)  # table names become path components here
         commit_dir = os.path.join(self.root, table, f"commit-{uuid.uuid4().hex[:12]}")
         df.write.mode("errorifexists").parquet(commit_dir)
         return commit_dir
@@ -713,6 +684,35 @@ class Warehouse:
             {table: [self.stage(merged, table)]}, replace={table}
         )
 
+    def compact(
+        self,
+        spark: SparkSession,
+        tables: "dict[str, DataFrame | None]",
+        retain_last: "int | None" = None,
+    ) -> int:
+        """The contract of :meth:`IcebergWarehouse.compact` over parquet:
+        a table mapped to ``None`` is rewritten as it is (in the partitions
+        its scan packs its files into), one mapped to a DataFrame is
+        replaced by it, staged exactly as given.  Every committed table
+        named gets one new directory, all in ONE replace-commit; tables
+        with no committed data are skipped.  Earlier manifests still list
+        the old directories, so time travel is unaffected and
+        ``retain_last`` expires nothing (it is accepted for interface
+        parity).  Single-writer contract applies."""
+        snap = self.current_snapshot_id()
+        committed = self._manifest(snap)["tables"]
+        staged: "dict[str, list[str]]" = {}
+        for table in sorted(tables):
+            if not committed.get(table):
+                continue  # never committed — nothing to compact
+            frame = tables[table]
+            if frame is None:
+                frame = self.read(spark, table, snapshot_id=snap)
+            staged[table] = [self.stage(frame, table)]
+        if not staged:
+            return snap
+        return self.commit(staged, replace=set(staged))
+
     # -- read ------------------------------------------------------------
 
     def read(
@@ -725,19 +725,15 @@ class Warehouse:
         """Read the committed state of ``table`` (optionally time-traveled),
         with ``schema`` applied when given.
 
-        ``runs`` and ``metrics`` are the table's own directories unioned
-        with :func:`ledger_view` over ``extracted`` at the same snapshot.
-        Returns an empty DataFrame with ``schema`` when the table has no
-        committed data yet.
+        ``runs`` and ``metrics`` are :func:`ledger_view` over ``extracted``
+        at the same snapshot.  Returns an empty DataFrame with ``schema``
+        when the table has no committed data yet.
         """
         snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        tables = self._manifest(snap)["tables"]
-
-        def scan(name: str, scan_schema) -> DataFrame:
-            paths = [os.path.join(self.root, d) for d in tables[name]]
-            return _read_parquet(spark, paths, scan_schema)
-
-        frames = [scan(table, schema)] if tables.get(table) else []
-        if table in LEDGER_VIEWS and tables.get("extracted"):
-            frames.append(ledger_view(table, scan("extracted", _LEDGER_SOURCE)))
-        return _union(spark, table, frames, schema)
+        dirs = self._manifest(snap)["tables"].get(_source(table))
+        frame = None
+        if dirs:
+            paths = [os.path.join(self.root, d) for d in dirs]
+            scan_schema = _LEDGER_SOURCE if table in LEDGER_VIEWS else schema
+            frame = _read_parquet(spark, paths, scan_schema)
+        return _finish_read(spark, table, frame, schema)

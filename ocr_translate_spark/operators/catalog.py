@@ -38,17 +38,6 @@ def latest_per_entity(df: DataFrame, entity: str, ts: str, tiebreak: str) -> Dat
     )
 
 
-def group_having(df: DataFrame, key: str, min_count: int = 1) -> DataFrame:
-    """P5: HAVING-style predicate on an aggregate
-    (ref models/base.py:317-318: annotate(Count).filter(count__gt=0))."""
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > min_count)
-        .orderBy(key)
-    )
-
-
 def anti_sync(db_names: DataFrame, ep_names: DataFrame, key: str) -> DataFrame:
     """J6/U1: rows present in db but not in entrypoints — deactivation set
     (ref ocr_tsl/initializers.py:150-158, models/base.py:374-383)."""

@@ -432,6 +432,61 @@ def approx_tier_bounds(
     return sorted(bounds, reverse=True)
 
 
+def tier_of(quality: Column, bounds: list[float]) -> Column:
+    """Tier of a ``quality`` column under descending cutoffs ``bounds``:
+    1 plus the number of cutoffs the score falls below (tier 1 is the best
+    quality) — a narrow threshold map, no shuffle."""
+    t = F.lit(1)
+    for b in bounds:
+        t = t + F.when(quality < b, 1).otherwise(0)
+    return t.cast("long")
+
+
+def sqrt_quota(m: Column, quota_coeff: float) -> Column:
+    """Keep quota of a cell of ``m`` docs: ``min(m, floor(c*sqrt(m)))``,
+    the alpha = 0.5 temperature curve, in bit-exact arithmetic (integer ->
+    IEEE sqrt -> floor)."""
+    return F.least(
+        m, F.floor(F.lit(float(quota_coeff)) * F.sqrt(m.cast("double")))
+    ).cast("long")
+
+
+def quota_lottery(
+    sized: DataFrame,
+    id_col: str,
+    cell_cols: list[str],
+    allow_col: str,
+    salt_shards: int | None = 16,
+) -> DataFrame:
+    """The rows of ``sized`` that win their cell's lottery: per
+    ``cell_cols`` cell, the first ``allow_col`` rows in the deterministic
+    portable ``(md5(id), id)`` order.  Two-level salted like
+    urls.host_rank: rank within ``(cell, salt)`` shards, prune to the
+    allowance (lossless — a cell's top-allowance row is in its shard's
+    top-allowance), then re-rank the bounded survivors per cell.
+    ``salt_shards=None`` ranks each cell in one window."""
+    from pyspark.sql import Window
+
+    order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    if salt_shards and salt_shards > 1:
+        salt = F.pmod(
+            F.xxhash64(F.col(id_col).cast("string"), F.lit("qt")),
+            F.lit(salt_shards),
+        )
+        w1 = Window.partitionBy(*cell_cols, salt).orderBy(*order)
+        sized = (
+            sized.withColumn("_rn1", F.row_number().over(w1))
+            .filter(F.col("_rn1") <= F.col(allow_col))
+            .drop("_rn1")
+        )
+    w2 = Window.partitionBy(*cell_cols).orderBy(*order)
+    return (
+        sized.withColumn("_rn", F.row_number().over(w2))
+        .filter(F.col("_rn") <= F.col(allow_col))
+        .drop("_rn")
+    )
+
+
 def quality_tiers(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -459,11 +514,8 @@ def quality_tiers(
     curve (big groups are downsampled proportionally harder), in
     bit-exact arithmetic (integer -> IEEE sqrt -> floor, no cross-group
     normalization sum whose float fold order could differ across
-    engines).  WHICH rows fill the quota is a deterministic portable
-    md5-rank lottery, computed with the same two-level salted window
-    trick as urls.host_rank: rank within ``(tier, group, salt)`` shards,
-    prune to the shard-local quota (lossless — a global top-quota row is
-    in its shard's top-quota), then re-rank the bounded survivors.
+    engines; :func:`sqrt_quota`).  WHICH rows fill the quota is the
+    deterministic portable md5-rank lottery of :func:`quota_lottery`.
 
     Returns every input row with ``(tier, group_n, quota, keep)``.
 
@@ -487,37 +539,16 @@ def quality_tiers(
         wt = Window.orderBy(F.col(quality_col).desc(), F.col(id_col))
         tiered = df.withColumn("tier", F.ntile(n_tiers).over(wt).cast("long"))
     else:
-        t = F.lit(1)
-        for b in tier_bounds:
-            t = t + F.when(F.col(quality_col) < b, 1).otherwise(0)
-        tiered = df.withColumn("tier", t.cast("long"))
+        tiered = df.withColumn("tier", tier_of(F.col(quality_col), tier_bounds))
     tiered = tiered.withColumn("_grp", group)
     counts = tiered.groupBy("tier", "_grp").agg(F.count("*").alias("group_n"))
-    quota = F.least(
-        F.col("group_n"),
-        F.floor(F.lit(float(quota_coeff)) * F.sqrt(F.col("group_n").cast("double"))),
-    ).cast("long")
+    quota = sqrt_quota(F.col("group_n"), quota_coeff)
     sized = tiered.join(counts.withColumn("quota", quota), ["tier", "_grp"])
     if materialize:
         sized = sized.persist()
-    rkey = F.md5(F.col(id_col).cast("string"))
-    order = [rkey, F.col(id_col)]
-    if salt_shards and salt_shards > 1:
-        salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit("qt")), F.lit(salt_shards))
-        w1 = Window.partitionBy("tier", "_grp", salt).orderBy(*order)
-        sized_pruned = (
-            sized.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= F.col("quota"))
-            .drop("_rn1")
-        )
-    else:
-        sized_pruned = sized
-    w2 = Window.partitionBy("tier", "_grp").orderBy(*order)
-    kept_ids = (
-        sized_pruned.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= F.col("quota"))
-        .select(F.col(id_col).alias("_keep_id"))
-    )
+    kept_ids = quota_lottery(
+        sized, id_col, ["tier", "_grp"], "quota", salt_shards
+    ).select(F.col(id_col).alias("_keep_id"))
     return (
         sized.join(kept_ids, sized[id_col] == kept_ids["_keep_id"], "left")
         .withColumn("keep", F.col("_keep_id").isNotNull())

@@ -130,16 +130,6 @@ def _gram_hashes_from(wh_col, n: int):
     return F.array_distinct(grams)
 
 
-def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingle hashes per doc: (id, shingle:long)."""
-    wh = df.select(
-        F.col(id_col).alias("id"), _word_hash_array(F.col(text_col)).alias("_wh")
-    )
-    return wh.select(
-        "id", F.explode(_gram_hashes_from(F.col("_wh"), n)).alias("shingle")
-    )
-
-
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -944,7 +934,6 @@ def simhash_near_dups(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs with hamming(simhash) <= max_hamming.
 
@@ -961,9 +950,7 @@ def simhash_near_dups(
     then paid a global dropDuplicates; the blocked form emits each pair
     exactly once with NO dedup exchange, because the pair's xor already
     says which earlier quarter agreed (emit only from the FIRST agreeing
-    quarter).  ``materialize`` is retained for API compatibility: the
-    signature stage now has exactly one consumer, so there is nothing to
-    re-share.
+    quarter).
     """
     sigs = simhash_signatures(df, id_col, text_col, drop_empty=True)
     if int(max_hamming) == 0:

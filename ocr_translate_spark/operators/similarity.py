@@ -75,13 +75,6 @@ def dot_fast_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(np.einsum("ij,ij->i", _stack(a), _stack(b)))
 
 
-def as_double(col) -> "F.Column":
-    """Promote array<float> to array<double> (float32 multiplies lose
-    precision and won't reproduce across engines).  Kept for callers that
-    need the widened column itself; the scoring UDFs widen internally."""
-    return F.transform(col, lambda x: x.cast("double"))
-
-
 def _nonzero_vec(vec_col) -> "F.Column":
     """JVM-exact analog of ``_norm > 0``: the SAME index-ordered float64
     sum-of-squares fold as dot_udf/_ordered_dot, as a pure column
@@ -913,12 +906,6 @@ def centroids_to_df(spark, centroids: np.ndarray) -> DataFrame:
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell long, centroid array<double>",
     )
-
-
-def centroids_from_df(df: DataFrame) -> np.ndarray:
-    """Inverse of :func:`centroids_to_df` (cell-ordered)."""
-    rows = df.orderBy("cell").collect()
-    return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
 
 def semantic_index(

@@ -143,39 +143,6 @@ def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# normalization (F1-F8)
-# ---------------------------------------------------------------------
-
-def q_normalize_dash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2: inject a dash-newline split after the first word, restore it."""
-    docs = load(spark, sf_dir, "documents")
-    # replace the first space with '-\n' to plant a hyphen-split word
-    dashed = F.regexp_replace(F.col("text"), r"^([^ ]*) ", "$1-\n")
-    return docs.select(
-        F.col("doc_id"),
-        restore_dash_newlines_col(dashed).alias("restored"),
-    )
-
-
-def q_tokenize_breakchars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5: break-char tokenization (break on 'e' and '.') — token count."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"[e\.+]", -1), lambda x: x != F.lit(""))
-    return docs.select("doc_id", F.size(toks).cast("long").alias("n_tokens"))
-
-
-def q_nospace_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7: strip spaces for no-space languages (ref models/ocr.py:231)."""
-    docs = load(spark, sf_dir, "documents")
-    from .operators.normalize import strip_nospace_lang_col
-
-    return docs.select(
-        "doc_id", "lang",
-        strip_nospace_lang_col(F.col("text"), F.col("lang")).alias("cleaned"),
-    )
-
-
-# ---------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------
 

@@ -89,8 +89,9 @@ def run_curation_stream(
             if compact_every and appended_batches % compact_every == 0:
                 from ..curate import compact_warehouse
 
-                snap, _rows = compact_warehouse(spark, warehouse_root)
-                d["compacted_snapshot_id"] = snap
+                d["compacted_snapshot_id"] = compact_warehouse(
+                    spark, warehouse_root
+                )
         reports.append(d)
 
     writer = stream.writeStream.foreachBatch(sink)

@@ -16,9 +16,9 @@ file stream and ingests one micro-batch per source file
 
 ``--compact`` runs the maintenance pass instead of ingesting (no
 --docs needed): per-batch appended directories fold into one per table,
-host_counts collapses to one row per host, one atomic replace-commit
-(curate.compact_warehouse).  Schedule it every N batches — it is the
-writer for its duration (single-writer contract).
+host_counts and tier_counts collapse to one row per key, one atomic
+replace-commit (curate.compact_warehouse).  Schedule it every N batches —
+it is the writer for its duration (single-writer contract).
 
 ``--tier-select --tier-out <dir>`` runs the tier-extraction stage
 (curate.tiered_select) over the stored curated corpus instead of
@@ -49,7 +49,8 @@ def main() -> int:
     ap.add_argument("--compact", action="store_true",
                     help="compact the warehouse instead of ingesting")
     ap.add_argument("--target-files", type=int, default=None,
-                    help="partitions per compacted table (default: session "
+                    help="partitions per folded ledger (--compact) or "
+                         "re-tiered table (--retier) (default: session "
                          "parallelism)")
     ap.add_argument("--retain-last", type=int, default=None,
                     help="compact mode, Iceberg catalogs only: also expire "
@@ -117,12 +118,12 @@ def main() -> int:
         from ocr_translate_spark.curate import compact_warehouse
 
         t0 = time.monotonic()
-        snap, rows = compact_warehouse(
+        snap = compact_warehouse(
             spark, args.warehouse, target_files=args.target_files,
             retain_last=args.retain_last,
         )
         print(json.dumps({
-            "mode": "compact", "snapshot_id": snap, "rows": rows,
+            "mode": "compact", "snapshot_id": snap,
             "wall_sec": round(time.monotonic() - t0, 3),
         }))
         return 0

@@ -10,6 +10,14 @@ from pyspark.sql import functions as F
 from ocr_translate_spark.curate import curate_corpus
 
 
+def _persistent_ids(spark) -> set:
+    """Ids of the session's persistent RDDs.  Lifecycle pins compare id
+    sets: RDD ids only grow, so an RDD a call leaves behind is a new id,
+    while the context cleaner may release earlier tests' garbage at any
+    moment and shrink a plain count."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _sentence(i: int, n: int = 30) -> str:
     # natural-ish text that passes the Gopher battery (stopwords, sane
     # word lengths, alphabetic words)
@@ -119,17 +127,16 @@ def test_curate_corpus_single_pass(spark):
         [(i, _sentence(i)) for i in range(40)], "doc_id long, text string"
     )
     spark.catalog.clearCache()  # earlier tests' caches
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    n_persistent = persistent().size()
+    before = _persistent_ids(spark)
     store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
+    n_before = store.executionsCount()
     out, rep = curate_corpus(docs, min_words=10, scrub=False)
-    after = store.executionsCount()
-    assert after - before == 1, (before, after)
+    n_after = store.executionsCount()
+    assert n_after - n_before == 1, (n_before, n_after)
     # cache lifecycle: clearCache releases everything the call persisted,
     # and the returned frame is still readable (recomputed from lineage)
     spark.catalog.clearCache()
-    assert persistent().size() == n_persistent
+    assert _persistent_ids(spark) <= before
     assert out.count() == rep.n_output
 
 
@@ -173,15 +180,14 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     wh_root = str(tmp_path / "wh")
     # cache lifecycle: a call leaves no persistent RDD behind (checkpoint
     # blocks included) — a long ingest stream must not accumulate them
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    n_persistent = persistent().size()
+    before = _persistent_ids(spark)
     b1 = spark.createDataFrame(
         [(i, _sentence(i)) for i in range(10)], "doc_id long, text string"
     )
     out1, rep1 = curate_incremental(spark, wh_root, b1, min_words=10, scrub=False)
     assert rep1.n_batch == rep1.n_appended == 10
     assert rep1.snapshot_id >= 1
-    assert persistent().size() == n_persistent
+    assert _persistent_ids(spark) <= before
 
     wh = open_warehouse(spark, wh_root)
     assert wh.read(spark, CURATED_TABLE).count() == 10
@@ -207,7 +213,7 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert appended == {100, 101, 102}
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert wh.read(spark, SIGS_TABLE).count() == 13
-    assert persistent().size() == n_persistent
+    assert _persistent_ids(spark) <= before
 
     # idempotent re-run: everything already ledgered or rejected
     out3, rep3 = curate_incremental(spark, wh_root, b2, min_words=10, scrub=False)
@@ -216,7 +222,7 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert rep3.stages[-1] == "noop_commit"
     assert wh.read(spark, CURATED_TABLE).count() == 13
     assert rep3.snapshot_id == rep2.snapshot_id
-    assert persistent().size() == n_persistent
+    assert _persistent_ids(spark) <= before
 
 
 def test_read_curated_time_travel_and_split(spark, tmp_path):
@@ -273,10 +279,14 @@ def test_compact_warehouse(spark, tmp_path):
         .groupBy("host").agg(F.sum("n").alias("n")).collect()
     }
 
-    snap, rows_by_table = compact_warehouse(spark, wh_root)
+    snap = compact_warehouse(spark, wh_root)
     assert snap == pre_snap + 1
     post_dirs = wh._manifest(snap)["tables"]
     assert all(len(v) == 1 for v in post_dirs.values()), post_dirs
+    rows_by_table = {
+        t: wh.read(spark, t).count()
+        for t in (CURATED_TABLE, KEYS_TABLE, SIGS_TABLE, BANDS_TABLE, HOSTS_TABLE)
+    }
     assert rows_by_table[CURATED_TABLE] == rows_by_table[KEYS_TABLE] == 18
     assert rows_by_table[SIGS_TABLE] == 18
     assert rows_by_table[BANDS_TABLE] == 18 * 8
@@ -677,10 +687,10 @@ def test_tiered_ingest_compaction_preserves_quota_state(spark, tmp_path):
                F.sum("n_seen").alias("s"), F.sum("n_kept").alias("k")).collect()}
     n_seen_pre = wh.read(spark, "tier_seen").count()
 
-    snap, nrows = compact_warehouse(spark, wh_dir)
-    assert nrows["tier_counts"] == len(pre)  # folded to one row per cell
-    post = {(r["tier"], r["grp"]): (r["n_seen"], r["n_kept"]) for r in
-            wh.read(spark, "tier_counts").collect()}
+    snap = compact_warehouse(spark, wh_dir)
+    post_rows = wh.read(spark, "tier_counts", snapshot_id=snap).collect()
+    assert len(post_rows) == len(pre)  # folded to one row per cell
+    post = {(r["tier"], r["grp"]): (r["n_seen"], r["n_kept"]) for r in post_rows}
     assert post == pre
     assert wh.read(spark, "tier_seen").count() == n_seen_pre == 60
 

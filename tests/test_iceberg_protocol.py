@@ -3,23 +3,23 @@
 The round-3 risk: ``IcebergWarehouse``'s SQL strings (``MERGE INTO``,
 ``rollback_to_snapshot``, log queries) were plausible but unexecuted —
 the one live test skips in this container.  The class now routes every
-catalog interaction through six seam primitives and expresses every
+catalog interaction through five seam primitives and expresses every
 protocol read as a SQL string, so this file drives the FULL state
 machine (commit / merge / upsert / crash-recovery / concurrency /
-legacy-schema evolution) against a recording fake engine that
+compaction) against a recording fake engine that
 simulates Iceberg catalog semantics and rejects any SQL shape it does
 not recognize — a drifted statement fails loudly here instead of on
 first contact with a cluster.
 
-Only the six primitive bodies (writeTo/table/catalog calls) remain
+Only the five primitive bodies (writeTo/table/catalog calls) remain
 jar-dependent; those are covered by the skip-marked live test in
 test_pipeline.py.
 """
 
 from __future__ import annotations
 
+import os
 import re
-from types import SimpleNamespace
 
 import pytest
 
@@ -103,20 +103,10 @@ class FakeIcebergWarehouse(IcebergWarehouse):
         merged = self._rows(full) + [dict(r) for r in rows]
         self.tables[full].append((self._next_snap(), merged))
 
-    def plant_legacy_log(self, rows):
-        """Create the pre-uuid 3-column log table."""
-        full = self._full(self.LOG_TABLE)
-        assert full not in self.tables
-        self.tables[full] = [(self._next_snap(), [dict(r) for r in rows])]
-
     # -- seam primitives -------------------------------------------------
 
     def _table_exists(self, full):
         return full in self.tables
-
-    def _table_columns(self, full):
-        rows = self._rows(full)
-        return list(rows[0]) if rows else []
 
     _rival_log_row = None  # set by the concurrency test
 
@@ -215,24 +205,6 @@ class FakeIcebergWarehouse(IcebergWarehouse):
             self.tables[full] = versions[: idx[0] + 1]
             return FakeResult([])
 
-        if m := re.fullmatch(r"ALTER TABLE ([\w.]+) ADD COLUMN commit_uuid STRING", s):
-            full = m.group(1)
-            versions = self.tables[full]
-            evolved = [
-                (snap, [{**r, "commit_uuid": r.get("commit_uuid")} for r in rows])
-                for snap, rows in versions
-            ]
-            self.tables[full] = evolved
-            return FakeResult([])
-
-        if m := re.fullmatch(r"ALTER TABLE ([\w.]+) ADD COLUMN (\w+) (\w+)", s):
-            full, column = m.group(1), m.group(2)
-            self.tables[full] = [
-                (snap, [{**r, column: r.get(column)} for r in rows])
-                for snap, rows in self.tables[full]
-            ]
-            return FakeResult([])
-
         if m := re.fullmatch(
             r"MERGE INTO ([\w.]+) t USING ([\w.]+) s ON (.+?) "
             r"WHEN (MATCHED THEN UPDATE SET \* WHEN )?NOT MATCHED THEN INSERT \*",
@@ -296,7 +268,7 @@ def _df(*pairs):
 def test_commit_publishes_log_and_reads_resolve(wh):
     staged = {
         "extracted": [wh.stage(_df(("u1", "a"), ("u2", "b")), "extracted")],
-        "runs": [wh.stage(_df(("u1", "r"), ("u2", "r")), "runs")],
+        "t2": [wh.stage(_df(("u1", "r"), ("u2", "r")), "t2")],
     }
     snap = wh.commit(staged)
     assert snap == 1 == wh.current_snapshot_id()
@@ -307,7 +279,7 @@ def test_commit_publishes_log_and_reads_resolve(wh):
     assert len(wh.read(None, "extracted").rows) == 3
     # time travel resolves through the log, per logical snapshot
     assert len(wh.read(None, "extracted", snapshot_id=1).rows) == 2
-    assert len(wh.read(None, "runs", snapshot_id=2).rows) == 2
+    assert len(wh.read(None, "t2", snapshot_id=2).rows) == 2
 
     # exact protocol ordering for the second commit: the staged handle is
     # read + appended, dropped, then ONE log append publishes atomically
@@ -369,6 +341,32 @@ def test_crash_orphan_rolled_back_before_next_append(wh):
     }
 
 
+def test_first_commit_crash_stays_invisible(wh, monkeypatch):
+    """A first commit that creates its table and dies before the log
+    append published nothing: reads see no rows, and the next commit
+    drops the never-logged table before it creates its own, so its
+    snapshot holds only its own rows."""
+    def killed(tables, commit_uuid):
+        raise RuntimeError("killed before the log append")
+
+    monkeypatch.setattr(wh, "_publish_log", killed)
+    with pytest.raises(RuntimeError):
+        wh.commit({"extracted": [wh.stage(_df(("ghost", "x")), "extracted")]})
+    monkeypatch.undo()
+    assert wh._table_exists(wh._full("extracted"))  # the crash left its table
+    with pytest.raises(ValueError):  # no published rows, no schema given
+        wh.read(None, "extracted")
+
+    snap = wh.commit({"extracted": [wh.stage(_df(("u1", "a")), "extracted")]})
+    assert snap == 1
+    assert [r["url"] for r in wh.read(None, "extracted", snapshot_id=snap).rows] == [
+        "u1"
+    ]
+    drop = "DROP TABLE IF EXISTS proto_wh.extracted"
+    assert wh.statements.count(drop) == 1
+    assert not any("rollback_to_snapshot" in s for s in wh.statements)
+
+
 def test_concurrent_publish_detected(wh):
     wh.commit({"t": [wh.stage(_df(("u1", "a")), "t")]})
     # another writer claims logical snapshot 2 between our id pick and our
@@ -388,25 +386,6 @@ def test_concurrent_publish_detected(wh):
         "ORDER BY snapshot_id DESC, iceberg_snapshot_id ASC LIMIT 1"
     ).first()
     assert row["iceberg_snapshot_id"] != 999
-
-
-def test_legacy_three_column_log_is_evolved_before_append(wh):
-    # warehouse written by the pre-uuid schema: 3-column log, no commit_uuid
-    wh.tables[wh._full("t")] = [(wh._next_snap(), [{"url": "u0", "text": "z"}])]
-    wh.plant_legacy_log([
-        {"snapshot_id": 1, "table_name": "t",
-         "iceberg_snapshot_id": wh._snap(wh._full("t"))},
-    ])
-    snap = wh.commit({"t": [wh.stage(_df(("u1", "a")), "t")]})
-    assert snap == 2
-    alters = [s for s in wh.statements if s.startswith("ALTER TABLE")]
-    assert alters == [
-        f"ALTER TABLE {wh._full(wh.LOG_TABLE)} ADD COLUMN commit_uuid STRING"
-    ]
-    # legacy NULL-uuid rows don't false-positive the clash check, and the
-    # evolved log resolves both old and new snapshots
-    assert len(wh.read(None, "t", snapshot_id=1).rows) == 1
-    assert len(wh.read(None, "t", snapshot_id=2).rows) == 2
 
 
 def test_stage_discard_leaves_no_catalog_entry(wh):
@@ -505,54 +484,34 @@ def test_compact_rolls_back_orphans_and_optionally_expires(wh):
     assert {r["url"] for r in wh.read(None, "curated").rows} == {"u1"}
 
 
-def test_table_names_validated_as_identifiers():
+def test_table_names_validated_as_identifiers(wh, tmp_path):
     """Caller-supplied table names are interpolated into catalog SQL and
     (in the emulation) filesystem paths — non-identifier names must be
-    rejected at the public API boundary (advisor r4)."""
+    rejected at the public API boundary (advisor r4).  The ledger views
+    are readable names that no warehouse stages: a read derives them
+    from ``extracted``, so rows written under them would never be read."""
     import pytest as _pytest
 
-    from ocr_translate_spark.io.tables import _check_table_name
+    from ocr_translate_spark.io.tables import Warehouse, _check_table_name
 
     for ok in ("extracted", "runs", "_snapshot_log", "t2", "A_B_c"):
         _check_table_name(ok)
     for bad in ("bad'name", "a.b", "a b", "", "a-b", "x;drop", "../x"):
         with _pytest.raises(ValueError):
             _check_table_name(bad)
+    parquet = Warehouse(str(tmp_path / "wh"))
+    for view in ("runs", "metrics"):
+        for target in (wh, parquet):
+            with _pytest.raises(ValueError, match="view"):
+                target.stage(_df(("u1", "a")), view)
+    assert not wh.tables.keys() - {wh._full(wh.LOG_TABLE)}
+    assert os.listdir(tmp_path / "wh") == ["_snapshots"]
 
-
-
-class _TypedFakeDF(FakeDF):
-    """FakeDF with the ``schema[name].dataType.simpleString()`` lookup
-    that column evolution reads (every column a string)."""
-
-    @property
-    def schema(self):
-        string = SimpleNamespace(dataType=SimpleNamespace(simpleString=lambda: "string"))
-        return {c: string for c in self.columns}
-
-
-def test_commit_adds_columns_the_table_lacks(wh, monkeypatch):
-    """An ``extracted`` table created before the ledger columns existed is
-    evolved (ALTER TABLE ... ADD COLUMN) before the append that carries
-    them, and its old rows read the new column as NULL."""
-    wh.commit({"extracted": [wh.stage(_df(("u1", "a")), "extracted")]})
-    read = wh._read_table
-    monkeypatch.setattr(
-        wh, "_read_table", lambda full, snapshot_id=None: _TypedFakeDF(
-            read(full, snapshot_id).rows, read(full, snapshot_id).columns
-        ),
-    )
-    new = FakeDF([{"url": "u2", "text": "b", "run_id": "r2"}])
-    wh.commit({"extracted": [wh.stage(new, "extracted")]})
-    assert "ALTER TABLE proto_wh.extracted ADD COLUMN run_id string" in wh.statements
-    rows = {r["url"]: r for r in wh.read(None, "extracted").rows}
-    assert rows["u1"]["run_id"] is None and rows["u2"]["run_id"] == "r2"
 
 
 def test_ledger_views_read_extracted_at_the_logged_snapshot(wh, monkeypatch):
     """``runs``/``metrics`` reads derive from ``extracted`` as logged at
-    the requested snapshot once it carries a ``run_id`` column; without
-    one (the tests above) they read only their own table."""
+    the requested snapshot."""
     from ocr_translate_spark.io import tables
 
     seen = []

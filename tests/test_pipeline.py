@@ -228,17 +228,17 @@ def test_iceberg_warehouse_roundtrip(spark, tmp_path):
     wh = IcebergWarehouse(spark, "wh_test")  # pragma: no cover
     df = spark.range(5).toDF("x")
     staged = {"extracted": [wh.stage(df, "extracted")],
-              "runs": [wh.stage(df, "runs")]}
+              "t2": [wh.stage(df, "t2")]}
     snap = wh.commit(staged)
     assert snap == wh.current_snapshot_id()  # sequential logical ids
     assert wh.read(spark, "extracted").count() == 5
-    assert wh.read(spark, "runs").count() == 5
+    assert wh.read(spark, "t2").count() == 5
     snap2 = wh.commit({"extracted": [wh.stage(df, "extracted")]})
     assert snap2 == snap + 1
     assert wh.read(spark, "extracted").count() == 10
     # time travel resolves through the snapshot log, not raw Iceberg ids
     assert wh.read(spark, "extracted", snapshot_id=snap).count() == 5
-    assert wh.read(spark, "runs", snapshot_id=snap2).count() == 5
+    assert wh.read(spark, "t2", snapshot_id=snap2).count() == 5
     # crash recovery: append WITHOUT a log publish (= a commit that died
     # in between), then commit normally — the orphan must be rolled back,
     # not folded into the next published snapshot
@@ -599,11 +599,11 @@ def test_committed_read_applies_schema(spark, tmp_path):
         "url string, extractor_version string, options_hash string, "
         "text_hash long, snapshot_id long, note string",
     )
-    wh.write(rows, "runs")
+    wh.write(rows, "t2")
     sc = spark.sparkContext
     sc.setJobGroup("schema-read", "Warehouse.read with a schema")
     try:
-        runs = wh.read(spark, "runs", schema=RUNS)
+        runs = wh.read(spark, "t2", schema=RUNS)
         assert sc.statusTracker().getJobIdsForGroup("schema-read") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -649,60 +649,31 @@ def test_run_extraction_spark_jobs_per_call(spark, tmp_path):
         assert len(os.listdir(os.path.join(root, "extracted"))) == 2
 
 
-def test_legacy_three_table_warehouse(spark, tmp_path):
-    """A warehouse written the old way — `extracted` without run_id next to
-    committed `runs` and `metrics` tables — still memoizes, and after one
-    more run_extraction its `runs`/`metrics` reads hold the legacy rows
-    plus the new ones, with no duplicates."""
+def test_pre_ledger_warehouse_re_extracts_once(spark, tmp_path):
+    """A warehouse whose `extracted` rows predate the ledger columns (no
+    run_id, no snapshot_id) has an empty `runs` view: the next
+    run_extraction re-extracts its pages once, the call after memoizes,
+    and read_extracted's latest-only window collapses the two copies."""
     from ocr_translate_spark.operators.extract import extract_pages
 
     root = str(tmp_path / "wh")
     wh = Warehouse(root)
-    legacy_pages = pages_df(spark, 32, partitions=2)
+    old_pages = pages_df(spark, 32, partitions=2)
     staged = extract_pages(
-        legacy_pages.withColumn("input_split", F.lit("legacy")), repartition=2
+        old_pages.withColumn("input_split", F.lit("old")), repartition=2
     )
     ext_dir = wh.stage(staged, "extracted")
-    written = wh.read_staged(spark, ext_dir)
-    assert "run_id" not in written.columns
-    runs_dir = wh.stage(
-        written.select(
-            "url", "extractor_version", "options_hash", "text_hash",
-            F.lit(1).cast("long").alias("snapshot_id"),
-        ),
-        "runs",
-    )
-    metrics_dir = wh.stage(
-        written.groupBy("partition_id").agg(
-            F.max("input_split").alias("input_split"),
-            F.count("*").alias("row_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.expr("bit_xor(text_hash)").alias("extraction_hash"),
-            F.sum("wall_ms").cast("long").alias("wall_clock_ms"),
-            F.lit("legacy").alias("run_id"),
-        ),
-        "metrics",
-    )
-    wh.commit({"extracted": [ext_dir], "runs": [runs_dir], "metrics": [metrics_dir]})
-    legacy_metrics = wh.read(spark, "metrics", schema=METRICS).count()
+    assert "snapshot_id" not in wh.read_staged(spark, ext_dir).columns
+    wh.commit({"extracted": [ext_dir]})
+    assert wh.read(spark, "runs", schema=RUNS).count() == 0
 
-    assert run_extraction(spark, legacy_pages, root)["n_written"] == 0
-    stats = run_extraction(spark, pages_df(spark, 48, partitions=2), root)
-    assert stats["n_written"] == 16
-
+    assert run_extraction(spark, old_pages, root)["n_written"] == 32
+    assert run_extraction(spark, old_pages, root)["n_written"] == 0
     runs = wh.read(spark, "runs", schema=RUNS)
     keys = ["url", "extractor_version", "options_hash"]
-    assert runs.count() == 48 == runs.dropDuplicates(keys).count()
-    assert runs.filter(F.col("snapshot_id") == 1).count() == 32
-    metrics = wh.read(spark, "metrics", schema=METRICS).collect()
-    by_run: dict = {}
-    for r in metrics:
-        by_run[r["run_id"]] = by_run.get(r["run_id"], 0) + r["row_count"]
-    assert by_run == {"legacy": 32, stats["run_id"]: 16}
-    assert len(metrics) == len({(r["run_id"], r["partition_id"]) for r in metrics})
-    assert sum(r["run_id"] == "legacy" for r in metrics) == legacy_metrics
+    assert runs.count() == 32 == runs.dropDuplicates(keys).count()
     # the committed text is still byte-identical to the goldens
     got = read_extracted(spark, root)
-    golden = pages_df(spark, 48, partitions=2).select("url", F.col("text").alias("e"))
-    assert got.count() == 48
+    golden = old_pages.select("url", F.col("text").alias("e"))
+    assert got.count() == 32
     assert got.join(golden, "url").filter(F.col("extracted_text") != F.col("e")).count() == 0
