@@ -351,6 +351,7 @@ KEYS_TABLE = "curated_keys"        # (id, content_md5) — exact-dup index
 SIGS_TABLE = "dedup_sigs"          # (id, sig array<long>) — MinHash index
 BANDS_TABLE = "dedup_bands"        # (id, band, bucket) — LSH band index
 HOSTS_TABLE = "host_counts"        # (host, n) — log-structured quota ledger
+HOSTS_SCHEMA = "host string, n long"
 SEM_CENTROIDS_TABLE = "sem_centroids"  # (cell, centroid) — frozen quantizer
 SEM_CELLS_TABLE = "sem_cells"      # (id, cell, cell_cos) — semantic cell index
 SEM_VECS_TABLE = "sem_vecs"        # (id, embedding) — survivor vectors
@@ -386,17 +387,19 @@ def curate_incremental(
 
     * ``curated``       — (id, text, split): the corpus itself;
     * ``curated_keys``  — (id, content_md5): exact-dup + idempotence index;
-    * ``dedup_sigs`` / ``dedup_bands`` — the :func:`dedup.minhash_index`
-      tables; each batch joins its own bands against the stored bands
-      (dedup.minhash_pairs) — the 100 TB corpus text is
-      NEVER re-scanned, only its ~300 B/doc index;
+    * ``dedup_sigs`` / ``dedup_bands`` — the MinHash LSH index: the
+      survivors' signatures and their :func:`dedup.minhash_bands`; each
+      batch joins its own bands against the stored bands
+      (:func:`dedup.minhash_pairs`) — the 100 TB corpus text is NEVER
+      re-scanned, only its ~300 B/doc index;
     * with ``embedding_col``: ``sem_centroids`` / ``sem_cells`` /
-      ``sem_vecs`` — the :func:`similarity.semantic_index` tables
-      (SemDeDup).  Centroids freeze at the first embedded batch (the
-      tiered_ingest frozen-bounds discipline); each batch assigns only
-      ITSELF to them and scores new-vs-members inside touched cells
-      (similarity.incremental_semantic_candidates), corpus wins, then
-      smallest id within the batch.
+      ``sem_vecs`` — the semantic index (SemDeDup): the centroids, and
+      the survivors' cells and vectors from
+      :func:`similarity.semantic_index`.  Centroids freeze at the first
+      embedded batch (the tiered_ingest frozen-bounds discipline); each
+      batch assigns only ITSELF to them and scores new-vs-members inside
+      touched cells (:func:`similarity.incremental_semantic_candidates`),
+      corpus wins, then smallest id within the batch.
 
     Batch flow: drop already-ingested ids (re-running a batch is a
     no-op — crash-resume idempotence); Gopher gate; per-batch line dedup
@@ -469,7 +472,7 @@ def curate_incremental(
             rep.stages.append("host_blocklist")
         if max_per_host:
             host_counts = (
-                wh.read(spark, HOSTS_TABLE, schema="host string, n long")
+                wh.read(spark, HOSTS_TABLE, schema=HOSTS_SCHEMA)
                 .groupBy("host").agg(F.sum("n").alias("_kept"))
             )
             # exact salted two-level per-host rank (urls.host_rank): the
@@ -548,31 +551,24 @@ def curate_incremental(
             from .operators import similarity as sim
 
             emb_dt = batch.schema[embedding_col].dataType.simpleString()
-            sem_input = (
-                _live(dec).select(id_col)
-                .join(batch.select(F.col(id_col), F.col(embedding_col)), id_col)
-                .filter(sim._nonzero_vec(F.col(embedding_col)))
-                .select(F.col(id_col).alias("id"), F.col(embedding_col))
-            )
             cts_rows = (
                 wh.read(spark, SEM_CENTROIDS_TABLE,
                         schema="cell bigint, centroid array<double>")
                 .orderBy("cell").collect()
             )
             first_sem = not cts_rows
-            if first_sem:
-                cts = sim.train_ivf_centroids(
-                    sem_input, "id", embedding_col,
-                    n_cells=semantic_cells, sample_size=4096,
-                )
-            else:
-                cts = np.array([r["centroid"] for r in cts_rows], dtype=np.float64)
+            cts, assigned = sim.semantic_index(
+                _live(dec).select(id_col)
+                .join(batch.select(F.col(id_col), F.col(embedding_col)), id_col),
+                id_col, embedding_col, n_cells=semantic_cells, sample_size=4096,
+                centroids=None if first_sem else np.array(
+                    [r["centroid"] for r in cts_rows], dtype=np.float64
+                ),
+            )
             if len(cts):
                 # the Arrow cell assignment runs once: the candidate search
                 # and the survivors' index rows read this cached frame
-                new_cells = sim._assign_cell_with_sim(
-                    sem_input, cts, embedding_col
-                ).persist()
+                new_cells = assigned.persist()
                 held.callback(new_cells.unpersist)
                 sem_index = wh.read(
                     spark, SEM_CELLS_TABLE,
@@ -583,8 +579,8 @@ def curate_incremental(
                     schema=f"id {id_dt}, embedding {emb_dt}",
                 ).select("id", F.col("embedding").alias(embedding_col))
                 sem_cands = sim.incremental_semantic_candidates(
-                    None, None, sem_index, sem_vecs, "id", embedding_col,
-                    threshold=semantic_threshold, new_cells=new_cells,
+                    new_cells, sem_index, sem_vecs, "id", embedding_col,
+                    threshold=semantic_threshold,
                 )
                 new_flag = new_cells.select(F.col("id").alias("_sn"))
                 drops_sem = (
@@ -701,7 +697,6 @@ def compact_warehouse(
     spark,
     warehouse_root: str,
     tables: "list[str] | None" = None,
-    target_files: "int | None" = None,
     retain_last: "int | None" = None,
 ) -> int:
     """Compact the curation warehouse: rewrite each table's CURRENT
@@ -715,8 +710,10 @@ def compact_warehouse(
 
     * ``host_counts`` and ``tier_counts`` are FOLDED (summed per key) —
       the log-structured ledgers collapse to one row per key with
-      identical read-side semantics (reads always sum) — into
-      ``target_files`` partitions (default: the session's parallelism).
+      identical read-side semantics (reads always sum) — in the
+      partitions adaptive execution coalesces the fold into (one file
+      for a small ledger).  The folds read with the ledgers' known
+      schemas, so they infer nothing from parquet footers.
     * Every other table is rewritten as it is: by the parquet emulation
       in the partitions its scan packs the table's files into, by an
       Iceberg catalog with ``CALL system.rewrite_data_files``.
@@ -745,27 +742,20 @@ def compact_warehouse(
         TIER_QUALS_TABLE, SEM_CENTROIDS_TABLE, SEM_CELLS_TABLE,
         SEM_VECS_TABLE,
     ]
-    n_parts = target_files or spark.sparkContext.defaultParallelism
     # the ledger folds (reads always sum, so the summed form is
-    # read-identical); every other table is compacted as it is
+    # read-identical); every other table is compacted as it is.  A
+    # never-committed ledger reads empty and compact skips it
     folds = {
-        HOSTS_TABLE: lambda df: df.groupBy("host").agg(F.sum("n").alias("n")),
-        TIER_COUNTS_TABLE: lambda df: df.groupBy("tier", "grp").agg(
+        HOSTS_TABLE: lambda: wh.read(
+            spark, HOSTS_TABLE, schema=HOSTS_SCHEMA
+        ).groupBy("host").agg(F.sum("n").alias("n")),
+        TIER_COUNTS_TABLE: lambda: wh.read(
+            spark, TIER_COUNTS_TABLE, schema=TIER_COUNTS_SCHEMA
+        ).groupBy("tier", "grp").agg(
             F.sum("n_seen").alias("n_seen"), F.sum("n_kept").alias("n_kept")
         ),
     }
-    plan: "dict[str, DataFrame | None]" = {}
-    for table in tables:
-        plan[table] = None
-        if table in folds:
-            # only the empty-table signal skips a fold (compact then skips
-            # the table); a real read failure (corrupt footer, transient
-            # IO) must surface
-            try:
-                current = wh.read(spark, table)
-            except ValueError:
-                continue
-            plan[table] = folds[table](current).repartition(n_parts)
+    plan = {t: folds[t]() if t in folds else None for t in tables}
     return wh.compact(spark, plan, retain_last=retain_last)
 
 
@@ -930,6 +920,7 @@ def tiered_select(
 TIERED_TABLE = "tiered"            # (id, text, ..., quality, tier) — kept docs
 TIER_BOUNDS_TABLE = "tier_bounds"  # (tier, cutoff) — frozen thresholds
 TIER_COUNTS_TABLE = "tier_counts"  # (tier, grp, n_seen, n_kept) — quota ledger
+TIER_COUNTS_SCHEMA = "tier long, grp string, n_seen long, n_kept long"
 TIER_SEEN_TABLE = "tier_seen"      # (id) — processed-doc memo ledger
 TIER_QUALS_TABLE = "tier_quals"    # (id, quality, grp) — seen-population scores
 
@@ -991,168 +982,176 @@ def tiered_ingest(
     stage write itself.  A replayed batch short-circuits at the probe:
     EXACTLY one execution, no tier plan built, no staging, no snapshot.
 
-    Returns ``(kept_df, report)``.  ``kept_df`` comes back CACHED (the
-    commit materialized it); the caller owns the unpersist — the
-    streaming sink drops it per batch (run_tiered_stream).
+    Returns ``(kept_df, report)``.  The cached frames (flagged batch,
+    narrow scores, kept set) are released before the call returns, on
+    every exit path, so a call leaves no persistent RDD behind.
+    ``kept_df`` reads the ``tiered`` files this call staged: no cache,
+    nothing to release.  (On the parquet warehouse they are the
+    committed directory itself; on an Iceberg catalog the commit copies
+    the staged table and drops it, so read ``tiered`` at
+    ``report["snapshot_id"]`` there.)
     """
     from .io.tables import open_warehouse
-    from .operators import curation as cops
 
     wh = open_warehouse(spark, warehouse_root)
     id_dt = batch.schema[id_col].dataType.simpleString()
     rep: dict = {}
     seen_ids = wh.read(spark, TIER_SEEN_TABLE, schema=f"{id_col} {id_dt}")
-    # every batch row flagged once, persisted: the probe action below
-    # fills this cache, so the raw batch is scanned ONCE per ingest
-    # however many consumers follow (tier join, seen-ids stage) — the r6
-    # design re-scanned it per count.  tier_seen holds each id once.
-    flagged = batch.join(
-        seen_ids.select(id_col, F.lit(True).alias("_seen")), id_col, "left"
-    ).persist()
-    new = flagged.filter(F.col("_seen").isNull()).drop("_seen")
+    # the cached frames are released on the way out, whatever happens
+    with ExitStack() as held:
+        # every batch row flagged once, persisted: the probe action below
+        # fills this cache, so the raw batch is scanned ONCE per ingest
+        # however many consumers follow (tier join, seen-ids stage) — the
+        # r6 design re-scanned it per count.  tier_seen holds each id once.
+        flagged = batch.join(
+            seen_ids.select(id_col, F.lit(True).alias("_seen")), id_col, "left"
+        ).persist()
+        held.callback(flagged.unpersist)
+        new = flagged.filter(F.col("_seen").isNull()).drop("_seen")
 
-    # the ONE probe action, counted at its root
-    _, probe = _count_decisions(
-        flagged.select("_seen"), n_new=F.count_if(F.col("_seen").isNull())
-    )
-    rep.update(n_batch=probe["n"], n_new=probe["n_new"])
+        # the ONE probe action, counted at its root
+        _, probe = _count_decisions(
+            flagged.select("_seen"), n_new=F.count_if(F.col("_seen").isNull())
+        )
+        rep.update(n_batch=probe["n"], n_new=probe["n_new"])
 
-    if rep["n_new"] == 0:
-        # replay (or empty batch): nothing to tier, nothing to commit —
-        # return before ANY tier plan is built, with exactly the one
-        # probe execution spent (replay-is-a-no-op is the family's
-        # headline contract; make it free)
-        rep.update(n_kept=0, kept_per_tier={},
-                   snapshot_id=wh.current_snapshot_id())
-        empty = new.limit(0).withColumn("tier", F.lit(None).cast("long"))
+        if rep["n_new"] == 0:
+            # replay (or empty batch): nothing to tier, nothing to commit —
+            # return before ANY tier plan is built, with exactly the one
+            # probe execution spent (replay-is-a-no-op is the family's
+            # headline contract; make it free)
+            rep.update(n_kept=0, kept_per_tier={},
+                       snapshot_id=wh.current_snapshot_id())
+            empty = new.limit(0).withColumn("tier", F.lit(None).cast("long"))
+            if quality_col is None:
+                empty = empty.withColumn("quality", F.lit(None).cast("double"))
+            return empty, rep
+
+        qcol = quality_col or "_quality"
+        grp = F.col(group_col) if group_col else F.lit("")
+        narrow_cols = [F.col(id_col), grp.alias("_grp")]
         if quality_col is None:
-            empty = empty.withColumn("quality", F.lit(None).cast("double"))
-        flagged.unpersist()
-        return empty, rep
+            narrow = new.select(
+                *narrow_cols, textstats.quality_score(F.col(text_col)).alias(qcol)
+            )
+        else:
+            narrow = new.select(*narrow_cols, F.col(qcol))
+        narrow = narrow.persist()
+        held.callback(narrow.unpersist)
 
-    qcol = quality_col or "_quality"
-    grp = F.col(group_col) if group_col else F.lit("")
-    narrow_cols = [F.col(id_col), grp.alias("_grp")]
-    if quality_col is None:
-        narrow = new.select(
-            *narrow_cols, textstats.quality_score(F.col(text_col)).alias(qcol)
-        )
-    else:
-        narrow = new.select(*narrow_cols, F.col(qcol))
-    narrow = narrow.persist()
+        # tier cutoffs: tiny — the frozen bounds are ≤ n_tiers rows, and
+        # the first batch (no committed bounds table: the read raises the
+        # empty-table ValueError without touching Spark) sketches them
+        # from narrow, which fills its cache
+        try:
+            stored_bounds = wh.read(spark, TIER_BOUNDS_TABLE).collect()
+        except ValueError:
+            stored_bounds = []
+        first_batch = not stored_bounds
+        if first_batch:
+            bounds = curation.approx_tier_bounds(
+                narrow, qcol, n_tiers=n_tiers, relative_error=relative_error
+            )
+        else:
+            bounds = [
+                r["cutoff"] for r in sorted(stored_bounds, key=lambda r: r["tier"])
+            ]
+        rep["tier_bounds"] = bounds
+        rep["first_batch"] = first_batch
 
-    # tier cutoffs: tiny — the frozen bounds are ≤ n_tiers rows, and the
-    # first batch (no committed bounds table: the read raises the
-    # empty-table ValueError without touching Spark) sketches them from
-    # narrow, which fills its cache
-    try:
-        stored_bounds = wh.read(spark, TIER_BOUNDS_TABLE).collect()
-    except ValueError:
-        stored_bounds = []
-    first_batch = not stored_bounds
-    if first_batch:
-        bounds = cops.approx_tier_bounds(
-            narrow, qcol, n_tiers=n_tiers, relative_error=relative_error
-        )
-    else:
-        bounds = [r["cutoff"] for r in sorted(stored_bounds, key=lambda r: r["tier"])]
-    rep["tier_bounds"] = bounds
-    rep["first_batch"] = first_batch
+        assigned = narrow.withColumn("tier", curation.tier_of(F.col(qcol), bounds))
 
-    assigned = narrow.withColumn("tier", cops.tier_of(F.col(qcol), bounds))
+        prev = (
+            wh.read(spark, TIER_COUNTS_TABLE, schema=TIER_COUNTS_SCHEMA)
+            .groupBy("tier", "grp")
+            .agg(F.sum("n_seen").alias("_m_prev"), F.sum("n_kept").alias("_k_prev"))
+            .withColumnRenamed("grp", "_grp")
+        )
+        m_batch = assigned.groupBy("tier", "_grp").agg(F.count("*").alias("_m_batch"))
+        cells = (
+            m_batch.join(prev, ["tier", "_grp"], "left")
+            .select(
+                "tier", "_grp", "_m_batch",
+                F.coalesce(F.col("_m_prev"), F.lit(0)).alias("_m_prev"),
+                F.coalesce(F.col("_k_prev"), F.lit(0)).alias("_k_prev"),
+            )
+            .withColumn("_m_tot", F.col("_m_prev") + F.col("_m_batch"))
+            .withColumn(
+                "_allow",
+                F.greatest(
+                    F.lit(0).cast("long"),
+                    curation.sqrt_quota(F.col("_m_tot"), quota_coeff)
+                    - F.col("_k_prev"),
+                ),
+            )
+        )
+        sized = assigned.join(F.broadcast(cells), ["tier", "_grp"])
+        kept = (
+            curation.quota_lottery(sized, id_col, ["tier", "_grp"], "_allow")
+            .select(id_col, "tier", "_grp", F.col(qcol))
+            .persist()
+        )
+        held.callback(kept.unpersist)
+        sel = [F.col(id_col), F.col("tier")]
+        if quality_col is None:
+            # surface the internally-computed score; a caller-provided
+            # quality column is already on the batch rows
+            sel.append(F.col(qcol).alias("quality"))
+        out = new.join(kept.select(*sel), id_col)
 
-    prev = (
-        wh.read(spark, TIER_COUNTS_TABLE,
-                schema="tier long, grp string, n_seen long, n_kept long")
-        .groupBy("tier", "grp")
-        .agg(F.sum("n_seen").alias("_m_prev"), F.sum("n_kept").alias("_k_prev"))
-        .withColumnRenamed("grp", "_grp")
-    )
-    m_batch = assigned.groupBy("tier", "_grp").agg(F.count("*").alias("_m_batch"))
-    cells = (
-        m_batch.join(prev, ["tier", "_grp"], "left")
-        .select(
-            "tier", "_grp", "_m_batch",
-            F.coalesce(F.col("_m_prev"), F.lit(0)).alias("_m_prev"),
-            F.coalesce(F.col("_k_prev"), F.lit(0)).alias("_k_prev"),
+        # delta rows: EVERY seen doc counts toward future allowances, kept
+        # or not; kept counts come from the same kept set the corpus
+        # append uses, so the ledger can never drift from the table
+        kept_cells = kept.groupBy("tier", "_grp").agg(F.count("*").alias("_nk"))
+        delta = (
+            cells.select("tier", "_grp", F.col("_m_batch").alias("n_seen"))
+            .join(kept_cells, ["tier", "_grp"], "left")
+            .select(
+                "tier", F.col("_grp").alias("grp"), "n_seen",
+                F.coalesce(F.col("_nk"), F.lit(0)).cast("long").alias("n_kept"),
+            )
         )
-        .withColumn("_m_tot", F.col("_m_prev") + F.col("_m_batch"))
-        .withColumn(
-            "_allow",
-            F.greatest(
-                F.lit(0).cast("long"),
-                cops.sqrt_quota(F.col("_m_tot"), quota_coeff)
-                - F.col("_k_prev"),
-            ),
-        )
-    )
-    sized = assigned.join(F.broadcast(cells), ["tier", "_grp"])
-    kept = (
-        cops.quota_lottery(sized, id_col, ["tier", "_grp"], "_allow")
-        .select(id_col, "tier", "_grp", F.col(qcol))
-        .persist()
-    )
-    sel = [F.col(id_col), F.col("tier")]
-    if quality_col is None:
-        # surface the internally-computed score; a caller-provided
-        # quality column is already on the batch rows
-        sel.append(F.col(qcol).alias("quality"))
-    out = new.join(kept.select(*sel), id_col).persist()
-
-    # delta rows: EVERY seen doc counts toward future allowances, kept
-    # or not; kept counts come from the same kept set the corpus append
-    # uses, so the ledger can never drift from the table
-    kept_cells = kept.groupBy("tier", "_grp").agg(F.count("*").alias("_nk"))
-    delta = (
-        cells.select("tier", "_grp", F.col("_m_batch").alias("n_seen"))
-        .join(kept_cells, ["tier", "_grp"], "left")
-        .select(
-            "tier", F.col("_grp").alias("grp"), "n_seen",
-            F.coalesce(F.col("_nk"), F.lit(0)).cast("long").alias("n_kept"),
-        )
-    )
-    # n_kept + the per-tier histogram are observed at the root of the
-    # TIERED stage write itself (which also materializes out's cache and
-    # kept's) — no count(), no collect()
-    obs_out = Observation()
-    tiered = out.observe(
-        obs_out,
-        F.count(F.lit(1)).alias("n"),
-        *[F.count_if(F.col("tier") == i).alias(f"t_{i}")
-          for i in range(1, n_tiers + 1)],
-    )
-    staged = {
-        TIERED_TABLE: [wh.stage(tiered, TIERED_TABLE)],
-        TIER_SEEN_TABLE: [wh.stage(new.select(id_col), TIER_SEEN_TABLE)],
-        TIER_COUNTS_TABLE: [wh.stage(delta, TIER_COUNTS_TABLE)],
-        # the seen-population quality ledger (~16 B/doc — same narrow
-        # projection the decisions ran on, read from its cache): what
-        # makes retier_warehouse exact later, for kept AND rejected docs
-        TIER_QUALS_TABLE: [wh.stage(
-            narrow.select(
-                F.col(id_col),
-                F.col(qcol).cast("double").alias("quality"),
-                F.col("_grp").alias("grp"),
-            ),
-            TIER_QUALS_TABLE,
-        )],
-    }
-    if first_batch:
-        bounds_df = spark.createDataFrame(
-            [(i + 1, float(b)) for i, b in enumerate(bounds)],
-            "tier long, cutoff double",
-        )
-        staged[TIER_BOUNDS_TABLE] = [wh.stage(bounds_df, TIER_BOUNDS_TABLE)]
-    rep["snapshot_id"] = wh.commit(staged)
-    m = obs_out.get
-    rep["n_kept"] = int(m["n"])
-    rep["kept_per_tier"] = {
-        i: int(m[f"t_{i}"]) for i in range(1, n_tiers + 1) if int(m[f"t_{i}"]) > 0
-    }
-    narrow.unpersist()
-    flagged.unpersist()
-    kept.unpersist()
-    return out, rep
+        # n_kept + the per-tier histogram are observed at the root of the
+        # TIERED stage write itself (which also materializes kept's cache)
+        # — no count(), no collect()
+        obs_out = Observation()
+        tiered = wh.stage(out.observe(
+            obs_out,
+            F.count(F.lit(1)).alias("n"),
+            *[F.count_if(F.col("tier") == i).alias(f"t_{i}")
+              for i in range(1, n_tiers + 1)],
+        ), TIERED_TABLE)
+        staged = {
+            TIERED_TABLE: [tiered],
+            TIER_SEEN_TABLE: [wh.stage(new.select(id_col), TIER_SEEN_TABLE)],
+            TIER_COUNTS_TABLE: [wh.stage(delta, TIER_COUNTS_TABLE)],
+            # the seen-population quality ledger (~16 B/doc — same narrow
+            # projection the decisions ran on, read from its cache): what
+            # makes retier_warehouse exact later, for kept AND rejected docs
+            TIER_QUALS_TABLE: [wh.stage(
+                narrow.select(
+                    F.col(id_col),
+                    F.col(qcol).cast("double").alias("quality"),
+                    F.col("_grp").alias("grp"),
+                ),
+                TIER_QUALS_TABLE,
+            )],
+        }
+        if first_batch:
+            staged[TIER_BOUNDS_TABLE] = [wh.stage(
+                curation.tier_bounds_frame(spark, bounds), TIER_BOUNDS_TABLE
+            )]
+        # the returned frame reads the staged files, not the caches
+        # released on the way out (resolved before the commit consumes
+        # the handle on an Iceberg catalog)
+        out = wh.read_staged(spark, tiered, schema=out.schema)
+        rep["snapshot_id"] = wh.commit(staged)
+        m = obs_out.get
+        rep["n_kept"] = int(m["n"])
+        rep["kept_per_tier"] = {
+            i: int(m[f"t_{i}"]) for i in range(1, n_tiers + 1) if int(m[f"t_{i}"]) > 0
+        }
+        return out, rep
 
 
 def retier_warehouse(
@@ -1163,7 +1162,6 @@ def retier_warehouse(
     n_tiers: "int | None" = None,
     quota_coeff: float = 8.0,
     relative_error: float = 1e-3,
-    target_files: "int | None" = None,
 ) -> "tuple[int, dict]":
     """The periodic maintenance job :func:`tiered_ingest`'s frozen-bounds
     design defers to: recompute tier cutoffs from the quality
@@ -1185,9 +1183,9 @@ def retier_warehouse(
     stored (rejected docs' text is gone — their slots refill from
     future batches).  Time travel to pre-re-tier snapshots still reads
     the old tiers (the rewrite is one ``compact`` of the three tables,
-    which never rewrites history on either branch).  ``target_files`` is
-    the partition count of each rewritten table (default: the session's
-    parallelism).
+    which never rewrites history on either branch).  Each rewritten
+    table is staged in the partitions adaptive execution coalesces its
+    plan into (one file for the tiny bounds and counts tables).
 
     ``n_tiers=None`` keeps the stored tier count.  Raises ``ValueError``
     on a warehouse with no committed bounds (nothing to re-tier) or no
@@ -1200,7 +1198,6 @@ def retier_warehouse(
     ledgers + one corpus-table rewrite); single-writer slot applies.
     """
     from .io.tables import open_warehouse
-    from .operators import curation as cops
 
     wh = open_warehouse(spark, warehouse_root)
     try:
@@ -1225,75 +1222,73 @@ def retier_warehouse(
     if n_tiers is None:
         n_tiers = len(old_bounds) + 1
 
-    quals = quals.persist()
-    bounds = cops.approx_tier_bounds(
-        quals, "quality", n_tiers=n_tiers, relative_error=relative_error
-    )
-
-    assigned = quals.withColumn(
-        "_rt_tier", cops.tier_of(F.col("quality"), bounds)
-    )
-    cells = (
-        assigned.groupBy("_rt_tier", "grp")
-        .agg(F.count("*").alias("n_seen"))
-        .withColumn("_rt_quota", cops.sqrt_quota(F.col("n_seen"), quota_coeff))
-    )
-
-    stored = wh.read(spark, TIERED_TABLE)
-    out_cols = list(stored.columns)
-    # candidates = stored keeps re-mapped to their new tier; the stored
-    # table is already quota-bounded (≤ c*sqrt(m) per old cell), so this
-    # side is small next to the corpus scan that produced it
-    cand = stored.drop("tier").join(
-        assigned.select(
-            F.col(id_col), F.col("_rt_tier"), F.col("grp").alias("_rt_grp")
-        ),
-        id_col,
-    )
-    sized = cand.join(
-        F.broadcast(cells.withColumnRenamed("grp", "_rt_grp")),
-        ["_rt_tier", "_rt_grp"],
-    )
-    kept = cops.quota_lottery(
-        sized, id_col, ["_rt_tier", "_rt_grp"], "_rt_quota"
-    ).withColumn("tier", F.col("_rt_tier"))
-    new_tiered = kept.select(*out_cols)
-
-    # replacement ledger: exact seen counts per NEW cell + what survived
-    kept_cells = kept.groupBy("_rt_tier", "_rt_grp").agg(
-        F.count("*").alias("n_kept")
-    )
-    new_counts = (
-        cells.withColumnRenamed("grp", "_rt_grp")
-        .join(kept_cells, ["_rt_tier", "_rt_grp"], "left")
-        .select(
-            F.col("_rt_tier").alias("tier"),
-            F.col("_rt_grp").alias("grp"),
-            "n_seen",
-            F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
+    # the cached ledger is released on the way out, whatever happens
+    with ExitStack() as held:
+        quals = quals.persist()
+        held.callback(quals.unpersist)
+        bounds = curation.approx_tier_bounds(
+            quals, "quality", n_tiers=n_tiers, relative_error=relative_error
         )
-    )
-    bounds_df = spark.createDataFrame(
-        [(i + 1, float(b)) for i, b in enumerate(bounds)],
-        "tier long, cutoff double",
-    )
 
-    n_parts = target_files or spark.sparkContext.defaultParallelism
-    # n_kept: observed at the root of the frame the tiered write runs
-    obs_kept = Observation()
-    snap = wh.compact(spark, {
-        TIERED_TABLE: new_tiered.repartition(n_parts).observe(
-            obs_kept, F.count(F.lit(1)).alias("n")
-        ),
-        TIER_BOUNDS_TABLE: bounds_df.repartition(n_parts),
-        TIER_COUNTS_TABLE: new_counts.repartition(n_parts),
-    })
-    rep = {
-        "snapshot_id": snap,
-        "old_bounds": old_bounds,
-        "new_bounds": bounds,
-        "n_tiers": n_tiers,
-        "n_kept": int(obs_kept.get["n"]),
-    }
-    quals.unpersist()
-    return snap, rep
+        assigned = quals.withColumn(
+            "_rt_tier", curation.tier_of(F.col("quality"), bounds)
+        )
+        cells = (
+            assigned.groupBy("_rt_tier", "grp")
+            .agg(F.count("*").alias("n_seen"))
+            .withColumn(
+                "_rt_quota", curation.sqrt_quota(F.col("n_seen"), quota_coeff)
+            )
+        )
+
+        stored = wh.read(spark, TIERED_TABLE)
+        out_cols = list(stored.columns)
+        # candidates = stored keeps re-mapped to their new tier; the stored
+        # table is already quota-bounded (≤ c*sqrt(m) per old cell), so
+        # this side is small next to the corpus scan that produced it
+        cand = stored.drop("tier").join(
+            assigned.select(
+                F.col(id_col), F.col("_rt_tier"), F.col("grp").alias("_rt_grp")
+            ),
+            id_col,
+        )
+        sized = cand.join(
+            F.broadcast(cells.withColumnRenamed("grp", "_rt_grp")),
+            ["_rt_tier", "_rt_grp"],
+        )
+        kept = curation.quota_lottery(
+            sized, id_col, ["_rt_tier", "_rt_grp"], "_rt_quota"
+        ).withColumn("tier", F.col("_rt_tier"))
+        new_tiered = kept.select(*out_cols)
+
+        # replacement ledger: exact seen counts per NEW cell + what survived
+        kept_cells = kept.groupBy("_rt_tier", "_rt_grp").agg(
+            F.count("*").alias("n_kept")
+        )
+        new_counts = (
+            cells.withColumnRenamed("grp", "_rt_grp")
+            .join(kept_cells, ["_rt_tier", "_rt_grp"], "left")
+            .select(
+                F.col("_rt_tier").alias("tier"),
+                F.col("_rt_grp").alias("grp"),
+                "n_seen",
+                F.coalesce(F.col("n_kept"), F.lit(0)).cast("long").alias("n_kept"),
+            )
+        )
+
+        # n_kept: observed at the root of the frame the tiered write runs
+        obs_kept = Observation()
+        snap = wh.compact(spark, {
+            TIERED_TABLE: new_tiered.observe(
+                obs_kept, F.count(F.lit(1)).alias("n")
+            ),
+            TIER_BOUNDS_TABLE: curation.tier_bounds_frame(spark, bounds),
+            TIER_COUNTS_TABLE: new_counts,
+        })
+        return snap, {
+            "snapshot_id": snap,
+            "old_bounds": old_bounds,
+            "new_bounds": bounds,
+            "n_tiers": n_tiers,
+            "n_kept": int(obs_kept.get["n"]),
+        }

@@ -442,6 +442,19 @@ def tier_of(quality: Column, bounds: list[float]) -> Column:
     return t.cast("long")
 
 
+def tier_bounds_frame(spark, bounds: list[float]) -> DataFrame:
+    """(tier long, cutoff double): descending cutoffs ``bounds`` in their
+    stored form, tier ``i + 1`` holding ``bounds[i]``.  One literal array
+    expanded on the JVM in one partition — no Python-worker task, and it
+    stages as one file; ``n_tiers=1`` (no cutoffs) gives the typed empty
+    frame."""
+    rows = F.array(*[
+        F.struct(F.lit(i + 1).alias("tier"), F.lit(float(b)).alias("cutoff"))
+        for i, b in enumerate(bounds)
+    ]).cast("array<struct<tier: bigint, cutoff: double>>")
+    return spark.range(1, numPartitions=1).select(F.inline(rows))
+
+
 def sqrt_quota(m: Column, quota_coeff: float) -> Column:
     """Keep quota of a cell of ``m`` docs: ``min(m, floor(c*sqrt(m)))``,
     the alpha = 0.5 temperature curve, in bit-exact arithmetic (integer ->

@@ -90,16 +90,6 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.withColumn("_rn", rank).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def _shingle_array(text_col, n: int):
-    """Column expr: distinct word n-gram shingles of a text column
-    (STRING grams — kept for oracle-parity consumers that must replay
-    the gram text in SQL; the hot paths use :func:`_shingle_hash_array`)."""
-    words = F.filter(F.split(F.lower(text_col), r"\s+", -1), lambda x: x != F.lit(""))
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
-    return F.array_distinct(grams)
-
-
 def _word_hash_array(text_col):
     """Column expr: xxhash64 of every word, one pass over the text."""
     words = F.filter(F.split(F.lower(text_col), r"\s+", -1), lambda x: x != F.lit(""))
@@ -575,8 +565,10 @@ def with_minhash_signature(
 def minhash_bands(
     sigs: DataFrame, num_hashes: int = NUM_HASHES, bands: int = BANDS
 ) -> DataFrame:
-    """(id, band, bucket) from a signature table (id, sig) — the band
-    half of :func:`minhash_index`.  The band table carries those three
+    """(id, band, bucket) from a signature table (id, sig) — with the
+    signatures, the stored LSH index :func:`minhash_pairs` probes
+    (curate.curate_incremental publishes both per batch, so no stored
+    document is ever re-signed).  The band table carries those three
     columns ONLY — the 32-slot signature arrays must not ride the banded
     join shuffle (bands x the payload per doc, then 2 sigs per
     candidate row through the pair dedup); signatures are re-joined
@@ -616,59 +608,6 @@ def _score_pairs(pairs: DataFrame, sigs: DataFrame, num_hashes: int) -> DataFram
         "id_a", "id_b",
         (matches.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard"),
     )
-
-
-def minhash_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> "tuple[DataFrame, DataFrame]":
-    """The persistent LSH index of a corpus: ``(sigs, bands)`` —
-    ``sigs`` is (id, sig array<long>) and ``bands`` is (id, band,
-    bucket).  Write BOTH to the warehouse next to the curated corpus;
-    each later crawl batch then dedups against the corpus via
-    :func:`incremental_minhash_candidates` WITHOUT re-signing a single
-    stored document.  At 10^12 docs the index is ~(num_hashes x 8 B +
-    bands x ~20 B) per doc — two slim tables that bucket-join, vs
-    re-scanning 100 TB of text per batch."""
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes, drop_empty=True)
-    return sigs, minhash_bands(sigs, num_hashes, bands)
-
-
-def incremental_minhash_candidates(
-    new_df: DataFrame,
-    index_sigs: DataFrame,
-    index_bands: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-    materialize: bool = True,
-) -> DataFrame:
-    """Continuous-ingestion near-dedup: candidate pairs (id_a, id_b,
-    est_jaccard) TOUCHING the new batch — new-vs-corpus plus
-    new-vs-new — against a stored :func:`minhash_index`, computing
-    signatures only for the new documents.
-
-    Equivalence contract (pinned by pytest): the result equals the
-    batch ``minhash_lsh_candidates(old UNION new)`` restricted to pairs
-    with at least one new endpoint (corpus-internal pairs were already
-    found when the corpus itself was ingested).  Ids must be globally
-    unique across corpus and batch — the same content-address
-    discipline the extraction ledger enforces.
-
-    ``materialize=True`` persists the batch's signatures, which
-    :func:`minhash_pairs` reads in four branches.  The same
-    ``n``/``num_hashes``/``bands`` as the index build MUST be used (hash
-    inputs are positional)."""
-    new_sigs = minhash_signatures(new_df, id_col, text_col, n, num_hashes, drop_empty=True)
-    if materialize:
-        new_sigs = new_sigs.persist()
-    return minhash_pairs(new_sigs, index_sigs, index_bands, num_hashes, bands)
 
 
 def minhash_lsh_candidates(
@@ -711,9 +650,18 @@ def minhash_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a, id_b, est_jaccard), id_a < id_b,
     of a signature table ``(id, sig)`` (zero-word docs dropped): within
-    ``sigs`` and, given a stored :func:`minhash_index`, between ``sigs``
-    and the index.  ``sigs`` is read in several branches, so pass a
-    materialized table (a cache, or a frame carrying the UDF's output).
+    ``sigs`` and, given a stored index (``index_sigs`` from
+    :func:`minhash_signatures` with ``drop_empty=True``, ``index_bands``
+    its :func:`minhash_bands`), between ``sigs`` and the index.  ``sigs``
+    is read in several branches, so pass a materialized table (a cache,
+    or a frame carrying the UDF's output).
+
+    Incremental contract (pinned by pytest): against a stored index the
+    pairs equal the batch :func:`minhash_lsh_candidates` over index
+    UNION batch restricted to pairs with at least one batch endpoint,
+    same est_jaccard values.  Ids must be globally unique across index
+    and batch, and the index must be built with the same ``n`` /
+    ``num_hashes`` / ``bands`` (hash inputs are positional).
 
     Scale shape: the new batch's band table (tiny) joins the stored
     band table on (band, bucket) — with the index bucketed/partitioned
@@ -853,77 +801,6 @@ def _quarter_table(sigs: DataFrame) -> DataFrame:
             ])
         ).alias("qq"),
     ).select("id", "simhash", F.col("qq.q").alias("q"), F.col("qq.qv").alias("qv"))
-
-
-def simhash_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """The persistent SimHash index of a corpus: ONE slim (id, simhash)
-    table (8 B/doc of signature) to store next to the curated corpus —
-    the SimHash counterpart of :func:`minhash_index`.  Later batches
-    dedup against it via :func:`incremental_simhash_candidates` without
-    touching stored text; the quarter keys are re-derived from the slim
-    table by bit arithmetic (no UDF, no payload)."""
-    return simhash_signatures(df, id_col, text_col, drop_empty=True)
-
-
-def incremental_simhash_candidates(
-    new_df: DataFrame,
-    index_sigs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    materialize: bool = True,
-) -> DataFrame:
-    """Continuous-ingestion SimHash near-dedup: (id_a, id_b, hamming)
-    pairs touching the new batch — new-vs-corpus plus new-vs-new —
-    against a stored :func:`simhash_index`, signing only new documents.
-
-    Equivalence contract (pinned by pytest): equals the batch
-    ``simhash_near_dups(old UNION new)`` restricted to pairs with at
-    least one new endpoint.  Globally-unique ids required, same as the
-    MinHash incremental path."""
-    new_sigs = simhash_signatures(new_df, id_col, text_col, drop_empty=True)
-    if materialize:
-        new_sigs = new_sigs.persist()
-    nq = _quarter_table(new_sigs)
-    iq = _quarter_table(index_sigs)
-
-    a, c = nq.alias("a"), iq.alias("c")
-    cross = (
-        a.join(
-            c,
-            (F.col("a.q") == F.col("c.q"))
-            & (F.col("a.qv") == F.col("c.qv"))
-            & (F.col("a.id") != F.col("c.id")),
-        )
-        .select(
-            F.least(F.col("a.id"), F.col("c.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("c.id")).alias("id_b"),
-            F.when(F.col("a.id") < F.col("c.id"), F.col("a.simhash"))
-            .otherwise(F.col("c.simhash")).alias("sh_a"),
-            F.when(F.col("a.id") < F.col("c.id"), F.col("c.simhash"))
-            .otherwise(F.col("a.simhash")).alias("sh_b"),
-        )
-    )
-    b = nq.alias("b")
-    intra = (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.qv") == F.col("b.qv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"),
-        )
-    )
-    cand = cross.unionByName(intra).dropDuplicates(["id_a", "id_b"])
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)

@@ -707,8 +707,9 @@ def _assign_cell_with_sim(
 ) -> DataFrame:
     """Attach ``cell long`` (nearest coarse cell) AND ``cell_cos double``
     (exact index-ordered cosine to that centroid) in one Arrow pass —
-    the :func:`semantic_dedup` assigner, kept separate from
-    :func:`_assign_cells` so the oracled IVF paths' schema stays frozen.
+    the assigner of :func:`semantic_dedup` and :func:`semantic_index`,
+    kept separate from :func:`_assign_cells` so the oracled IVF paths'
+    schema stays frozen.
     Ties go to the lowest cell id (stable argsort on -sims), and the
     reported cosine is the portable index-ordered fold, NOT numpy
     matmul, because the representative election tie-breaks on it."""
@@ -917,45 +918,50 @@ def semantic_index(
     sample_size: int = 2048,
     centroids: np.ndarray | None = None,
 ) -> "tuple[np.ndarray, DataFrame]":
-    """The persistent index for continuous semantic dedup:
-    ``(centroids, cells)`` where ``cells`` is ``(id, cell, cell_cos)``
-    (~24 B/doc).  Write the cells table (and
-    :func:`centroids_to_df` of the centroids) to the warehouse next to
-    the stored embeddings; each later batch then dedups against the
-    corpus via :func:`incremental_semantic_candidates` WITHOUT
-    re-assigning a single stored document.  The centroids are FROZEN at
-    first training — the same discipline as tiered_ingest's frozen tier
-    bounds (cell semantics never drift with batch composition;
-    re-clustering after heavy distribution drift is a periodic
-    maintenance rebuild, the retier_warehouse analog).  Zero-norm rows
-    are excluded (they are nobody's near-duplicate)."""
+    """Build or probe side of continuous semantic dedup: ``(centroids,
+    assigned)`` where ``assigned`` is ``(id, <vec_col>, cell, cell_cos)``
+    — every nonzero embedding of ``df`` with its nearest cell, in one
+    Arrow pass (zero-norm rows are nobody's near-duplicate and are
+    dropped).  Its ``(id, cell, cell_cos)`` projection is the stored cell
+    index (~24 B/doc; store :func:`centroids_to_df` of the centroids
+    next to it), and the frame itself is the new side
+    :func:`incremental_semantic_candidates` scores against that index.
+
+    ``centroids=None`` trains them on a bounded sample of ``df``
+    (:func:`train_ivf_centroids`).  Pass the stored ones for every later
+    batch: they are FROZEN at first training — the same discipline as
+    tiered_ingest's frozen tier bounds (cell semantics never drift with
+    batch composition; re-clustering after heavy distribution drift is a
+    periodic maintenance rebuild, the retier_warehouse analog).  The
+    assigned frame is lazy; a caller that reads it more than once
+    persists it."""
     base = df.select(id_col, vec_col).filter(_nonzero_vec(F.col(vec_col)))
     if centroids is None:
         centroids = train_ivf_centroids(
             base, id_col, vec_col, n_cells=n_cells, seed=seed,
             sample_size=sample_size,
         )
-    cells = _assign_cell_with_sim(
+    assigned = _assign_cell_with_sim(
         base.select(F.col(id_col).alias("id"), F.col(vec_col)),
         centroids, vec_col,
-    ).select("id", "cell", "cell_cos")
-    return centroids, cells
+    )
+    return centroids, assigned
 
 
 def incremental_semantic_candidates(
-    new_df: "DataFrame | None",
-    centroids: "np.ndarray | None",
+    new_cells: DataFrame,
     index_cells: DataFrame,
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    new_cells: "DataFrame | None" = None,
 ) -> DataFrame:
     """Continuous-ingestion semantic dedup: near-identical pairs
     ``(id_a, id_b)`` TOUCHING the new batch — new-vs-corpus plus
-    new-vs-new — against a stored :func:`semantic_index`, assigning
-    cells only for the new documents.
+    new-vs-new — against a stored cell index.  ``new_cells`` is the
+    batch's :func:`semantic_index` frame assigned to the index's frozen
+    centroids, ``index_cells`` the stored ``(id, cell, ...)`` rows, and
+    ``corpus`` the stored ``(<id_col>, <vec_col>)`` vectors.
 
     Equivalence contract (pinned by pytest): the result equals the
     batch :func:`semantic_dedup` edge set over ``corpus UNION new``
@@ -965,32 +971,16 @@ def incremental_semantic_candidates(
     corpus and batch — the same content-address discipline the
     extraction ledger enforces.
 
-    Scale shape: the new batch assigns to the frozen centroids in one
-    Arrow pass; only the TOUCHED cells' stored members are read — a
+    Scale shape: only the TOUCHED cells' stored members are read — a
     semi join of the slim ``(id, cell)`` index against the new batch's
     cell set prunes the corpus BEFORE its vectors are fetched by id
     (embeddings never ride the cell semi join) — and the per-cell
     blocked matmul scores new-rows x all-members only (never
-    stored-vs-stored).  ``corpus`` is the stored ``(id, vec)`` source;
-    with the embeddings table partitioned by id-hash the fetch is the
-    standard keyed join.
-
-    ``new_cells``: a caller that already assigned the batch (and needs
-    the assignments afterwards — curate_incremental stages them into
-    the warehouse commit) passes its ``(id, <vec_col>, cell, ...)``
-    frame here, owning its persist lifecycle; ``new_df``/``centroids``
-    are then ignored.  Without it the function assigns internally and
-    persists the batch-sized result (two consumers; released with the
-    standard cache lifecycle)."""
-    if new_cells is None:
-        new_cells = _assign_cell_with_sim(
-            new_df.select(F.col(id_col).alias("id"), F.col(vec_col))
-            .filter(_nonzero_vec(F.col(vec_col))),
-            centroids, vec_col,
-        ).persist()
+    stored-vs-stored).  With the embeddings table partitioned by
+    id-hash the fetch is the standard keyed join.  ``new_cells`` is
+    read twice (touched cells, members), so pass a cached frame."""
     new_cells = new_cells.select(
-        F.col("id") if "id" in new_cells.columns else F.col(id_col).alias("id"),
-        F.col(vec_col), "cell", F.lit(True).alias("_new"),
+        "id", F.col(vec_col), "cell", F.lit(True).alias("_new")
     )
 
     touched = new_cells.select("cell").distinct()

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..curate import curate_incremental
+from ._file_stream import run_file_stream
 
 
 def run_curation_stream(
@@ -50,12 +51,6 @@ def run_curation_stream(
     batch reports ``n_appended == 0`` and burns no snapshot.
     Synchronous (processAllAvailable) — long-running services keep the
     query running instead."""
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
     reports: list[dict] = []
 
     # the sink projects the batch down to the columns curation consumes:
@@ -94,14 +89,7 @@ def run_curation_stream(
                 )
         reports.append(d)
 
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    run_file_stream(spark, docs_dir, sink, max_files_per_trigger, checkpoint_dir)
     return reports
 
 
@@ -131,12 +119,6 @@ def run_tiered_stream(
     """
     from ..curate import tiered_ingest
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
     cols = [id_col, text_col]
     for k in ("quality_col", "group_col"):
         c = tier_kwargs.get(k)
@@ -147,23 +129,14 @@ def run_tiered_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
-        kept_df, rep = tiered_ingest(
+        # tiered_ingest releases what it caches, so a long-running stream
+        # holds no persistent RDD between batches
+        _, rep = tiered_ingest(
             spark, warehouse_root, batch_df.select(*cols),
             id_col=id_col, text_col=text_col, **tier_kwargs,
         )
-        # the kept frame is committed — drop its batch-scoped cache, which
-        # the sink owns, so a long-running stream doesn't accumulate one
-        # cached relation per micro-batch
-        kept_df.unpersist()
         rep["batch_id"] = batch_id
         reports.append(rep)
 
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    run_file_stream(spark, docs_dir, sink, max_files_per_trigger, checkpoint_dir)
     return reports

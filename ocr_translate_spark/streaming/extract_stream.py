@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extract import ExtractOptions
 from ..pipeline import run_extraction
+from ._file_stream import run_file_stream
 
 
 def run_extraction_stream(
@@ -47,12 +48,6 @@ def run_extraction_stream(
     Synchronous (processAllAvailable) — callers that want a long-running
     service keep the returned query running instead.
     """
-    schema = spark.read.parquet(pages_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
     stats: list[dict] = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -63,12 +58,5 @@ def run_extraction_stream(
         result["batch_id"] = batch_id
         stats.append(result)
 
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+    run_file_stream(spark, pages_dir, sink, max_files_per_trigger, checkpoint_dir)
     return stats

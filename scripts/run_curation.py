@@ -48,10 +48,6 @@ def main() -> int:
                     help="documents parquet path or table:<catalog name>")
     ap.add_argument("--compact", action="store_true",
                     help="compact the warehouse instead of ingesting")
-    ap.add_argument("--target-files", type=int, default=None,
-                    help="partitions per folded ledger (--compact) or "
-                         "re-tiered table (--retier) (default: session "
-                         "parallelism)")
     ap.add_argument("--retain-last", type=int, default=None,
                     help="compact mode, Iceberg catalogs only: also expire "
                          "old table snapshots, keeping the last N (trades "
@@ -119,8 +115,7 @@ def main() -> int:
 
         t0 = time.monotonic()
         snap = compact_warehouse(
-            spark, args.warehouse, target_files=args.target_files,
-            retain_last=args.retain_last,
+            spark, args.warehouse, retain_last=args.retain_last
         )
         print(json.dumps({
             "mode": "compact", "snapshot_id": snap,
@@ -135,7 +130,6 @@ def main() -> int:
             spark, args.warehouse, id_col=args.id_col,
             n_tiers=args.tiers,
             quota_coeff=args.tier_quota_coeff,
-            target_files=args.target_files,
         )
         rep["mode"] = "retier"
         rep["wall_sec"] = round(time.monotonic() - t0, 3)

@@ -222,6 +222,10 @@ def test_approx_tier_bounds_single_tier_degenerate(spark):
     # hostile-cell probe driving tiered_ingest with n_tiers=1)
     df = _scored(spark, 9)
     assert curation.approx_tier_bounds(df, "quality", n_tiers=1) == []
+    # its stored form is the typed empty bounds table
+    empty = curation.tier_bounds_frame(spark, [])
+    assert empty.schema.simpleString() == "struct<tier:bigint,cutoff:double>"
+    assert empty.collect() == []
     out = curation.quality_tiers(
         df, id_col="doc_id", quality_col="quality",
         n_tiers=1, tier_bounds=[], quota_coeff=2.0).collect()

@@ -5,6 +5,7 @@ contamination, reproducible split."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_translate_spark.curate import curate_corpus
@@ -490,6 +491,45 @@ def test_tiered_ingest_single_pass(spark, tmp_path):
     assert rep_r["n_new"] == 0 and rep_r["n_kept"] == 0
     assert after_r - before_r == 1, (before_r, after_r)
     assert wh.current_snapshot_id() == snap_before
+
+
+def test_tiered_ingest_and_retier_release_their_caches(spark, tmp_path, monkeypatch):
+    """tiered_ingest and retier_warehouse leave no persistent RDD behind,
+    whether their commit succeeds or raises; tiered_ingest's kept frame
+    reads the staged files, so it needs no cache either."""
+    from ocr_translate_spark.curate import retier_warehouse, tiered_ingest
+    from ocr_translate_spark.io.tables import Warehouse
+
+    wh_root = str(tmp_path / "wh")
+    schema = "doc_id long, text string, q double, grp string"
+    rows = [(i, "body %d" % i, (i * 37 % 100) / 100.0, "g%d" % (i % 2))
+            for i in range(60)]
+    kw = dict(quality_col="q", group_col="grp", n_tiers=2, quota_coeff=1.0)
+
+    before = _persistent_ids(spark)
+    out, rep = tiered_ingest(
+        spark, wh_root, spark.createDataFrame(rows[:30], schema), **kw
+    )
+    assert _persistent_ids(spark) <= before
+    assert out.count() == rep["n_kept"] > 0
+
+    def failing_commit(self, staged, replace=None):
+        raise RuntimeError("commit failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(Warehouse, "commit", failing_commit)
+        before = _persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            tiered_ingest(
+                spark, wh_root, spark.createDataFrame(rows[30:], schema), **kw
+            )
+        with pytest.raises(RuntimeError, match="commit failed"):
+            retier_warehouse(spark, wh_root, quota_coeff=1.0)
+        assert _persistent_ids(spark) <= before
+
+    before = _persistent_ids(spark)
+    retier_warehouse(spark, wh_root, quota_coeff=1.0)
+    assert _persistent_ids(spark) <= before
 
 
 def test_tiered_ingest_cross_batch_quota_convergence(spark, tmp_path):

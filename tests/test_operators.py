@@ -357,8 +357,9 @@ def test_incremental_semantic_candidates_equals_batch_restriction(spark):
     new = spark.createDataFrame(new_rows, schema)
 
     cts, cells = similarity.semantic_index(corpus, n_cells=2, sample_size=4)
+    _, new_cells = similarity.semantic_index(new, centroids=cts)
     inc = similarity.incremental_semantic_candidates(
-        new, cts, cells, corpus, threshold=0.999
+        new_cells, cells, corpus, threshold=0.999
     )
     got = {tuple(sorted((r["id_a"], r["id_b"]))) for r in inc.collect()}
 
@@ -1273,12 +1274,16 @@ def test_incremental_minhash_equals_batch_restriction(spark, documents):
     )
     new = docs.filter(F.col("doc_id") % 3 == 0).union(dup_src)
 
-    sigs, bands = dedup.minhash_index(old, "doc_id", "text")
+    # the stored index: signatures and their (id, band, bucket) table —
+    # one row per band, no signature payload riding the band join
+    sigs = dedup.minhash_signatures(old, "doc_id", "text", drop_empty=True)
+    bands = dedup.minhash_bands(sigs)
+    assert set(bands.columns) == {"id", "band", "bucket"}
+    assert bands.count() == sigs.count() * 8  # default 8 bands per doc
+    new_sigs = dedup.minhash_signatures(new, "doc_id", "text", drop_empty=True)
     inc = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in dedup.incremental_minhash_candidates(
-            new, sigs, bands, "doc_id", "text"
-        ).collect()
+        for r in dedup.minhash_pairs(new_sigs, sigs, bands).collect()
     }
 
     new_ids = {r["doc_id"] for r in new.collect()}
@@ -1293,15 +1298,6 @@ def test_incremental_minhash_equals_batch_restriction(spark, documents):
     # the planted exact dups are found against the STORED index
     planted = {p for p in inc if p[1] >= 100_000}
     assert len(planted) >= 2 and all(inc[p] == 1.0 for p in planted)
-
-
-def test_minhash_index_band_table_matches_inline(spark, documents):
-    """minhash_index's band table is the same (id, band, bucket) relation
-    the batch path computes inline (shared helper, pinned anyway)."""
-    docs = documents.limit(20).select("doc_id", "text")
-    sigs, bands = dedup.minhash_index(docs, "doc_id", "text")
-    assert set(bands.columns) == {"id", "band", "bucket"}
-    assert bands.count() == sigs.count() * 8  # default 8 bands per doc
 
 
 def test_gopher_repetition_rules_verdict(spark):
@@ -1323,64 +1319,24 @@ def test_gopher_repetition_rules_verdict(spark):
 
 
 def test_incremental_candidates_plan_shape(spark):
-    """Plan guard for the ingestion path: with the default persist, the
-    new batch's signature UDF lives in ONE cached relation — every
-    branch reads the InMemoryRelation, no per-branch re-evaluation, and
-    the stored corpus side never hits Python.  (materialize=False
-    re-inlines the UDF into all 4 consuming branches — measured here —
-    which is exactly why persist is the default.)"""
+    """Plan guard for the ingestion path: fed a persisted signature
+    frame, minhash_pairs reads the batch's signature UDF from ONE cached
+    relation — every branch reads the InMemoryRelation, no per-branch
+    re-evaluation, and the stored corpus side never hits Python."""
     new = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon")], "id long, text string"
     )
     sigs = spark.createDataFrame([], "id long, sig array<bigint>")
     bands = spark.createDataFrame([], "id long, band int, bucket bigint")
-    out = dedup.incremental_minhash_candidates(new, sigs, bands, "id", "text")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    new_sigs = dedup.minhash_signatures(new, "id", "text", drop_empty=True).persist()
     try:
+        out = dedup.minhash_pairs(new_sigs, sigs, bands)
+        plan = out._jdf.queryExecution().executedPlan().toString()
         # every ArrowEvalPython printed sits INSIDE an InMemoryTableScan's
         # cached-plan dump (computed once at runtime, read by all
         # branches); an un-cached Arrow node would make arrow > scans
         scans = plan.count("InMemoryTableScan")
         n_arrow = plan.count("ArrowEvalPython")
         assert scans >= 2 and n_arrow <= scans, (n_arrow, scans, plan[:800])
-        spark.catalog.clearCache()
-        unpersisted = dedup.incremental_minhash_candidates(
-            new, sigs, bands, "id", "text", materialize=False
-        )._jdf.queryExecution().executedPlan().toString()
-        # without the persist the SAME count of Arrow nodes is LIVE
-        # (no cache shields them) — which is why persist is the default
-        assert unpersisted.count("InMemoryTableScan") == 0
-        assert unpersisted.count("ArrowEvalPython") >= 2
     finally:
-        spark.catalog.clearCache()
-
-
-def test_incremental_simhash_equals_batch_restriction(spark, documents):
-    """SimHash ingestion contract (mirror of the MinHash one): incremental
-    candidates vs a stored index equal the batch run over old UNION new
-    restricted to new-touching pairs — same pairs, same hamming."""
-    docs = documents.limit(50).select("doc_id", "text")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    dup_src = old.orderBy("doc_id").limit(2).select(
-        (F.col("doc_id") + 100_000).alias("doc_id"), "text"
-    )
-    new = docs.filter(F.col("doc_id") % 2 == 1).union(dup_src)
-
-    index = dedup.simhash_index(old, "doc_id", "text")
-    inc = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.incremental_simhash_candidates(
-            new, index, "doc_id", "text", max_hamming=3
-        ).collect()
-    }
-    new_ids = {r["doc_id"] for r in new.collect()}
-    batch = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_dups(
-            old.union(new), "doc_id", "text", max_hamming=3
-        ).collect()
-        if r["id_a"] in new_ids or r["id_b"] in new_ids
-    }
-    assert inc == batch and batch
-    planted = {p for p in inc if p[1] >= 100_000}
-    assert len(planted) >= 2 and all(inc[p] == 0 for p in planted)
+        new_sigs.unpersist()
