@@ -6,6 +6,7 @@ Stage order follows the published pipelines (C4 -> Gopher -> RefinedWeb /
 FineWeb all converge on roughly this sequence — each stage removes mass
 the later, more expensive stages would otherwise pay for):
 
+0. url filter          — host blocklist + per-host quota (optional)
 1. quality gate        — Gopher rule battery (narrow map, scan speed)
 2. line dedup          — corpus-frequency boilerplate-line removal (C4)
 3. PII scrub           — email/phone redaction (narrow map)
@@ -20,14 +21,18 @@ and returns per-stage counts so a run is auditable (the analog of the
 extraction pipeline's metrics lineage).  Stages LABEL rows instead of
 filtering them: a decision frame keeps every input row with the first
 stage that rejected it, and one observation at its root counts them all.
+Both entry points build that frame with one builder, :func:`_decisions`:
+:func:`curate_incremental` runs it over the warehouse's stored state,
+:func:`curate_corpus` over none — a corpus curated alone is a batch
+ingested into a fresh warehouse.
 
-Near-dedup keeper policy: a candidate pair (a, b) with
-``est_jaccard >= near_threshold`` (a < b by construction) drops ``b`` —
-the standard greedy "keep first" web-dedup policy (equivalent to one
-step of min-id label propagation; transitive chains collapse to their
-minimum over repeated runs, and at one pass no surviving pair is a
-near-dup).  One distinct + one broadcast-able anti-join — no iterative
-connected components on the hot path.
+Near-dedup keeper policy (:func:`_near_dup_losers`, for the MinHash and
+the semantic stage): of a candidate pair the stored endpoint wins, and
+of two batch endpoints the smaller id — the standard greedy "keep first"
+web-dedup policy (one step of min-id label propagation; transitive
+chains collapse to their minimum over repeated runs, and at one pass no
+surviving pair is a near-dup).  One distinct + one broadcast-able
+anti-join — no iterative connected components on the hot path.
 
 Scale notes: stages 1-3 and 7 are shuffle-free narrow maps; stage 4 is
 one hash shuffle on md5; stage 5 is the banded LSH join (payload-light,
@@ -40,7 +45,7 @@ mass.
 from __future__ import annotations
 
 from contextlib import ExitStack
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -63,11 +68,15 @@ class CurationReport:
     stages: list[str] = field(default_factory=list)
 
     def as_dict(self) -> dict:
-        return {k: getattr(self, k) for k in (
-            "n_input", "n_after_url_filter", "n_after_quality", "n_after_line_dedup",
-            "n_after_exact_dedup", "n_after_near_dedup",
-            "n_after_decontamination", "n_output", "n_val",
-        )} | {"stages": list(self.stages)}
+        return asdict(self)
+
+
+# every label a decision frame can carry, in stage order; a label a call
+# never assigns counts 0 drops
+_LABELS = (
+    "ledger", "url_filter", "quality", "line_dedup", "exact_dedup",
+    "corpus_exact", "near_dedup", "semantic_dedup", "decontaminate",
+)
 
 
 def _drop(dec: DataFrame, cond, label: str, text_col: str) -> DataFrame:
@@ -98,17 +107,54 @@ def _live(dec: DataFrame) -> DataFrame:
     return dec.filter(F.col("dropped_at").isNull())
 
 
+def _near_dup_losers(
+    pairs: DataFrame, batch_ids: "DataFrame | None", id_col: str
+) -> DataFrame:
+    """The keeper rule of every near-dedup stage: of a candidate pair
+    ``(id_a, id_b)`` the batch endpoint loses (the stored corpus wins),
+    and of two batch endpoints the greater id loses (greedy keep-first).
+    ``batch_ids`` holds the batch's live ids as ``id_col``; ``None``
+    means every endpoint is a batch id.  Returns each loser once, as
+    ``id_col``."""
+    pairs = pairs.select(
+        F.least("id_a", "id_b").alias("_lo"), F.greatest("id_a", "id_b").alias("_hi")
+    )
+    loser = F.col("_hi")
+    if batch_ids is not None:
+        pairs = pairs.join(
+            batch_ids.select(F.col(id_col).alias("_hi"), F.lit(True).alias("_new")),
+            "_hi", "left",
+        )
+        loser = F.when(F.col("_new").isNotNull(), loser).otherwise(F.col("_lo"))
+    return pairs.select(loser.alias(id_col)).distinct()
+
+
+def _decontaminate(
+    dec: DataFrame, benchmark: "DataFrame | None", id_col: str, text_col: str,
+    stages: "list[str]",
+) -> DataFrame:
+    """Label the live docs sharing a 13-gram with the eval suite
+    ``benchmark`` (a ``text`` column) as "decontaminate"; no stage
+    without one."""
+    if benchmark is None:
+        return dec
+    flags = dedup.decontaminate(_live(dec), benchmark, id_col, text_col)
+    dirty = flags.filter("contaminated").select(F.col("doc_id").alias(id_col))
+    stages.append("decontaminate")
+    return _drop_ids(dec, dirty, id_col, "decontaminate", text_col, listed=True)
+
+
 def _clean_and_dedup(
     dec: DataFrame, id_col: str, text_col: str, stages: "list[str]",
     held: ExitStack, *, min_words: int, max_line_frac: float, scrub: bool,
     gopher_kwargs: "dict | None",
 ) -> DataFrame:
-    """The payload stages both curation entry points share, as labels on
-    a decision frame: Gopher gate ("quality"), per-corpus line dedup
-    plus the post-clean length gate ("line_dedup", the C4 order),
-    optional PII scrub, and exact dedup — min id per identical text
-    ("exact_dedup", dedup.dedup_exact's keeper policy).  The gated frame
-    is cached until ``held`` closes."""
+    """The payload stages of :func:`_decisions`, as labels on a decision
+    frame: Gopher gate ("quality"), per-corpus line dedup plus the
+    post-clean length gate ("line_dedup", the C4 order), optional PII
+    scrub, and exact dedup — min id per identical text ("exact_dedup",
+    dedup.dedup_exact's keeper policy).  The gated frame is cached until
+    ``held`` closes."""
     gk = dict(gopher_kwargs or {})
     gk.setdefault("min_words", min_words)
     cols = dec.columns
@@ -154,8 +200,104 @@ def _clean_and_dedup(
     return dec
 
 
+def _decisions(
+    df: DataFrame, id_col: str, text_col: str, stages: "list[str]",
+    held: ExitStack, stored: "dict[str, DataFrame] | None", *,
+    blocklist: "DataFrame | None", max_per_host: "int | None",
+    url_col: "str | None", near_threshold: float, min_words: int,
+    max_line_frac: float, scrub: bool, gopher_kwargs: "dict | None",
+) -> "tuple[DataFrame, DataFrame]":
+    """The decision frame of both curation entry points, through near
+    dedup: every row of ``df`` as (id, text, url, ``dropped_at``, ``sig``),
+    labelled in stage order by the ledger anti-join (with ``stored``),
+    url filter, :func:`_clean_and_dedup`, corpus-exact check (with
+    ``stored``) and MinHash near dedup.  ``stored`` maps the keys, host
+    counts, signature and band tables to their committed state; ``None``
+    is empty stored state (host counts 0, every pair endpoint a batch
+    id).  Stage names take an ``_incremental`` suffix with ``stored``.
+
+    Returns the frame and the signature cache it reads, which the caller
+    owns; the Gopher-gated cache is released when ``held`` closes."""
+    if (blocklist is not None or max_per_host) and url_col is None:
+        raise ValueError(
+            "curation: blocklist/max_per_host need an explicit url_col — a "
+            "non-url id column would yield empty host keys for every row "
+            "(nothing to block, nothing to cap)"
+        )
+    sfx = "" if stored is None else "_incremental"
+    cols = list(dict.fromkeys([id_col, text_col, url_col or id_col]))
+    dec = df.select(*cols).withColumn("dropped_at", F.lit(None).cast("string"))
+
+    if stored is not None:
+        # idempotent re-ingestion: ids the ledger already holds are done
+        dec = _drop_ids(
+            dec, stored[KEYS_TABLE].select(F.col("id").alias(id_col)), id_col,
+            "ledger", text_col, listed=True,
+        )
+        stages.append("ledger_anti_join")
+
+    # stage 0: url filters — host blocklist + per-host quota, before any
+    # payload work (both corpus-shuffle-free: broadcast anti join + a
+    # host-keyed window over the slim (id, url) rows)
+    if blocklist is not None or max_per_host:
+        ok = _live(dec).select(*dict.fromkeys([id_col, url_col]))
+        if blocklist is not None:
+            ok = urls.filter_blocklisted_hosts(ok, blocklist, url_col=url_col)
+            stages.append("host_blocklist")
+        if max_per_host:
+            # exact salted two-level per-host rank (urls.host_rank); the
+            # allowance is max_per_host less the host's stored count, at
+            # most max_per_host, so the shard prune there is lossless.
+            # Empty-host rows are exempt
+            ok = urls.host_rank(ok, url_col, max_per_host)
+            kept = F.lit(0)
+            if stored is not None:
+                counts = stored[HOSTS_TABLE].groupBy("host").agg(
+                    F.sum("n").alias("_kept")
+                )
+                ok = ok.join(
+                    F.broadcast(counts), F.col("_host") == F.col("host"), "left"
+                )
+                kept = F.coalesce(F.col("_kept"), F.lit(0))
+            ok = ok.filter(
+                (F.col("_host") == "") | (F.col("_hc_rn") <= max_per_host - kept)
+            )
+            stages.append("host_caps" + sfx)
+        dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
+
+    # Gopher gate, line dedup, PII scrub, exact dedup within the batch...
+    dec = _clean_and_dedup(
+        dec, id_col, text_col, stages, held, min_words=min_words,
+        max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
+    )
+    if stored is not None:
+        # ...then against the stored md5 keys (corpus wins)
+        known = stored[KEYS_TABLE].select(F.col("content_md5").alias("_md5"))
+        dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
+            known.distinct().withColumn("_stored", F.lit(True)), "_md5", "left"
+        )
+        dec = _drop(
+            dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
+        ).drop("_md5", "_stored")
+
+    # near dedup over the batch's signatures (and the stored index)
+    signed = dedup.with_minhash_signature(dec, text_col).persist()
+    pairs = dedup.minhash_pairs(
+        signed.filter(F.col("sig").isNotNull())
+        .select(F.col(id_col).alias("id"), "sig"),
+        *(() if stored is None else (stored[SIGS_TABLE], stored[BANDS_TABLE])),
+    ).filter(F.col("est_jaccard") >= near_threshold)
+    batch_ids = None if stored is None else _live(signed).select(id_col)
+    dec = _drop_ids(
+        signed, _near_dup_losers(pairs, batch_ids, id_col), id_col, "near_dedup",
+        text_col, listed=True,
+    )
+    stages.append("minhash_lsh" + sfx)
+    return dec, signed
+
+
 def _count_decisions(
-    frame: DataFrame, labels: "list[str]" = (), *, checkpoint: bool = False,
+    frame: DataFrame, labels: "tuple[str, ...]" = (), *, checkpoint: bool = False,
     **extra,
 ) -> "tuple[DataFrame, dict[str, int]]":
     """Run a decision frame ONCE and count it with ONE observation at its
@@ -208,16 +350,14 @@ def curate_corpus(
     cleaned/scrubbed form; ``split`` is the salted-hash train/val label.
     ``benchmark`` (optional) is the eval-suite DataFrame for stage 6; it
     needs a ``text`` column.  ``blocklist`` (optional, one ``host``
-    column) and ``max_per_host`` (optional quota) switch on a stage-0
-    url filter over ``url_col``, which MUST be passed explicitly when
-    either is set — defaulting to ``id_col`` silently produced empty
-    host keys on non-url ids, and an empty-host corpus under
-    ``max_per_host`` would truncate to the cap.  (The operators
-    themselves also exempt empty-host rows — see urls.host_caps /
-    urls.filter_blocklisted_hosts — so even a partially url-keyed
-    column is safe.)  Both filters run BEFORE any payload work, per the
-    C4/RefinedWeb ordering: broadcast host-blocklist anti-join +
-    deterministic per-host cap.
+    column) and ``max_per_host`` (optional quota) switch on the stage-0
+    url filter over ``url_col``, which must then be given explicitly (a
+    non-url id would give every row an empty host, and empty-host rows
+    are exempt from both filters).
+
+    Stages 0-5 are :func:`_decisions` with no stored state — the stages
+    :func:`curate_incremental` runs over a warehouse, so this call keeps
+    the rows and counts that one keeps over a fresh warehouse.
 
     The report's counts come from ONE decision frame: every input row
     labelled ``dropped_at`` — the first stage that rejects it, NULL for
@@ -238,71 +378,23 @@ def curate_corpus(
     output is written.
     """
     report = CurationReport()
-    if (blocklist is not None or max_per_host) and url_col is None:
-        raise ValueError(
-            "curate_corpus: blocklist/max_per_host need an explicit "
-            "url_col — a non-url id column would yield empty host keys "
-            "for every row (nothing to block, nothing to cap)"
-        )
-    cols = list(dict.fromkeys([id_col, text_col, url_col or id_col]))
-    dec = df.select(*cols).withColumn("dropped_at", F.lit(None).cast("string"))
-
-    # 0. url filters — host blocklist + per-host quota, before any
-    # payload-touching stage (both corpus-shuffle-free: broadcast anti
-    # join + a host-keyed window)
-    if blocklist is not None or max_per_host:
-        ok = _live(dec)
-        if blocklist is not None:
-            ok = urls.filter_blocklisted_hosts(ok, blocklist, url_col=url_col)
-            report.stages.append("host_blocklist")
-        if max_per_host:
-            ok = urls.host_caps(ok, url_col=url_col, max_per_host=max_per_host)
-            report.stages.append("host_caps")
-        dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
-
     # the gated cache goes once the audit has filled the signature cache
     with ExitStack() as held:
-        # 1-4. quality gate, line dedup + length gate, PII scrub, exact dedup
-        dec = _clean_and_dedup(
-            dec, id_col, text_col, report.stages, held, min_words=min_words,
+        dec, _ = _decisions(
+            df, id_col, text_col, report.stages, held, None,
+            blocklist=blocklist, max_per_host=max_per_host, url_col=url_col,
+            near_threshold=near_threshold, min_words=min_words,
             max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
         )
-
-        # 5. near dedup — greedy keep-smallest-id over LSH candidates; the
-        # signature UDF runs once per doc into this cached frame, which the
-        # LSH branches and the returned frame read
-        signed = dedup.with_minhash_signature(dec, text_col).persist()
-        drops = (
-            dedup.minhash_pairs(
-                signed.filter(F.col("sig").isNotNull())
-                .select(F.col(id_col).alias("id"), "sig")
-            )
-            .filter(F.col("est_jaccard") >= near_threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
+        dec = _decontaminate(
+            dec.drop("sig"), benchmark, id_col, text_col, report.stages
         )
-        dec = _drop_ids(
-            signed.drop("sig"), drops, id_col, "near_dedup", text_col, listed=True
-        )
-        report.stages.append("minhash_lsh")
-
-        # 6. decontamination — drop docs sharing a 13-gram with the eval suite
-        if benchmark is not None:
-            flags = dedup.decontaminate(_live(dec), benchmark, id_col, text_col)
-            dirty = flags.filter("contaminated").select(F.col("doc_id").alias(id_col))
-            dec = _drop_ids(dec, dirty, id_col, "decontaminate", text_col, listed=True)
-            report.stages.append("decontaminate")
-
-        # 7. reproducible split — salted content-hash buckets
+        # reproducible split — salted content-hash buckets
         dec = curation.split_by_hash(dec, id_col, val_fraction=val_fraction)
         report.stages.append("train_val_split")
 
-        labels = [
-            "url_filter", "quality", "line_dedup", "exact_dedup", "near_dedup",
-            "decontaminate",
-        ]
         val = F.col("dropped_at").isNull() & (F.col("split") == "val")
-        _, m = _count_decisions(dec, labels, n_val=F.count_if(val))
+        _, m = _count_decisions(dec, _LABELS, n_val=F.count_if(val))
     report.n_input = m["n"]
     report.n_after_url_filter = m["url_filter"]
     report.n_after_quality = m["quality"]
@@ -337,13 +429,7 @@ class IncrementalReport:
     stages: list[str] = field(default_factory=list)
 
     def as_dict(self) -> dict:
-        return {k: getattr(self, k) for k in (
-            "n_batch", "n_new", "n_after_quality", "n_after_line_dedup",
-            "n_after_exact_dedup", "n_dropped_vs_corpus_exact",
-            "n_after_near_dedup", "n_after_semantic_dedup",
-            "n_after_decontamination", "n_appended",
-            "snapshot_id",
-        )} | {"stages": list(self.stages)}
+        return asdict(self)
 
 
 CURATED_TABLE = "curated"
@@ -382,6 +468,9 @@ def curate_incremental(
     append the survivors atomically — the continuous-ingestion form of
     :func:`curate_corpus` (ref parity: the extraction ledger's
     memoization discipline, pipeline.py:40-76, applied to curation).
+    Both build their decision frame with :func:`_decisions`; this one
+    passes it the stored state below, so over a fresh warehouse it keeps
+    exactly the rows ``curate_corpus`` keeps.
 
     Stored state (all slim, payload-free except ``curated``):
 
@@ -401,17 +490,13 @@ def curate_incremental(
       touched cells (:func:`similarity.incremental_semantic_candidates`),
       corpus wins, then smallest id within the batch.
 
-    Batch flow: drop already-ingested ids (re-running a batch is a
-    no-op — crash-resume idempotence); Gopher gate; per-batch line dedup
-    (line frequencies are per-batch by design — corpus-global boilerplate
-    drift belongs to a periodic re-curation, not the hot ingest path);
-    optional PII scrub; exact dedup within batch then against stored
-    md5 keys (corpus wins); near dedup against the stored index then
-    within the batch (corpus wins, then smallest id); optional
-    decontamination; salted split.  Survivors + their keys + index rows
-    publish in ONE atomic multi-table commit, so a crash leaves either
-    the whole batch ingested or none of it — and the index can never
-    disagree with the corpus.
+    Batch flow: :func:`_decisions` — already-ingested ids drop first (a
+    replayed batch is a no-op), line frequencies are per batch (corpus
+    boilerplate drift is a periodic re-curation's job), and the stored
+    md5 keys and LSH index win over the batch — then semantic dedup,
+    optional decontamination and the salted split.  Survivors, their
+    keys and index rows publish in ONE atomic multi-table commit, so
+    the index can never disagree with the corpus.
 
     Host quotas are CROSS-BATCH: with ``max_per_host`` (explicit
     ``url_col`` required, same contract as curate_corpus) the warehouse
@@ -423,7 +508,7 @@ def curate_incremental(
     urls.host_caps.
 
     Audit: the decision frame (see curate_corpus) also carries the
-    survivors' MinHash signature, host and semantic cell, and its one
+    survivors' MinHash signature, url and semantic cell, and its one
     checkpoint fills every report count.  The stage writes plan from
     that checkpoint, so an appending batch runs 1 execution + one per
     published table, and a replayed or fully-rejected batch runs the
@@ -442,108 +527,33 @@ def curate_incremental(
     rep = IncrementalReport()
     wh = open_warehouse(spark, warehouse_root)
     id_dt = batch.schema[id_col].dataType.simpleString()
-
-    keys = wh.read(spark, KEYS_TABLE, schema=f"id {id_dt}, content_md5 string")
-    sigs = wh.read(spark, SIGS_TABLE, schema=f"id {id_dt}, sig array<bigint>")
-    bands = wh.read(spark, BANDS_TABLE, schema=f"id {id_dt}, band int, bucket bigint")
-    if (blocklist is not None or max_per_host) and url_col is None:
-        raise ValueError(
-            "curate_incremental: blocklist/max_per_host need an explicit "
-            "url_col (see curate_corpus)"
-        )
-    cols = list(dict.fromkeys([id_col, text_col, url_col or id_col]))
-    dec = batch.select(*cols).withColumn("dropped_at", F.lit(None).cast("string"))
+    schemas = {
+        KEYS_TABLE: f"id {id_dt}, content_md5 string",
+        SIGS_TABLE: f"id {id_dt}, sig array<bigint>",
+        BANDS_TABLE: f"id {id_dt}, band int, bucket bigint",
+    }
     if max_per_host:
-        # survivors' hosts feed the quota delta of the commit
-        dec = dec.withColumn("_host", urls.host_of(F.col(url_col)))
-
-    # idempotent re-ingestion: ids the ledger already holds are done
-    dec = _drop_ids(
-        dec, keys.select(F.col("id").alias(id_col)), id_col, "ledger", text_col,
-        listed=True,
-    )
-    rep.stages.append("ledger_anti_join")
-
-    # stage 0: url filters — blocklist, then the CROSS-BATCH host quota
-    if blocklist is not None or max_per_host:
-        ok = _live(dec).select(*cols)
-        if blocklist is not None:
-            ok = urls.filter_blocklisted_hosts(ok, blocklist, url_col=url_col)
-            rep.stages.append("host_blocklist")
-        if max_per_host:
-            host_counts = (
-                wh.read(spark, HOSTS_TABLE, schema=HOSTS_SCHEMA)
-                .groupBy("host").agg(F.sum("n").alias("_kept"))
-            )
-            # exact salted two-level per-host rank (urls.host_rank): the
-            # batch's remaining allowance is at most max_per_host, so the
-            # shard prune at max_per_host is lossless here too
-            ok = (
-                urls.host_rank(ok, url_col, max_per_host)
-                .join(F.broadcast(host_counts),
-                      F.col("_host") == F.col("host"), "left")
-                .filter(
-                    (F.col("_host") == "")
-                    | (F.col("_hc_rn")
-                       <= max_per_host - F.coalesce(F.col("_kept"), F.lit(0)))
-                )
-            )
-            rep.stages.append("host_caps_incremental")
-        dec = _drop_ids(dec, ok, id_col, "url_filter", text_col, listed=False)
+        schemas[HOSTS_TABLE] = HOSTS_SCHEMA
+    stored = {t: wh.read(spark, t, schema=schema) for t, schema in schemas.items()}
 
     # the cached frames and the checkpoint blocks are released on the
     # way out, whatever happens
     with ExitStack() as held:
-        # Gopher gate, per-batch line dedup, PII scrub, exact dedup within
-        # the batch...
-        dec = _clean_and_dedup(
-            dec, id_col, text_col, rep.stages, held, min_words=min_words,
+        dec, signed = _decisions(
+            batch, id_col, text_col, rep.stages, held, stored,
+            blocklist=blocklist, max_per_host=max_per_host, url_col=url_col,
+            near_threshold=near_threshold, min_words=min_words,
             max_line_frac=max_line_frac, scrub=scrub, gopher_kwargs=gopher_kwargs,
         )
-        # ...then against the stored md5 keys (corpus wins)
-        stored = keys.select(F.col("content_md5").alias("_md5")).distinct()
-        dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
-            stored.withColumn("_stored", F.lit(True)), "_md5", "left"
-        )
-        dec = _drop(
-            dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
-        ).drop("_md5", "_stored")
-
-        # the signature UDF runs ONCE per doc: the four LSH branches and the
-        # survivors' index rows all read this cached frame
-        signed = dedup.with_minhash_signature(dec, text_col).persist()
         held.callback(signed.unpersist)
 
-        # near dedup: stored index first (corpus wins), then within batch
-        cands = dedup.minhash_pairs(
-            signed.filter(F.col("sig").isNotNull())
-            .select(F.col(id_col).alias("id"), "sig"),
-            sigs, bands,
-        ).filter(F.col("est_jaccard") >= near_threshold)
-        # every pair touches the batch, and its NEW endpoint loses (corpus
-        # wins); in a new-new pair the greater id loses (batch keeper
-        # policy), which is id_b as pairs come ordered — so id_b drops when
-        # it is new, else id_a
-        new_b = _live(signed).select(F.col(id_col).alias("_nb"))
-        drops = (
-            cands.join(new_b, cands["id_b"] == F.col("_nb"), "left")
-            .select(
-                F.when(F.col("_nb").isNotNull(), F.col("id_b"))
-                .otherwise(F.col("id_a")).alias(id_col)
-            )
-            .distinct()
-        )
-        dec = _drop_ids(signed, drops, id_col, "near_dedup", text_col, listed=True)
-        rep.stages.append("minhash_lsh_incremental")
-
-        # semantic dedup (SemDeDup) against the stored frozen-centroid index:
-        # same keeper policy as the MinHash stage (corpus wins; within-batch
-        # the smaller id wins).  Embeddings are recovered from the RAW batch
-        # by id (the payload stages projected them away); docs without a
-        # (nonzero) embedding carry no semantic signal and never drop here.
-        # Centroids FREEZE at the first embedded batch — the tiered_ingest
-        # frozen-bounds discipline; re-clustering is a periodic maintenance
-        # rebuild, not the hot path.
+        # semantic dedup (SemDeDup) against the stored frozen-centroid index,
+        # with the MinHash stage's keeper rule.  Embeddings are recovered
+        # from the RAW batch by id (the payload stages projected them away);
+        # docs without a (nonzero) embedding carry no semantic signal and
+        # never drop here.  Centroids FREEZE at the first embedded batch —
+        # the tiered_ingest frozen-bounds discipline; re-clustering is a
+        # periodic maintenance rebuild, not the hot path.
         new_cells = None
         if embedding_col is not None:
             import numpy as np
@@ -582,20 +592,11 @@ def curate_incremental(
                     new_cells, sem_index, sem_vecs, "id", embedding_col,
                     threshold=semantic_threshold,
                 )
-                new_flag = new_cells.select(F.col("id").alias("_sn"))
-                drops_sem = (
-                    sem_cands.join(new_flag, sem_cands["id_b"] == F.col("_sn"),
-                                   "left")
-                    .select(
-                        F.when(
-                            F.col("_sn").isNotNull(),
-                            F.greatest(F.col("id_a"), F.col("id_b")),
-                        ).otherwise(F.col("id_a")).alias(id_col)
-                    )
-                    .distinct()
+                losers = _near_dup_losers(
+                    sem_cands, new_cells.select(F.col("id").alias(id_col)), id_col
                 )
                 dec = _drop_ids(
-                    dec, drops_sem, id_col, "semantic_dedup", text_col, listed=True
+                    dec, losers, id_col, "semantic_dedup", text_col, listed=True
                 ).join(
                     new_cells.select(
                         F.col("id").alias(id_col), "cell", "cell_cos",
@@ -605,17 +606,9 @@ def curate_incremental(
                 )
             rep.stages.append("semantic_dedup_incremental")
 
-        if benchmark is not None:
-            flags = dedup.decontaminate(_live(dec), benchmark, id_col, text_col)
-            dirty = flags.filter("contaminated").select(F.col("doc_id").alias(id_col))
-            dec = _drop_ids(dec, dirty, id_col, "decontaminate", text_col, listed=True)
-            rep.stages.append("decontaminate")
+        dec = _decontaminate(dec, benchmark, id_col, text_col, rep.stages)
 
-        labels = [
-            "ledger", "url_filter", "quality", "line_dedup", "exact_dedup",
-            "corpus_exact", "near_dedup", "semantic_dedup", "decontaminate",
-        ]
-        ck, m = _count_decisions(dec, labels, checkpoint=True)
+        ck, m = _count_decisions(dec, _LABELS, checkpoint=True)
         held.callback(ck._jdf.queryExecution().analyzed().rdd().unpersist, False)
         rep.stages.append("train_val_split")
         rep.n_batch = m["n"]
@@ -679,8 +672,9 @@ def curate_incremental(
             # quota delta = hosts of the docs this batch ACTUALLY appends —
             # same atomic commit, so quota state never drifts from the corpus
             delta = (
-                surv.filter(F.col("_host") != "")
-                .groupBy(F.col("_host").alias("host"))
+                surv.select(urls.host_of(F.col(url_col)).alias("host"))
+                .filter(F.col("host") != "")
+                .groupBy("host")
                 .agg(F.count(F.lit(1)).alias("n"))
             )
             staged[HOSTS_TABLE] = [wh.stage(delta, HOSTS_TABLE)]
@@ -715,8 +709,9 @@ def compact_warehouse(
       for a small ledger).  The folds read with the ledgers' known
       schemas, so they infer nothing from parquet footers.
     * Every other table is rewritten as it is: by the parquet emulation
-      in the partitions its scan packs the table's files into, by an
-      Iceberg catalog with ``CALL system.rewrite_data_files``.
+      in one file per ``spark.sql.files.maxPartitionBytes`` of its data
+      (one file for a small table), by an Iceberg catalog with
+      ``CALL system.rewrite_data_files``.
     * All compacted tables ride ONE replace-commit, so readers switch
       atomically; earlier snapshots still reference the old data, so
       TIME TRAVEL to pre-compaction snapshots is unaffected.

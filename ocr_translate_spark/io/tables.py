@@ -35,6 +35,7 @@ staged: both are only views.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -691,14 +692,15 @@ class Warehouse:
         retain_last: "int | None" = None,
     ) -> int:
         """The contract of :meth:`IcebergWarehouse.compact` over parquet:
-        a table mapped to ``None`` is rewritten as it is (in the partitions
-        its scan packs its files into), one mapped to a DataFrame is
-        replaced by it, staged exactly as given.  Every committed table
-        named gets one new directory, all in ONE replace-commit; tables
-        with no committed data are skipped.  Earlier manifests still list
-        the old directories, so time travel is unaffected and
-        ``retain_last`` expires nothing (it is accepted for interface
-        parity).  Single-writer contract applies."""
+        a table mapped to ``None`` is rewritten as it is, one file per
+        ``spark.sql.files.maxPartitionBytes`` (the setting that sizes its
+        scans) of its committed files — one file for a small table; one
+        mapped to a DataFrame is replaced by it, staged exactly as given.
+        Every committed table named gets one new directory, all in ONE
+        replace-commit; tables with no committed data are skipped.  Earlier
+        manifests still list the old directories, so time travel is
+        unaffected and ``retain_last`` expires nothing (it is accepted for
+        interface parity).  Single-writer contract applies."""
         snap = self.current_snapshot_id()
         committed = self._manifest(snap)["tables"]
         staged: "dict[str, list[str]]" = {}
@@ -707,7 +709,13 @@ class Warehouse:
                 continue  # never committed — nothing to compact
             frame = tables[table]
             if frame is None:
-                frame = self.read(spark, table, snapshot_id=snap)
+                nbytes = sum(
+                    os.path.getsize(f) for d in committed[table]
+                    for f in glob.glob(os.path.join(self.root, d, "*.parquet"))
+                )
+                conf = spark._jsparkSession.sessionState().conf()
+                frame = self.read(spark, table, snapshot_id=snap).coalesce(
+                    max(1, -(-nbytes // conf.filesMaxPartitionBytes())))
             staged[table] = [self.stage(frame, table)]
         if not staged:
             return snap

@@ -902,11 +902,14 @@ def semantic_dedup(
 def centroids_to_df(spark, centroids: np.ndarray) -> DataFrame:
     """(cell long, centroid array<double>) — the storable form of a
     trained quantizer, so the semantic index's centroids live in the
-    warehouse next to the cell table and survive the driver."""
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell long, centroid array<double>",
-    )
+    warehouse next to the cell table and survive the driver.  One literal
+    per centroid expanded on the JVM in one partition: no Python-worker
+    task, it stages as one file, and zero centroids give the typed empty
+    frame."""
+    cts = F.array(*[F.lit(np.asarray(c, dtype=np.float64)) for c in centroids])
+    return spark.range(1, numPartitions=1).select(
+        F.posexplode(cts.cast("array<array<double>>")).alias("cell", "centroid")
+    ).select(F.col("cell").cast("long"), "centroid")
 
 
 def semantic_index(

@@ -52,29 +52,20 @@ def run_curation_stream(
     Synchronous (processAllAvailable) — long-running services keep the
     query running instead."""
     reports: list[dict] = []
-
-    # the sink projects the batch down to the columns curation consumes:
-    # id + text, plus the url column when the kwargs switch on the
-    # blocklist/quota stage (projecting it away here used to make
-    # --stream --max-per-host fail at the first batch — the quota stage
-    # never saw its key column)
-    cols = [id_col, text_col]
-    url_col = curate_kwargs.get("url_col")
-    if url_col and url_col not in cols:
-        cols.append(url_col)
-
     appended_batches = 0
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal appended_batches
         if not batch_df.take(1):
             return
-        # the survivors are committed and the returned frame holds no
-        # cache (curate_incremental releases everything it materialised,
+        # the whole batch goes in: curation projects the columns its
+        # options name (id, text, url, embedding).  The survivors are
+        # committed and the returned frame holds no cache
+        # (curate_incremental releases everything it materialised,
         # checkpoint blocks included), so a long-running stream holds no
         # persistent RDD between batches
         _, rep = curate_incremental(
-            spark, warehouse_root, batch_df.select(*cols),
+            spark, warehouse_root, batch_df,
             id_col=id_col, text_col=text_col, **curate_kwargs,
         )
         d = rep.as_dict()

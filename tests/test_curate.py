@@ -5,6 +5,9 @@ contamination, reproducible split."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -139,6 +142,63 @@ def test_curate_corpus_single_pass(spark):
     spark.catalog.clearCache()
     assert _persistent_ids(spark) <= before
     assert out.count() == rep.n_output
+
+
+def test_curate_corpus_equals_incremental_on_fresh_warehouse(spark, tmp_path):
+    """curate_corpus is curate_incremental over empty stored state: on a
+    fresh warehouse both keep the same (id, text, split) rows, and every
+    stage count matches its pair (the planted url, exact, near and leak
+    rejects all fire)."""
+    from ocr_translate_spark.curate import curate_incremental
+
+    footer = "subscribe to our newsletter today"
+    contaminated = _sentence(55, 40) + "\n" + footer
+
+    def doc(url, i, extra=""):
+        return (url, _sentence(i) + extra + "\n" + footer)
+
+    rows = [doc(f"https://farm.example/p{i}", i) for i in range(7)]  # over quota
+    rows += [doc(f"https://ok.example/p{i}", 10 + i) for i in range(4)]
+    rows += [doc(f"https://bad.example/p{i}", 20 + i) for i in range(2)]  # blocked
+    rows += [
+        doc("plain-7", 30),                                   # non-url id
+        ("https://dup.example/x", rows[7][1]),                # exact dup
+        doc("https://near.example/x", 11, " extraword"),      # near dup
+        ("https://leak.example/x", contaminated),             # eval leak
+        doc("https://mail.example/x", 40, " mail me at a.b@example.com now"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    kw = dict(
+        benchmark=spark.createDataFrame(
+            [(" ".join(contaminated.split()[:15]),)], "text string"
+        ),
+        blocklist=spark.createDataFrame([("bad.example",)], "host string"),
+        max_per_host=5, url_col="doc_id", min_words=10, scrub=True,
+    )
+
+    out_c, rc = curate_corpus(df, **kw)
+    out_i, ri = curate_incremental(spark, str(tmp_path / "wh"), df, **kw)
+
+    got_c = {tuple(r) for r in out_c.collect()}
+    assert got_c == {tuple(r) for r in out_i.collect()}
+    assert any("<EMAIL>" in text for _, text, _ in got_c)
+    pairs = [
+        (rc.n_input, ri.n_batch), (rc.n_input, ri.n_new),
+        (rc.n_after_quality, ri.n_after_quality),
+        (rc.n_after_line_dedup, ri.n_after_line_dedup),
+        (rc.n_after_exact_dedup, ri.n_after_exact_dedup),
+        (rc.n_after_near_dedup, ri.n_after_near_dedup),
+        (rc.n_after_near_dedup, ri.n_after_semantic_dedup),
+        (rc.n_after_decontamination, ri.n_after_decontamination),
+        (rc.n_output, ri.n_appended),
+    ]
+    assert all(c == i for c, i in pairs), pairs
+    assert ri.n_dropped_vs_corpus_exact == 0
+    assert (
+        rc.n_input, rc.n_after_url_filter, rc.n_after_quality,
+        rc.n_after_line_dedup, rc.n_after_exact_dedup, rc.n_after_near_dedup,
+        rc.n_output,
+    ) == (18, 14, 14, 14, 13, 12, 11)
 
 
 def test_curate_incremental_single_pass(spark, tmp_path):
@@ -728,6 +788,11 @@ def test_tiered_ingest_compaction_preserves_quota_state(spark, tmp_path):
     n_seen_pre = wh.read(spark, "tier_seen").count()
 
     snap = compact_warehouse(spark, wh_dir)
+    # the as-is tables are small: one file each, not one per scan slice
+    man = wh._manifest(snap)["tables"]
+    for t in ("tier_seen", "tier_quals"):
+        (d,) = man[t]
+        assert len(glob.glob(os.path.join(wh_dir, d, "*.parquet"))) == 1, t
     post_rows = wh.read(spark, "tier_counts", snapshot_id=snap).collect()
     assert len(post_rows) == len(pre)  # folded to one row per cell
     post = {(r["tier"], r["grp"]): (r["n_seen"], r["n_kept"]) for r in post_rows}
@@ -751,7 +816,7 @@ def test_tiered_ingest_compaction_preserves_quota_state(spark, tmp_path):
     assert got == expect
 
 
-def test_curate_incremental_semantic_index(spark, tmp_path):
+def test_curate_incremental_semantic_index(spark, tmp_path, monkeypatch):
     """SemDeDup wired into the warehouse: batch 1 freezes the centroids
     and stores the semantic index alongside the corpus; batch 2's
     embedding near-dup of a STORED doc dies against the index (corpus
@@ -768,6 +833,17 @@ def test_curate_incremental_semantic_index(spark, tmp_path):
         curate_incremental,
     )
     from ocr_translate_spark.io.tables import open_warehouse
+    from ocr_translate_spark.operators import similarity
+
+    trained = []
+    semantic_index = similarity.semantic_index
+
+    def recording_index(*args, **kwargs):
+        cts, assigned = semantic_index(*args, **kwargs)
+        trained.append(cts)
+        return cts, assigned
+
+    monkeypatch.setattr(similarity, "semantic_index", recording_index)
 
     def vec(theta, plane=0):
         v = [0.0, 0.0, 0.0, 0.0]
@@ -794,6 +870,12 @@ def test_curate_incremental_semantic_index(spark, tmp_path):
     cts1 = {(r["cell"], tuple(r["centroid"]))
             for r in wh.read(spark, SEM_CENTROIDS_TABLE).collect()}
     assert len(cts1) == 2
+    # the trained quantizer, stored exactly, as one file
+    assert {(c, tuple(v)) for c, v in cts1} == {
+        (i, tuple(float(x) for x in c)) for i, c in enumerate(trained[0])
+    }
+    (d,) = wh._manifest(wh.current_snapshot_id())["tables"][SEM_CENTROIDS_TABLE]
+    assert len(glob.glob(os.path.join(wh_root, d, "*.parquet"))) == 1
     assert wh.read(spark, SEM_CELLS_TABLE).count() == 3
     assert wh.read(spark, SEM_VECS_TABLE).count() == 3
     snap1 = wh.current_snapshot_id()

@@ -276,6 +276,40 @@ def test_streaming_curation_cross_batch_host_quota(spark, tmp_path):
     assert counts == {"farm.example": 4, "ok.example": 4}
 
 
+def test_streaming_curation_with_embeddings(spark, tmp_path):
+    """--stream + --embedding-col: the sink hands the embedding column
+    through to the semantic stage, and a batch's semantic near-copy
+    dies."""
+    import math
+
+    from ocr_translate_spark.curate import SEM_CELLS_TABLE
+    from ocr_translate_spark.io.tables import open_warehouse
+    from ocr_translate_spark.streaming.curate_stream import run_curation_stream
+
+    def sentence(i, n=30):
+        return " ".join(["the", "quick", "brown", "fox", "jumps", "over",
+                         "and", "lazy", "dog", f"topic{i}w{j}"][j % 10]
+                        for j in range(n))
+
+    rows = [(i, sentence(i), [math.cos(i), math.sin(i), 0.0, 0.0])
+            for i in range(5)]
+    rows.append((5, sentence(5), [1.0, 0.0, 0.0, 0.0]))  # same vector as doc 0
+    docs_dir = str(tmp_path / "docs")
+    os.makedirs(docs_dir)
+    pd.DataFrame(rows, columns=["doc_id", "text", "emb"]).to_parquet(
+        os.path.join(docs_dir, "batch-00.parquet")
+    )
+    wh_root = str(tmp_path / "wh")
+    reports = run_curation_stream(
+        spark, docs_dir, wh_root, min_words=10, scrub=False,
+        embedding_col="emb", semantic_threshold=0.999, semantic_cells=2,
+    )
+    assert [r["n_appended"] for r in reports] == [5]
+    assert reports[0]["n_after_near_dedup"] == 6
+    cells = open_warehouse(spark, wh_root).read(spark, SEM_CELLS_TABLE)
+    assert {r["id"] for r in cells.collect()} == set(range(5))
+
+
 def test_streaming_tier_ingest_converges_to_quota(spark, tmp_path):
     """Tier-extraction stream: three micro-batches through
     run_tiered_stream; the stored tiered table converges to the exact
