@@ -6,10 +6,10 @@ analog is snapshot isolation: a killed run must leave either a complete,
 visible commit or nothing (north_rule: resume idempotently from the last
 committed snapshot).
 
-On a real cluster this is Iceberg (``writeTo(...).append()`` /
-``MERGE INTO`` — atomic snapshot commits, used automatically when the
-runtime has the Iceberg catalog configured).  This container has no Iceberg
-jars, so the same contract is implemented directly over parquet:
+On a real cluster this is Iceberg (``writeTo(...).append()`` — atomic
+snapshot commits, used automatically when the runtime has the Iceberg
+catalog configured).  This container has no Iceberg jars, so the same
+contract is implemented directly over parquet:
 
 * data files are written under ``<root>/<table>/commit-<uuid>/`` (invisible
   to readers until referenced);
@@ -119,9 +119,35 @@ def _finish_read(spark: SparkSession, table: str, frame, schema) -> DataFrame:
     return ledger_view(table, frame) if table in LEDGER_VIEWS else frame
 
 
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _written_schema(paths: list):
+    """The schema Spark's writer stored in the footer of the path-sorted
+    first ``*.parquet`` file under ``paths`` — the file Spark's own
+    inference reads (its parquet source sorts leaf files by path) — or
+    None when there is no such file or it carries no Spark schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = [
+        f for p in paths
+        for f in glob.glob(os.path.join(glob.escape(p), "*.parquet"))
+    ]
+    if not files:
+        return None
+    raw = (pq.read_metadata(min(files)).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
 def _read_parquet(spark: SparkSession, paths: list, schema=None) -> DataFrame:
-    """Parquet at ``paths``.  A given ``schema`` skips inferring it, which
-    costs a Spark job that reads a parquet footer."""
+    """Parquet at ``paths``.  With no ``schema``, the writer's schema is
+    read from a file footer on the driver: Spark's inference would spend
+    a job reading that footer.  Only files Spark did not write (no schema
+    in the footer) are left to Spark to infer."""
+    if schema is None:
+        schema = _written_schema(paths)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(*paths)
 
@@ -132,8 +158,8 @@ _TABLE_NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 def _check_table_name(table: str) -> None:
     """Reject table names that are not plain identifiers.
 
-    Table names are interpolated into catalog SQL (MERGE INTO, the
-    snapshot-log WHERE clauses) — the namespace is sanitized at
+    Table names are interpolated into catalog SQL (table identifiers,
+    the snapshot-log WHERE clauses) — the namespace is sanitized at
     construction, but caller-supplied table names were not, so a quote
     or dot in a name could break a statement.  Every public entry point
     funnels through ``_full``, which calls this."""
@@ -171,7 +197,7 @@ class ConcurrentCommitError(RuntimeError):
 class IcebergWarehouse:
     """Iceberg-catalog-backed warehouse with the same interface and the
     same SNAPSHOT CONTRACT as :class:`Warehouse` (stage / read_staged /
-    commit / merge / write / read with sequential logical snapshot ids).
+    commit / write / compact / read with sequential logical snapshot ids).
 
     Iceberg's own snapshot ids are random per-table longs and there are no
     cross-table transactions, so the multi-table contract is carried by a
@@ -194,7 +220,7 @@ class IcebergWarehouse:
       and a warehouse with no log reads empty.
 
     **Crash recovery** (parity with the emulation's orphan-dir behavior):
-    before touching a table, ``commit``/``merge`` compare its CURRENT
+    before touching a table, ``commit``/``compact`` compare its CURRENT
     Iceberg snapshot to the last *logged* one; a mismatch means an earlier
     commit died between its table append and its log publish, and the
     orphan append is rolled back (``system.rollback_to_snapshot``) so the
@@ -230,8 +256,8 @@ class IcebergWarehouse:
     # -- engine seam -----------------------------------------------------
     # Every catalog interaction flows through these five primitives, and
     # every protocol READ is a plain SQL string, so the full
-    # commit/merge/upsert/crash-recovery state machine — including the
-    # exact MERGE INTO / rollback_to_snapshot / log-query strings and
+    # commit/compact/crash-recovery state machine — including the
+    # exact rollback_to_snapshot / INSERT OVERWRITE / log-query strings and
     # their ordering — executes un-skipped against a recording fake
     # engine (tests/test_iceberg_protocol.py).  Only the thin primitive
     # bodies below stay jar-dependent (live test skip-marked).
@@ -369,58 +395,6 @@ class IcebergWarehouse:
                 self._write_table(self._read_table(handle), full, mode)
                 self._sql(f"DROP TABLE IF EXISTS {handle}")
         return self._publish_log(sorted(staged), commit_uuid)
-
-    def merge(
-        self, spark: SparkSession, df: DataFrame, table: str, keys: "list[str]"
-    ) -> int:
-        """J4 lookup-or-insert as a true upsert (ref models/base.py:33-47
-        ``get_or_create``): ``MERGE INTO ... WHEN NOT MATCHED THEN INSERT``
-        — duplicate keys are impossible by construction, first writer wins
-        (existing rows are never updated, matching get_or_create).  The
-        source side is key-deduplicated first (MERGE requires it).  The
-        result publishes as a normal logical snapshot."""
-        commit_uuid = uuid.uuid4().hex
-        handle = self.stage(df.dropDuplicates(keys), table)
-        full = self._full(table)
-        try:
-            self._rollback_orphans(table)
-            if not self._table_exists(full):
-                self._write_table(self._read_table(handle), full, "create")
-            else:
-                cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-                self._sql(
-                    f"MERGE INTO {full} t USING {handle} s ON {cond} "
-                    "WHEN NOT MATCHED THEN INSERT *"
-                )
-        finally:
-            self._sql(f"DROP TABLE IF EXISTS {handle}")
-        return self._publish_log([table], commit_uuid)
-
-    def upsert(
-        self, spark: SparkSession, df: DataFrame, table: str, keys: "list[str]"
-    ) -> int:
-        """Last-write-wins upsert (ref views.py:370-377
-        ``set_manual_translation``: update the existing row's result if
-        the key exists, insert otherwise) — the complement of
-        :meth:`merge`'s first-writer-wins get_or_create.  Runs a real
-        row-level ``MERGE INTO ... WHEN MATCHED THEN UPDATE``."""
-        commit_uuid = uuid.uuid4().hex
-        handle = self.stage(df.dropDuplicates(keys), table)
-        full = self._full(table)
-        try:
-            self._rollback_orphans(table)
-            if not self._table_exists(full):
-                self._write_table(self._read_table(handle), full, "create")
-            else:
-                cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-                self._sql(
-                    f"MERGE INTO {full} t USING {handle} s ON {cond} "
-                    "WHEN MATCHED THEN UPDATE SET * "
-                    "WHEN NOT MATCHED THEN INSERT *"
-                )
-        finally:
-            self._sql(f"DROP TABLE IF EXISTS {handle}")
-        return self._publish_log([table], commit_uuid)
 
     def write(self, df: DataFrame, table: str) -> int:
         return self.commit({table: [self.stage(df, table)]})
@@ -649,41 +623,6 @@ class Warehouse:
     def write(self, df: DataFrame, table: str) -> int:
         """stage + commit one table (convenience)."""
         return self.commit({table: [self.stage(df, table)]})
-
-    def merge(
-        self, spark: SparkSession, df: DataFrame, table: str, keys: list[str]
-    ) -> int:
-        """J4 lookup-or-insert upsert (same contract as
-        IcebergWarehouse.merge, which runs a real ``MERGE INTO``): insert
-        only rows whose key is absent from the committed state, first
-        writer wins, duplicate keys impossible by construction.  Emulated
-        as key-dedup + anti-join against the current snapshot + append —
-        correct under the single-writer contract the warehouse documents.
-        """
-        current = self.read(spark, table, schema=df.schema)
-        delta = df.dropDuplicates(keys).join(
-            current.select(*keys).dropDuplicates(keys), keys, "left_anti"
-        )
-        return self.commit({table: [self.stage(delta, table)]})
-
-    def upsert(
-        self, spark: SparkSession, df: DataFrame, table: str, keys: list[str]
-    ) -> int:
-        """Last-write-wins upsert (ref views.py:370-377
-        ``set_manual_translation``: update if the key exists, insert
-        otherwise) — the complement of :meth:`merge`.  The Iceberg branch
-        runs a row-level ``MERGE ... WHEN MATCHED THEN UPDATE``; the
-        parquet emulation rewrites the table under a replace-commit
-        (appropriate for the human-curated dimensions this serves —
-        overrides/dictionaries — which are tiny next to the corpus;
-        corpus-scale tables use :meth:`merge`/append instead)."""
-        current = self.read(spark, table, schema=df.schema)
-        fresh = df.dropDuplicates(keys)
-        kept = current.join(fresh.select(*keys), keys, "left_anti")
-        merged = fresh.unionByName(kept)
-        return self.commit(
-            {table: [self.stage(merged, table)]}, replace={table}
-        )
 
     def compact(
         self,

@@ -36,8 +36,6 @@ BLOCK_TAGS = frozenset(
 )
 # Content inside these is skipped entirely.
 SKIP_CONTENT_TAGS = frozenset("script style noscript svg template textarea iframe".split())
-# Void elements never get a closing tag.
-VOID_TAGS = frozenset("br img hr meta link input base area col embed source track wbr".split())
 # Container priors.
 NEGATIVE_CONTAINERS = frozenset("nav header footer aside form".split())
 POSITIVE_CONTAINERS = frozenset("article main".split())
@@ -64,28 +62,6 @@ _SKIP_CLOSE_RES: dict[str, "re.Pattern[str]"] = {}
 
 
 @dataclass
-class Block:
-    """One DOM text block (the analog of a merged BBox, ref models/box.py:32-59)."""
-
-    text: str = ""
-    chars: int = 0
-    link_chars: int = 0
-    n_tags: int = 0
-    pos_depth: int = 0
-    neg_depth: int = 0
-    tag: str = ""
-    is_heading: bool = False
-
-    @property
-    def link_density(self) -> float:
-        return self.link_chars / self.chars if self.chars else 0.0
-
-    @property
-    def text_density(self) -> float:
-        return self.chars / (self.n_tags + 1)
-
-
-@dataclass
 class ExtractResult:
     """Extraction output for one page."""
 
@@ -95,33 +71,6 @@ class ExtractResult:
     n_kept: int
     title: str
     scores: list[float] = field(default_factory=list)
-
-
-def _classify(
-    block: Block,
-    max_link_density: float = MAX_LINK_DENSITY_DEFAULT,
-    min_content_chars: int = MIN_CONTENT_CHARS,
-) -> tuple[bool, float]:
-    """(keep?, score) for a finalized block.
-
-    Score is a smooth content-ness signal in [0, 1]-ish used for lineage /
-    debugging; the keep decision is the hard classifier.  Thresholds come
-    from ExtractOptions (the analog of the reference's per-run OptionDict,
-    ref models/base.py:49-54) and default to the golden-locked constants.
-    """
-    if not block.text:
-        return False, 0.0
-    ld = block.link_density
-    score = min(block.text_density / 10.0, 1.0) * (1.0 - ld)
-    if block.neg_depth > 0:
-        return False, score * 0.1
-    if block.pos_depth > 0:
-        return ld <= MAX_LINK_DENSITY_POSITIVE, score
-    if block.is_heading:
-        # headings outside article containers: keep only long ones
-        return ld == 0.0 and block.chars >= min_content_chars, score
-    keep = ld <= max_link_density and block.chars >= min_content_chars
-    return keep, score
 
 
 def _finalize_text(parts: list[str]) -> str:
@@ -156,7 +105,7 @@ def extract_html(
     buffer is decoded ONCE up front ('<' = 0x3C can never occur inside a
     UTF-8 multibyte sequence, so whole-buffer decode ≡ per-segment decode
     on valid input and the ~50 per-page segment decodes collapse to one),
-    and blocks are classified inline at flush time (no Block allocation,
+    and blocks are classified inline at flush time (no per-block object,
     no second pass).  Golden tests pin the output byte-identically across
     the rewrites.
     """
@@ -179,8 +128,9 @@ def extract_html(
     n_kept = 0
 
     def flush():
-        # classification inlined from _classify (kept as the documented
-        # reference implementation + unit surface): same keep/score math
+        # classify the finished block (thresholds come from ExtractOptions,
+        # ref models/base.py:49-54): the score is a smooth content-ness
+        # signal for lineage, the keep decision is the hard classifier
         nonlocal parts, link_chars, raw_chars, n_tags
         nonlocal offset, n_blocks, n_kept
         text = _finalize_text(parts)

@@ -12,10 +12,9 @@ F4  newline policy                 (ref tsl.py:149-154)
 F6  missing-space restore via trie (ref tsl.py:156-174)
 F5  break-char tokenize            (ref tsl.py:176-186)
 
-The same stages also exist as native Spark column expressions in
-``operators/normalize.py`` (the fast path); this kernel is the exact-parity
-implementation used inside pandas UDFs when trie-based repair (F6, not
-SQL-expressible) is enabled, and as the oracle for golden tests.
+``operators/normalize.pre_tokenize_udf`` runs this kernel inside a pandas
+UDF, because trie-based repair (F6) is not SQL-expressible; it is also the
+oracle for the golden tests.
 """
 
 from __future__ import annotations

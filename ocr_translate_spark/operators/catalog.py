@@ -1,7 +1,8 @@
 """Catalog/ledger relational operators (SURVEY.md §2.2-2.7).
 
 The reference's catalog queries — ranked model lists, most-used language,
-last-loaded model, entrypoint set sync — as generic DataFrame operators.
+cache-only reads, manual-override priority, language-pair sync — as
+generic DataFrame operators.
 Each wrapper documents the reference site it re-expresses; they are thin
 by design (Catalyst already provides the physical strategy).
 """
@@ -25,23 +26,6 @@ def ranked_by_count(df: DataFrame, key: str, count_alias: str = "n") -> DataFram
 def most_used(df: DataFrame, key: str) -> DataFrame:
     """A2/O2: argmax by count (ref ocr_tsl/initializers.py:67-77)."""
     return ranked_by_count(df, key).limit(1)
-
-
-def latest_per_entity(df: DataFrame, entity: str, ts: str, tiebreak: str) -> DataFrame:
-    """A3: last event per entity — window row_number
-    (ref models/base.py:311-324: last-loaded model by LoadEvent date)."""
-    w = Window.partitionBy(entity).orderBy(F.desc(ts), F.desc(tiebreak))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def anti_sync(db_names: DataFrame, ep_names: DataFrame, key: str) -> DataFrame:
-    """J6/U1: rows present in db but not in entrypoints — deactivation set
-    (ref ocr_tsl/initializers.py:150-158, models/base.py:374-383)."""
-    return db_names.select(key).join(ep_names.select(key), key, "left_anti")
 
 
 def lang_pair_sync(
@@ -82,28 +66,6 @@ def override_coalesce(
     return base.join(ov, key, "left").withColumn(
         value, F.coalesce(F.col("_ov"), F.col(value))
     ).drop("_ov")
-
-
-def languages_df(spark) -> DataFrame:
-    """S6: the language dimension table (ref models/base.py:72-89,
-    ocr_tsl/languages.json; nospace/vertical flags per models/ocr.py:40-41).
-
-    Tiny dimension — always broadcast when joined against a corpus."""
-    from ..kernels.merge import NO_SPACE_LANGUAGES, VERTICAL_LANGS
-    from .ingest import DEFAULT_ISO1_MAP
-
-    names = {
-        "en": "English", "de": "German", "fr": "French", "es": "Spanish",
-        "ja": "Japanese", "zh": "Chinese", "ko": "Korean", "lo": "Lao",
-        "my": "Burmese",
-    }
-    rows = [
-        (names[iso1], iso1, iso3, iso1 in NO_SPACE_LANGUAGES, iso1 in VERTICAL_LANGS)
-        for iso1, iso3 in DEFAULT_ISO1_MAP.items()
-    ]
-    return spark.createDataFrame(
-        rows, "name string, iso1 string, iso3 string, nospace boolean, vertical boolean"
-    )
 
 
 def sessionize(

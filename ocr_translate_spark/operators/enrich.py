@@ -10,7 +10,8 @@ once and requires an aligned output list.
 The actual model invocation is pluggable (``batch_fn``).  This container
 ships no translation model, so the default is a deterministic stand-in
 (documented fake) that preserves the plumbing contract: batch in -> aligned
-batch out, manual overrides win afterwards (J5, apply_overrides).
+batch out; manual overrides win afterwards (J5,
+``catalog.override_coalesce``).
 """
 
 from __future__ import annotations

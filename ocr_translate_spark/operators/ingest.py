@@ -48,95 +48,3 @@ def lang_code(lang: Column, iso1_map: dict[str, str] | None = None) -> Column:
         pairs.append(F.lit(v))
     map_lit = F.create_map(*pairs)
     return F.coalesce(F.element_at(map_lit, lang), lang)
-
-
-def cascade_options(*dicts: dict, schema: dict | None = None) -> dict:
-    """U3: option-dict cascade merge, rightmost wins
-    (ref models/tsl.py:288-290: ``{**lang, **model, **request}``).
-
-    Plan-time Python by design: options resolve on the driver before the
-    job is built, exactly once.  With ``schema`` the merged result is
-    validated/coerced through :func:`validate_options`."""
-    out: dict = {}
-    for d in dicts:
-        if d:
-            out.update(d)
-    if schema is not None:
-        out = validate_options(out, schema)
-    return out
-
-
-# Typed per-option schema, the shape of the reference's ALLOWED_OPTIONS
-# (ref models/tsl.py:34-88): declared type, cascade default
-# ('cascade', [source names...], fallback) or a literal default.
-ALLOWED_OPTIONS: dict[str, dict] = {
-    "ignore_chars": {"type": str, "default": ("cascade", ["lang_src", "tsl_model"], "")},
-    "break_chars": {"type": str, "default": ("cascade", ["lang_src", "tsl_model"], "")},
-    "allowed_start_end": {"type": str, "default": ("cascade", ["lang_src", "tsl_model"], "")},
-    "break_newlines": {"type": bool, "default": ("cascade", ["lang_src", "tsl_model"], False)},
-    "restore_missing_spaces": {"type": bool, "default": ("cascade", ["lang_src", "tsl_model"], False)},
-    "restore_dash_newlines": {"type": bool, "default": ("cascade", ["lang_src", "tsl_model"], False)},
-}
-
-
-def _coerce(value, typ: type):
-    """Coerce a raw option value to its declared type; bools accept the
-    reference's string forms (ref models/tsl.py:117-122)."""
-    if isinstance(value, typ) and not (typ is int and isinstance(value, bool)):
-        return value
-    if typ is bool:
-        if isinstance(value, str) and value.lower() in ("true", "false"):
-            return value.lower() == "true"
-        if isinstance(value, (int, float)) and value in (0, 1):
-            return bool(value)
-        raise ValueError(f"cannot coerce {value!r} to bool")
-    if typ in (int, float, str):
-        try:
-            return typ(value)
-        except (TypeError, ValueError) as exc:
-            raise ValueError(f"cannot coerce {value!r} to {typ.__name__}") from exc
-    raise ValueError(f"cannot coerce {value!r} to {typ.__name__}")
-
-
-def validate_options(
-    options: dict,
-    schema: dict = ALLOWED_OPTIONS,
-    sources: dict[str, dict] | None = None,
-) -> dict:
-    """Typed option validation + default resolution
-    (ref models/tsl.py:34-88 ALLOWED_OPTIONS).
-
-    * unknown keys raise ``ValueError`` (the reference only exposes declared
-      options through its option dicts);
-    * present values are coerced to the declared type, with the reference's
-      lenient string-bool handling;
-    * absent keys resolve through the declared default — a literal, or a
-      ``('cascade', [source names...], fallback)`` tuple probed against
-      ``sources`` in order (ref tsl.py: lang_src then tsl_model);
-    * ``allowed`` (when declared) whitelists values after coercion.
-    """
-    sources = sources or {}
-    unknown = set(options) - set(schema)
-    if unknown:
-        raise ValueError(f"unknown option(s): {sorted(unknown)}")
-    out: dict = {}
-    for key, spec in schema.items():
-        if key in options and options[key] is not None:
-            val = _coerce(options[key], spec["type"])
-        else:
-            default = spec.get("default")
-            if isinstance(default, tuple) and default and default[0] == "cascade":
-                _, src_names, fallback = default
-                val = fallback
-                for name in src_names:
-                    src = sources.get(name) or {}
-                    if src.get(key) is not None:
-                        val = _coerce(src[key], spec["type"])
-                        break
-            else:
-                val = default
-        allowed = spec.get("allowed")
-        if allowed is not None and val not in allowed:
-            raise ValueError(f"option {key}={val!r} not in allowed {allowed}")
-        out[key] = val
-    return out

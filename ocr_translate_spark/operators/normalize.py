@@ -1,17 +1,12 @@
 """Text normalization operators (F1-F8, SURVEY.md §2.8).
 
-Two implementations with identical semantics:
-
-* **Native column expressions** (this module's ``*_col`` functions) — pure
-  ``pyspark.sql.functions``, JVM-side, whole-stage-codegen'd.  This is the
-  hot path; use it whenever trie repair is off.
-* **Arrow pandas UDF** (``pre_tokenize_udf``) — wraps the exact-parity
-  kernel (kernels/pretokenize.py) with a broadcast trie, needed only when
-  ``restore_missing_spaces`` is on (dynamic-programming decomposition is
-  not SQL-expressible, ref models/tsl.py:156-174).
-
-The native path is golden-tested against the kernel on the corpus, so
-switching paths never changes results.
+* **Arrow pandas UDF** (``pre_tokenize_udf``) — the full pre_tokenize
+  pipeline: it wraps the exact-parity kernel (kernels/pretokenize.py) with
+  a broadcast trie, because missing-space repair (F6, dynamic-programming
+  decomposition) is not SQL-expressible (ref models/tsl.py:156-174).
+* **Native column expressions** (the ``*_col`` functions) — single stages
+  as pure ``pyspark.sql.functions``, JVM-side: F2 dash-newline restore and
+  F7 no-space-language cleanup.
 """
 
 from __future__ import annotations
@@ -25,46 +20,10 @@ from ..kernels.merge import NO_SPACE_LANGUAGES
 from ..kernels.pretokenize import pre_tokenize_options
 from ..kernels.trie import Trie
 
-# F1 edge-garbage strip (ref models/tsl.py:124-144). Java regex supports the
-# same lookarounds as Python's re, so the reference patterns carry over.
-_EDGE_START = r"^[^{allowed}]+\S?(?= )|^\S[^{allowed}]+(?= )"
-_EDGE_END = r"(?<= )\S?[^{allowed}]+$|(?<= )[^{allowed}]+\S$"
-
-
-def strip_edge_garbage_col(col: Column, allowed_start_end: str) -> Column:
-    """F1: per-line strip of non-allowed leading/trailing runs."""
-    start = _EDGE_START.format(allowed=allowed_start_end)
-    end = _EDGE_END.format(allowed=allowed_start_end)
-    line = lambda x: F.regexp_replace(  # noqa: E731
-        F.regexp_replace(x, start, ""), end, ""
-    )
-    return F.array_join(F.transform(F.split(col, "\n", -1), line), "\n")
-
 
 def restore_dash_newlines_col(col: Column) -> Column:
     """F2: rejoin hyphen-split words (ref tsl.py:145-146)."""
     return F.regexp_replace(col, r"(?<!\n)- *\n", "")
-
-
-def strip_ignore_chars_col(col: Column, ignore_chars: str) -> Column:
-    """F3 (ref tsl.py:147-148)."""
-    return F.regexp_replace(col, f"[{ignore_chars}]+", "")
-
-
-def newlines_to_spaces_col(col: Column) -> Column:
-    """F4 newline policy, break_newlines=False branch (ref tsl.py:153-154)."""
-    return F.regexp_replace(col, "\n", " ")
-
-
-def break_tokenize_col(col: Column, break_chars: str) -> Column:
-    """F5: split on break chars, drop empties, fallback [' ']
-    (ref tsl.py:176-186). NOTE the reference's '+' lives inside the
-    character class, so literal '+' breaks too — preserved."""
-    import re as _re
-
-    pattern = f"[{_re.escape(break_chars)}+]"
-    toks = F.filter(F.split(col, pattern, -1), lambda x: x != F.lit(""))
-    return F.when(F.size(toks) > 0, toks).otherwise(F.array(F.lit(" ")))
 
 
 def strip_nospace_lang_col(text: Column, lang: Column) -> Column:
@@ -72,53 +31,6 @@ def strip_nospace_lang_col(text: Column, lang: Column) -> Column:
     return F.when(
         lang.isin(*NO_SPACE_LANGUAGES), F.regexp_replace(text, " ", "")
     ).otherwise(text)
-
-
-def normalize_cols(
-    text: Column,
-    ignore_chars: str | None = None,
-    allowed_start_end: str | None = None,
-    break_newlines: bool = False,
-    restore_dash_newlines_opt: bool = False,
-) -> Column:
-    """Compose the native normalization stages in reference order
-    (ref tsl.py:124-154); returns the normalized *string* (pre-split)."""
-    out = text
-    if allowed_start_end is not None:
-        out = strip_edge_garbage_col(out, allowed_start_end)
-    if restore_dash_newlines_opt:
-        out = restore_dash_newlines_col(out)
-    if ignore_chars:
-        out = strip_ignore_chars_col(out, ignore_chars)
-    if not break_newlines:
-        out = newlines_to_spaces_col(out)
-    return out
-
-
-def pre_tokenize_native(
-    text: Column,
-    ignore_chars: str | None = None,
-    break_chars: str | None = None,
-    allowed_start_end: str | None = None,
-    break_newlines: bool = False,
-    restore_dash_newlines_opt: bool = False,
-) -> Column:
-    """Full native pre_tokenize -> array<string> (no trie repair)."""
-    out = normalize_cols(
-        text,
-        ignore_chars=ignore_chars,
-        allowed_start_end=allowed_start_end,
-        break_newlines=break_newlines,
-        restore_dash_newlines_opt=restore_dash_newlines_opt,
-    )
-    breaks = break_chars or ""
-    if break_newlines:
-        breaks += "\n"
-    if breaks:
-        return break_tokenize_col(out, breaks)
-    # no break chars: the whole string is the single token, but an empty
-    # result still collapses to [' '] (ref tsl.py:184-186)
-    return F.when(out == F.lit(""), F.array(F.lit(" "))).otherwise(F.array(out))
 
 
 def pre_tokenize_udf(df: DataFrame, text_col: str, options: dict, trie: Trie | None):

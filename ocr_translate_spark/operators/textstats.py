@@ -54,12 +54,6 @@ LANG_MARKERS = {
 }
 
 
-def whitespace_token_count(text: Column) -> Column:
-    """Number of whitespace-separated tokens."""
-    toks = F.filter(F.split(text, r"\s+", -1), lambda x: x != F.lit(""))
-    return F.size(toks)
-
-
 def bpe_ish_token_count(text: Column) -> Column:
     """Number of TOKEN_REGEX matches (letter runs / digit runs / symbols)."""
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), F.lit(0)))
@@ -107,13 +101,6 @@ def lang_id(text: Column) -> Column:
     for lang in reversed(list(LANG_MARKERS)):
         out = F.when((best > 0) & (counts[lang] == best), F.lit(lang)).otherwise(out)
     return out
-
-
-def fingerprint_norm(text: Column) -> Column:
-    """Normalization fingerprint: md5 of lowercased, whitespace-collapsed
-    text — the cheap exact-dup key after cosmetic edits."""
-    norm = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-    return F.md5(norm)
 
 
 def rolling_fingerprint(text: Column, window: int = 8) -> Column:
@@ -562,42 +549,3 @@ def rarity_scores(df, id_col: str, text_col: str):
         ).alias("mean_inv_freq"),
         F.array_max(inv).alias("max_inv_freq"),
     )
-
-
-# paper thresholds for the repetition battery (Rae et al. 2021 Table A1):
-# a document is removed when ANY fraction exceeds its ceiling
-GOPHER_REPETITION_THRESHOLDS = {
-    "dup_line_frac": 0.30,
-    "dup_line_char_frac": 0.20,
-    "top_2gram_char_frac": 0.20,
-    "top_3gram_char_frac": 0.18,
-    "top_4gram_char_frac": 0.16,
-    "dup_5gram_char_frac": 0.15,
-    "dup_6gram_char_frac": 0.14,
-    "dup_7gram_char_frac": 0.13,
-    "dup_8gram_char_frac": 0.12,
-    "dup_9gram_char_frac": 0.11,
-    "dup_10gram_char_frac": 0.10,
-}
-
-
-def gopher_repetition_rules(
-    df,
-    id_col: str,
-    text_col: str,
-    thresholds: "dict[str, float] | None" = None,
-):
-    """The full Gopher repetition battery as a filterable verdict:
-    (doc_id, <11 metric columns>, passes) — ``passes`` is true when
-    every fraction sits at or under its (paper-default) ceiling.
-    Composes with :func:`gopher_rules` for the complete App. A1 gate:
-    word-level rules there, repetition rules here, both narrow
-    zero-exchange projections (semantics note on the occurrence-weighted
-    dup definition in :func:`repetition_gram_stats`)."""
-    th = dict(GOPHER_REPETITION_THRESHOLDS)
-    th.update(thresholds or {})
-    out = repetition_gram_stats_df(df, id_col, text_col)
-    cond = F.lit(True)
-    for name, ceiling in th.items():
-        cond = cond & (F.col(name) <= ceiling)
-    return out.withColumn("passes", cond)

@@ -199,59 +199,3 @@ def read_extracted(
         )
     return out
 
-
-def set_overrides(
-    spark: SparkSession, warehouse_root: str, overrides: DataFrame
-) -> int:
-    """Persist manual overrides with UPDATE-IF-EXISTS semantics (ref
-    views.py:345-379 ``set_manual_translation``: an existing manual entry
-    for the same key gets its result text REPLACED, a new key inserts) —
-    last-write-wins via Warehouse.upsert.  Returns the snapshot id."""
-    wh = open_warehouse(spark, warehouse_root)
-    return wh.upsert(
-        spark, overrides.select("url", "text"), "overrides", ["url"]
-    )
-
-
-def read_extracted_with_overrides(
-    spark: SparkSession,
-    warehouse_root: str,
-    snapshot_id: int | None = None,
-    favor_manual: bool = True,
-) -> DataFrame:
-    """read_extracted + the committed ``overrides`` table applied (J5
-    manual-priority join): the end-to-end form of the reference's
-    favor_manual read path (ref models/tsl.py:216-235,269-271).
-
-    ``favor_manual=False`` disables the manual priority for this read
-    (same output schema, nothing manual), matching the reference's
-    per-run option default-True cascade (ref ocr_tsl/full.py
-    favor_manual; tests/ocr_tsl/test_full.py:83-149)."""
-    from .schemas import OVERRIDES
-
-    wh = open_warehouse(spark, warehouse_root)
-    ext = read_extracted(spark, warehouse_root, snapshot_id=snapshot_id)
-    if not favor_manual:
-        return ext.withColumn("is_manual", F.lit(False)).withColumn(
-            "final_text", F.col("extracted_text")
-        )
-    ov = wh.read(spark, "overrides", schema=OVERRIDES, snapshot_id=snapshot_id)
-    return apply_overrides(ext, ov)
-
-
-def apply_overrides(extracted: DataFrame, overrides: DataFrame) -> DataFrame:
-    """Manual-override priority join (J5, ref models/tsl.py:216-235,269-271).
-
-    ``overrides(url, text)`` rows win over computed text via left join +
-    coalesce; the dimension is broadcast (it is human-curated, i.e. tiny
-    relative to the corpus).
-    """
-    ov = F.broadcast(overrides.select(
-        F.col("url").alias("_ov_url"), F.col("text").alias("_ov_text")
-    ))
-    return (
-        extracted.join(ov, extracted["url"] == ov["_ov_url"], "left")
-        .withColumn("is_manual", F.col("_ov_text").isNotNull())
-        .withColumn("final_text", F.coalesce(F.col("_ov_text"), F.col("extracted_text")))
-        .drop("_ov_url", "_ov_text")
-    )

@@ -66,10 +66,3 @@ METRICS = T.StructType([
     T.StructField("wall_clock_ms", T.LongType(), False),
     T.StructField("run_id", T.StringType(), False),
 ])
-
-# human-curated manual overrides (ref views.py:345-379
-# set_manual_translation; the 'manual' model's result rows)
-OVERRIDES = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("text", T.StringType(), True),
-])

@@ -1,13 +1,10 @@
-"""Batched enrichment (X3 contract) + languages dimension tests."""
+"""Batched enrichment (X3 contract) tests."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from ocr_translate_spark.operators.catalog import languages_df
 from ocr_translate_spark.operators.enrich import enrich_text
-from ocr_translate_spark.pipeline import apply_overrides
 
 
 def test_enrich_batched_alignment(spark):
@@ -33,27 +30,3 @@ def test_enrich_misaligned_fn_raises(spark):
 
     with pytest.raises(Exception, match="alignment"):
         enrich_text(df, "text", "lang", "ja", batch_fn=broken).collect()
-
-
-def test_enrich_then_manual_override(spark):
-    """Full J5 semantics: manual rows beat the model output
-    (ref models/tsl.py:269-271)."""
-    df = spark.createDataFrame(
-        [("u1", "hello", "en"), ("u2", "world", "en")],
-        "url string, text string, lang string",
-    )
-    enriched = enrich_text(df, "text", "lang", "de").withColumnRenamed(
-        "enriched_text", "extracted_text"
-    )
-    overrides = spark.createDataFrame([("u1", "HUMAN")], "url string, text string")
-    out = apply_overrides(enriched.select("url", "extracted_text"), overrides)
-    got = {r["url"]: (r["final_text"], r["is_manual"]) for r in out.collect()}
-    assert got["u1"] == ("HUMAN", True)
-    assert got["u2"] == ("[en->de] world", False)
-
-
-def test_languages_dimension(spark):
-    langs = {r["iso1"]: r for r in languages_df(spark).collect()}
-    assert langs["ja"]["nospace"] and langs["ja"]["vertical"]
-    assert langs["ko"]["vertical"] and not langs["ko"]["nospace"]
-    assert not langs["en"]["nospace"] and langs["en"]["iso3"] == "eng"

@@ -1,12 +1,12 @@
 """Iceberg branch protocol tests — no jars, no SparkSession.
 
-The round-3 risk: ``IcebergWarehouse``'s SQL strings (``MERGE INTO``,
-``rollback_to_snapshot``, log queries) were plausible but unexecuted —
-the one live test skips in this container.  The class now routes every
-catalog interaction through five seam primitives and expresses every
-protocol read as a SQL string, so this file drives the FULL state
-machine (commit / merge / upsert / crash-recovery / concurrency /
-compaction) against a recording fake engine that
+The round-3 risk: ``IcebergWarehouse``'s SQL strings
+(``rollback_to_snapshot``, ``INSERT OVERWRITE``, log queries) were
+plausible but unexecuted — the one live test skips in this container.
+The class now routes every catalog interaction through five seam
+primitives and expresses every protocol read as a SQL string, so this
+file drives the FULL state machine (commit / crash-recovery /
+concurrency / compaction) against a recording fake engine that
 simulates Iceberg catalog semantics and rejects any SQL shape it does
 not recognize — a drifted statement fails loudly here instead of on
 first contact with a cluster.
@@ -42,8 +42,7 @@ class FakeResult:
 
 class FakeDF:
     """Tiny stand-in for the DataFrames the warehouse passes through the
-    seam: a bag of dict rows + the one transform merge/upsert apply
-    (dropDuplicates)."""
+    seam: a bag of dict rows."""
 
     def __init__(self, rows, columns=None):
         self.rows = [dict(r) for r in rows]
@@ -54,15 +53,6 @@ class FakeDF:
     @property
     def columns(self):
         return self._columns
-
-    def dropDuplicates(self, keys):
-        seen, out = set(), []
-        for r in self.rows:
-            k = tuple(r[c] for c in keys)
-            if k not in seen:
-                seen.add(k)
-                out.append(r)
-        return FakeDF(out, self._columns)
 
 
 class FakeIcebergWarehouse(IcebergWarehouse):
@@ -206,24 +196,6 @@ class FakeIcebergWarehouse(IcebergWarehouse):
             return FakeResult([])
 
         if m := re.fullmatch(
-            r"MERGE INTO ([\w.]+) t USING ([\w.]+) s ON (.+?) "
-            r"WHEN (MATCHED THEN UPDATE SET \* WHEN )?NOT MATCHED THEN INSERT \*",
-            s,
-        ):
-            full, handle, cond, update = m.groups()
-            keys = re.findall(r"t\.(\w+) <=> s\.\1", cond)
-            assert keys, f"unparseable merge condition {cond!r}"
-            target = {tuple(r[k] for k in keys): r for r in self._rows(full)}
-            for srow in self._rows(handle):
-                k = tuple(srow[c] for c in keys)
-                if k not in target:
-                    target[k] = srow  # NOT MATCHED -> INSERT
-                elif update:
-                    target[k] = srow  # MATCHED -> UPDATE (last write wins)
-            self.tables[full].append((self._next_snap(), list(target.values())))
-            return FakeResult([])
-
-        if m := re.fullmatch(
             r"CALL spark_catalog\.system\.rewrite_data_files\(table => '([\w.]+)'\)", s
         ):
             full = m.group(1)
@@ -288,35 +260,6 @@ def test_commit_publishes_log_and_reads_resolve(wh):
     assert any("__stage_" in s for s in drops)
     clashes = [s for s in wh.statements if "commit_uuid <>" in s]
     assert len(clashes) == 2  # one concurrency check per publish
-
-
-def test_merge_is_first_writer_wins_with_exact_sql(wh):
-    wh.merge(None, _df(("u1", "old"), ("u1", "dup")), "texts", ["url"])
-    assert [r["text"] for r in wh.read(None, "texts").rows] == ["old"]
-
-    wh.merge(None, _df(("u1", "new"), ("u2", "b")), "texts", ["url"])
-    got = {r["url"]: r["text"] for r in wh.read(None, "texts").rows}
-    # u1 kept the FIRST writer's value (get_or_create), u2 inserted
-    assert got == {"u1": "old", "u2": "b"}
-
-    merges = [s for s in wh.statements if s.startswith("MERGE INTO")]
-    assert len(merges) == 1  # first merge creates; second runs MERGE INTO
-    assert re.fullmatch(
-        r"MERGE INTO proto_wh\.texts t USING proto_wh\.texts__stage_\w+ s "
-        r"ON t\.url <=> s\.url WHEN NOT MATCHED THEN INSERT \*",
-        merges[0],
-    )
-
-
-def test_upsert_is_last_writer_wins_with_exact_sql(wh):
-    wh.upsert(None, _df(("u1", "old")), "overrides", ["url"])
-    wh.upsert(None, _df(("u1", "new"), ("u2", "b")), "overrides", ["url"])
-    got = {r["url"]: r["text"] for r in wh.read(None, "overrides").rows}
-    assert got == {"u1": "new", "u2": "b"}
-
-    merges = [s for s in wh.statements if s.startswith("MERGE INTO")]
-    assert len(merges) == 1
-    assert "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *" in merges[0]
 
 
 def test_crash_orphan_rolled_back_before_next_append(wh):

@@ -1,5 +1,4 @@
-"""Ingest operator tests: base64 decode + md5 verify, lang-code lookup,
-option cascade."""
+"""Ingest operator tests: base64 decode + md5 verify, lang-code lookup."""
 
 from __future__ import annotations
 
@@ -8,11 +7,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from ocr_translate_spark.operators.ingest import (
-    cascade_options,
-    decode_and_verify,
-    lang_code,
-)
+from ocr_translate_spark.operators.ingest import decode_and_verify, lang_code
 
 
 def test_decode_and_verify(spark):
@@ -33,68 +28,3 @@ def test_lang_code_fallback(spark):
     df = spark.createDataFrame([("en",), ("ja",), ("xx",)], "lang string")
     got = [r[0] for r in df.select(lang_code(F.col("lang"))).collect()]
     assert got == ["eng", "jpn", "xx"]  # unknown codes fall through (J8)
-
-
-def test_cascade_options():
-    # ref models/tsl.py:288-290: request options win over model over lang
-    lang = {"break_newlines": True, "ignore_chars": "?"}
-    model = {"ignore_chars": "!", "break_chars": "."}
-    request = {"break_chars": ","}
-    assert cascade_options(lang, model, request) == {
-        "break_newlines": True,
-        "ignore_chars": "!",
-        "break_chars": ",",
-    }
-    assert cascade_options(None, {"a": 1}) == {"a": 1}
-
-
-def test_validate_options_typed():
-    """ALLOWED_OPTIONS-style typed validation (ref models/tsl.py:34-88)."""
-    from ocr_translate_spark.operators.ingest import ALLOWED_OPTIONS, validate_options
-
-    out = validate_options({"break_newlines": "True", "ignore_chars": "?"})
-    assert out["break_newlines"] is True  # string-bool coercion (tsl.py:117-122)
-    assert out["ignore_chars"] == "?"
-    # every declared key resolves (to its fallback when absent)
-    assert set(out) == set(ALLOWED_OPTIONS)
-    assert out["restore_missing_spaces"] is False
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown option"):
-        validate_options({"not_an_option": 1})
-    with _pytest.raises(ValueError, match="coerce"):
-        validate_options({"break_newlines": "maybe"})
-
-
-def test_validate_options_cascade_defaults():
-    """Absent keys resolve through the declared cascade sources in order
-    (ref tsl.py default=('cascade', ['lang_src','tsl_model'], ...))."""
-    from ocr_translate_spark.operators.ingest import validate_options
-
-    sources = {
-        "lang_src": {"ignore_chars": "#"},
-        "tsl_model": {"ignore_chars": "!", "break_chars": "."},
-    }
-    out = validate_options({}, sources=sources)
-    assert out["ignore_chars"] == "#"   # lang_src probed first
-    assert out["break_chars"] == "."    # falls through to tsl_model
-    assert out["allowed_start_end"] == ""  # fallback
-
-
-def test_cascade_options_with_schema():
-    from ocr_translate_spark.operators.ingest import ALLOWED_OPTIONS, cascade_options
-
-    out = cascade_options(
-        {"break_newlines": "false"}, {"break_chars": ","}, schema=ALLOWED_OPTIONS
-    )
-    assert out["break_newlines"] is False and out["break_chars"] == ","
-
-
-def test_allowed_whitelist():
-    from ocr_translate_spark.operators.ingest import validate_options
-
-    schema = {"mode": {"type": str, "default": "merged", "allowed": ("merged", "single")}}
-    assert validate_options({"mode": "single"}, schema)["mode"] == "single"
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="not in allowed"):
-        validate_options({"mode": "bogus"}, schema)

@@ -1,79 +1,16 @@
-"""Native Spark normalization must agree with the exact-parity kernel."""
+"""Normalization operators: the trie-repair UDF, the dictionary trie and
+the no-space-language column."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from ocr_translate_spark.corpus import pages_pandas
-from ocr_translate_spark.kernels.pretokenize import pre_tokenize_options
 from ocr_translate_spark.kernels.trie import Trie
 from ocr_translate_spark.operators.normalize import (
     build_trie_from_dictionary,
-    pre_tokenize_native,
     pre_tokenize_udf,
     strip_nospace_lang_col,
 )
-
-FIXTURE_STRINGS = [
-    "This is a test string.",
-    "This is a test string.\nWith a newline.",
-    "This is a test string.\nWith a newline.\nAnd another.",
-    "This is a test string.? With a special break character.",
-    "This is a test string.? With a special break character.\nAnd a newline.",
-    "String with a dash-newline brok-\nen word.",
-]
-
-OPTION_COMBOS = [
-    {},
-    {"break_newlines": True},
-    {"break_newlines": False},
-    {"break_chars": "?.!"},
-    {"ignore_chars": "?.!"},
-    {"break_newlines": True, "break_chars": "?.!"},
-    {"break_newlines": False, "ignore_chars": "?.!"},
-    {"restore_dash_newlines": True},
-    {"allowed_start_end": "a-zA-Z0-9\\-\\.\\,\\;\\?\\! "},
-]
-
-
-@pytest.mark.parametrize("opts", OPTION_COMBOS, ids=[str(o) for o in OPTION_COMBOS])
-def test_native_matches_kernel(spark, opts):
-    texts = FIXTURE_STRINGS + [
-        "$%n garbage edges here $",
-        "",
-        "no breaks at all",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    col = pre_tokenize_native(
-        F.col("text"),
-        ignore_chars=opts.get("ignore_chars"),
-        break_chars=opts.get("break_chars"),
-        allowed_start_end=opts.get("allowed_start_end"),
-        break_newlines=opts.get("break_newlines", False),
-        restore_dash_newlines_opt=opts.get("restore_dash_newlines", False),
-    )
-    got = {r["text"]: r["toks"] for r in df.select("text", col.alias("toks")).collect()}
-    for t in texts:
-        expected = pre_tokenize_options(t, opts, trie=None)
-        assert got[t] == expected, (t, opts)
-
-
-def test_native_matches_kernel_on_corpus(spark):
-    """Golden-lock the native path against the kernel on real corpus text."""
-    pdf = pages_pandas(64)
-    df = spark.createDataFrame(pdf[["text"]])
-    opts = {"break_newlines": True, "break_chars": "?.!", "restore_dash_newlines": True}
-    col = pre_tokenize_native(
-        F.col("text"),
-        break_chars="?.!",
-        break_newlines=True,
-        restore_dash_newlines_opt=True,
-    )
-    rows = df.select("text", col.alias("toks")).collect()
-    assert rows
-    for r in rows:
-        assert r["toks"] == pre_tokenize_options(r["text"], opts, trie=None)
 
 
 def test_pre_tokenize_udf_trie_repair(spark):

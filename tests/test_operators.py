@@ -34,13 +34,11 @@ def events(spark):
 def test_token_counts(spark):
     df = spark.createDataFrame([("hello world, 42 times!",), ("",)], "text string")
     row = df.select(
-        textstats.whitespace_token_count(F.col("text")).alias("ws"),
         textstats.bpe_ish_token_count(F.col("text")).alias("bpe"),
     ).collect()
-    assert row[0]["ws"] == 4
     # hello | world | , | 42 | times | !
     assert row[0]["bpe"] == 6
-    assert row[1]["ws"] == 0 and row[1]["bpe"] == 0
+    assert row[1]["bpe"] == 0
 
 
 def test_lang_id_markers(spark):
@@ -93,14 +91,6 @@ def test_quality_score_bounds(documents):
         textstats.quality_score(F.col("text")).alias("q")
     ).collect()
     assert all(0.0 <= r["q"] <= 1.0 for r in rows)
-
-
-def test_fingerprint_norm_invariant(spark):
-    df = spark.createDataFrame(
-        [("Hello  World",), ("hello world",), ("HELLO\tWORLD ",)], "text string"
-    )
-    fps = [r[0] for r in df.select(textstats.fingerprint_norm(F.col("text"))).collect()]
-    assert len(set(fps)) == 1
 
 
 def test_rolling_fingerprint_local_edit(spark):
@@ -402,9 +392,6 @@ def test_catalog_ops(spark, events):
     top = catalog.most_used(events, "event_type").collect()
     assert len(top) == 1 and top[0]["n"] == ranked[0]["n"]
 
-    latest = catalog.latest_per_entity(events, "user_id", "ts", "event_id")
-    assert latest.groupBy("user_id").count().filter(F.col("count") > 1).count() == 0
-
     sess = catalog.sessionize(events, "user_id", "ts", gap_minutes=30)
     assert sess.filter(F.col("session_id") < 1).count() == 0
 
@@ -412,8 +399,6 @@ def test_catalog_ops(spark, events):
 def test_anti_and_semi_joins(spark):
     db = spark.createDataFrame([("a",), ("b",), ("c",)], "name string")
     ep = spark.createDataFrame([("b",), ("c",), ("d",)], "name string")
-    gone = {r["name"] for r in catalog.anti_sync(db, ep, "name").collect()}
-    assert gone == {"a"}
     present = {r["name"] for r in catalog.semi_lazy(db, ep, "name").collect()}
     assert present == {"b", "c"}
 
@@ -1298,24 +1283,6 @@ def test_incremental_minhash_equals_batch_restriction(spark, documents):
     # the planted exact dups are found against the STORED index
     planted = {p for p in inc if p[1] >= 100_000}
     assert len(planted) >= 2 and all(inc[p] == 1.0 for p in planted)
-
-
-def test_gopher_repetition_rules_verdict(spark):
-    """Paper-threshold verdict over the gram battery: a heavily repeated
-    page fails, natural text passes, a custom ceiling flips a doc."""
-    spammy = "buy now " * 50
-    # genuinely varied: every word unique -> no repeated grams or lines
-    natural = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(20))
-    df = spark.createDataFrame(
-        [(1, spammy), (2, natural)], "doc_id long, text string"
-    )
-    got = {r["doc_id"]: r for r in
-           textstats.gopher_repetition_rules(df, "doc_id", "text").collect()}
-    assert not got[1]["passes"] and got[2]["passes"]
-    strict = textstats.gopher_repetition_rules(
-        df, "doc_id", "text", thresholds={"top_2gram_char_frac": 0.0}
-    )
-    assert not any(r["passes"] for r in strict.collect())
 
 
 def test_incremental_candidates_plan_shape(spark):

@@ -2,8 +2,7 @@
 
 Mirrors the reference's test layers (SURVEY.md §5): golden byte-identical
 extraction per url, run reuse (ref tests/test_models.py:205
-test_box_run_reuse), manual-override priority (ref tests/test_models.py:544),
-and idempotent resume.
+test_box_run_reuse) and idempotent resume.
 """
 
 from __future__ import annotations
@@ -15,11 +14,7 @@ from pyspark.sql import functions as F
 from ocr_translate_spark.corpus import pages_df, pages_pandas
 from ocr_translate_spark.io.tables import Warehouse
 from ocr_translate_spark.operators.extract import ExtractOptions
-from ocr_translate_spark.pipeline import (
-    apply_overrides,
-    read_extracted,
-    run_extraction,
-)
+from ocr_translate_spark.pipeline import read_extracted, run_extraction
 from ocr_translate_spark.schemas import METRICS, RUNS
 
 N_PAGES = 160  # covers all 16 variant slots 10x
@@ -246,17 +241,6 @@ def test_iceberg_warehouse_roundtrip(spark, tmp_path):
     assert wh.read(spark, "extracted").count() == 10  # invisible to reads
     snap3 = wh.commit({"extracted": [wh.stage(df, "extracted")]})
     assert wh.read(spark, "extracted", snapshot_id=snap3).count() == 15  # not 20
-    # merge: true MERGE INTO upsert — duplicate keys impossible
-    kv = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    wh.merge(spark, kv, "ledger", ["k"])
-    kv2 = spark.createDataFrame([(2, "X"), (3, "c")], "k long, v string")
-    wh.merge(spark, kv2, "ledger", ["k"])
-    got = {r["k"]: r["v"] for r in wh.read(spark, "ledger").collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}  # first writer wins on k=2
-    # upsert: WHEN MATCHED THEN UPDATE — last writer wins
-    wh.upsert(spark, kv2, "ledger", ["k"])
-    got = {r["k"]: r["v"] for r in wh.read(spark, "ledger").collect()}
-    assert got == {1: "a", 2: "X", 3: "c"}
 
 
 def test_emulation_commit_survives_publish_race(spark, tmp_path, monkeypatch):
@@ -284,22 +268,6 @@ def test_emulation_commit_survives_publish_race(spark, tmp_path, monkeypatch):
     assert len(manifest["tables"]["t"]) == 2         # rebased, not replaced
 
 
-def test_emulation_merge_upsert_first_writer_wins(spark, tmp_path):
-    """Warehouse.merge — the parquet-emulation analog of the Iceberg
-    branch's MERGE INTO (J4 get_or_create): key-unique by construction."""
-    root = str(tmp_path / "wh")
-    wh = Warehouse(root)
-    kv = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b_dup")], "k long, v string")
-    wh.merge(spark, kv, "ledger", ["k"])
-    kv2 = spark.createDataFrame([(2, "X"), (3, "c")], "k long, v string")
-    wh.merge(spark, kv2, "ledger", ["k"])
-    rows = wh.read(spark, "ledger").collect()
-    got = {r["k"]: r["v"] for r in rows}
-    assert len(rows) == 3 and set(got) == {1, 2, 3}
-    assert got[1] == "a" and got[2] in ("b", "b_dup") and got[3] == "c"
-    assert got[2] != "X"  # first writer won
-
-
 def test_force_rerun_keeps_ledger_keys_unique(spark, tmp_path):
     """A forced re-extraction must not duplicate ledger keys (upsert
     semantics inside the atomic three-table commit)."""
@@ -321,27 +289,6 @@ def test_runs_ledger_schema(spark, pages, tmp_path):
     runs = Warehouse(root).read(spark, "runs", schema=RUNS)
     assert runs.count() == N_PAGES
     assert runs.select("snapshot_id").distinct().count() == 1
-
-
-def test_overrides_priority(spark, tmp_path):
-    """J5: manual overrides win via left join + coalesce
-    (ref models/tsl.py:269-271 favor_manual)."""
-    root = str(tmp_path / "wh")
-    pages = pages_df(spark, 16, partitions=2)
-    run_extraction(spark, pages, root)
-    extracted = read_extracted(spark, root)
-
-    some_url = extracted.select("url").orderBy("url").first()["url"]
-    overrides = extracted.sparkSession.createDataFrame(
-        [(some_url, "HUMAN FIXED")], "url string, text string"
-    )
-    out = apply_overrides(extracted, overrides)
-    fixed = out.filter(F.col("url") == some_url).first()
-    assert fixed["final_text"] == "HUMAN FIXED" and fixed["is_manual"]
-    others = out.filter(~F.col("is_manual"))
-    assert others.filter(
-        F.col("final_text") != F.col("extracted_text")
-    ).count() == 0
 
 
 def test_pdf_pages_extracted(spark, pages, tmp_path):
@@ -420,50 +367,6 @@ def test_options_hash_canonicalization():
     assert base.options_hash() != ExtractOptions(granularity="single").options_hash()
     # the default key is the hash of the empty delta — stable forever
     assert base.options_hash() == hashlib.sha256(b"{}").hexdigest()[:16]
-
-
-def test_set_overrides_insert_then_update(spark, tmp_path):
-    """Manual-override upsert semantics (ref views.py:345-379 +
-    tests/views/test_set_manual_translation.py success_new/success_exist):
-    a new key inserts; re-setting an existing key REPLACES its text
-    (last-write-wins), and the applied read reflects it."""
-    from ocr_translate_spark.pipeline import (
-        read_extracted_with_overrides,
-        set_overrides,
-    )
-
-    root = str(tmp_path / "wh")
-    pages = pages_df(spark, 16, partitions=2)
-    run_extraction(spark, pages, root)
-    urls = [r["url"] for r in pages.select("url").limit(2).collect()]
-
-    ov1 = spark.createDataFrame([(urls[0], "MANUAL v1")], "url string, text string")
-    set_overrides(spark, root, ov1)  # success_new
-    got = {r["url"]: (r["final_text"], r["is_manual"])
-           for r in read_extracted_with_overrides(spark, root).collect()}
-    assert got[urls[0]] == ("MANUAL v1", True)
-    assert got[urls[1]][1] is False
-
-    ov2 = spark.createDataFrame(
-        [(urls[0], "MANUAL v2"), (urls[1], "MANUAL other")],
-        "url string, text string",
-    )
-    set_overrides(spark, root, ov2)  # success_exist: v1 -> v2 replaced
-    got = {r["url"]: (r["final_text"], r["is_manual"])
-           for r in read_extracted_with_overrides(spark, root).collect()}
-    assert got[urls[0]] == ("MANUAL v2", True)
-    assert got[urls[1]] == ("MANUAL other", True)
-    # overrides table itself stays key-unique across upserts
-    from ocr_translate_spark.schemas import OVERRIDES
-    ov_tab = Warehouse(root).read(spark, "overrides", schema=OVERRIDES)
-    assert ov_tab.count() == 2
-    # favor_manual=False disables the priority per read (ref full.py
-    # option cascade, default True)
-    plain = read_extracted_with_overrides(spark, root, favor_manual=False)
-    assert plain.filter(plain.is_manual).count() == 0
-    assert plain.count() == 16
-    # extraction results were untouched (the override joins read-side)
-    assert read_extracted(spark, root).count() == 16
 
 
 def test_giant_pages_byte_bounded_batches(spark, tmp_path):
@@ -620,6 +523,28 @@ def _jobs_of(spark, group: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schemaless_read_of_committed_table_runs_no_job(spark, tmp_path):
+    """A read with no schema takes the schema Spark's writer stored in the
+    parquet footer: it starts no inference job and returns the schema
+    inference would give, nested and map columns included."""
+    import os
+
+    root = str(tmp_path / "wh")
+    wh = Warehouse(root)
+    df = spark.sql(
+        "SELECT id, CAST(id AS DOUBLE) AS d, ARRAY(NAMED_STRUCT('a', id)) AS arr,"
+        " MAP('k', id) AS m, TIMESTAMP'2024-01-01 00:00:00' AS ts FROM range(8)"
+    )
+    wh.write(df.repartition(2), "t")
+    wh.write(df, "t")
+    got, jobs = _jobs_of(spark, "schemaless-read", lambda: wh.read(spark, "t"))
+    assert jobs == 0
+    dirs = wh._manifest(wh.current_snapshot_id())["tables"]["t"]
+    inferred = spark.read.parquet(*[os.path.join(root, d) for d in dirs])
+    assert got.schema == inferred.schema
+    assert got.count() == 16
 
 
 def test_run_extraction_spark_jobs_per_call(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Stateful streaming operators: batch ≡ stream equivalence across
-micro-batches (applyInPandasWithState keyed state)."""
+"""Streaming drivers: batch ≡ stream equivalence across micro-batches
+(foreachBatch over file sources, ledger memoization on replay)."""
 
 from __future__ import annotations
 
@@ -7,85 +7,6 @@ import os
 import time
 
 import pandas as pd
-import pytest
-
-from ocr_translate_spark.streaming.stateful import run_stateful_stream
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def events_pdf(spark):
-    return (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .select("event_id", "user_id", "ts", "event_type")
-        .toPandas()
-        .sort_values("ts", kind="stable")
-        .reset_index(drop=True)
-    )
-
-
-def _to_parquet(pdf: pd.DataFrame, path: str) -> None:
-    # Spark cannot read pandas' nanosecond TIMESTAMP(NANOS) parquet type
-    pdf.to_parquet(path, coerce_timestamps="us", allow_truncated_timestamps=True)
-
-
-def _write_chunks(pdf: pd.DataFrame, outdir: str, n_chunks: int = 3) -> None:
-    os.makedirs(outdir, exist_ok=True)
-    size = (len(pdf) + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        chunk = pdf.iloc[i * size : (i + 1) * size]
-        _to_parquet(chunk, os.path.join(outdir, f"chunk-{i:02d}.parquet"))
-        time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-
-
-def _expected_closed_sessions(pdf: pd.DataFrame, gap_s: int = 1800) -> set:
-    """Driver-side reference: closed sessions per user (the last, still-open
-    session of each user is excluded — the stream keeps it in state)."""
-    out = set()
-    for user, grp in pdf.groupby("user_id"):
-        epochs = [int(t.timestamp()) for t in grp["ts"].sort_values()]
-        start, last, n = epochs[0], epochs[0], 1
-        for e in epochs[1:]:
-            if e - last > gap_s:
-                out.add((user, start, last, n))
-                start, n = e, 1
-            else:
-                n += 1
-            last = e
-    return out  # open sessions intentionally not added
-
-
-def test_sessionize_stream_matches_batch(spark, events_pdf, tmp_path):
-    chunks = str(tmp_path / "chunks")
-    _write_chunks(events_pdf, chunks)
-    got = run_stateful_stream(spark, chunks, op="sessionize")
-    got_set = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in got.collect()
-    }
-    assert got_set == _expected_closed_sessions(events_pdf)
-    assert got_set  # sf0.001 events do contain >30min gaps
-
-
-def test_dedup_stream_first_wins_across_batches(spark, events_pdf, tmp_path):
-    """Duplicates planted ACROSS chunk boundaries emit exactly once."""
-    head = events_pdf.iloc[:60]
-    # chunk 0 = first 40 rows; chunk 1 repeats rows 20-40 + adds 40-60;
-    # chunk 2 repeats everything
-    chunks = str(tmp_path / "dups")
-    os.makedirs(chunks)
-    _to_parquet(head.iloc[:40], f"{chunks}/chunk-00.parquet")
-    time.sleep(0.05)
-    _to_parquet(head.iloc[20:60], f"{chunks}/chunk-01.parquet")
-    time.sleep(0.05)
-    _to_parquet(head, f"{chunks}/chunk-02.parquet")
-
-    got = run_stateful_stream(spark, chunks, op="dedup", key="event_id")
-    rows = got.collect()
-    ids = [r["event_id"] for r in rows]
-    assert sorted(ids) == sorted(set(head["event_id"]))
-    assert len(ids) == len(set(ids)) == 60
 
 
 def test_streaming_extraction_matches_batch_and_is_idempotent(spark, tmp_path):
