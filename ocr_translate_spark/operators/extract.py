@@ -17,6 +17,11 @@ Scale notes (100 TB / 1000 executors):
   ``run_extraction(assume_unique_urls=True)`` skips it: unique urls on a
   size-balanced source layout need neither the dedup nor the shuffle
   (``spark.sql.files.maxPartitionBytes`` splits balance the tasks).
+* The stage is sized from the data: the requested width is an upper
+  bound, capped by ``spark.sql.shuffle.partitions``, and at the cap AQE
+  coalesces the shuffle to the bytes it moved, never below one task per
+  core.  A small recrawl batch runs as one extract+write task and commits
+  one file; a large crawl keeps every core busy.
 * text_hash is computed JVM-side (``xxhash64``) after the UDF so ledger
   hashing stays consistent with Spark SQL and costs no Python time.
 * Arrow batches are bounded by rows (session.py maxRecordsPerBatch) so a
@@ -90,28 +95,39 @@ _STAGE_SCHEMA = (
 )
 
 
-# Buckets per target partition of ``salted_repartition``.
+# Buckets per requested partition of ``salted_repartition``.
 SALT = 64
 
 
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition on a salted url-hash to break host/byte skew (north_rule).
 
-    ``SALT`` buckets per target partition; r8 raised it 8 -> 64
-    per the skew guidance (many more distinct key values than partitions
-    so the hash spreads evenly): ~salt pages-per-bucket variance is what
-    sets the extract stage's straggler tail, and the interleaved 600k A/B
-    read ~5% in 64's favor at zero cost.  A single giant page remains
-    irreducible at any salt — that term is the corpus, not the plan.
+    ``xxhash64(url) % (num_partitions * SALT)`` is the key: ``SALT``
+    buckets per requested partition, many more distinct key values than
+    partitions, so the hash spreads evenly even when an upstream layout
+    puts all giant pages in one input split.  r8 raised the salt 8 -> 64
+    per the skew guidance: the pages-per-bucket variance sets the extract
+    stage's straggler tail, and the interleaved 600k A/B read ~5% in 64's
+    favor at zero cost.  A single giant page remains irreducible at any
+    salt — that term is the corpus, not the plan.
 
-    ``xxhash64(url) % (P * SALT)`` gives ``SALT`` buckets per target
-    partition, so even a pathological upstream layout (all giant pages in
-    one input split) spreads evenly.
+    ``num_partitions`` is an upper bound on the stage's width, not a fixed
+    width.  At or above ``spark.sql.shuffle.partitions`` the exchange is
+    planned with no count (``REPARTITION_BY_COL`` at the session's shuffle
+    width), which AQE coalesces to the bytes actually shuffled: its
+    default ``parallelismFirst`` target is ``max(bytes / defaultParallelism,
+    1 MB)``, so a large input keeps one task per core and a small batch
+    collapses to one task (one file per commit).  Below the session width
+    the count is kept, which already respects the bound.  Coalescing only
+    merges whole hash partitions, so equal urls stay co-located and the
+    stage's url dedup (C3) stays exact — which is why neither
+    ``rebalance`` nor an AQE skew split may stand in here.
     """
-    buckets = num_partitions * SALT
-    return df.repartition(
-        num_partitions, F.pmod(F.xxhash64(F.col("url")), F.lit(buckets))
-    )
+    key = F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions * SALT))
+    session_width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if num_partitions >= session_width:
+        return df.repartition(key)
+    return df.repartition(num_partitions, key)
 
 
 def _single_spans(

@@ -6,7 +6,9 @@ The batch analog of the reference's request lifecycle
     pages scan
       -> anti-join vs committed `runs` ledger     (C1 memoization; `force`
          skips it, ref models/box.py:131-173)
-      -> salted repartition on url-hash           (skew, north_rule)
+      -> salted repartition on url-hash           (skew, north_rule; at
+         most spark.sql.shuffle.partitions wide, AQE-coalesced to the
+         bytes shuffled with one task per core as the floor)
       -> ONE mapInPandas Arrow stage              (X1+X2+A5 fused; C3
          in-flight url dedup over the co-located urls)
       -> xxhash64 + version/options columns       (JVM-side)
@@ -85,8 +87,13 @@ def run_extraction(
     the memoization fast path (second invocation computes zero rows).
 
     Duplicate urls are dropped in the extraction stage, after the salted
-    repartition co-locates them: at width ``repartition``, or at
-    ``spark.sql.shuffle.partitions`` when it is None.
+    repartition co-locates them.  ``repartition`` is an upper bound on
+    that stage's width, not a fixed width, and the session's
+    ``spark.sql.shuffle.partitions`` caps it (None means that width).  At
+    the cap AQE coalesces the shuffle to the bytes it moved, never below
+    one task per core: a small recrawl batch runs as one task and commits
+    one file, a large crawl keeps every core busy
+    (operators/extract.py ``salted_repartition``).
 
     ``assume_unique_urls=True`` with ``repartition=None`` is the
     ZERO-SHUFFLE mode: when the source contract guarantees unique urls

@@ -43,6 +43,10 @@ def run_extraction_stream(
     """Drive extraction as a file stream (one micro-batch per source file
     by default), committing one warehouse snapshot per non-empty batch.
 
+    ``repartition`` is ``run_extraction``'s: an upper bound on the
+    extract stage's width, capped by ``spark.sql.shuffle.partitions``, so
+    a small micro-batch commits one file rather than one per partition.
+
     Returns the per-batch stats list (run_id, snapshot_id, n_written) —
     a batch replaying already-committed urls reports ``n_written == 0``.
     Synchronous (processAllAvailable) — callers that want a long-running

@@ -27,7 +27,10 @@ def main() -> int:
                          "(Iceberg when the runtime has a catalog), or "
                          "synthetic:N for the generated corpus")
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--repartition", type=int, default=None)
+    ap.add_argument("--repartition", type=int, default=None,
+                    help="upper bound on the extract stage's width, capped "
+                         "by spark.sql.shuffle.partitions (the default); "
+                         "AQE sizes the stage from the shuffled bytes")
     ap.add_argument("--force", action="store_true")
     ap.add_argument("--cpus", type=int, default=0,
                     help="local[N] threads when not running under a cluster master")

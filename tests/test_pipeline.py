@@ -602,3 +602,94 @@ def test_pre_ledger_warehouse_re_extracts_once(spark, tmp_path):
     golden = old_pages.select("url", F.col("text").alias("e"))
     assert got.count() == 32
     assert got.join(golden, "url").filter(F.col("extracted_text") != F.col("e")).count() == 0
+
+
+def test_recrawl_commit_is_coalesced(spark, tmp_path, monkeypatch):
+    """An explicit width is an upper bound: a 32-row half-memoized recrawl
+    commits at most 2 parquet files, at the session's shuffle width
+    (coalesced by AQE) and below it (the count is kept).  The staged write
+    still has exactly one payload exchange."""
+    import glob
+    import os
+    import re
+
+    plans = []
+    stage = Warehouse.stage
+
+    def recording_stage(self, df, table):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return stage(self, df, table)
+
+    monkeypatch.setattr(Warehouse, "stage", recording_stage)
+    half = pages_df(spark, 32, partitions=2)
+    full = pages_df(spark, 64, partitions=2)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
+    for width in (4, 2):
+        root = str(tmp_path / f"wh-{width}")
+        wh = Warehouse(root)
+        run_extraction(spark, half, root, repartition=width)
+        before = set(wh._manifest(wh.current_snapshot_id())["tables"]["extracted"])
+        plans.clear()
+        stats = run_extraction(spark, full, root, repartition=width)
+        assert stats["n_written"] == 32
+        [new] = set(wh._manifest(stats["snapshot_id"])["tables"]["extracted"]) - before
+        files = glob.glob(os.path.join(root, new, "*.parquet"))
+        assert 1 <= len(files) <= 2, (width, files)
+        [plan] = plans
+        assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+
+
+def test_extract_stage_keeps_one_task_per_core(spark, tmp_path):
+    """Coalescing is by bytes but the stage's cost is kernel CPU: pages
+    well over 1 MB of html per core still extract in at least
+    ``defaultParallelism`` tasks (AQE's ``parallelismFirst`` floor), at
+    the default width and at an explicit one above it."""
+    # ~256 KB of incompressible padding per page (shuffle blocks are
+    # compressed, and AQE sizes partitions by the compressed bytes)
+    pad = F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(1999)),
+            lambda i: F.sha2(F.concat(F.col("url"), i.cast("string")), 512),
+        ),
+        "",
+    )
+    pages = pages_df(spark, 64, partitions=4).withColumn(
+        "html",
+        F.concat(F.col("html"), F.lit(b"<!--"), pad.cast("binary"), F.lit(b"-->")),
+    )
+    n_cores = spark.sparkContext.defaultParallelism
+    for width in (None, 4 * n_cores):
+        root = str(tmp_path / f"wh-{width}")
+        stats = run_extraction(spark, pages, root, repartition=width)
+        assert stats["n_written"] == 64
+        metrics = Warehouse(root).read(spark, "metrics", schema=METRICS)
+        assert metrics.select("partition_id").distinct().count() >= n_cores, width
+
+
+def test_run_extraction_jobs_past_listing_threshold(spark, tmp_path):
+    """A warehouse whose `extracted` spans more committed directories than
+    Spark's default parallel-listing threshold (32) still costs a recrawl
+    call 3 jobs: the directories are listed on the driver, not by a
+    listing job."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(root)
+    pages = pages_df(spark, 34, partitions=2)
+    from ocr_translate_spark.operators.extract import extract_pages
+
+    seeded = wh.read_staged(spark, wh.stage(
+        extract_pages(pages.withColumn("input_split", F.lit("s")), repartition=2)
+        .withColumns({"run_id": F.lit("seed"), "snapshot_id": F.lit(1).cast("long")}),
+        "extracted",
+    ))
+    urls = sorted(r.url for r in seeded.select("url").collect())[:33]
+    wh.commit({"extracted": [
+        wh.stage(seeded.filter(F.col("url") == u).coalesce(1), "extracted")
+        for u in urls
+    ]})
+    assert len(wh._manifest(wh.current_snapshot_id())["tables"]["extracted"]) == 33
+    stats, jobs = _jobs_of(
+        spark, "jobs-many-dirs",
+        lambda: run_extraction(spark, pages, root, repartition=4),
+    )
+    assert stats["n_written"] == 1
+    assert jobs == RECRAWL_JOBS
