@@ -211,10 +211,11 @@ def _decisions(
     dedup: every row of ``df`` as (id, text, url, ``dropped_at``, ``sig``),
     labelled in stage order by the ledger anti-join (with ``stored``),
     url filter, :func:`_clean_and_dedup`, corpus-exact check (with
-    ``stored``) and MinHash near dedup.  ``stored`` maps the keys, host
-    counts, signature and band tables to their committed state; ``None``
-    is empty stored state (host counts 0, every pair endpoint a batch
-    id).  Stage names take an ``_incremental`` suffix with ``stored``.
+    ``stored``) and MinHash near dedup.  ``stored`` maps the curated and
+    host-count tables to their committed state (the ledger, md5 and
+    signature columns are read from ``curated``); ``None`` is empty
+    stored state (host counts 0, every pair endpoint a batch id).  Stage
+    names take an ``_incremental`` suffix with ``stored``.
 
     Returns the frame and the signature cache it reads, which the caller
     owns; the Gopher-gated cache is released when ``held`` closes."""
@@ -231,8 +232,8 @@ def _decisions(
     if stored is not None:
         # idempotent re-ingestion: ids the ledger already holds are done
         dec = _drop_ids(
-            dec, stored[KEYS_TABLE].select(F.col("id").alias(id_col)), id_col,
-            "ledger", text_col, listed=True,
+            dec, stored[CURATED_TABLE].select(id_col), id_col, "ledger",
+            text_col, listed=True,
         )
         stages.append("ledger_anti_join")
 
@@ -272,7 +273,7 @@ def _decisions(
     )
     if stored is not None:
         # ...then against the stored md5 keys (corpus wins)
-        known = stored[KEYS_TABLE].select(F.col("content_md5").alias("_md5"))
+        known = stored[CURATED_TABLE].select(F.col("content_md5").alias("_md5"))
         dec = dec.withColumn("_md5", F.md5(F.col(text_col))).join(
             known.distinct().withColumn("_stored", F.lit(True)), "_md5", "left"
         )
@@ -280,12 +281,16 @@ def _decisions(
             dec, F.col("_stored").isNotNull(), "corpus_exact", text_col
         ).drop("_md5", "_stored")
 
-    # near dedup over the batch's signatures (and the stored index)
+    # near dedup over the batch's signatures (and the stored ones)
     signed = dedup.with_minhash_signature(dec, text_col).persist()
+
+    def sigs(frame):
+        return frame.filter(F.col("sig").isNotNull()).select(
+            F.col(id_col).alias("id"), "sig"
+        )
+
     pairs = dedup.minhash_pairs(
-        signed.filter(F.col("sig").isNotNull())
-        .select(F.col(id_col).alias("id"), "sig"),
-        *(() if stored is None else (stored[SIGS_TABLE], stored[BANDS_TABLE])),
+        sigs(signed), None if stored is None else sigs(stored[CURATED_TABLE])
     ).filter(F.col("est_jaccard") >= near_threshold)
     batch_ids = None if stored is None else _live(signed).select(id_col)
     dec = _drop_ids(
@@ -432,15 +437,11 @@ class IncrementalReport:
         return asdict(self)
 
 
-CURATED_TABLE = "curated"
-KEYS_TABLE = "curated_keys"        # (id, content_md5) — exact-dup index
-SIGS_TABLE = "dedup_sigs"          # (id, sig array<long>) — MinHash index
-BANDS_TABLE = "dedup_bands"        # (id, band, bucket) — LSH band index
+CURATED_TABLE = "curated"          # (id, text, split, content_md5, sig)
 HOSTS_TABLE = "host_counts"        # (host, n) — log-structured quota ledger
 HOSTS_SCHEMA = "host string, n long"
 SEM_CENTROIDS_TABLE = "sem_centroids"  # (cell, centroid) — frozen quantizer
-SEM_CELLS_TABLE = "sem_cells"      # (id, cell, cell_cos) — semantic cell index
-SEM_VECS_TABLE = "sem_vecs"        # (id, embedding) — survivor vectors
+SEM_CELLS_TABLE = "sem_cells"      # (id, cell, cell_cos, embedding) — semantic index
 
 
 def curate_incremental(
@@ -472,18 +473,19 @@ def curate_incremental(
     passes it the stored state below, so over a fresh warehouse it keeps
     exactly the rows ``curate_corpus`` keeps.
 
-    Stored state (all slim, payload-free except ``curated``):
+    Stored state — each population once, its index columns on its own
+    rows; readers project the columns they need:
 
-    * ``curated``       — (id, text, split): the corpus itself;
-    * ``curated_keys``  — (id, content_md5): exact-dup + idempotence index;
-    * ``dedup_sigs`` / ``dedup_bands`` — the MinHash LSH index: the
-      survivors' signatures and their :func:`dedup.minhash_bands`; each
-      batch joins its own bands against the stored bands
-      (:func:`dedup.minhash_pairs`) — the 100 TB corpus text is NEVER
-      re-scanned, only its ~300 B/doc index;
-    * with ``embedding_col``: ``sem_centroids`` / ``sem_cells`` /
-      ``sem_vecs`` — the semantic index (SemDeDup): the centroids, and
-      the survivors' cells and vectors from
+    * ``curated`` — (id, text, split, content_md5, sig): the corpus, each
+      doc with its md5 (the exact-dup index; its ids are the idempotence
+      ledger) and its MinHash signature.  Each batch joins its bands
+      against :func:`dedup.minhash_bands` of the stored signatures
+      (:func:`dedup.minhash_pairs`) — a column-pruned scan of ``(id,
+      sig)``, ~300 B/doc: the corpus text is NEVER re-scanned or
+      re-signed;
+    * with ``embedding_col``: ``sem_centroids`` and ``sem_cells`` — the
+      semantic index (SemDeDup): the centroids, and the survivors' (id,
+      cell, cell_cos, embedding) rows from
       :func:`similarity.semantic_index`.  Centroids freeze at the first
       embedded batch (the tiered_ingest frozen-bounds discipline); each
       batch assigns only ITSELF to them and scores new-vs-members inside
@@ -494,9 +496,9 @@ def curate_incremental(
     replayed batch is a no-op), line frequencies are per batch (corpus
     boilerplate drift is a periodic re-curation's job), and the stored
     md5 keys and LSH index win over the batch — then semantic dedup,
-    optional decontamination and the salted split.  Survivors, their
-    keys and index rows publish in ONE atomic multi-table commit, so
-    the index can never disagree with the corpus.
+    optional decontamination and the salted split.  Survivors publish
+    with their index columns in ONE atomic multi-table commit, so the
+    index can never disagree with the corpus.
 
     Host quotas are CROSS-BATCH: with ``max_per_host`` (explicit
     ``url_col`` required, same contract as curate_corpus) the warehouse
@@ -511,13 +513,14 @@ def curate_incremental(
     survivors' MinHash signature, url and semantic cell, and its one
     checkpoint fills every report count.  The stage writes plan from
     that checkpoint, so an appending batch runs 1 execution + one per
-    published table, and a replayed or fully-rejected batch runs the
-    checkpoint alone.  The Python stages (signature UDF, cell
-    assignment) run once per doc into cached frames; those and the
-    checkpoint blocks are released before the call returns, so a call
-    leaves no persistent RDD behind.  ``out`` (id, text, split) reads
-    the curated files this call staged: no cache, nothing to release,
-    and every read of it reads those files again.  (On the parquet
+    published table (1 + 1 with neither quotas nor embeddings), and a
+    replayed or fully-rejected batch runs the checkpoint alone.  The
+    Python stages (signature UDF, cell assignment) run once per doc into
+    cached frames; those and the checkpoint blocks are released before
+    the call returns, so a call leaves no persistent RDD behind.  ``out``
+    (id, text, split) reads the curated files this call staged: no
+    cache, nothing to release, and every read of it reads those files
+    again.  (On the parquet
     warehouse they are the committed directory itself; on an Iceberg
     catalog the commit copies the staged table and drops it, so read
     :func:`read_curated` at ``rep.snapshot_id`` there.)
@@ -527,10 +530,9 @@ def curate_incremental(
     rep = IncrementalReport()
     wh = open_warehouse(spark, warehouse_root)
     id_dt = batch.schema[id_col].dataType.simpleString()
+    # the index columns only: the corpus text is never read back
     schemas = {
-        KEYS_TABLE: f"id {id_dt}, content_md5 string",
-        SIGS_TABLE: f"id {id_dt}, sig array<bigint>",
-        BANDS_TABLE: f"id {id_dt}, band int, bucket bigint",
+        CURATED_TABLE: f"{id_col} {id_dt}, content_md5 string, sig array<bigint>",
     }
     if max_per_host:
         schemas[HOSTS_TABLE] = HOSTS_SCHEMA
@@ -580,17 +582,15 @@ def curate_incremental(
                 # and the survivors' index rows read this cached frame
                 new_cells = assigned.persist()
                 held.callback(new_cells.unpersist)
+                # two projections: the vectors stay off the cell semi-join
                 sem_index = wh.read(
-                    spark, SEM_CELLS_TABLE,
-                    schema=f"id {id_dt}, cell bigint, cell_cos double",
+                    spark, SEM_CELLS_TABLE, schema=f"id {id_dt}, cell bigint, "
+                    f"cell_cos double, embedding {emb_dt}",
                 )
-                sem_vecs = wh.read(
-                    spark, SEM_VECS_TABLE,
-                    schema=f"id {id_dt}, embedding {emb_dt}",
-                ).select("id", F.col("embedding").alias(embedding_col))
                 sem_cands = sim.incremental_semantic_candidates(
-                    new_cells, sem_index, sem_vecs, "id", embedding_col,
-                    threshold=semantic_threshold,
+                    new_cells, sem_index.select("id", "cell", "cell_cos"),
+                    sem_index.select("id", F.col("embedding").alias(embedding_col)),
+                    "id", embedding_col, threshold=semantic_threshold,
                 )
                 losers = _near_dup_losers(
                     sem_cands, new_cells.select(F.col("id").alias(id_col)), id_col
@@ -622,48 +622,35 @@ def curate_incremental(
         rep.n_appended = rep.n_after_decontamination = m["decontaminate"]
 
         surv = _live(ck)
-        out = curation.split_by_hash(
-            surv.select(id_col, text_col), id_col, val_fraction=val_fraction
+        rows = curation.split_by_hash(surv, id_col, val_fraction=val_fraction).select(
+            id_col, text_col, "split",
+            F.md5(F.col(text_col)).alias("content_md5"), "sig",
         )
+        out_cols = [id_col, text_col, "split"]
         if rep.n_appended == 0:
             # fully-rejected (or fully-memoized) batch: nothing to publish —
-            # don't burn a snapshot on four empty appends
+            # don't burn a snapshot on empty appends
             rep.snapshot_id = wh.current_snapshot_id()
             rep.stages.append("noop_commit")
-            return empty_frame(spark, out.schema), rep
+            return empty_frame(spark, rows.select(*out_cols).schema), rep
 
-        # derive the index rows for the survivors and publish EVERYTHING in
-        # one atomic commit (corpus, keys, sigs, bands can never diverge);
-        # every stage write reads the checkpoint
-        new_keys = surv.select(
-            F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_md5")
-        )
-        surv_sigs = surv.filter(F.col("sig").isNotNull()).select(
-            F.col(id_col).alias("id"), "sig"
-        )
-        curated = wh.stage(out, CURATED_TABLE)
-        staged = {
-            CURATED_TABLE: [curated],
-            KEYS_TABLE: [wh.stage(new_keys, KEYS_TABLE)],
-            SIGS_TABLE: [wh.stage(surv_sigs, SIGS_TABLE)],
-            BANDS_TABLE: [wh.stage(dedup.minhash_bands(surv_sigs), BANDS_TABLE)],
-        }
+        # the survivors with their md5 and signature, and the other
+        # tables, publish in one atomic commit (the index can never
+        # diverge from the corpus); every stage write reads the checkpoint
+        curated = wh.stage(rows, CURATED_TABLE)
+        staged = {CURATED_TABLE: [curated]}
         if new_cells is not None:
             # semantic index rows for the survivors ride the SAME atomic
-            # commit (the cells/vectors tables can never diverge from the
-            # corpus); docs without a nonzero embedding simply have no rows.
+            # commit (the cell index can never diverge from the corpus);
+            # docs without a nonzero embedding simply have no rows.
             # Frozen centroids publish once, with the first embedded batch
             # that actually appends (an all-rejected first batch retrains
             # next time — nothing stored, nothing to drift from).
-            embedded = surv.filter(F.col("cell").isNotNull())
-            embedded = embedded.withColumnRenamed(id_col, "id")
-            staged[SEM_CELLS_TABLE] = [wh.stage(
-                embedded.select("id", "cell", "cell_cos"), SEM_CELLS_TABLE
-            )]
-            staged[SEM_VECS_TABLE] = [wh.stage(
-                embedded.select("id", F.col("_emb").alias("embedding")),
-                SEM_VECS_TABLE,
-            )]
+            embedded = surv.filter(F.col("cell").isNotNull()).select(
+                F.col(id_col).alias("id"), "cell", "cell_cos",
+                F.col("_emb").alias("embedding"),
+            )
+            staged[SEM_CELLS_TABLE] = [wh.stage(embedded, SEM_CELLS_TABLE)]
             if first_sem:
                 staged[SEM_CENTROIDS_TABLE] = [wh.stage(
                     sim.centroids_to_df(spark, cts), SEM_CENTROIDS_TABLE
@@ -681,7 +668,7 @@ def curate_incremental(
         # the returned frame reads the staged files, not the checkpoint
         # released on the way out (resolved before the commit consumes
         # the handle on an Iceberg catalog)
-        out = wh.read_staged(spark, curated, schema=out.schema)
+        out = wh.read_staged(spark, curated, schema=rows.schema).select(*out_cols)
         rep.snapshot_id = wh.commit(staged)
         rep.stages.append("atomic_commit")
         return out, rep
@@ -698,9 +685,9 @@ def compact_warehouse(
     replace-commit (the warehouse's ``compact``, the same call on both
     branches) — the maintenance pass continuous ingestion needs, because
     :func:`curate_incremental` appends one directory per batch to
-    ``curated``/``curated_keys``/``dedup_sigs``/``dedup_bands``/
-    ``host_counts`` forever, and at daily batches the band-join's file
-    listing and the summed host-quota log grow without bound.
+    ``curated`` and ``host_counts`` (and :func:`tiered_ingest` to its
+    tables) forever, and at daily batches the index scan's file listing
+    and the summed host-quota log grow without bound.
 
     * ``host_counts`` and ``tier_counts`` are FOLDED (summed per key) —
       the log-structured ledgers collapse to one row per key with
@@ -732,10 +719,9 @@ def compact_warehouse(
 
     wh = open_warehouse(spark, warehouse_root)
     tables = tables if tables is not None else [
-        CURATED_TABLE, KEYS_TABLE, SIGS_TABLE, BANDS_TABLE, HOSTS_TABLE,
-        TIERED_TABLE, TIER_BOUNDS_TABLE, TIER_COUNTS_TABLE, TIER_SEEN_TABLE,
-        TIER_QUALS_TABLE, SEM_CENTROIDS_TABLE, SEM_CELLS_TABLE,
-        SEM_VECS_TABLE,
+        CURATED_TABLE, HOSTS_TABLE, TIERED_TABLE, TIER_BOUNDS_TABLE,
+        TIER_COUNTS_TABLE, TIER_QUALS_TABLE, SEM_CENTROIDS_TABLE,
+        SEM_CELLS_TABLE,
     ]
     # the ledger folds (reads always sum, so the summed form is
     # read-identical); every other table is compacted as it is.  A
@@ -760,14 +746,17 @@ def read_curated(
     snapshot_id: "int | None" = None,
     split: "str | None" = None,
 ) -> DataFrame:
-    """Committed curated corpus (id, text, split), optionally
-    time-traveled to ``snapshot_id`` and filtered to one ``split``
-    ('train'/'val') — the read-side mirror of pipeline.read_extracted
-    for the curation tables."""
+    """Committed curated corpus (id, text, split) — the ``curated`` rows
+    without their index columns — optionally time-traveled to
+    ``snapshot_id`` and filtered to one ``split`` ('train'/'val'): the
+    read-side mirror of pipeline.read_extracted for the curation
+    tables."""
     from .io.tables import open_warehouse
 
     wh = open_warehouse(spark, warehouse_root)
-    df = wh.read(spark, CURATED_TABLE, snapshot_id=snapshot_id)
+    df = wh.read(spark, CURATED_TABLE, snapshot_id=snapshot_id).drop(
+        "content_md5", "sig"
+    )
     if split is not None:
         df = df.filter(F.col("split") == split)
     return df
@@ -916,8 +905,7 @@ TIERED_TABLE = "tiered"            # (id, text, ..., quality, tier) — kept doc
 TIER_BOUNDS_TABLE = "tier_bounds"  # (tier, cutoff) — frozen thresholds
 TIER_COUNTS_TABLE = "tier_counts"  # (tier, grp, n_seen, n_kept) — quota ledger
 TIER_COUNTS_SCHEMA = "tier long, grp string, n_seen long, n_kept long"
-TIER_SEEN_TABLE = "tier_seen"      # (id) — processed-doc memo ledger
-TIER_QUALS_TABLE = "tier_quals"    # (id, quality, grp) — seen-population scores
+TIER_QUALS_TABLE = "tier_quals"    # (id, quality, grp) — every doc ever seen
 
 
 def tiered_ingest(
@@ -946,7 +934,10 @@ def tiered_ingest(
       batch composition (re-tiering the corpus under fresh bounds is a
       periodic maintenance job, not the hot path);
     * ``tier_counts``  — (tier, grp, n_seen, n_kept) log-structured
-      ledger (append per commit, summed at read).
+      ledger (append per commit, summed at read);
+    * ``tier_quals``   — (id, quality, grp) of every doc ever PROCESSED,
+      kept or rejected: the seen population :func:`retier_warehouse`
+      re-tiers, and (its id projection) the memo ledger.
 
     Per-(tier, group) allowance for a batch is
     ``min(m_total, floor(c*sqrt(m_total))) - kept_so_far`` where
@@ -960,13 +951,13 @@ def tiered_ingest(
     incremental dedup.  Within a batch the lottery is the deterministic
     portable-md5 rank, two-level salted like quality_tiers.
 
-    Re-running a batch is a no-op: ``tier_seen`` is an id-only memo
-    ledger of every doc ever PROCESSED (kept or rejected — a kept-only
-    ledger would re-count a replayed batch's rejected docs as fresh
-    ``n_seen`` and inflate future quotas), and a fully-rejected batch
-    still commits its seen ids + counts — they raise future allowances.
-    Kept rows, seen ids, count deltas, and (first batch) bounds publish
-    in ONE atomic commit.
+    Re-running a batch is a no-op: the ids of ``tier_quals`` are the
+    memo ledger of every doc ever PROCESSED (kept or rejected — a
+    kept-only ledger would re-count a replayed batch's rejected docs as
+    fresh ``n_seen`` and inflate future quotas), and a fully-rejected
+    batch still commits its seen docs + counts — they raise future
+    allowances.  Kept rows, seen docs' scores, count deltas, and (first
+    batch) bounds publish in ONE atomic commit.
 
     Single-pass audit: a batch runs exactly ONE probe action — a
     ``noop`` write of every batch row flagged new or already seen, with
@@ -991,13 +982,14 @@ def tiered_ingest(
     wh = open_warehouse(spark, warehouse_root)
     id_dt = batch.schema[id_col].dataType.simpleString()
     rep: dict = {}
-    seen_ids = wh.read(spark, TIER_SEEN_TABLE, schema=f"{id_col} {id_dt}")
+    # the memo ledger: the id projection of the seen-population scores
+    seen_ids = wh.read(spark, TIER_QUALS_TABLE, schema=f"{id_col} {id_dt}")
     # the cached frames are released on the way out, whatever happens
     with ExitStack() as held:
         # every batch row flagged once, persisted: the probe action below
         # fills this cache, so the raw batch is scanned ONCE per ingest
-        # however many consumers follow (tier join, seen-ids stage) — the
-        # r6 design re-scanned it per count.  tier_seen holds each id once.
+        # however many consumers follow (tier join, scores stage) — the
+        # r6 design re-scanned it per count.  tier_quals holds each id once.
         flagged = batch.join(
             seen_ids.select(id_col, F.lit(True).alias("_seen")), id_col, "left"
         ).persist()
@@ -1034,15 +1026,15 @@ def tiered_ingest(
         narrow = narrow.persist()
         held.callback(narrow.unpersist)
 
-        # tier cutoffs: tiny — the frozen bounds are ≤ n_tiers rows, and
-        # the first batch (no committed bounds table: the read raises the
-        # empty-table ValueError without touching Spark) sketches them
-        # from narrow, which fills its cache
+        # tier cutoffs: tiny — the frozen bounds are < n_tiers rows (none
+        # at one tier), and the first batch (no committed bounds table:
+        # the read raises the empty-table ValueError without touching
+        # Spark) sketches them from narrow, which fills its cache
         try:
             stored_bounds = wh.read(spark, TIER_BOUNDS_TABLE).collect()
+            first_batch = False
         except ValueError:
-            stored_bounds = []
-        first_batch = not stored_bounds
+            first_batch = True
         if first_batch:
             bounds = curation.approx_tier_bounds(
                 narrow, qcol, n_tiers=n_tiers, relative_error=relative_error
@@ -1118,11 +1110,10 @@ def tiered_ingest(
         ), TIERED_TABLE)
         staged = {
             TIERED_TABLE: [tiered],
-            TIER_SEEN_TABLE: [wh.stage(new.select(id_col), TIER_SEEN_TABLE)],
             TIER_COUNTS_TABLE: [wh.stage(delta, TIER_COUNTS_TABLE)],
-            # the seen-population quality ledger (~16 B/doc — same narrow
-            # projection the decisions ran on, read from its cache): what
-            # makes retier_warehouse exact later, for kept AND rejected docs
+            # the seen-population ledger (~16 B/doc — same narrow
+            # projection the decisions ran on, read from its cache): the
+            # memo ids, and what makes retier_warehouse exact later
             TIER_QUALS_TABLE: [wh.stage(
                 narrow.select(
                     F.col(id_col),

@@ -565,14 +565,16 @@ def with_minhash_signature(
 def minhash_bands(
     sigs: DataFrame, num_hashes: int = NUM_HASHES, bands: int = BANDS
 ) -> DataFrame:
-    """(id, band, bucket) from a signature table (id, sig) — with the
-    signatures, the stored LSH index :func:`minhash_pairs` probes
-    (curate.curate_incremental publishes both per batch, so no stored
-    document is ever re-signed).  The band table carries those three
-    columns ONLY — the 32-slot signature arrays must not ride the banded
-    join shuffle (bands x the payload per doc, then 2 sigs per
-    candidate row through the pair dedup); signatures are re-joined
-    exactly once, after the pair set is distinct."""
+    """(id, band, bucket) from a signature table (id, sig): JVM-only (one
+    ``xxhash64`` over each band's signature slots, no UDF), so
+    :func:`minhash_pairs` derives the bands of a stored index on read and
+    only signatures are stored (curate.curate_incremental keeps them on
+    the ``curated`` rows; no stored document is ever re-signed).  The
+    band table carries those three columns ONLY — the 32-slot signature
+    arrays must not ride the banded join shuffle (bands x the payload per
+    doc, then 2 sigs per candidate row through the pair dedup);
+    signatures are re-joined exactly once, after the pair set is
+    distinct."""
     r = num_hashes // bands
     return sigs.select(
         "id",
@@ -644,17 +646,16 @@ def minhash_lsh_candidates(
 def minhash_pairs(
     sigs: DataFrame,
     index_sigs: "DataFrame | None" = None,
-    index_bands: "DataFrame | None" = None,
     num_hashes: int = NUM_HASHES,
     bands: int = BANDS,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a, id_b, est_jaccard), id_a < id_b,
     of a signature table ``(id, sig)`` (zero-word docs dropped): within
     ``sigs`` and, given a stored index (``index_sigs`` from
-    :func:`minhash_signatures` with ``drop_empty=True``, ``index_bands``
-    its :func:`minhash_bands`), between ``sigs`` and the index.  ``sigs``
-    is read in several branches, so pass a materialized table (a cache,
-    or a frame carrying the UDF's output).
+    :func:`minhash_signatures` with ``drop_empty=True``), between
+    ``sigs`` and the index, whose bands :func:`minhash_bands` derives on
+    read.  ``sigs`` is read in several branches, so pass a materialized
+    table (a cache, or a frame carrying the UDF's output).
 
     Incremental contract (pinned by pytest): against a stored index the
     pairs equal the batch :func:`minhash_lsh_candidates` over index
@@ -663,11 +664,9 @@ def minhash_pairs(
     and batch, and the index must be built with the same ``n`` /
     ``num_hashes`` / ``bands`` (hash inputs are positional).
 
-    Scale shape: the new batch's band table (tiny) joins the stored
-    band table on (band, bucket) — with the index bucketed/partitioned
-    by (band, bucket) at write time this is a co-located join that
-    never shuffles the stored corpus; signatures ride only the
-    candidate-sized re-joins."""
+    Scale shape: the new batch's band table (tiny) joins the index's
+    band table on (band, bucket), a narrow map over the index's
+    signature scan; signatures ride only the candidate-sized re-joins."""
     assert num_hashes % bands == 0
     a = minhash_bands(sigs, num_hashes, bands).alias("a")
     b = a.alias("b")
@@ -678,9 +677,9 @@ def minhash_pairs(
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col("a.id") < F.col("b.id")),
     ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    if index_bands is not None:
+    if index_sigs is not None:
         # vs the corpus: every stored-bucket collision, normalized to a < b
-        c = index_bands.alias("c")
+        c = minhash_bands(index_sigs, num_hashes, bands).alias("c")
         pairs = pairs.unionByName(
             a.join(
                 c,

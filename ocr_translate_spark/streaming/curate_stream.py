@@ -100,8 +100,8 @@ def run_tiered_stream(
     cross-batch sqrt-temperature quotas, and each batch's kept rows +
     ledgers commit atomically.  Same state discipline as
     run_curation_stream: everything lives in committed tables, so the
-    stream survives checkpoint loss and restarts idempotently (the
-    tier_seen ledger skips already-processed ids).  Composes downstream
+    stream survives checkpoint loss and restarts idempotently (the ids
+    of the ``tier_quals`` ledger skip already-processed docs).  Composes downstream
     of the curation stream: crawl -> extract -> curate -> tier, every
     stage resumable from its warehouse snapshot.
 

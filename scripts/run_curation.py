@@ -67,8 +67,8 @@ def main() -> int:
                     help="cross-batch per-host quota (needs --url-col)")
     ap.add_argument("--embedding-col", default=None,
                     help="enable SemDeDup against the warehouse semantic "
-                         "index (sem_centroids/sem_cells/sem_vecs): the "
-                         "docs column holding the embedding vector")
+                         "index (sem_centroids/sem_cells): the docs "
+                         "column holding the embedding vector")
     ap.add_argument("--semantic-threshold", type=float, default=0.95)
     ap.add_argument("--semantic-cells", type=int, default=1024,
                     help="frozen-quantizer cell count (scale with corpus; "

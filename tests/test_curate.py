@@ -6,6 +6,7 @@ contamination, reproducible split."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 
 import pytest
@@ -218,8 +219,8 @@ def test_curate_incremental_single_pass(spark, tmp_path):
     _, rep1 = curate_incremental(spark, wh_root, b1, min_words=10, scrub=False)
     mid = store.executionsCount()
     assert rep1.n_appended == 10
-    # 1 audited action + 4 stage writes (curated/keys/sigs/bands)
-    assert mid - before == 1 + 4, (before, mid)
+    # 1 audited action + 1 stage write (curated, its index columns on it)
+    assert mid - before == 1 + 1, (before, mid)
 
     _, rep2 = curate_incremental(spark, wh_root, b1, min_words=10, scrub=False)
     after = store.executionsCount()
@@ -231,12 +232,11 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     """Continuous ingestion: batch 1 seeds the warehouse; batch 2's
     exact dup of a stored doc dies on the md5 key index, its near dup of
     a stored doc dies on the LSH index (corpus wins), fresh docs append;
-    re-running batch 2 is a no-op (ledger idempotence); all four tables
-    stay consistent in one snapshot."""
-    from ocr_translate_spark.curate import (
-        BANDS_TABLE, CURATED_TABLE, KEYS_TABLE, SIGS_TABLE, curate_incremental,
-    )
+    re-running batch 2 is a no-op (ledger idempotence); the corpus and
+    its index columns stay consistent in one snapshot."""
+    from ocr_translate_spark.curate import CURATED_TABLE, curate_incremental
     from ocr_translate_spark.io.tables import open_warehouse
+    from ocr_translate_spark.operators import dedup
 
     wh_root = str(tmp_path / "wh")
     # cache lifecycle: a call leaves no persistent RDD behind (checkpoint
@@ -251,10 +251,14 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     assert _persistent_ids(spark) <= before
 
     wh = open_warehouse(spark, wh_root)
-    assert wh.read(spark, CURATED_TABLE).count() == 10
-    assert wh.read(spark, KEYS_TABLE).count() == 10
-    assert wh.read(spark, SIGS_TABLE).count() == 10
-    assert wh.read(spark, BANDS_TABLE).count() == 80  # 8 bands/doc
+    curated = wh.read(spark, CURATED_TABLE)
+    assert curated.count() == 10
+    assert curated.select("doc_id", "content_md5").count() == 10
+    sigs = curated.filter(F.col("sig").isNotNull()).select(
+        F.col("doc_id").alias("id"), "sig"
+    )
+    assert sigs.count() == 10
+    assert dedup.minhash_bands(sigs).count() == 80  # 8 bands/doc
 
     # batch 2: 3 fresh docs + exact dup of stored 3 + near dup of stored 7
     near = _sentence(7) + " extraword"
@@ -273,8 +277,27 @@ def test_curate_incremental_two_batches(spark, tmp_path):
     appended = {r["doc_id"] for r in out2.collect()}
     assert appended == {100, 101, 102}
     assert wh.read(spark, CURATED_TABLE).count() == 13
-    assert wh.read(spark, SIGS_TABLE).count() == 13
+    assert wh.read(spark, CURATED_TABLE).filter(F.col("sig").isNotNull()).count() == 13
     assert _persistent_ids(spark) <= before
+
+    # the index is columns of the corpus rows, each derived from the
+    # row's own text: no side table to keep in step
+    tables = wh._manifest(wh.current_snapshot_id())["tables"]
+    assert CURATED_TABLE in tables
+    assert not {"curated_keys", "dedup_sigs", "dedup_bands"} & set(tables)
+    stored = wh.read(spark, CURATED_TABLE)
+    resigned = dedup.minhash_signatures(stored, "doc_id", "text").select(
+        F.col("id").alias("doc_id"), F.col("sig").alias("_resig")
+    )
+    rows = stored.join(resigned, "doc_id").collect()
+    assert len(rows) == 13
+    for r in rows:
+        assert r["content_md5"] == hashlib.md5(r["text"].encode()).hexdigest()
+        assert list(r["sig"]) == list(r["_resig"])
+    bands = dedup.minhash_bands(
+        stored.select(F.col("doc_id").alias("id"), "sig")
+    ).groupBy("id").count()
+    assert {r["count"] for r in bands.collect()} == {8}
 
     # idempotent re-run: everything already ledgered or rejected
     out3, rep3 = curate_incremental(spark, wh_root, b2, min_words=10, scrub=False)
@@ -315,10 +338,10 @@ def test_compact_warehouse(spark, tmp_path):
     time travel to pre-compaction snapshots intact, and later ingest
     batches still dedup correctly against the rewritten indexes."""
     from ocr_translate_spark.curate import (
-        BANDS_TABLE, CURATED_TABLE, HOSTS_TABLE, KEYS_TABLE, SIGS_TABLE,
-        compact_warehouse, curate_incremental,
+        CURATED_TABLE, HOSTS_TABLE, compact_warehouse, curate_incremental,
     )
     from ocr_translate_spark.io.tables import open_warehouse
+    from ocr_translate_spark.operators import dedup
 
     wh_root = str(tmp_path / "wh")
     for b in range(3):
@@ -344,14 +367,14 @@ def test_compact_warehouse(spark, tmp_path):
     assert snap == pre_snap + 1
     post_dirs = wh._manifest(snap)["tables"]
     assert all(len(v) == 1 for v in post_dirs.values()), post_dirs
-    rows_by_table = {
-        t: wh.read(spark, t).count()
-        for t in (CURATED_TABLE, KEYS_TABLE, SIGS_TABLE, BANDS_TABLE, HOSTS_TABLE)
-    }
-    assert rows_by_table[CURATED_TABLE] == rows_by_table[KEYS_TABLE] == 18
-    assert rows_by_table[SIGS_TABLE] == 18
-    assert rows_by_table[BANDS_TABLE] == 18 * 8
-    assert rows_by_table[HOSTS_TABLE] == 2  # log folded to one row/host
+    curated = wh.read(spark, CURATED_TABLE)
+    sigs = curated.filter(F.col("sig").isNotNull()).select(
+        F.col("doc_id").alias("id"), "sig"
+    )
+    assert curated.count() == curated.select("doc_id", "content_md5").count() == 18
+    assert sigs.count() == 18
+    assert dedup.minhash_bands(sigs).count() == 18 * 8
+    assert wh.read(spark, HOSTS_TABLE).count() == 2  # log folded to one row/host
     post_hosts = {
         r["host"]: r["n"] for r in wh.read(spark, HOSTS_TABLE).collect()
     }
@@ -533,14 +556,14 @@ def test_tiered_ingest_single_pass(spark, tmp_path):
     before = store.executionsCount()
     out1, _ = tiered_ingest(spark, wh_root, b1, **kw)
     mid = store.executionsCount()
-    # probe + GK sketch + 5 stage writes (tiered/seen/counts/quals/bounds)
-    assert mid - before == 2 + 5, (before, mid)
+    # probe + GK sketch + 4 stage writes (tiered/counts/quals/bounds)
+    assert mid - before == 2 + 4, (before, mid)
     out1.unpersist()
 
     out2, _ = tiered_ingest(spark, wh_root, b2, **kw)
     after2 = store.executionsCount()
-    # probe + frozen-bounds collect + 4 stage writes (no bounds table)
-    assert after2 - mid == 2 + 4, (mid, after2)
+    # probe + frozen-bounds collect + 3 stage writes (no bounds table)
+    assert after2 - mid == 2 + 3, (mid, after2)
     out2.unpersist()
 
     wh = open_warehouse(spark, wh_root)
@@ -551,6 +574,30 @@ def test_tiered_ingest_single_pass(spark, tmp_path):
     assert rep_r["n_new"] == 0 and rep_r["n_kept"] == 0
     assert after_r - before_r == 1, (before_r, after_r)
     assert wh.current_snapshot_id() == snap_before
+
+
+def test_tiered_ingest_single_tier_freezes_once(spark, tmp_path):
+    """At one tier there are no cutoffs: the first batch commits an empty
+    ``tier_bounds`` table and later batches read it as the frozen bounds,
+    so only the first batch is a first batch and the table holds one
+    directory."""
+    from ocr_translate_spark.curate import tiered_ingest
+    from ocr_translate_spark.io.tables import open_warehouse
+
+    wh_root = str(tmp_path / "wh")
+    schema = "doc_id long, text string, q double"
+    firsts = []
+    for b in range(3):
+        rows = [(10 * b + i, "body %d" % i, i / 10.0) for i in range(10)]
+        _, rep = tiered_ingest(
+            spark, wh_root, spark.createDataFrame(rows, schema),
+            quality_col="q", n_tiers=1,
+        )
+        assert rep["tier_bounds"] == [] and rep["n_new"] == 10
+        firsts.append(rep["first_batch"])
+    assert firsts == [True, False, False]
+    wh = open_warehouse(spark, wh_root)
+    assert len(wh._manifest(wh.current_snapshot_id())["tables"]["tier_bounds"]) == 1
 
 
 def test_tiered_ingest_and_retier_release_their_caches(spark, tmp_path, monkeypatch):
@@ -785,19 +832,23 @@ def test_tiered_ingest_compaction_preserves_quota_state(spark, tmp_path):
     pre = {(r["tier"], r["grp"]): (r["s"], r["k"]) for r in
            wh.read(spark, "tier_counts").groupBy("tier", "grp").agg(
                F.sum("n_seen").alias("s"), F.sum("n_kept").alias("k")).collect()}
-    n_seen_pre = wh.read(spark, "tier_seen").count()
+    n_seen_pre = wh.read(spark, "tier_quals").select("doc_id").count()
+    # the memo ledger is the id projection of tier_quals
+    assert "tier_seen" not in wh._manifest(wh.current_snapshot_id())["tables"]
+    assert {r["doc_id"] for r in wh.read(spark, "tier_quals").collect()} == set(
+        range(60)
+    )
 
     snap = compact_warehouse(spark, wh_dir)
     # the as-is tables are small: one file each, not one per scan slice
     man = wh._manifest(snap)["tables"]
-    for t in ("tier_seen", "tier_quals"):
-        (d,) = man[t]
-        assert len(glob.glob(os.path.join(wh_dir, d, "*.parquet"))) == 1, t
+    (d,) = man["tier_quals"]
+    assert len(glob.glob(os.path.join(wh_dir, d, "*.parquet"))) == 1
     post_rows = wh.read(spark, "tier_counts", snapshot_id=snap).collect()
     assert len(post_rows) == len(pre)  # folded to one row per cell
     post = {(r["tier"], r["grp"]): (r["n_seen"], r["n_kept"]) for r in post_rows}
     assert post == pre
-    assert wh.read(spark, "tier_seen").count() == n_seen_pre == 60
+    assert wh.read(spark, "tier_quals").select("doc_id").count() == n_seen_pre == 60
 
     # ingestion continues against the folded ledger
     _, rep3 = tiered_ingest(spark, wh_dir, spark.createDataFrame(rows[60:], schema),
@@ -829,8 +880,7 @@ def test_curate_incremental_semantic_index(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
     from ocr_translate_spark.curate import (
-        SEM_CELLS_TABLE, SEM_CENTROIDS_TABLE, SEM_VECS_TABLE,
-        curate_incremental,
+        SEM_CELLS_TABLE, SEM_CENTROIDS_TABLE, curate_incremental,
     )
     from ocr_translate_spark.io.tables import open_warehouse
     from ocr_translate_spark.operators import similarity
@@ -877,8 +927,9 @@ def test_curate_incremental_semantic_index(spark, tmp_path, monkeypatch):
     (d,) = wh._manifest(wh.current_snapshot_id())["tables"][SEM_CENTROIDS_TABLE]
     assert len(glob.glob(os.path.join(wh_root, d, "*.parquet"))) == 1
     assert wh.read(spark, SEM_CELLS_TABLE).count() == 3
-    assert wh.read(spark, SEM_VECS_TABLE).count() == 3
+    assert wh.read(spark, SEM_CELLS_TABLE).select("id", "embedding").count() == 3
     snap1 = wh.current_snapshot_id()
+    assert "sem_vecs" not in wh._manifest(snap1)["tables"]
 
     b2 = spark.createDataFrame(
         [(10, _sentence(10), vec(0.005)),           # near STORED doc 0 -> dies
@@ -903,7 +954,8 @@ def test_curate_incremental_semantic_index(spark, tmp_path, monkeypatch):
     assert cts2 == cts1
     cells = {r["id"] for r in wh.read(spark, SEM_CELLS_TABLE).collect()}
     assert cells == {0, 1, 2, 11}
-    vecs = {r["id"] for r in wh.read(spark, SEM_VECS_TABLE).collect()}
+    vecs = {r["id"] for r in wh.read(spark, SEM_CELLS_TABLE)
+            .filter(F.col("embedding").isNotNull()).collect()}
     assert vecs == {0, 1, 2, 11}
 
     # replay of batch 2: ledger no-op, no snapshot burned

@@ -1259,8 +1259,8 @@ def test_incremental_minhash_equals_batch_restriction(spark, documents):
     )
     new = docs.filter(F.col("doc_id") % 3 == 0).union(dup_src)
 
-    # the stored index: signatures and their (id, band, bucket) table —
-    # one row per band, no signature payload riding the band join
+    # the stored index is its signatures; their (id, band, bucket) table
+    # has one row per band, no signature payload riding the band join
     sigs = dedup.minhash_signatures(old, "doc_id", "text", drop_empty=True)
     bands = dedup.minhash_bands(sigs)
     assert set(bands.columns) == {"id", "band", "bucket"}
@@ -1268,7 +1268,7 @@ def test_incremental_minhash_equals_batch_restriction(spark, documents):
     new_sigs = dedup.minhash_signatures(new, "doc_id", "text", drop_empty=True)
     inc = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in dedup.minhash_pairs(new_sigs, sigs, bands).collect()
+        for r in dedup.minhash_pairs(new_sigs, sigs).collect()
     }
 
     new_ids = {r["doc_id"] for r in new.collect()}
@@ -1294,10 +1294,9 @@ def test_incremental_candidates_plan_shape(spark):
         [(1, "alpha beta gamma delta epsilon")], "id long, text string"
     )
     sigs = spark.createDataFrame([], "id long, sig array<bigint>")
-    bands = spark.createDataFrame([], "id long, band int, bucket bigint")
     new_sigs = dedup.minhash_signatures(new, "id", "text", drop_empty=True).persist()
     try:
-        out = dedup.minhash_pairs(new_sigs, sigs, bands)
+        out = dedup.minhash_pairs(new_sigs, sigs)
         plan = out._jdf.queryExecution().executedPlan().toString()
         # every ArrowEvalPython printed sits INSIDE an InMemoryTableScan's
         # cached-plan dump (computed once at runtime, read by all

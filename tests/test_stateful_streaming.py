@@ -279,7 +279,7 @@ def test_streaming_tier_ingest_converges_to_quota(spark, tmp_path):
            .agg(F.count("*").alias("n")).collect()}
     assert got == expect
 
-    # replay with a FRESH checkpoint: the tier_seen ledger (not streaming
+    # replay with a FRESH checkpoint: the tier_quals ledger (not streaming
     # state) carries idempotence — nothing appends, no snapshot burns
     snap = wh.current_snapshot_id()
     replay = run_tiered_stream(
